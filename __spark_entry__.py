@@ -159,12 +159,12 @@ def _extract_from_pagexml(spark: SparkSession, sf_dir: str) -> DataFrame:
         serialize_page_xml_col(F.col("ocr_lines")).alias("page_xml"),
     )
     parsed = parse_page_xml_table(xml_media, "page_xml", "ocr_lines")
-    # explicit kernel fan-out = the known fixture size: the adaptive
-    # bound would otherwise count `parsed`, re-running the XML
-    # serialize+parse UDF chain once just to learn it is 24 rows
+    # kernel fan-out bound = the known fixture size: without it the
+    # pipeline would count `parsed`, re-running the XML serialize+parse
+    # UDF chain once just to learn it is 24 rows
     return extract_flat(
         interleaved_docs(spark, sf_dir), parsed, _weights(),
-        kernel_partitions=N_MEDIA,
+        n_rows_bound=N_MEDIA,
     )
 
 
@@ -209,10 +209,10 @@ def _extract_from_pagexml_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("numPartitions", "4")
         .load(d)
     )
-    # explicit fan-out = the staged corpus size (see _extract_from_pagexml)
+    # fan-out bound = the staged corpus size (see _extract_from_pagexml)
     return extract_flat(
         interleaved_docs(spark, sf_dir), parsed, _weights(),
-        kernel_partitions=N_MEDIA,
+        n_rows_bound=N_MEDIA,
     )
 
 

@@ -18,9 +18,9 @@ corpus = sys.argv[2] if len(sys.argv) > 2 else (
 
 from pyspark.sql import functions as F
 
-from table_recognition_spark.core import gnn
+from table_recognition_spark.core import boilerplate, gnn
 from table_recognition_spark.pipeline.extract import (
-    _all_spans, _strip_text, extract_flat, recognize_tables,
+    _all_spans, extract_flat, recognize_tables,
 )
 from table_recognition_spark.session import get_spark
 
@@ -59,8 +59,8 @@ t("explode_spans", lambda: spans.count())
 t("distinct_refs", lambda: refs.count())
 t("kernel_only", lambda: recognize_tables(
     kernel_input, w, strategy="visibility").count())
-t("text_strip_only", lambda: _strip_text(
-    spans.filter(F.col("kind") == "text"), "jvm").count())
+t("text_strip_only", lambda: spans.filter(F.col("kind") == "text").select(
+    boilerplate.spark_strip_expr(F.col("text"))).count())
 t("all_spans_union", lambda: _all_spans(
     d, m, w, strategy="visibility").count())
 t("full_extract_flat", lambda: extract_flat(

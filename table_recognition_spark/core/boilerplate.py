@@ -15,17 +15,15 @@ heuristics" classifier. Canonical spec, frozen here:
 2. Strip every remaining tag ``<[^>]*>`` → " ".
 3. Collapse whitespace runs to a single space; trim.
 
-The same three regexes run (a) in the numpy oracle via pandas string ops,
+The same three regexes run (a) in the numpy oracle via Python ``re``,
 (b) JVM-side via chained ``F.regexp_replace`` (whole-stage codegen — the
-fast path), and (c) optionally as a vectorized ``pandas_udf``. Parity
+pipeline's path), and (c) in DuckDB SQL for the oracle queries. Parity
 across all three is pinned by tests.
 """
 
 from __future__ import annotations
 
 import re
-
-import pandas as pd
 
 BOILER_TAGS = "nav|header|footer|aside|script|style|form|noscript"
 
@@ -46,14 +44,6 @@ def strip_boilerplate(text: str) -> str:
     t = _TAG_RE.sub(" ", t)
     t = _WS_RE.sub(" ", t)
     return t.strip()
-
-
-def strip_boilerplate_series(s: pd.Series) -> pd.Series:
-    """Vectorized pandas implementation (used by the pandas_udf path)."""
-    t = s.str.replace(BLOCK_PATTERN, " ", regex=True)
-    t = t.str.replace(TAG_PATTERN, " ", regex=True)
-    t = t.str.replace(WS_PATTERN, " ", regex=True)
-    return t.str.strip()
 
 
 def spark_strip_expr(col):

@@ -1,1 +1,1 @@
-from .extract import run_kernel, extract_document, extract_corpus  # noqa: F401
+from .extract import run_kernel, extract_corpus  # noqa: F401

@@ -183,43 +183,6 @@ def run_kernel(
     )
 
 
-def extract_document(
-    spans: list, media_by_ref: dict, weights: dict, strategy: str = "knn"
-) -> list:
-    """One doc's input spans → output spans (kind, text, media_ref, offset).
-
-    Canonical: media_ref missing from the media table emits nothing
-    (documented behavior, mirrored by the pipeline's inner join).
-    """
-    out = []
-    for s in sorted(spans, key=lambda s: s["offset"]):
-        if s["kind"] == "text":
-            out.append(
-                {
-                    "kind": "main_text",
-                    "text": boilerplate.strip_boilerplate(s["text"]),
-                    "media_ref": "",
-                }
-            )
-        elif s["kind"] == "media":
-            m = media_by_ref.get(s["media_ref"])
-            if m is None:
-                continue
-            for cell_text in run_kernel(
-                m["ocr_lines"], m["width"], m["height"], weights, strategy
-            ):
-                out.append(
-                    {
-                        "kind": "cell",
-                        "text": cell_text,
-                        "media_ref": s["media_ref"],
-                    }
-                )
-    for i, s in enumerate(out):
-        s["offset"] = i
-    return out
-
-
 def extract_corpus(
     docs: list,
     media: list,

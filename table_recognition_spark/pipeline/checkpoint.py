@@ -91,15 +91,11 @@ class CheckpointedExtract:
         media_df: DataFrame,
         weights: dict,
         fail_after: int | None = None,
-        **extract_kwargs,
     ) -> int:
         """Process all uncommitted chunks; returns how many chunks ran.
         ``fail_after=N`` simulates a crash after N chunk commits (tests)."""
         w_fp = hashlib.md5(weights_to_bytes(weights)).hexdigest()[:12]
-        try:
-            files = docs_df.inputFiles()
-        except Exception:
-            files = []
+        files = docs_df.inputFiles()  # [] for an in-memory DataFrame
         inputs = files[0] if files else "in-memory"
         done = 0
         for chunk in range(self.n_chunks):
@@ -107,7 +103,7 @@ class CheckpointedExtract:
                 continue
             t0 = time.time()
             part = docs_df.filter(self._chunk_predicate(chunk))
-            out = extract(part, media_df, weights, **extract_kwargs)
+            out = extract(part, media_df, weights)
             chunk_dir = os.path.join(self.data_dir, f"chunk={chunk}")
             out.write.mode("overwrite").parquet(chunk_dir)
             row = (

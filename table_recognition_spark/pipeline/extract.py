@@ -6,10 +6,11 @@ Spark shape (SURVEY.md §3.1):
                            └── media spans ─┐                              │
     media ──(ocr_lines,w,h only; image      │ distinct(media_ref)          │
              bytes PRUNED from the scan) ───┴── join ── repartition ──     │
-                 mapInPandas(GNN kernel, Arrow batches) ── cells ──        │
+                 mapInArrow(GNN kernel, Arrow batches) ── cells ──         │
                  join back to span occurrences ────────────────────────────┤
                                                                            ▼
-            groupBy(doc_id) → collect_list → array_sort → re-number offsets
+            extract:      groupBy(doc_id) → collect_list → array_sort
+            extract_flat: row_number over a doc_id window
 
 Scale properties, deliberately:
 - **Kernel runs once per distinct media_ref**, not per occurrence — shared
@@ -18,11 +19,12 @@ Scale properties, deliberately:
 - **Column pruning**: the kernel needs only (ocr_lines, width, height); the
   potentially-huge ``image`` binary column never leaves the scan unless the
   caller asks for visual features.
-- **Only Python boundary** is the Arrow-batched ``mapInPandas`` kernel (and
-  optionally a pandas_udf text strip); boilerplate strip defaults to
-  JVM-side ``regexp_replace`` inside whole-stage codegen.
-- **One shuffle** for reassembly (groupBy doc_id); offsets are re-numbered
-  inside the collected array with ``transform``, avoiding a per-row window.
+- **Only Python boundary** is the Arrow-batched ``mapInArrow`` kernel; the
+  boilerplate strip is JVM-side ``regexp_replace`` inside whole-stage
+  codegen.
+- **One shuffle** for reassembly, keyed by doc_id: ``extract`` re-numbers
+  offsets inside the collected array with ``transform``; ``extract_flat``
+  numbers flat rows with a window ``row_number``.
 """
 
 from __future__ import annotations
@@ -30,7 +32,6 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
 
@@ -47,18 +48,14 @@ CELLS_SCHEMA = T.StructType(
 
 OUT_SPAN_STRUCT = "struct<kind:string,text:string,media_ref:string,offset:int>"
 
-# per-worker weights cache: npz parse once per executor process, not per batch
+# per-worker weights cache: an artifact is parsed from the broadcast bytes
+# once per executor process, not per batch. Keyed by the artifact's CONTENT
+# digest (computed driver-side, shipped in the task closure): a long-lived
+# python worker then parses the 59 MB G3 npz exactly once across every
+# query invocation that uses the same weights — keying by the Broadcast
+# object's id() made each run's fresh broadcast a cache miss, re-paying
+# ~0.6 s × workers per run.
 _WEIGHTS_CACHE: dict = {}
-
-
-# per-worker G3 weights cache: the ~15M-param artifact is parsed from the
-# broadcast bytes once per executor process, not per batch. Keyed by the
-# artifact's CONTENT digest (computed driver-side, shipped in the task
-# closure): a long-lived python worker then parses the 59 MB npz exactly
-# once across every query invocation that uses the same weights — keying
-# by the Broadcast object's id() (the round-4 shape) made each run's
-# fresh broadcast a cache miss, re-paying ~0.6 s × workers per run.
-_G3_CACHE: dict = {}
 
 # driver-side broadcast cache: one torrent distribution per
 # (SparkContext, weights-content) — repeated query invocations (and
@@ -85,61 +82,60 @@ def _broadcast_weights(sc, wdict: dict):
     return bc, digest
 
 
-def _kernel_fn(
-    weights_bc,
-    w_digest: str,
-    strategy: str = "knn",
-    model: str = "g2",
-    g3_weights_bc=None,
-    g3_digest: str | None = None,
-):
+def _kernel_fn(weights_bc, w_digest: str, strategy: str = "knn",
+               model: str = "g2"):
     """Build the Arrow-batched kernel (``mapInArrow``).
 
-    The nested ``ocr_lines`` column is consumed straight from the Arrow
+    Each record batch is decoded into per-image inputs
+    ``(bboxes, texts, width, height, image-or-None)`` in one loop. The
+    nested ``ocr_lines`` column is consumed straight from the Arrow
     buffers — per-line bboxes come from ``np.minimum/maximum.reduceat``
     over the flat point arrays, never materializing per-point Python
     dicts. (The earlier mapInPandas version did; at 32 concurrent workers
     the dict materialization contended so badly it ran 3.7× SLOWER than
     at 8 workers — measured 6.7 s → 24.7 s for the same input.)
 
-    Both weights artifacts arrive via ``sparkContext.broadcast`` (one
-    copy per executor, fetched once) — never the task closure, which is
+    ``model`` only picks the function from those inputs to cell lists:
+    ``run_kernel_arrays`` per image for G2, or for visual the fused
+    ``run_kernel_arrays_many`` — ONE batched CNN over every crop in the
+    record batch instead of a small under-utilized GEMM chain per image.
+
+    The model's weights arrive via ``sparkContext.broadcast`` (one copy
+    per executor, fetched once) — never the task closure, which is
     re-shipped to the Python worker on EVERY task — and the parsed
-    arrays are memoized in a module-level cache keyed by content digest.
+    arrays are memoized in ``_WEIGHTS_CACHE`` by content digest.
     """
 
     def fn(batches):
         from ..core.blas import limit_blas_threads
-        from ..oracle.extract import run_kernel_arrays
+        from ..oracle.extract import run_kernel_arrays, run_kernel_arrays_many
 
         limit_blas_threads(1)
         w = _WEIGHTS_CACHE.get(w_digest)
         if w is None:
             w = weights_from_bytes(weights_bc.value)
             _WEIGHTS_CACHE[w_digest] = w
-        vw = None
+
         if model == "visual":
-            vw = _G3_CACHE.get(g3_digest)
-            if vw is None:
-                vw = weights_from_bytes(g3_weights_bc.value)
-                _G3_CACHE[g3_digest] = vw
+            def cells_of(inputs):
+                return run_kernel_arrays_many(inputs, strategy, w)
+        else:
+            def cells_of(inputs):
+                return [
+                    run_kernel_arrays(b, t, wd, ht, w, strategy)
+                    for b, t, wd, ht, _image in inputs
+                ]
 
         for rb in batches:
-            refs = rb.column(rb.schema.get_field_index("media_ref")).to_pylist()
-            widths = rb.column(rb.schema.get_field_index("width")).to_numpy(
-                zero_copy_only=False
+            refs = rb.column("media_ref").to_pylist()
+            widths = rb.column("width").to_numpy(zero_copy_only=False)
+            heights = rb.column("height").to_numpy(zero_copy_only=False)
+            images = (
+                rb.column("image").to_pylist()
+                if model == "visual"
+                else [None] * rb.num_rows
             )
-            heights = rb.column(rb.schema.get_field_index("height")).to_numpy(
-                zero_copy_only=False
-            )
-            images = None
-            if model == "visual":
-                images = rb.column(
-                    rb.schema.get_field_index("image")
-                ).to_pylist()
-            ocr = rb.column(rb.schema.get_field_index("ocr_lines"))
-            if isinstance(ocr, pa.ChunkedArray):  # pragma: no cover
-                ocr = ocr.combine_chunks()
+            ocr = rb.column("ocr_lines")
             row_off = ocr.offsets.to_numpy(zero_copy_only=False)
             lines = ocr.values
             line_ids = lines.field("line_id").to_numpy(zero_copy_only=False)
@@ -165,58 +161,28 @@ def _kernel_fn(
             else:
                 bboxes_all = np.empty((0, 4), dtype=np.int64)
 
-            out_refs, out_idxs, out_texts = [], [], []
-            if model == "visual":
-                # cross-image fusion: ONE batched CNN over every crop in
-                # the record batch (run_kernel_arrays_many) instead of a
-                # small under-utilized GEMM chain per image — the shape
-                # that matters when a task holds many images
-                from ..oracle.extract import run_kernel_arrays_many
-
-                keep, inputs = [], []
-                for r in range(len(refs)):
-                    lo, hi = int(row_off[r]), int(row_off[r + 1])
-                    if hi <= lo:
-                        continue
-                    order = np.argsort(line_ids[lo:hi], kind="stable") + lo
-                    keep.append(r)
-                    inputs.append(
-                        (
-                            bboxes_all[order],
-                            [texts_all[j] for j in order],
-                            int(widths[r]),
-                            int(heights[r]),
-                            images[r],
-                        )
-                    )
-                for r, cells in zip(
-                    keep,
-                    run_kernel_arrays_many(inputs, strategy, vw),
-                ):
-                    for i, cell_text in enumerate(cells):
-                        out_refs.append(refs[r])
-                        out_idxs.append(i)
-                        out_texts.append(cell_text)
-            else:
-                for r in range(len(refs)):
-                    lo, hi = int(row_off[r]), int(row_off[r + 1])
-                    if hi <= lo:
-                        continue
-                    order = np.argsort(line_ids[lo:hi], kind="stable") + lo
-                    b = bboxes_all[order]
-                    t = [texts_all[j] for j in order]
-                    cells = run_kernel_arrays(
-                        b,
-                        t,
+            kept_refs, inputs = [], []
+            for r in range(rb.num_rows):
+                lo, hi = int(row_off[r]), int(row_off[r + 1])
+                if hi <= lo:  # no OCR lines: the image has no cells
+                    continue
+                order = np.argsort(line_ids[lo:hi], kind="stable") + lo
+                kept_refs.append(refs[r])
+                inputs.append(
+                    (
+                        bboxes_all[order],
+                        [texts_all[j] for j in order],
                         int(widths[r]),
                         int(heights[r]),
-                        w,
-                        strategy,
+                        images[r],
                     )
-                    for i, cell_text in enumerate(cells):
-                        out_refs.append(refs[r])
-                        out_idxs.append(i)
-                        out_texts.append(cell_text)
+                )
+
+            out_refs, out_idxs, out_texts = [], [], []
+            for ref, cells in zip(kept_refs, cells_of(inputs)):
+                out_refs += [ref] * len(cells)
+                out_idxs += range(len(cells))
+                out_texts += cells
             yield pa.RecordBatch.from_pydict(
                 {
                     "media_ref": pa.array(out_refs, pa.string()),
@@ -231,89 +197,70 @@ def _kernel_fn(
 def recognize_tables(
     media_df: DataFrame,
     weights: dict,
-    kernel_partitions: int | None = None,
     strategy: str = "knn",
     model: str = "g2",
-    g3_weights: dict | None = None,
     n_rows_bound: int | None = None,
 ) -> DataFrame:
     """Distinct media rows → (media_ref, cell_idx, text) via the GNN kernel.
 
     model='visual' additionally reads the ``image`` binary column (the
-    only path that does — everything else prunes it at the scan) and
-    resolves its weights driver-side via ``visual.default_weights()``
-    (the committed trained artifact when present, else seeded init —
-    the same resolver the no-Spark oracle uses, so parity holds by
-    construction); the artifact ships to executors in the task closure
-    like the G2 weights."""
-    cols = ["media_ref", "ocr_lines", "width", "height"]
-    if model == "visual":
-        cols.append("image")
-    cols = media_df.select(*cols)
-    if kernel_partitions is None:
-        # 8× cores: per-image kernel cost varies ~3× with image size, so
-        # exactly-#cores partitions leave a straggler tail (measured 84%
-        # CPU utilization at 16 cores with 4×); finer tasks let the
-        # scheduler level the tail. The 8× target is additionally capped
-        # by the input ROW COUNT when the caller supplies the bound
-        # (n_rows_bound): every mapInArrow task pays a fixed Python
-        # boundary cost (~8 ms — worker handshake + per-task closure
-        # ship), so tasks beyond one-row-each are pure overhead — the
-        # r7 profile measured the 24-image flagship kernel at 2.30 s
-        # with 256 tasks vs 0.39 s with 24 (identity function: 2.29 s,
-        # i.e. all boundary). At scale the bound exceeds 8× cores and
-        # behavior is unchanged.
-        kernel_partitions = (
-            media_df.sparkSession.sparkContext.defaultParallelism * 8
-        )
-        if n_rows_bound is not None:
-            kernel_partitions = max(1, min(kernel_partitions, n_rows_bound))
-    if kernel_partitions:
-        # round-robin, NOT hash-by-ref: each input row is one complete
-        # media (ref + all its ocr lines), so the kernel needs no key
-        # co-location — and hash partitioning leaves collision
-        # stragglers on small/skewed ref sets (two 300 ms visual-kernel
-        # images in one task = a 2× tail) where round-robin balances
-        # exactly
-        cols = cols.repartition(kernel_partitions)
+    only path that does — everything else prunes it at the scan) and runs
+    with ``visual.default_weights()`` in place of ``weights`` (the same
+    resolver the no-Spark oracle uses, so parity holds by construction).
+    The kernel's weights ship to executors as a broadcast.
+
+    Fan-out: the rows are round-robined into
+    ``max(1, min(8 × defaultParallelism, n_rows_bound))`` kernel tasks.
+    8× cores because per-image kernel cost varies ~3× with image size, so
+    exactly-#cores partitions leave a straggler tail (measured 84% CPU
+    utilization at 16 cores with 4×); finer tasks let the scheduler level
+    the tail. The cap by ``n_rows_bound`` (an upper bound on the input row
+    count; omitted = no cap) exists because every mapInArrow task pays a
+    fixed Python boundary cost (~8 ms — worker handshake + per-task closure
+    ship), so tasks beyond one-row-each are pure overhead — the 24-image
+    flagship kernel measured 2.30 s with 256 tasks vs 0.39 s with 24.
+    Round-robin, NOT hash-by-ref: each input row is one complete media
+    (ref + all its ocr lines), so the kernel needs no key co-location —
+    and hash partitioning leaves collision stragglers on small/skewed ref
+    sets (two 300 ms visual-kernel images in one task = a 2× tail) where
+    round-robin balances exactly."""
     sc = media_df.sparkSession.sparkContext
-    g3_bc, g3_digest = None, None
+    cols = ["media_ref", "ocr_lines", "width", "height"]
     if model == "visual":
         from ..core import visual
 
-        g3 = g3_weights if g3_weights is not None else visual.default_weights()
-        g3_bc, g3_digest = _broadcast_weights(sc, g3)
+        cols.append("image")
+        weights = visual.default_weights()
+    n_tasks = 8 * sc.defaultParallelism
+    if n_rows_bound is not None:
+        n_tasks = max(1, min(n_tasks, n_rows_bound))
     w_bc, w_digest = _broadcast_weights(sc, weights)
-    return cols.mapInArrow(
-        _kernel_fn(w_bc, w_digest, strategy, model, g3_bc, g3_digest),
-        schema=CELLS_SCHEMA,
+    return (
+        media_df.select(*cols)
+        .repartition(n_tasks)
+        .mapInArrow(
+            _kernel_fn(w_bc, w_digest, strategy, model), schema=CELLS_SCHEMA
+        )
     )
-
-
-def _strip_text(df: DataFrame, engine: str) -> DataFrame:
-    if engine == "pandas_udf":
-        @F.pandas_udf(T.StringType())
-        def strip(s: pd.Series) -> pd.Series:
-            return boilerplate.strip_boilerplate_series(s)
-
-        return df.withColumn("text", strip("text"))
-    # default: JVM-side regexp chain (whole-stage codegen)
-    return df.withColumn("text", boilerplate.spark_strip_expr(F.col("text")))
 
 
 def _all_spans(
     docs_df: DataFrame,
     media_df: DataFrame,
     weights: dict,
-    text_engine: str = "jvm",
-    kernel_partitions: int | None = None,
-    broadcast_cells: bool | None = None,
     strategy: str = "knn",
     model: str = "g2",
-    g3_weights: dict | None = None,
+    n_rows_bound: int | None = None,
 ) -> DataFrame:
     """Shared pipeline core → un-numbered output spans
-    (doc_id, orig_offset, sub_idx, kind, text, media_ref)."""
+    (doc_id, orig_offset, sub_idx, kind, text, media_ref).
+
+    ``n_rows_bound`` caps the kernel fan-out (see
+    :func:`recognize_tables`); omitted, the media table's row count is
+    used — a cheap upper bound on |distinct refs| (a metadata-fast
+    parquet count), so a small media corpus never fans out into hundreds
+    of near-empty Python-boundary tasks. A caller whose ``media_df`` is
+    costly to count (a parsed-XML table, say) passes the bound."""
     spans = docs_df.select("doc_id", F.explode("spans").alias("s")).select(
         "doc_id",
         F.col("s.kind").alias("kind"),
@@ -322,12 +269,12 @@ def _all_spans(
         F.col("s.offset").alias("orig_offset"),
     )
 
-    text = _strip_text(spans.filter(F.col("kind") == "text"), text_engine).select(
+    text = spans.filter(F.col("kind") == "text").select(
         "doc_id",
         "orig_offset",
         F.lit(0).alias("sub_idx"),
         F.lit("main_text").alias("kind"),
-        "text",
+        boilerplate.spark_strip_expr(F.col("text")).alias("text"),
         F.lit("").alias("media_ref"),
     )
 
@@ -335,30 +282,15 @@ def _all_spans(
         "doc_id", "orig_offset", "media_ref"
     )
 
-    # kernel once per distinct ref; the join to `media` prunes the image
-    # bytes column at the scan
+    # kernel once per distinct ref; recognize_tables' column selection
+    # prunes the image bytes column at the scan (unless model='visual')
     refs = media_spans.select("media_ref").distinct()
-    media_cols = ["media_ref", "ocr_lines", "width", "height"]
-    if model == "visual":
-        media_cols.append("image")
-    kernel_input = refs.join(media_df.select(*media_cols), "media_ref")
-    # scale-adaptive kernel task count: the media table's row count is a
-    # cheap upper bound on |distinct refs| (a metadata-fast parquet
-    # count for every call site), so a small media corpus never fans
-    # out into hundreds of near-empty Python-boundary tasks while a
-    # large one keeps the full 8×cores straggler-leveling fan-out
-    n_bound = None
-    if kernel_partitions is None:
-        try:
-            n_bound = media_df.count()
-        except Exception:
-            n_bound = None
+    kernel_input = refs.join(media_df, "media_ref")
+    if n_rows_bound is None:
+        n_rows_bound = media_df.count()
     cells = recognize_tables(
-        kernel_input, weights, kernel_partitions, strategy, model, g3_weights,
-        n_rows_bound=n_bound,
+        kernel_input, weights, strategy, model, n_rows_bound=n_rows_bound
     )
-    if broadcast_cells:
-        cells = F.broadcast(cells)
 
     media_out = media_spans.join(cells, "media_ref").select(
         "doc_id",

@@ -6,12 +6,42 @@ the extraction pipeline. This is what ``__spark_entry__.entry`` executes.
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..fixtures.generate import corpus_to_spark, make_corpus
 from .extract import extract_flat
 
 N_MEDIA = 24
+
+_DIST = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    "dist",
+)
+
+
+def _cached_parquet(spark: SparkSession, name: str, build_df) -> DataFrame:
+    """Scan ``dist/<name>.parquet``, first writing ``build_df()`` there if
+    it is absent (one coalesced file, published by an atomic rename)."""
+    cache = os.path.join(_DIST, f"{name}.parquet")
+    if not os.path.exists(cache):
+        os.makedirs(_DIST, exist_ok=True)
+        tmp = tempfile.mkdtemp(dir=_DIST)
+        try:
+            data = os.path.join(tmp, "data")
+            build_df().coalesce(1).write.mode("overwrite").parquet(data)
+            try:
+                os.rename(data, cache)
+            except OSError:
+                # a concurrent writer published first; its file is identical
+                if not os.path.exists(cache):
+                    raise
+        finally:  # never leave tmp residue
+            shutil.rmtree(tmp, ignore_errors=True)
+    return spark.read.parquet(cache)
 
 
 def interleaved_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -58,61 +88,23 @@ def fixture_media(spark: SparkSession, n_media: int = N_MEDIA) -> DataFrame:
     scanned thereafter. Round-1 bench regenerated + re-shipped the PNG
     corpus from the driver on every query, so multimodal bench times
     measured setup, not compute."""
-    import os
-    import tempfile
 
-    cache = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__)))),
-        "dist", f"fixture_media_n{n_media}_seed42.parquet",
-    )
-    if not os.path.exists(cache):
+    def build():
         _, media, _ = make_corpus(0, n_media, seed=42)
-        _, media_df = corpus_to_spark(spark, [], media)
-        os.makedirs(os.path.dirname(cache), exist_ok=True)
-        tmp = tempfile.mkdtemp(dir=os.path.dirname(cache))
-        media_df.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(tmp, "data")
-        )
-        try:  # atomic publish; a concurrent writer winning the race is fine
-            os.rename(os.path.join(tmp, "data"), cache)
-        except OSError:
-            pass
-        finally:  # never leave tmp residue (rename-loss branch included)
-            import shutil
+        return corpus_to_spark(spark, [], media)[1]
 
-            shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(cache)
+    return _cached_parquet(spark, f"fixture_media_n{n_media}_seed42", build)
 
 
 def fixture_gt(spark: SparkSession, n_media: int = N_MEDIA) -> DataFrame:
     """Seeded fixture ground-truth cells table (same corpus/seed as
     :func:`fixture_media`), parquet-cached the same way."""
-    import os
-    import tempfile
 
-    cache = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__)))),
-        "dist", f"fixture_gt_n{n_media}_seed42.parquet",
-    )
-    if not os.path.exists(cache):
+    def build():
         _, media, gt = make_corpus(0, n_media, seed=42)
-        _, _, gt_df = corpus_to_spark(spark, [], media, gt)
-        os.makedirs(os.path.dirname(cache), exist_ok=True)
-        tmp = tempfile.mkdtemp(dir=os.path.dirname(cache))
-        gt_df.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(tmp, "data")
-        )
-        try:
-            os.rename(os.path.join(tmp, "data"), cache)
-        except OSError:
-            pass
-        finally:
-            import shutil
+        return corpus_to_spark(spark, [], media, gt)[2]
 
-            shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(cache)
+    return _cached_parquet(spark, f"fixture_gt_n{n_media}_seed42", build)
 
 
 def fixture_audio(spark: SparkSession, n_clips: int = 16) -> DataFrame:
@@ -121,19 +113,12 @@ def fixture_audio(spark: SparkSession, n_clips: int = 16) -> DataFrame:
     :func:`fixture_media`. Deterministic: clip i is a two-tone sine mix
     at 8 kHz with seeded amplitudes/frequencies."""
     import io
-    import os
-    import tempfile
     import wave
 
     import numpy as np
     import pandas as pd
 
-    cache = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__)))),
-        "dist", f"fixture_audio_n{n_clips}_seed42.parquet",
-    )
-    if not os.path.exists(cache):
+    def build():
         rows = []
         rate = 8000
         for i in range(n_clips):
@@ -161,21 +146,9 @@ def fixture_audio(spark: SparkSession, n_clips: int = 16) -> DataFrame:
                     "n_samples": len(t),
                 }
             )
-        df = spark.createDataFrame(pd.DataFrame(rows))
-        os.makedirs(os.path.dirname(cache), exist_ok=True)
-        tmp = tempfile.mkdtemp(dir=os.path.dirname(cache))
-        df.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(tmp, "data")
-        )
-        try:
-            os.rename(os.path.join(tmp, "data"), cache)
-        except OSError:
-            pass
-        finally:
-            import shutil
+        return spark.createDataFrame(pd.DataFrame(rows))
 
-            shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(cache)
+    return _cached_parquet(spark, f"fixture_audio_n{n_clips}_seed42", build)
 
 
 def fixture_video(spark: SparkSession, n_clips: int = 8) -> DataFrame:
@@ -184,21 +157,13 @@ def fixture_video(spark: SparkSession, n_clips: int = 8) -> DataFrame:
     parquet-cached like :func:`fixture_media`. Deterministic: clip i is
     6-12 frames of a seeded gradient with a rectangle marching across —
     adjacent frames differ, so frame sampling is observable."""
-    import os
-    import tempfile
-
     import numpy as np
     import pandas as pd
 
     from ..core.jpeg import jpeg_encode_gray8
     from ..operators.multimodal import video_encode
 
-    cache = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__)))),
-        "dist", f"fixture_video_n{n_clips}_seed42.parquet",
-    )
-    if not os.path.exists(cache):
+    def build():
         rows = []
         h, w = 48, 64
         for i in range(n_clips):
@@ -226,21 +191,9 @@ def fixture_video(spark: SparkSession, n_clips: int = 8) -> DataFrame:
                     "fps": fps,
                 }
             )
-        df = spark.createDataFrame(pd.DataFrame(rows))
-        os.makedirs(os.path.dirname(cache), exist_ok=True)
-        tmp = tempfile.mkdtemp(dir=os.path.dirname(cache))
-        df.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(tmp, "data")
-        )
-        try:
-            os.rename(os.path.join(tmp, "data"), cache)
-        except OSError:
-            pass
-        finally:
-            import shutil
+        return spark.createDataFrame(pd.DataFrame(rows))
 
-            shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(cache)
+    return _cached_parquet(spark, f"fixture_video_n{n_clips}_seed42", build)
 
 
 def flagship(spark: SparkSession, sf_dir: str, weights: dict) -> DataFrame:

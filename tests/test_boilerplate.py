@@ -7,7 +7,6 @@ from table_recognition_spark.core.boilerplate import (
     duckdb_strip_sql,
     spark_strip_expr,
     strip_boilerplate,
-    strip_boilerplate_series,
 )
 from table_recognition_spark.fixtures.generate import make_corpus
 
@@ -36,12 +35,6 @@ def test_python_hand_cases():
     assert strip_boilerplate(CASES[3]) == "One Two"
     assert strip_boilerplate(CASES[5]) == ""
     assert strip_boilerplate(CASES[6]) == "unclosed menu"
-
-
-def test_pandas_matches_python():
-    texts = CASES + _fixture_texts()
-    got = strip_boilerplate_series(pd.Series(texts)).tolist()
-    assert got == [strip_boilerplate(t) for t in texts]
 
 
 @pytest.mark.spark

@@ -15,17 +15,19 @@ def _spans_tuples(spans):
     return [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans]
 
 
-def _run_parity(spark, corpus, weights, **kwargs):
+def _run_parity(spark, corpus, weights, model="g2", **kwargs):
     docs, media, _ = corpus
     docs_df, media_df = corpus_to_spark(spark, docs, media)
-    out = extract(docs_df, media_df, weights, **kwargs)
+    out = extract(docs_df, media_df, weights, model=model, **kwargs)
     got = {
         r["doc_id"]: _spans_tuples([s.asDict() for s in r["spans"]])
         for r in out.collect()
     }
     expected = {
         did: _spans_tuples(spans)
-        for did, spans in extract_corpus(docs, media, weights).items()
+        for did, spans in extract_corpus(
+            docs, media, weights, model=model
+        ).items()
     }
     assert set(got) == set(expected)
     for did in sorted(expected):
@@ -34,17 +36,42 @@ def _run_parity(spark, corpus, weights, **kwargs):
 
 @pytest.mark.spark
 def test_parity_small_corpus_jvm_text(spark, small_corpus, weights):
-    _run_parity(spark, small_corpus, weights, text_engine="jvm")
-
-
-@pytest.mark.spark
-def test_parity_tiny_corpus_pandas_udf_text(spark, tiny_corpus, weights):
-    _run_parity(spark, tiny_corpus, weights, text_engine="pandas_udf")
+    _run_parity(spark, small_corpus, weights)
 
 
 @pytest.mark.spark
 def test_parity_with_kernel_repartition(spark, tiny_corpus, weights):
-    _run_parity(spark, tiny_corpus, weights, kernel_partitions=7)
+    _run_parity(spark, tiny_corpus, weights, n_rows_bound=7)
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("model", ["g2", "visual"])
+def test_parity_empty_ocr_lines_in_batch(spark, weights, model):
+    """A media row with no OCR lines, in the same Arrow record batch as two
+    rows that have lines (n_rows_bound=1: one kernel task), yields no
+    cells; the other rows' cells stay with their own refs."""
+    from table_recognition_spark.fixtures.generate import make_corpus
+
+    _, media, _ = make_corpus(0, 3, seed=5)
+    media[1] = dict(media[1], ocr_lines=[])
+    refs = [m["media_ref"] for m in media]
+
+    def text(offset):
+        return {"kind": "text", "text": "<p>t</p>", "media_ref": "",
+                "offset": offset}
+
+    def image(ref, offset):
+        return {"kind": "media", "text": "", "media_ref": ref,
+                "offset": offset}
+
+    docs = [
+        {"doc_id": "all", "spans": [text(0)] + [
+            image(ref, i + 1) for i, ref in enumerate(refs)
+        ]},
+        {"doc_id": "empty_only", "spans": [image(refs[1], 0), text(1)]},
+    ]
+    _run_parity(spark, (docs, media, None), weights, model=model,
+                n_rows_bound=1)
 
 
 @pytest.mark.spark
