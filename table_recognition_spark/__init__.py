@@ -36,3 +36,11 @@ import os as _os
 
 for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
     _os.environ.setdefault(_v, "1")
+
+# Reused PySpark workers re-read every zip archive on sys.path at the start
+# of each task; keep the read while the archive is unchanged (zipdir.py).
+# Unpickling any of this package's functions imports it, so this covers
+# every Python worker the package uses.
+from .zipdir import reread_changed_zips_only as _reread_changed_zips_only
+
+_reread_changed_zips_only()

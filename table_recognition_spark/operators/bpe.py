@@ -145,7 +145,7 @@ def word_vocab(docs: DataFrame) -> DataFrame:
 # vocab (31 distinct words at sf0.1) runs every round single-task
 # instead of paying 32 near-empty tasks per stage per round (measured
 # r7: the 12-round loop dropped 7.4 s → ~2 s at sf0.1; at |V| ~ 1e8
-# this yields ~2000 tasks, within the 8×cores fan-out the kernel uses)
+# this yields ~2000 tasks)
 LOOP_ROWS_PER_TASK = 50_000
 
 # Driver-local learning threshold: below this many DISTINCT WORDS the

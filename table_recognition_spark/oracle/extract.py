@@ -165,8 +165,13 @@ def run_kernel(
     Lines are processed in line_id order (NODE_COUNTER semantics).
     ``strategy``: edge discovery — 'knn' (J1) or 'visibility' (J2, the
     reference's configured default), mirroring graph.py:34-37.
+    Lines with no points have no bbox and are dropped, so an image whose
+    lines all have none has no cells, like one with no lines.
     """
-    lines = sorted(ocr_lines, key=lambda d: d["line_id"])
+    lines = sorted(
+        (line for line in ocr_lines if line["points"]),
+        key=lambda d: d["line_id"],
+    )
     if not lines:
         return []
 

@@ -49,12 +49,11 @@ CELLS_SCHEMA = T.StructType(
 OUT_SPAN_STRUCT = "struct<kind:string,text:string,media_ref:string,offset:int>"
 
 # per-worker weights cache: an artifact is parsed from the broadcast bytes
-# once per executor process, not per batch. Keyed by the artifact's CONTENT
-# digest (computed driver-side, shipped in the task closure): a long-lived
-# python worker then parses the 59 MB G3 npz exactly once across every
-# query invocation that uses the same weights — keying by the Broadcast
-# object's id() made each run's fresh broadcast a cache miss, re-paying
-# ~0.6 s × workers per run.
+# once per Python worker process, keyed by the artifact's CONTENT digest
+# (computed driver-side, shipped in the task closure), so a reused worker
+# parses the 59 MB G3 npz once across tasks and query invocations that use
+# the same weights. Only module-level functions may touch it: cloudpickle
+# ships a nested function by value, with a private copy of this dict.
 _WEIGHTS_CACHE: dict = {}
 
 # driver-side broadcast cache: one torrent distribution per
@@ -82,6 +81,16 @@ def _broadcast_weights(sc, wdict: dict):
     return bc, digest
 
 
+def _cached_weights(weights_bc, w_digest: str) -> dict:
+    """The parsed weights for ``w_digest``, from this worker's cache or
+    parsed from the broadcast bytes on a miss."""
+    w = _WEIGHTS_CACHE.get(w_digest)
+    if w is None:
+        w = weights_from_bytes(weights_bc.value)
+        _WEIGHTS_CACHE[w_digest] = w
+    return w
+
+
 def _kernel_fn(weights_bc, w_digest: str, strategy: str = "knn",
                model: str = "g2"):
     """Build the Arrow-batched kernel (``mapInArrow``).
@@ -103,7 +112,11 @@ def _kernel_fn(weights_bc, w_digest: str, strategy: str = "knn",
     The model's weights arrive via ``sparkContext.broadcast`` (one copy
     per executor, fetched once) — never the task closure, which is
     re-shipped to the Python worker on EVERY task — and the parsed
-    arrays are memoized in ``_WEIGHTS_CACHE`` by content digest.
+    arrays are memoized per worker by :func:`_cached_weights`.
+
+    Lines with no points are dropped before graph construction (the
+    oracle's ``run_kernel`` drops them too); a row left with no lines has
+    no cells.
     """
 
     def fn(batches):
@@ -111,10 +124,7 @@ def _kernel_fn(weights_bc, w_digest: str, strategy: str = "knn",
         from ..oracle.extract import run_kernel_arrays, run_kernel_arrays_many
 
         limit_blas_threads(1)
-        w = _WEIGHTS_CACHE.get(w_digest)
-        if w is None:
-            w = weights_from_bytes(weights_bc.value)
-            _WEIGHTS_CACHE[w_digest] = w
+        w = _cached_weights(weights_bc, w_digest)
 
         if model == "visual":
             def cells_of(inputs):
@@ -146,27 +156,30 @@ def _kernel_fn(weights_bc, w_digest: str, strategy: str = "knn",
             xs = pts.field("x").to_numpy(zero_copy_only=False)
             ys = pts.field("y").to_numpy(zero_copy_only=False)
 
-            # per-line bboxes across the whole batch in four reduceats;
-            # guard: every line has ≥1 point (fixture invariant)
-            n_lines = len(line_ids)
-            if n_lines:
-                starts = pts_off[:-1]
-                bx0 = np.minimum.reduceat(xs, starts)
-                by0 = np.minimum.reduceat(ys, starts)
-                bx1 = np.maximum.reduceat(xs, starts)
-                by1 = np.maximum.reduceat(ys, starts)
-                bboxes_all = np.stack([bx0, by0, bx1, by1], axis=1).astype(
-                    np.int64
+            # per-line bboxes across the whole batch in four reduceats over
+            # the lines that have points; the rest are dropped below
+            has_pts = pts_off[1:] > pts_off[:-1]
+            starts = pts_off[:-1][has_pts]
+            bboxes_all = np.zeros((len(line_ids), 4), dtype=np.int64)
+            if len(starts):
+                bboxes_all[has_pts] = np.stack(
+                    [
+                        np.minimum.reduceat(xs, starts),
+                        np.minimum.reduceat(ys, starts),
+                        np.maximum.reduceat(xs, starts),
+                        np.maximum.reduceat(ys, starts),
+                    ],
+                    axis=1,
                 )
-            else:
-                bboxes_all = np.empty((0, 4), dtype=np.int64)
 
             kept_refs, inputs = [], []
             for r in range(rb.num_rows):
-                lo, hi = int(row_off[r]), int(row_off[r + 1])
-                if hi <= lo:  # no OCR lines: the image has no cells
+                kept = int(row_off[r]) + np.flatnonzero(
+                    has_pts[row_off[r] : row_off[r + 1]]
+                )
+                if not len(kept):  # no lines with points: no cells
                     continue
-                order = np.argsort(line_ids[lo:hi], kind="stable") + lo
+                order = kept[np.argsort(line_ids[kept], kind="stable")]
                 kept_refs.append(refs[r])
                 inputs.append(
                     (
@@ -210,15 +223,17 @@ def recognize_tables(
     The kernel's weights ship to executors as a broadcast.
 
     Fan-out: the rows are round-robined into
-    ``max(1, min(8 × defaultParallelism, n_rows_bound))`` kernel tasks.
-    8× cores because per-image kernel cost varies ~3× with image size, so
-    exactly-#cores partitions leave a straggler tail (measured 84% CPU
-    utilization at 16 cores with 4×); finer tasks let the scheduler level
-    the tail. The cap by ``n_rows_bound`` (an upper bound on the input row
-    count; omitted = no cap) exists because every mapInArrow task pays a
-    fixed Python boundary cost (~8 ms — worker handshake + per-task closure
-    ship), so tasks beyond one-row-each are pure overhead — the 24-image
-    flagship kernel measured 2.30 s with 256 tasks vs 0.39 s with 24.
+    ``max(1, min(2 × defaultParallelism, n_rows_bound))`` kernel tasks.
+    Every task pays a fixed Python-worker cost before the kernel runs:
+    an identity ``mapInArrow`` task on a reused worker took ~220 ms of
+    worker CPU at PySpark 4.1.2 / Python 3.11, nearly all of it re-reading
+    zip archives, and ~38 ms once ``zipdir.py`` skips unchanged ones
+    (4-core VM; a 32-task job 2.2 s → 0.9 s, an 8-task one 0.4 s). 2×
+    cores still lets the scheduler level the ~3× spread of per-image cost
+    across tasks; on the 600-image ``kernel_heavy`` benchmark it beat both
+    8× and 1× cores. The cap by ``n_rows_bound`` (an upper bound on the
+    input row count; omitted = no cap) keeps a small input from paying for
+    tasks that get no rows.
     Round-robin, NOT hash-by-ref: each input row is one complete media
     (ref + all its ocr lines), so the kernel needs no key co-location —
     and hash partitioning leaves collision stragglers on small/skewed ref
@@ -231,7 +246,7 @@ def recognize_tables(
 
         cols.append("image")
         weights = visual.default_weights()
-    n_tasks = 8 * sc.defaultParallelism
+    n_tasks = 2 * sc.defaultParallelism
     if n_rows_bound is not None:
         n_tasks = max(1, min(n_tasks, n_rows_bound))
     w_bc, w_digest = _broadcast_weights(sc, weights)

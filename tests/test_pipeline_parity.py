@@ -44,17 +44,10 @@ def test_parity_with_kernel_repartition(spark, tiny_corpus, weights):
     _run_parity(spark, tiny_corpus, weights, n_rows_bound=7)
 
 
-@pytest.mark.spark
-@pytest.mark.parametrize("model", ["g2", "visual"])
-def test_parity_empty_ocr_lines_in_batch(spark, weights, model):
-    """A media row with no OCR lines, in the same Arrow record batch as two
-    rows that have lines (n_rows_bound=1: one kernel task), yields no
-    cells; the other rows' cells stay with their own refs."""
-    from table_recognition_spark.fixtures.generate import make_corpus
-
-    _, media, _ = make_corpus(0, 3, seed=5)
-    media[1] = dict(media[1], ocr_lines=[])
-    refs = [m["media_ref"] for m in media]
+def _parity_in_one_batch(spark, weights, media, model="g2"):
+    """Parity for ``media`` run as one kernel task (``n_rows_bound=1``),
+    so all rows share one Arrow record batch. One doc references every
+    image, and one doc per image references only it."""
 
     def text(offset):
         return {"kind": "text", "text": "<p>t</p>", "media_ref": "",
@@ -64,14 +57,61 @@ def test_parity_empty_ocr_lines_in_batch(spark, weights, model):
         return {"kind": "media", "text": "", "media_ref": ref,
                 "offset": offset}
 
-    docs = [
-        {"doc_id": "all", "spans": [text(0)] + [
-            image(ref, i + 1) for i, ref in enumerate(refs)
-        ]},
-        {"doc_id": "empty_only", "spans": [image(refs[1], 0), text(1)]},
+    refs = [m["media_ref"] for m in media]
+    docs = [{"doc_id": "all", "spans": [text(0)] + [
+        image(ref, i + 1) for i, ref in enumerate(refs)
+    ]}] + [
+        {"doc_id": f"only_{ref}", "spans": [image(ref, 0), text(1)]}
+        for ref in refs
     ]
     _run_parity(spark, (docs, media, None), weights, model=model,
                 n_rows_bound=1)
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("model", ["g2", "visual"])
+def test_parity_empty_ocr_lines_in_batch(spark, weights, model):
+    """A media row with no OCR lines, in the same Arrow record batch as two
+    rows that have lines, yields no cells; the other rows' cells stay with
+    their own refs."""
+    from table_recognition_spark.fixtures.generate import make_corpus
+
+    _, media, _ = make_corpus(0, 3, seed=5)
+    media[1] = dict(media[1], ocr_lines=[])
+    _parity_in_one_batch(spark, weights, media, model)
+
+
+def _without_points(line):
+    return dict(line, points=[])
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("case", ["mid_batch", "last_in_batch", "all_empty"])
+def test_parity_zero_point_lines_in_batch(spark, weights, case):
+    """OCR lines with no points are dropped before graph construction, in
+    the kernel and in the oracle alike: a zero-point line inside an image,
+    one at the very end of the record batch (every image's last line, so
+    whichever row comes last), and an image whose lines all have none
+    (no cells)."""
+    from table_recognition_spark.fixtures.generate import make_corpus
+
+    _, media, _ = make_corpus(0, 3, seed=5)
+    if case == "mid_batch":
+        lines = list(media[0]["ocr_lines"])
+        mid = len(lines) // 2
+        lines[mid] = _without_points(lines[mid])
+        media[0] = dict(media[0], ocr_lines=lines)
+    elif case == "last_in_batch":
+        media = [
+            dict(m, ocr_lines=m["ocr_lines"][:-1]
+                 + [_without_points(m["ocr_lines"][-1])])
+            for m in media
+        ]
+    else:
+        media[1] = dict(
+            media[1], ocr_lines=[_without_points(x) for x in media[1]["ocr_lines"]]
+        )
+    _parity_in_one_batch(spark, weights, media)
 
 
 @pytest.mark.spark
