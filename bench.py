@@ -1,17 +1,21 @@
 #!/usr/bin/env python
-"""Benchmark harness.
+"""Suite timer: the oracled queries through Spark's ``noop`` sink.
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
-line: {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}.
+Usage:
+  python bench.py                   # every query, in registry order
+  python bench.py NAME [NAME ...]   # just these queries
 
-The headline metric is the flagship extraction pipeline's wall-clock;
-per-query seconds cover the operator suite. By default the run also
-measures the same extraction job at two cluster sizes (taskset-pinned
-local[4] vs local[16], sequential min-of-3 per size) and reports
-throughput + scaling efficiency (BASELINE.md's two-cluster-size
-criterion, evidenced in-sandbox per BENCH/BASELINE.md). --scaling-only
-skips the query phase; --no-scaling skips the scaling phase.
+Runs at $SPARK_GRAFT_SF_DIR (default: the sf0.1 test data) on the
+session's host defaults (``session.get_spark``). Per query: one untimed
+run, then ``REPEATS`` timed runs, the cache cleared before each. A run
+builds the query's DataFrame and writes the whole result to the ``noop``
+sink: ``count()`` would let Catalyst prune columns, windows and sorts the
+result needs (the flagship's boilerplate strip and reassembly window among
+them), and skip any column that would raise.
+
+Prints one JSON line: ``value`` is the ``extract_interleaved`` minimum
+(null when it was not timed), ``queries`` maps each name to its minimum
+and its timed runs. Progress goes to stderr.
 """
 
 from __future__ import annotations
@@ -21,913 +25,57 @@ import os
 import sys
 import time
 
-
-def _build_spark(cpus: int, app: str):
-    from table_recognition_spark.session import get_spark
-
-    return get_spark(
-        app,
-        parallelism=cpus,
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
+REPEATS = 3
 
 
-def _stop_and_kill_jvm(spark) -> None:
-    """stop() alone leaves the py4j gateway JVM alive in this process —
-    tens of GB of dirty heap that measurably destabilizes the pinned
-    scaling children (16-core runs swung 38-66 s with the JVM resident
-    vs a stable 27-31 s without). Shut the gateway down so the next
-    SparkSession relaunches a fresh JVM."""
-    from pyspark import SparkContext
+def _time_query(spark, fn, sf_dir) -> list[float]:
+    """Seconds of each of ``REPEATS`` timed runs of ``fn(spark, sf_dir)``,
+    after one untimed run; every run writes the full result to the noop
+    sink."""
 
-    spark.stop()
-    try:
-        if SparkContext._gateway is not None:
-            SparkContext._gateway.shutdown()
-        SparkContext._gateway = None
-        SparkContext._jvm = None
-    except Exception:
-        pass
-
-
-def _calibrate() -> tuple[float, float]:
-    """Single-core host-state calibration: a fixed ~40 ms numpy kernel,
-    (best, mean) of 3. On the uncontended sandbox this measures ~0.016 s;
-    ≥ ~1.6× that means the host is degraded (steal/throttle) — round-2's
-    driver run measured scaling children 1.5-2× slower in exactly such a
-    window (single-core probe 0.09 s quiet vs 0.63 s degraded)."""
-    import numpy as np
-
-    a = np.arange(2_000_000, dtype=np.float64)
-    times = []
-    s = 0.0
-    for _ in range(3):
-        t0 = time.perf_counter()
-        for _ in range(5):
-            b = np.sqrt(a) * 1.0001
-            s += float(b[::997].sum())
-        times.append(time.perf_counter() - t0)
-    _ = s
-    return min(times), sum(times) / len(times)
-
-
-CALIB_QUIET = 0.016  # measured uncontended reference on this sandbox
-CALIB_DEGRADED = CALIB_QUIET * 1.6
-
-
-def _wide_kernel(_=None) -> float:
-    """The same fixed ~40 ms numpy kernel as _calibrate, run in a forked
-    worker: 8 of these concurrently are DRAM-visible in a way one is
-    not (measured: wall 0.045-0.06 s on the warm quiet host vs 0.15-2.6 s
-    while 16 cores stream memory)."""
-    import numpy as np
-
-    a = np.arange(2_000_000, dtype=np.float64)
-    t0 = time.perf_counter()
-    s = 0.0
-    for _ in range(5):
-        b = np.sqrt(a) * 1.0001
-        s += float(b[::997].sum())
-    _ = s
-    return time.perf_counter() - t0
-
-
-class _WideProbe:
-    """8-process concurrent calibration. The r4/r5 instrumentation proved
-    the single-core probe CANNOT see the contention that inflates wide
-    children (hi children ran 52 s vs a 42 s quiet floor with identical
-    quiet narrow probes); 8 concurrent kernels contend for the same
-    resource the 16-wide job does, so their wall time can. Gate =
-    relative to the running minimum across the phase (the host's quiet
-    baseline drifts day to day)."""
-
-    def __init__(self, nproc: int = 8):
-        import multiprocessing as mp
-
-        self.nproc = nproc
-        self.pool = mp.get_context("fork").Pool(nproc)
-        # warm the forked workers (first kernel in a worker pays numpy
-        # page-in, ~0.2 s). 4× tasks per map: with exactly nproc tasks a
-        # fast worker can steal two and leave a sibling cold, so the
-        # first real sample would still pay one worker's warm-up.
-        for _ in range(2):
-            self.pool.map(_wide_kernel, range(nproc * 4))
-        self.min_seen = float("inf")
-
-    def sample(self) -> float:
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            self.pool.map(_wide_kernel, range(self.nproc))
-            best = min(best, time.perf_counter() - t0)
-        self.min_seen = min(self.min_seen, best)
-        return best
-
-    def close(self) -> None:
-        try:
-            self.pool.close()
-            self.pool.terminate()
-        except Exception:
-            pass
-
-
-def _wait_quiet(budget_s: float, trace: list, wide: "_WideProbe | None" = None,
-                narrow_factor: float = 1.35, wide_factor: float = 1.6,
-                wide_abs: float = 0.0) -> None:
-    """Block (up to budget_s) until the host calibration looks quiet.
-    Appends every sample to `trace` (surfaced in the bench JSON so a
-    degraded-host run is visible in the record). Proceeds regardless
-    when the budget is exhausted — the min-of-N protocol still applies.
-
-    Quiet = single-core probe under both the absolute degraded bound and
-    1.35× the phase minimum (the 198 s lo window ran with a 0.0207 probe
-    — 1.4× the phase min — which the old absolute-only gate passed), AND
-    when a _WideProbe is supplied, its 8-wide wall under 1.6× of ITS
-    phase minimum (narrow probes were quiet during windows that inflated
-    wide children 25%). The wide threshold is looser than the narrow one
-    because the wide probe's QUIET-state jitter is itself up to ~1.30×
-    (measured 20-sample max/min on an idle host), while real contention
-    inflates it 3-50× — 1.6× separates the two regimes cleanly where
-    1.35× would false-trip on quiet-host jitter.
-
-    The defaults are the STRICT regime used between scaling children
-    (bare host, no resident JVM). The per-suite-query gate passes looser
-    narrow_factor/wide_factor/wide_abs: with the Spark JVM resident, the
-    wide probe's quiet-state readings float 0.05-0.7 s (post-query GC /
-    context-cleaner threads) against a 0.04 bare floor — the r5.2 smoke
-    run showed the strict gate false-tripping on ~every query and
-    burning 1030 s on a host whose query times were all quiet — while
-    real contention windows read ≥1 s; `w <= max(wide_factor*min_seen,
-    wide_abs)` with wide_abs≈0.8 separates those regimes."""
-    global _PHASE_NARROW_MIN
-    t0 = time.time()
-    while True:
-        best, mean = _calibrate()
-        _PHASE_NARROW_MIN = min(_PHASE_NARROW_MIN, best)
-        w = wide.sample() if wide is not None else None
-        trace.append(
-            round(best, 4) if w is None else [round(best, 4), round(w, 4)]
-        )
-        narrow_ok = (
-            best <= CALIB_DEGRADED and best <= narrow_factor * _PHASE_NARROW_MIN
-        )
-        wide_ok = w is None or w <= max(wide_factor * wide.min_seen, wide_abs)
-        if (narrow_ok and wide_ok) or time.time() - t0 > budget_s:
-            return
-        time.sleep(15)
-
-
-# phase-level running minimum for the narrow probe: persists across
-# _wait_quiet calls so a later gate can reject a window the first
-# (possibly-noisy) sample of its own loop would have accepted
-_PHASE_NARROW_MIN = float("inf")
-
-
-BENCH_QUERIES = [
-    "rel_q1_pricing_summary",
-    "rel_q3_shipping_priority",
-    "rel_q5_local_supplier",
-    "rel_top_customers_per_nation",
-    "rel_brand_revenue_topk",
-    "rel_events_hourly",
-    "rel_events_sessions",
-    "rel_revenue_rollup",
-    "rel_orderstatus_pivot",
-    "rel_asof_last_event",
-    "rel_events_json_props",
-    "rel_q7_volume_shipping",
-    "rel_churned_customers",
-    "rel_q4_order_priority",
-    "rel_q6_forecast_revenue",
-    "rel_q10_returned_items",
-    "rel_q15_top_supplier",
-    "rel_q18_large_volume",
-    "rel_q21_waiting_supplier",
-    "rel_q22_idle_customers",
-    "rel_retention_cohorts",
-    "rel_funnel_steps",
-    "rel_q12_priority_class",
-    "rel_q13_custdist",
-    "rel_q14_promo_revenue",
-    "rel_q17_small_qty",
-    "rel_q19_disjunctive",
-    "rel_range_join_attribution",
-    "rel_q2_min_cost_supplier",
-    "rel_q8_market_share",
-    "rel_q9_product_profit",
-    "rel_q11_important_stock",
-    "rel_q16_supplier_count",
-    "rel_q20_excess_share",
-    "rel_rolling_active_users",
-    "text_doc_stats",
-    "text_token_topk",
-    "text_rolling_fingerprint",
-    "text_dom_main_block",
-    "text_sample_stratified",
-    "text_sample_weighted",
-    "text_bm25_topk",
-    "text_repetition_filter",
-    "text_pii_scrub",
-    "text_chunk_fixed",
-    "text_pack_sequences",
-    "text_length_quantiles",
-    "text_mix_by_source",
-    "text_quality_classifier",
-    "text_lang_id",
-    "text_winnow_fingerprints",
-    "text_lm_surprisal",
-    "text_bpe_merges",
-    "text_bpe_token_counts",
-    "pipeline_pretraining_corpus",
-    "pipeline_mv_incremental",
-    "pipeline_scd2_merge",
-    "pipeline_skew_salted_join",
-    "graph_pagerank",
-    "sketch_hll_distinct",
-    "sketch_hll_users_daily",
-    "sketch_cms_tokens",
-    "sketch_bloom_membership",
-    "sketch_hist_quantiles",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_jaccard_ngram",
-    "dedup_simhash",
-    "dedup_embedding_cosine",
-    "dedup_embedding_recall",
-    "dedup_groups_cc",
-    "dedup_substring_spans",
-    "dedup_semantic",
-    "decontaminate_ngram",
-    "sim_bruteforce_topk",
-    "sim_lsh_ann_topk",
-    "sim_label_centroid_topk",
-    "sim_ann_recall",
-    "sim_sq8_topk",
-    "sim_ivf_topk",
-    "media_image_stats",
-    "media_patch_embeddings",
-    "media_audio_stats",
-    "media_video_frame_stats",
-    "dataset_split_load",
-    "gt_repair_rows",
-    "layout_prune_stats",
-    "layout_zorder_stats",
-    "layout_bucketed_join",
-    "stream_events_sessions",
-    "stream_attribution_join",
-    "stream_dedup_first_seen",
-    "stream_user_totals",
-    "stream_hll_users_daily",
-    "pipeline_checkpoint_resume",
-    "extract_from_pagexml",
-    "extract_from_pagexml_files",
-    # reference-default configurations perf-tracked alongside the knn/G2
-    # flagship: visibility is the reference's configured default edge
-    # discovery (config.ini:9), the visual model its default
-    # architecture (config.ini:44)
-    "extract_interleaved_visibility",
-    "extract_interleaved_visual",
-    "extract_interleaved",
-]
-
-
-def _time_query(spark, fn, sf_dir, repeats: int = 2, raw: dict | None = None,
-                name: str | None = None) -> float:
-    """Best-of-``repeats`` per query, cache-cleared before every run.
-    One timed run per query (round 3's protocol) attributed python-worker
-    spin-up and post-scaling-phase host throttle to whichever family ran
-    when the worker pool churned — the sim_* family measured 2.2-2.6 s in
-    BENCH_r03 vs a profiled steady state of ~0.9 s (see VERDICT r3 #2).
-    Min-of-2 excludes warm-up consistently for ALL query families, the
-    same protocol the headline extract number already uses.
-
-    Self-diagnosis (round-5, VERDICT r4 #2): when ``raw`` is given, every
-    repeat's wall time plus the query's start timestamp land in it under
-    ``name`` — so a driver-vs-preview delta (r4's 9.4 s dedup_exact vs a
-    0.7 s preview of the same plan) is attributable from the record
-    alone: consecutive queries with inflated EVERY-repeat times inside
-    one wall-clock window = host contention; one slow repeat with a
-    quiet sibling = warm-up/GC; all-repeats-slow in isolation = real.
-
-    Adaptive repeats: when the fixed repeats still disagree by > 1.8×
-    the query gets up to 2 extra runs — the quiet re-run of the r5
-    suite showed a multi-minute contention window can cover BOTH
-    repeats of a long query (dedup_groups_cc recorded [42.8, 23.9]
-    against a 5 s quiet floor), and extra samples taken as the window
-    decays are the only in-suite way to escape it."""
-    best = float("inf")
-    times: list[float] = []
-    ts0 = time.time()
-
-    def one_run() -> None:
-        nonlocal best
-        # drop caches a prior run may have left (dedup ops cache their
-        # signature tables) so timings don't interfere
+    def run() -> float:
         spark.catalog.clearCache()
-        t0 = time.time()
-        df = fn(spark, sf_dir)
-        n = df.count()
-        _ = n
-        dt = time.time() - t0
-        times.append(round(dt, 3))
-        best = min(best, dt)
+        t0 = time.perf_counter()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return round(time.perf_counter() - t0, 3)
 
-    for _ in range(repeats):
-        one_run()
-    extra = 0
-    while extra < 2 and max(times) > 1.8 * min(times):
-        # disagreement → at least one repeat was polluted; sample again
-        one_run()
-        extra += 1
-    if raw is not None and name is not None:
-        raw[name] = {"t": times, "ts": round(ts0, 1)}
-    return best
+    run()
+    return [run() for _ in range(REPEATS)]
 
 
-def _scale_child() -> None:
-    """Hidden child mode: run the scaling job at a fixed parallelism
-    inside a taskset-capped process; prints 'RESULT <n> <seconds>'.
-    Optional 5th arg = repeat count: the timed job runs that many times
-    and the minimum is reported — the fast cluster size repeats so its
-    measurement window spans the slow size's single run (concurrent-pair
-    noise cancellation, see main())."""
-    n = int(sys.argv[2])
-    corpus_dir = sys.argv[3]
-    strategy = sys.argv[4]
-    repeats = int(sys.argv[5]) if len(sys.argv) > 5 else 1
-    os.environ.setdefault("SPARK_DRIVER_MEM", "32g")
-    from table_recognition_spark.core import gnn
-    from table_recognition_spark.pipeline.extract import extract_flat
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    wpath = os.path.join(here, "weights", "g2_seed42.npz")
-    weights = (
-        gnn.load_weights(wpath) if os.path.exists(wpath) else gnn.init_weights(42)
-    )
-    def prefetch():
-        # pull corpus files into the page cache so cold reads never land
-        # inside the timed region (this VM drops caches aggressively)
-        import glob as _g
-
-        for f in _g.glob(os.path.join(corpus_dir, "*", "*.parquet")):
-            with open(f, "rb") as fh:
-                while fh.read(1 << 22):
-                    pass
-
-    s = _build_spark(n, f"bench_scale_{n}")
-    d = s.read.parquet(os.path.join(corpus_dir, "docs.parquet"))
-    m = s.read.parquet(os.path.join(corpus_dir, "media.parquet"))
-    # warm up JIT, python workers, parquet footers outside the timed region
-    extract_flat(d.limit(2048), m, weights, strategy=strategy).count()
-    prefetch()
-    # self-diagnosing record (VERDICT r4 #2): every repeat's raw wall
-    # time + start timestamp + a single-core host probe taken right
-    # before it, so a contended window inside one child is visible
-    times, stamps, probes = [], [], []
-    for _ in range(repeats):
-        probes.append(round(_calibrate()[0], 4))
-        stamps.append(round(time.time(), 1))
-        t0 = time.time()
-        extract_flat(d, m, weights, strategy=strategy).count()
-        times.append(round(time.time() - t0, 3))
-    print(
-        "RESULT "
-        + json.dumps({"n": n, "t": times, "ts": stamps, "calib": probes}),
-        flush=True,
-    )
-    s.stop()
-
-
-def _run_scaling(cpus: int) -> dict:
-    """Two-cluster-size scaling evidence (north rule): same extraction
-    job, same bench corpus, N vs 4N pinned cores; efficiency =
-    T_N/(4*T_4N) from per-size minima. Returns the result-dict keys.
-    Runs BEFORE the 32-wide per-query suite in main() (only the short
-    headline phase precedes it): this host throttles hard after
-    sustained full-width load (identical 16-core runs measured 29 s
-    before the 32-core query phase and 85-94 s after it), so the
-    scaling measurement gets a fresh machine."""
-    extra: dict = {}
-    # two-cluster-size scaling evidence (north rule): same extraction job,
-    # same bench corpus, N vs 4N pinned cores; efficiency =
-    # T_N/(4·T_4N) from per-size minima. Skip with --no-scaling.
-    from table_recognition_spark.fixtures.bigbench import (
-        generate_bench_corpus,
-    )
-    from table_recognition_spark.pipeline.extract import extract_flat
-
-    # 240k docs / 120k media: big enough that the kernel's parallel
-    # compute (~560 core-s) dominates the per-run fixed costs (shuffle
-    # exchanges + final window stage, ~5.7 s at 16 cores — measured with
-    # scripts/profile_scaling.py; the kernel stage alone scales at 0.94).
-    # At 80k docs those fixed costs capped measurable efficiency at
-    # ~0.79, at 160k at ~0.85; 240k puts the quiet ceiling near 0.90 so
-    # a moderately degraded host still clears the ≥0.8 criterion.
-    bench_docs = int(os.environ.get("BENCH_DOCS", "240000"))
-    bench_media = int(os.environ.get("BENCH_MEDIA", "120000"))
-    corpus_dir = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        "BENCH",
-        "data",
-        f"corpus_{bench_docs}_{bench_media}_s42",
-    )
-    os.makedirs(corpus_dir, exist_ok=True)
-    if not os.path.exists(os.path.join(corpus_dir, "_DONE")):
-        # only spin the 32-wide generator when the corpus isn't cached:
-        # a full-width gen storm right before the scaling phase would
-        # hand the hi children a pre-heated (throttled) host
-        gen_spark = _build_spark(cpus, "bench_gen")
-        generate_bench_corpus(
-            gen_spark, corpus_dir, bench_docs, bench_media, seed=42
-        )
-        _stop_and_kill_jvm(gen_spark)
-        time.sleep(30)  # cool down after generation
-
-    from table_recognition_spark.core import gnn
-
-    wpath = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        "weights",
-        "g2_seed42.npz",
-    )
-    weights = (
-        gnn.load_weights(wpath)
-        if os.path.exists(wpath)
-        else gnn.init_weights(42)
-    )
-    # The scaling job uses the node-visibility edge-discovery strategy —
-    # the reference's configured default and the compute profile of
-    # real table-image work (~15 ms/image vs 0.7 ms for k-NN).
-    # Each cluster size runs in a SEPARATE PROCESS pinned with taskset
-    # to exactly N cores: local[N] alone caps only task threads, while
-    # the JVM would still borrow extra cores for GC/compression/python
-    # workers — a real N-core executor cannot. One timed run per child,
-    # several children per size, min taken (shared-VM noise only ever
-    # adds time; see the round-5 protocol note below).
-    import shutil as _sh
-    import subprocess
-
-    sizes = tuple(
-        int(x)
-        for x in os.environ.get("BENCH_SCALE_SIZES", "4,16").split(",")
-    )
-
-    def spawn_child(n: int, cores: str, repeats: int = 1):
-        cmd = [
-            "python",
-            os.path.abspath(__file__),
-            "--scale-child",
-            str(n),
-            corpus_dir,
-            "visibility",
-            str(repeats),
-        ]
-        if _sh.which("taskset"):
-            cmd = ["taskset", "-c", cores] + cmd
-        return subprocess.Popen(
-            cmd,
-            stdout=subprocess.PIPE,
-            stderr=subprocess.DEVNULL,
-            text=True,
-        )
-
-    def cooldown(seconds: float) -> None:
-        """Idle gap before a timed child, letting OUR OWN just-finished
-        wide load decay (a 16-core child's in-process repeat 2 ran 50.8 s
-        vs repeat 1's 38.8 s with quiet single-core probes before both).
-        Host-side noise windows are a separate phenomenon — they last
-        minutes, hit children after arbitrary idle (52.4 s after 150 s
-        of true idle vs 42.3 s after 60 s), and are gated by the
-        narrow+wide probes in _wait_quiet, not by sleeping."""
-        time.sleep(seconds)
-
-    child_log: list = []
-
-    def parse_result(proc) -> float:
-        out, _ = proc.communicate(timeout=3000)
-        line = [
-            ln for ln in out.splitlines() if ln.startswith("RESULT")
-        ][-1]
-        rec = json.loads(line[len("RESULT "):])
-        child_log.append(rec)
-        return min(rec["t"])
-
-    # Protocol: sequential, alternating [hi, lo] × attempts, each run
-    # SOLO on its pinned core set; efficiency computed from the
-    # PER-SIZE MINIMA. Rationale, learned the hard way on this shared
-    # VM (noise swings identical runs up to 2×):
-    # - concurrent disjoint-core pairs are biased: the wide sibling's
-    #   DRAM traffic inflates the narrow run ~25-40%, which OVERSTATES
-    #   efficiency (measured pair ratios of 1.1-1.2 — nonsense);
-    # - a single sequential adjacent pair doesn't cancel noise (host
-    #   state drifts between the two runs of a pair, round-1's 0.51);
-    # - noise is strictly additive, so min-of-N per size is the best
-    #   estimator of the uncontended machine, and the ratio of minima
-    #   the best estimate of true software scaling. Capped at 1.0.
-    # Round-5 protocol fix (the r4 miss, 0.762): hi children used to run
-    # 3 timed repeats IN-PROCESS — but a 16-wide run self-heats the host
-    # faster than it cools, so repeats 2-3 measure a throttled machine
-    # (instrumented child: repeat 1 = 38.8 s, repeat 2 = 50.8 s, both
-    # with quiet single-core probes — the probe cannot see the wide
-    # throttle). The 4-wide side doesn't self-heat (162.2/161.8 s back-
-    # to-back), which made the r4 asymmetry anti-hi: plenty of lucky lo
-    # samples, zero cool hi samples. Now EVERY child runs its timed job
-    # ONCE on a cooled host (25 s idle + calibration gate before each),
-    # hi gets MORE windows than lo (it's the throttle-sensitive side),
-    # and per-repeat raws/timestamps/probes land in scaling_children.
-    # Round-5.2 protocol fix (the first r5 run measured 0.71): the
-    # contention windows are NOT self-heat — probing showed a hi child
-    # 60 s after another hi child run 42.3 s while one after 150 s of
-    # true idle ran 52.4 s, and a lo child swing 149→199 s in the same
-    # phase. The host noise arrives in multi-minute windows that hit
-    # BOTH sizes; min-of-N only works if each size gets enough windows
-    # AND the gate can actually see a bad window before paying a child
-    # run for it. Hence: (a) an 8-process wide calibration probe joins
-    # the gate (single-core probes were quiet, 0.0148-0.0154, across
-    # windows where wide children differed 25%; 8 concurrent kernels
-    # contend for DRAM like the real job and inflate 3-50× under wide
-    # load), (b) both probes gate RELATIVE to their phase minimum
-    # (1.35×) with a bootstrap before the first child, (c) more hi
-    # windows (extra_hi 2→4) and a larger phase budget.
-    attempts = int(os.environ.get("BENCH_SCALE_ATTEMPTS", "3"))
-    extra_hi = int(os.environ.get("BENCH_SCALE_EXTRA_HI", "4"))
-    cool_s = float(os.environ.get("BENCH_SCALE_COOLDOWN", "25"))
-    lo_n, hi_n = sizes[0], sizes[-1]
-    # keep children clear of cores 0-3 where system daemons land
-    hi_cores = f"4-{4 + hi_n - 1}"
-    lo_cores = f"4-{4 + lo_n - 1}"
-    calib_trace: list = []
-    gate_budget = float(os.environ.get("BENCH_CALIB_WAIT", "180"))
-    ratio_cores = sizes[-1] / sizes[0]
-
-    global _PHASE_NARROW_MIN
-    _PHASE_NARROW_MIN = float("inf")
-    wide_probe = _WideProbe()
-    # bootstrap the relative gates: seed both phase minima with a few
-    # spaced samples so the first child's gate is not trivially passed
-    # by its own first (possibly noisy) sample
-    for _ in range(3):
-        _PHASE_NARROW_MIN = min(_PHASE_NARROW_MIN, _calibrate()[0])
-        wide_probe.sample()
-        time.sleep(8)
-
-    lo_samples: list = []
-    hi_samples: list = []
-
-    def current_eff():
-        if not lo_samples or not hi_samples:
-            return 0.0
-        return min(
-            1.0, min(lo_samples) / (ratio_cores * min(hi_samples))
-        )
-
-    phase_t0 = time.time()
-    budget_s = float(os.environ.get("BENCH_SCALE_BUDGET", "2100"))
-    for k in range(attempts):
-        if k:
-            cooldown(cool_s)
-        _wait_quiet(gate_budget, calib_trace, wide_probe)
-        hi_samples.append(parse_result(spawn_child(hi_n, hi_cores)))
-        cooldown(cool_s)
-        _wait_quiet(gate_budget, calib_trace, wide_probe)
-        lo_samples.append(parse_result(spawn_child(lo_n, lo_cores)))
-        if time.time() - phase_t0 > budget_s:
-            break
-    # extra hi-only windows: cheap (~1/3 of a lo run) and they sample
-    # the side whose min actually moves the ratio; stop early once the
-    # measurement clears the criterion with margin
-    for _ in range(extra_hi):
-        if current_eff() >= 0.9 or time.time() - phase_t0 > budget_s:
-            break
-        cooldown(cool_s)
-        _wait_quiet(gate_budget, calib_trace, wide_probe)
-        hi_samples.append(parse_result(spawn_child(hi_n, hi_cores)))
-    wide_probe.close()
-    eff = current_eff()
-    extra["scaling_calibration"] = calib_trace
-    # full per-child record: every repeat's raw time, start timestamp and
-    # in-child single-core probe (order = launch order, fallback included)
-    extra["scaling_children"] = child_log
-
-    # Degraded-host fallback (documented in BENCH/BASELINE.md): the
-    # 16-wide size carries a host-side co-scheduling penalty on this
-    # shared VM that 4- and 8-wide runs don't (measured: during one
-    # degraded phase T16 inflated 21-37% while T8 inflated ~0% and a
-    # 4×4-concurrent-pool probe shows the kernel itself loses only ~9%
-    # at 16 busy cores). The north rule's criterion is ≥ 0.8 between N
-    # and 4N; when the 4→16 pair lands below it, measure the SAME job
-    # at 2 vs 8 cores (still N vs 4N) and report both pairs honestly
-    # under their own keys.
-    if eff < 0.8 and os.environ.get("BENCH_SCALE_FALLBACK", "1") == "1":
-        fb_docs = int(os.environ.get("BENCH_FB_DOCS", "160000"))
-        fb_media = int(os.environ.get("BENCH_FB_MEDIA", "80000"))
-        fb_dir = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            "BENCH",
-            "data",
-            f"corpus_{fb_docs}_{fb_media}_s42",
-        )
-        os.makedirs(fb_dir, exist_ok=True)
-        gen2 = _build_spark(cpus, "bench_gen_fb")
-        generate_bench_corpus(gen2, fb_dir, fb_docs, fb_media, seed=42)
-        _stop_and_kill_jvm(gen2)
-
-        def fb_child(n, cores, repeats=1):
-            cmd = [
-                "python",
-                os.path.abspath(__file__),
-                "--scale-child",
-                str(n),
-                fb_dir,
-                "visibility",
-                str(repeats),
-            ]
-            if _sh.which("taskset"):
-                cmd = ["taskset", "-c", cores] + cmd
-            return subprocess.Popen(
-                cmd, stdout=subprocess.PIPE,
-                stderr=subprocess.DEVNULL, text=True,
-            )
-
-        fb_pairs = []
-        for _ in range(2):
-            cooldown(cool_s)
-            _wait_quiet(gate_budget, calib_trace)
-            t8 = parse_result(fb_child(8, "4-11"))
-            cooldown(cool_s)
-            _wait_quiet(gate_budget, calib_trace)
-            t2 = parse_result(fb_child(2, "4-5"))
-            fb_pairs.append((t2, t8))
-            if (
-                min(p[0] for p in fb_pairs)
-                / (4.0 * min(p[1] for p in fb_pairs))
-                >= 0.82
-                or time.time() - phase_t0 > budget_s + 700
-            ):
-                break
-        eff2 = min(
-            1.0,
-            min(p[0] for p in fb_pairs)
-            / (4.0 * min(p[1] for p in fb_pairs)),
-        )
-        extra["scaling_fallback"] = {
-            "sizes": [2, 8],
-            "bench_docs": fb_docs,
-            "pairs": [[round(a, 3), round(b, 3)] for a, b in fb_pairs],
-        }
-        extra["scaling_efficiency_2_to_8"] = round(eff2, 3)
-    # The headline N→4N number is ALWAYS the direct 4→16 pair; the 2→8
-    # fallback (when it runs) is diagnostic-only under its own key —
-    # folding max(eff, eff2) into the headline (as round 3 briefly did)
-    # is a ratchet that can only help the grade, so it's gone.
-    extra["scaling_efficiency_n_to_4n"] = round(eff, 3)
-
-    scaling = {
-        str(sizes[0]): {
-            "seconds": round(min(lo_samples), 3),
-            "docs_per_sec": round(bench_docs / min(lo_samples), 2),
-        },
-        str(sizes[-1]): {
-            "seconds": round(min(hi_samples), 3),
-            "docs_per_sec": round(bench_docs / min(hi_samples), 2),
-        },
-    }
-    lo, hi = str(sizes[0]), str(sizes[-1])
-    extra["scaling"] = scaling
-    extra["scaling_samples"] = {
-        lo: [round(t, 3) for t in lo_samples],
-        hi: [round(t, 3) for t in hi_samples],
-    }
-    extra["scaling_bench_docs"] = bench_docs
-    extra["scaling_bench_media"] = bench_media
-    extra[f"scaling_efficiency_{lo}_to_{hi}"] = round(eff, 3)
-
-    return extra
-
-
-BENCH_T0 = time.time()
-
-
-def main() -> None:
-    # plenty of headroom for the 32-core groupBy/collect_list stages
-    os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
+def main(names: list[str]) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     import __spark_entry__ as E
+    from table_recognition_spark.session import get_spark
 
     qs = E.queries()
-    per_query: dict[str, float] = {}
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        sys.exit(f"unknown queries: {', '.join(unknown)}")
 
-    # Phase ordering is deliberate: (1) the two-size scaling measurement
-    # runs FIRST — it is the round's hard gate and the most
-    # noise-sensitive phase, so it gets the machine before any 32-wide
-    # storm (the first r5 run put a 32-wide headline phase immediately
-    # before it and the first hi child ran 92.8 s); (2) the headline
-    # flagship next; (3) the per-query suite last (its extract timing
-    # can only IMPROVE the headline via min()).
-    from table_recognition_spark.pipeline.flagship import interleaved_docs
+    spark = get_spark("bench", extra_conf={"spark.ui.showConsoleProgress": "false"})
+    per_query = {}
+    for name in names or list(qs):
+        t = _time_query(spark, qs[name], sf_dir)
+        per_query[name] = {"min": min(t), "t": t}
+        print(f"{name:34s} {min(t):7.3f}  {t}", file=sys.stderr, flush=True)
+    cpus = spark.sparkContext.defaultParallelism
+    spark.stop()
 
-    scaling_extra: dict = {}
-    if "--no-scaling" not in sys.argv:
-        scaling_extra = _run_scaling(cpus)
-
-    # The headline + suite phases get a narrow+wide quiet gate like the
-    # scaling children, under one shared budget: the full r5 run showed
-    # a multi-minute contention window covering whole query families —
-    # uniformly polluted repeats ([20.2, 31.5] for a 4 s jaccard) agree
-    # with each other, so the adaptive-repeat trigger can't see them;
-    # only a pre-query host probe can. Unlike the scaling gate this one
-    # runs with the Spark JVM resident, whose post-query background
-    # threads keep the wide probe at 0.05-0.7 s against a 0.04 bare
-    # floor (r5.2 smoke: the strict 1.6× gate false-tripped on ~every
-    # query, 1030 s wasted on a quiet host) — so this gate only trips on
-    # STORM readings (≥3× floor AND ≥0.8 s absolute; real windows read
-    # 1-4.5 s). Quiet-host cost ~0.5 s/query; in a storm each query
-    # waits (up to 60 s, shared budget BENCH_QUERY_GATE_BUDGET) for the
-    # window to decay instead of recording garbage. The gate trace lands
-    # in the JSON either way, so a window that slips through is still
-    # attributable from the record.
-    global _PHASE_NARROW_MIN
-    _PHASE_NARROW_MIN = float("inf")
-    query_gate_budget = float(
-        os.environ.get("BENCH_QUERY_GATE_BUDGET", "600")
-    )
-    gate_spent = 0.0
-    gate_trace: list = []
-    gate_probe = _WideProbe()
-    for _ in range(2):  # bootstrap the relative minima
-        _PHASE_NARROW_MIN = min(_PHASE_NARROW_MIN, _calibrate()[0])
-        gate_probe.sample()
-
-    def gated(label: str) -> None:
-        nonlocal gate_spent
-        t0 = time.time()
-        _wait_quiet(
-            min(60.0, max(0.0, query_gate_budget - gate_spent)),
-            gate_trace,
-            gate_probe,
-            narrow_factor=1.6,
-            wide_factor=3.0,
-            wide_abs=0.8,
-        )
-        gate_spent += time.time() - t0
-
-    raw: dict = {}
-    n_docs, extract_sec = 0, 0.0
-    spark = _build_spark(cpus, "bench_headline")
-    n_docs = interleaved_docs(spark, sf_dir).count()
-    if "extract_interleaved" in qs:
-        # best of 2 — shared-VM noise (repeats inside _time_query)
-        gated("headline")
-        extract_sec = _time_query(
-            spark, qs["extract_interleaved"], sf_dir,
-            raw=raw, name="extract_interleaved_headline",
-        )
-    _stop_and_kill_jvm(spark)
-
-    if "--scaling-only" not in sys.argv:
-        spark = _build_spark(cpus, "bench")
-        # absorb one-time session costs (JVM JIT, parquet footer reads,
-        # python worker spin-up) so the first timed query measures the
-        # query, not initialization
-        for t in ("lineitem", "orders", "events", "documents", "embeddings"):
-            spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
-        for name in BENCH_QUERIES:
-            if name not in qs:
-                continue
-            gated(name)
-            per_query[name] = round(
-                _time_query(spark, qs[name], sf_dir, raw=raw, name=name), 3
-            )
-        if per_query.get("extract_interleaved"):
-            extract_sec = min(extract_sec, per_query["extract_interleaved"])
-        _stop_and_kill_jvm(spark)
-
-        # Retry pass (round-5.3): a multi-minute contention window can
-        # cover BOTH fixed repeats of consecutive queries with readings
-        # that AGREE (the r5-final run: lm_surprisal [22.9, 24.8],
-        # minhash [13.9, 13.4], jaccard [21.5, 19.4] against isolated
-        # floors of 2-3 s, while the 8-wide gate probe read a quiet
-        # 0.05-0.47 s — this window type is invisible to both the
-        # adaptive-repeat trigger and the storm gate). The only robust
-        # in-suite defense is temporal separation: after the suite
-        # finishes (and the window has had minutes to decay), the
-        # slowest K queries re-run once each in a FRESH JVM and the
-        # reported value is the min across passes. Retry raws land
-        # under "<name>@retry" so both passes stay attributable.
-        retry_k = int(os.environ.get("BENCH_RETRY_SLOWEST", "8"))
-        if retry_k > 0 and per_query:
-            slowest = sorted(
-                (n for n in per_query if n in qs),
-                key=lambda n: -per_query[n],
-            )[:retry_k]
-            spark = _build_spark(cpus, "bench_retry")
-            for t in ("lineitem", "orders", "events", "documents",
-                      "embeddings"):
-                spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
-            # one warm-up query absorbs python-worker spin-up so the
-            # first retry doesn't carry it
-            _time_query(spark, qs[slowest[0]], sf_dir, repeats=1)
-            for name in slowest:
-                gated(f"{name}@retry")
-                # 2 repeats, not 1: the adaptive-extra trigger inside
-                # _time_query needs a disagreeing pair to fire, giving a
-                # polluted retry up to 4 chances to land in a lull
-                t_retry = _time_query(
-                    spark, qs[name], sf_dir, raw=raw,
-                    name=f"{name}@retry", repeats=2,
-                )
-                per_query[name] = round(
-                    min(per_query[name], t_retry), 3
-                )
-            if per_query.get("extract_interleaved"):
-                extract_sec = min(
-                    extract_sec, per_query["extract_interleaved"]
-                )
-            _stop_and_kill_jvm(spark)
-    gate_probe.close()
-    extract_sec = round(extract_sec, 3)
-    per_query["extract_interleaved"] = extract_sec
-
-    result = {
-        "metric": "flagship extraction wall-clock (sf documents, interleaved)",
-        "value": extract_sec,
+    flagship = per_query.get("extract_interleaved")
+    print(json.dumps({
+        "metric": f"extract_interleaved wall-clock, noop sink, min of {REPEATS}",
+        "value": flagship["min"] if flagship else None,
         "unit": "sec",
-        "queries": per_query,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "n_docs": n_docs,
-        "docs_per_sec": round(n_docs / extract_sec, 2) if extract_sec else None,
         "cpus": cpus,
-        # per-repeat raw wall times + per-query start timestamps: the
-        # record a host-contention window can be diagnosed from (r4's
-        # dedup-family blow-up was unprovable without this)
-        "queries_raw": raw,
-        "bench_started_ts": round(BENCH_T0, 1),
-        # pre-query quiet-gate record: [narrow, wide] probe pairs in
-        # gate order, plus total seconds spent waiting out windows
-        "query_gate_calibration": gate_trace,
-        "query_gate_waited_s": round(gate_spent, 1),
-    }
-
-    result.update(scaling_extra)
-    # The driver captures only the LAST ~2000 chars of stdout and parses
-    # a JSON line out of that tail; the full self-diagnosing record
-    # (per-repeat raws, gate calibration traces) is tens of KB, so a
-    # tail-truncated print of it parses as nothing (round 5:
-    # BENCH_r05.json parsed=null). Emit three artifacts instead:
-    #   1. the full record to BENCH/full_latest.json (committed per
-    #      round as the durable diagnostic),
-    #   2. the full record as a mid-stdout line (survives in any log
-    #      that keeps whole stdout),
-    #   3. a compact summary as the FINAL line, sized well under the
-    #      tail window: headline + scaling gate + slowest queries +
-    #      pointer to the full artifact. 84 query names alone exceed
-    #      the tail budget, so the complete per-query dict physically
-    #      cannot ride the last line.
-    full_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH",
-        "full_latest.json",
-    )
-    try:
-        os.makedirs(os.path.dirname(full_path), exist_ok=True)
-        with open(full_path, "w") as f:
-            json.dump(result, f)
-    except OSError as e:  # pragma: no cover — read-only checkout
-        full_path = f"(write failed: {e})"
-    print(json.dumps(result))
-    slowest = dict(
-        sorted(per_query.items(), key=lambda kv: -kv[1])[:8]
-    )
-    summary = {
-        "metric": result["metric"],
-        "value": result["value"],
-        "unit": "sec",
-        "sf": result["sf"],
-        "n_docs": n_docs,
-        "docs_per_sec": result["docs_per_sec"],
-        "cpus": cpus,
-        "n_queries": len(per_query),
-        "max_query_sec": max(per_query.values()) if per_query else None,
-        "queries": slowest,
-        "queries_full": full_path,
-    }
-    for k in (
-        "scaling_efficiency_4_to_16",
-        "scaling_efficiency_n_to_4n",
-        "scaling",
-        "scaling_samples",
-        "scaling_bench_docs",
-    ):
-        if k in result:
-            summary[k] = result[k]
-    print(json.dumps(summary))
+        "sink": "noop",
+        "queries": per_query,
+    }))
 
 
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1] == "--scale-child":
-        _scale_child()
-    else:
-        main()
+    main(sys.argv[1:])

@@ -1,14 +1,13 @@
 #!/usr/bin/env python
-"""Round-7 profiling harness (guide §1.4): noop-sink isolation per query,
-plus phase-level breakdowns for the composite queries. Does NOT replace
-bench.py (frozen); cite numbers from here in OPTIMIZATION_r07.md.
+"""Phase breakdowns for two composite queries, at $SPARK_GRAFT_SF_DIR
+(default: the sf0.1 test data) on the session's host defaults.
 
 Usage:
-  python bench_extra.py q <name> [repeats]   # bench-protocol count() timing
-  python bench_extra.py noop <name> [repeats]# noop-sink timing (full compute)
-  python bench_extra.py flagship             # stage-phase breakdown
-  python bench_extra.py bpe                  # per-round breakdown
-  python bench_extra.py pagerank             # edge-build vs loop breakdown
+  python bench_extra.py bpe        # vocab / pair counts / merge loop
+  python bench_extra.py pagerank   # edge build vs iteration loop
+
+Per-query suite timings: ``bench.py [NAME ...]``; flagship layers:
+``perfbench/run.py --trace 1``.
 """
 from __future__ import annotations
 
@@ -19,14 +18,12 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def _spark(app="bench_extra"):
     from table_recognition_spark.session import get_spark
 
-    return get_spark(app, parallelism=CPUS,
-                     extra_conf={"spark.ui.showConsoleProgress": "false"})
+    return get_spark(app, extra_conf={"spark.ui.showConsoleProgress": "false"})
 
 
 def _warm(spark):
@@ -42,76 +39,6 @@ def timed(label, fn, repeats=3):
         times.append(round(time.time() - t0, 3))
     print(f"{label:46s} min={min(times):7.3f}  all={times}", flush=True)
     return min(times)
-
-
-def cmd_q(name: str, repeats: int = 3, sink: str = "count"):
-    import __spark_entry__ as E
-
-    spark = _spark(f"bx_{name}")
-    _warm(spark)
-    qs = E.queries()
-    fn = qs[name]
-
-    def run():
-        spark.catalog.clearCache()
-        df = fn(spark, SF)
-        if sink == "noop":
-            df.write.format("noop").mode("overwrite").save()
-        else:
-            df.count()
-
-    spark.sparkContext.setJobDescription(f"bx:{name}")
-    timed(f"{name} [{sink}]", run, repeats)
-    spark.stop()
-
-
-def cmd_flagship():
-    from pyspark.sql import functions as F
-
-    import __spark_entry__ as E
-    from table_recognition_spark.pipeline.extract import (
-        _all_spans, extract_flat, recognize_tables,
-    )
-    from table_recognition_spark.pipeline.flagship import (
-        fixture_media, interleaved_docs,
-    )
-
-    spark = _spark("bx_flagship")
-    _warm(spark)
-    w = E._weights()
-    docs = interleaved_docs(spark, SF)
-    media = fixture_media(spark)
-
-    def noop(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    timed("docs derivation (count)", lambda: docs.count())
-    spans = docs.select("doc_id", F.explode("spans").alias("s"))
-    timed("explode spans (noop)", lambda: noop(spans))
-    text = spans.filter(F.col("s.kind") == "text")
-    from table_recognition_spark.core import boilerplate
-
-    stripped = text.withColumn(
-        "text", boilerplate.spark_strip_expr(F.col("s.text"))
-    )
-    timed("text strip JVM (noop)", lambda: noop(stripped))
-    refs = (
-        spans.filter(F.col("s.kind") == "media")
-        .select(F.col("s.media_ref").alias("media_ref"))
-        .distinct()
-    )
-    kin = refs.join(
-        media.select("media_ref", "ocr_lines", "width", "height"), "media_ref"
-    )
-    timed("kernel input join (noop)", lambda: noop(kin))
-    timed("kernel G2 knn (noop)", lambda: noop(recognize_tables(kin, w)))
-    timed(
-        "all_spans union (noop)",
-        lambda: noop(_all_spans(docs, media, w)),
-    )
-    timed("extract_flat full (count)",
-          lambda: extract_flat(docs, media, w).count())
-    spark.stop()
 
 
 def cmd_bpe():
@@ -174,45 +101,5 @@ def cmd_pagerank():
     spark.stop()
 
 
-def cmd_suite(names=None, repeats=2):
-    import json as _json
-
-    import __spark_entry__ as E
-
-    spark = _spark("bx_suite")
-    _warm(spark)
-    qs = E.queries()
-    from bench import BENCH_QUERIES
-
-    todo = names or [n for n in BENCH_QUERIES if n in qs]
-    out = {}
-    for name in todo:
-        times = []
-        for _ in range(repeats):
-            spark.catalog.clearCache()
-            t0 = time.time()
-            qs[name](spark, SF).count()
-            times.append(round(time.time() - t0, 3))
-        out[name] = min(times)
-        print(f"{name:34s} {min(times):7.3f}  {times}", flush=True)
-    print(_json.dumps(out))
-    with open("/tmp/bx_suite_latest.json", "w") as f:
-        _json.dump(out, f)
-    spark.stop()
-
-
 if __name__ == "__main__":
-    cmd = sys.argv[1]
-    if cmd == "q":
-        cmd_q(sys.argv[2], int(sys.argv[3]) if len(sys.argv) > 3 else 3)
-    elif cmd == "noop":
-        cmd_q(sys.argv[2], int(sys.argv[3]) if len(sys.argv) > 3 else 3,
-              sink="noop")
-    elif cmd == "flagship":
-        cmd_flagship()
-    elif cmd == "bpe":
-        cmd_bpe()
-    elif cmd == "pagerank":
-        cmd_pagerank()
-    elif cmd == "suite":
-        cmd_suite(sys.argv[2].split(",") if len(sys.argv) > 2 else None)
+    {"bpe": cmd_bpe, "pagerank": cmd_pagerank}[sys.argv[1]]()

@@ -349,7 +349,8 @@ def forward(
     crop) — when given, the crop arguments are ignored and the CNN stage
     is skipped. This is the cross-image fusion seam: a task holding many
     images runs ONE batched CNN over all their crops (bit-identical to
-    per-image, GEMM rows are independent) and feeds the slices here."""
+    per-image: ``conv2d`` runs one fixed-shape GEMM per crop) and feeds
+    the slices here."""
     x_geo = np.asarray(x_geo, dtype=np.float32)
     e_geo = np.asarray(edge_attr, dtype=np.float32)
     if edge_index.size:

@@ -38,8 +38,9 @@ def _dot_pandas(a, b):
     ``_dot`` is retained as the oracle-matching baseline; equality is
     pinned by tests/test_queries_duckdb.py. (The udf object is built
     lazily per SparkSession: the decorator binds a JVM-side _judf, so a
-    module-level singleton would hold a dead py4j gateway after
-    bench.py's kill-JVM-between-phases pattern.)"""
+    module-level singleton would hold a dead py4j gateway once a session
+    is stopped and another started in the same process, as tests and
+    perfbench do.)"""
     from pyspark.sql import SparkSession
 
     sess = SparkSession.getActiveSession()

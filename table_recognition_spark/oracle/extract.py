@@ -90,10 +90,13 @@ def run_kernel_arrays_many(
     cell-text list per input image.
 
     Bit-identity with the per-image path (``run_kernel_arrays`` with
-    model='visual') holds because every fused op is row-independent:
-    GEMM output rows don't depend on the batch's other rows (pinned by
-    tests/test_visual.py), and depthwise/pool/avg are elementwise per
-    sample. The no-Spark oracle stays per-image; span parity between the
+    model='visual') holds because every fused op works on each crop
+    alone: ``conv2d`` multiplies a 3-D ``(B, H'·W', C·k·k)`` stack, so
+    each crop is its own GEMM with a fixed M whatever the batch size
+    (pinned by tests/test_visual.py), and depthwise/pool/avg are
+    elementwise per sample. A 2-D GEMM over rows stacked from several
+    images would not be exact: with OpenBLAS 0.3.23 (Haswell kernel),
+    an odd row count changes the last row's low bits. The no-Spark oracle stays per-image; span parity between the
     two is exercised by the pipeline parity tests."""
     from ..core import visual
     from ..core.blas import limit_blas_threads

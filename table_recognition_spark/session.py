@@ -29,9 +29,9 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
 
-    # shuffle/spill on tmpfs when available: this sandbox's disk shows
-    # erratic writeback stalls under concurrent writers; shuffles here are
-    # a few GB at most against 126G of tmpfs
+    # shuffle/spill on tmpfs when available: local disks can show erratic
+    # writeback stalls under concurrent writers; shuffles here are a few
+    # GB at most, well inside a 16 GB /dev/shm
     local_dir = (
         "/dev/shm/spark-local" if os.path.isdir("/dev/shm") else None
     )

@@ -152,7 +152,8 @@ def gt_cells_to_ctdar_xml(cells) -> str:
 # ----------------------------------------------------- Spark transforms
 # pandas-UDF objects are cached per SparkSession: the decorator binds a
 # JVM-side _judf, so a module-level singleton would hold a dead py4j
-# gateway after bench.py's kill-JVM-between-phases pattern.
+# gateway once a session is stopped and another started in the same
+# process (as tests and perfbench do).
 _UDF_CACHE: dict = {"sess": None, "udfs": {}}
 
 

@@ -197,9 +197,9 @@ def test_visual_path_ingests_color_jpeg_media(spark, weights):
 
 def test_fused_cnn_bit_identical_to_per_image():
     """Cross-image CNN fusion (run_kernel_arrays_many / forward's
-    node_feats seam) must be BIT-identical to the per-image path: GEMM
-    output rows are independent of the batch's other rows, depthwise/
-    pool/avg are elementwise per sample. Span parity between the fused
+    node_feats seam) must be BIT-identical to the per-image path:
+    conv2d multiplies a 3-D (B, H'·W', C·k·k) stack, one fixed-shape GEMM
+    per crop, and depthwise/pool/avg are elementwise per sample. Span parity between the fused
     Spark kernel and the per-image no-Spark oracle rests on this."""
     rng = np.random.default_rng(11)
     vw = visual.default_weights()
