@@ -94,9 +94,13 @@ def token_topk_sql(k: int = 20) -> str:
 def rolling_fingerprint(spark, sf_dir, window: int = 8):
     """Document fingerprinting via a rolling window: md5 of each
     ``window``-token shingle, keeping the lexicographic minimum per doc
-    (a winnowing-style signature). Pure built-ins."""
-    docs = load(spark, sf_dir, "documents")
-    toks = tokens(F.col("text"))
+    (a winnowing-style signature). Pure built-ins. ``toks`` is staged
+    with ``withColumn`` so the per-shingle lambda slices a materialized
+    array instead of re-tokenizing the text once per shingle."""
+    docs = load(spark, sf_dir, "documents").withColumn(
+        "toks", tokens(F.col("text"))
+    )
+    toks = F.col("toks")
     n = F.size(toks)
     shingles = F.transform(
         F.sequence(F.lit(1), F.greatest(n - (window - 1), F.lit(1))),

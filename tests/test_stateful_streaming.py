@@ -11,24 +11,17 @@ def test_running_user_totals_match_batch(spark, tmp_path):
     aggregate over the same files."""
     import shutil
 
-    from table_recognition_spark.streaming.stateful import running_user_totals
+    from table_recognition_spark.streaming.ingest import (
+        file_stream,
+        running_user_totals,
+    )
 
     # file streams need a directory; stage the single events file
     events_dir = tmp_path / "events_in"
     events_dir.mkdir()
     shutil.copy(f"{SF}/events.parquet", events_dir / "events.parquet")
 
-    schema = (
-        "event_id bigint, ts timestamp, user_id bigint, "
-        "event_type string, value double, props string"
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(str(events_dir))
-    )
-    out = running_user_totals(stream)
+    out = running_user_totals(file_stream(spark, str(events_dir)))
     q = (
         out.writeStream.outputMode("update")
         .format("memory")

@@ -16,9 +16,10 @@ from pyspark.sql import functions as F
 
 from table_recognition_spark.operators.common import load
 from table_recognition_spark.streaming.ingest import (
-    _EVENTS_SCHEMA,
     _drive_two_batch_stream,
+    _ephemeral_checkpoint_dir,
     _stage_two_batches,
+    running_user_totals,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -54,14 +55,8 @@ def test_drive_executes_two_micro_batches(spark):
     must appear TWICE in the raw memory table. If maxFilesPerTrigger
     ever stopped splitting the replay, this drops to one emission and
     the gate silently degrades to a single-batch check."""
-    from table_recognition_spark.streaming.stateful import (
-        running_user_totals,
-    )
-
     src = _stage_two_batches(load(spark, SF, "events"), ["ts", "event_id"])
-    raw = _drive_two_batch_stream(
-        spark, running_user_totals, src, _EVENTS_SCHEMA, "update"
-    )
+    raw = _drive_two_batch_stream(spark, running_user_totals, src, "update")
     from collections import defaultdict
 
     emissions = defaultdict(list)
@@ -74,3 +69,30 @@ def test_drive_executes_two_micro_batches(spark):
         if len(v) == 2:
             lo, hi = sorted(v)
             assert lo[0] < hi[0] and lo[1] < hi[1]
+
+
+def test_drive_leaves_session_as_found(spark):
+    """A drive drops its memory-sink view, restores the confs it sets
+    and removes its staged source and checkpoint — while the DataFrame
+    it returns still holds every streamed row."""
+    confs = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.streaming.noDataMicroBatches.enabled",
+    )
+    ckpt_base = os.path.dirname(_ephemeral_checkpoint_dir("probe"))
+
+    def state():
+        return (
+            {t.name for t in spark.catalog.listTables() if t.isTemporary},
+            {k: spark.conf.get(k) for k in confs},
+            set(os.listdir(ckpt_base)),
+        )
+
+    before = state()
+    src = _stage_two_batches(load(spark, SF, "events"), ["ts", "event_id"])
+    out = _drive_two_batch_stream(
+        spark, lambda ev: ev.select("event_id"), src, "append"
+    )
+    assert state() == before
+    assert not os.path.exists(src)
+    assert out.count() == load(spark, SF, "events").count()

@@ -2,7 +2,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from table_recognition_spark.streaming.ingest import (
-    run_stream_to_memory,
+    _drive_two_batch_stream,
+    file_stream,
     stream_events_hourly,
 )
 
@@ -19,11 +20,12 @@ def test_stream_hourly_equals_batch(spark, tmp_path):
     events_dir = tmp_path / "events_in"
     events_dir.mkdir()
     shutil.copy(f"{SF}/events.parquet", events_dir / "events.parquet")
-    stream = stream_events_hourly(spark, str(events_dir))
-    run_stream_to_memory(stream, "hourly_out")
+    out = _drive_two_batch_stream(
+        spark, stream_events_hourly, str(events_dir), "complete"
+    )
     got = {
         (r["hour"], r["event_type"]): (r["n"], r["value_c"])
-        for r in spark.sql("SELECT * FROM hourly_out").collect()
+        for r in out.collect()
     }
 
     ev = spark.read.parquet(f"{SF}/events.parquet")
@@ -101,8 +103,6 @@ def test_watermark_drops_late_events_append_mode(spark, tmp_path):
     watermark) and one fresh row that finalizes a second window."""
     import pandas as pd
 
-    from table_recognition_spark.streaming.ingest import stream_events_hourly
-
     events_dir = tmp_path / "ev"
     events_dir.mkdir()
 
@@ -126,7 +126,7 @@ def test_watermark_drops_late_events_append_mode(spark, tmp_path):
         ]
     )
     stream = stream_events_hourly(
-        spark, str(events_dir), watermark="30 minutes"
+        file_stream(spark, str(events_dir)), watermark="30 minutes"
     )
     q = (
         stream.writeStream.outputMode("append")
@@ -175,7 +175,7 @@ def test_stream_sessions_equals_batch(spark, tmp_path):
     events_dir.mkdir()
     shutil.copy(f"{SF}/events.parquet", events_dir / "e0.parquet")
 
-    stream = stream_sessions(spark, str(events_dir))
+    stream = stream_sessions(file_stream(spark, str(events_dir)))
     q = (
         stream.writeStream.outputMode("append")
         .format("memory")
@@ -259,7 +259,7 @@ def test_stream_range_join_equals_batch(spark, tmp_path):
     events_dir.mkdir()
     shutil.copy(f"{SF}/events.parquet", events_dir / "e0.parquet")
 
-    stream = stream_view_purchase_join(spark, str(events_dir))
+    stream = stream_view_purchase_join(file_stream(spark, str(events_dir)))
     q = (
         stream.writeStream.outputMode("append")
         .format("memory")
@@ -317,7 +317,9 @@ def test_stream_hll_registers_equal_batch_sketch(spark, tmp_path):
     events_dir.mkdir()
     shutil.copy(f"{SF}/events.parquet", events_dir / "e0.parquet")
 
-    stream = stream_hll_users_daily_registers(spark, str(events_dir))
+    stream = stream_hll_users_daily_registers(
+        file_stream(spark, str(events_dir))
+    )
     q = (
         stream.writeStream.outputMode("update")
         .format("memory")
