@@ -160,8 +160,7 @@ def _extract_from_pagexml(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     parsed = parse_page_xml_table(xml_media, "page_xml", "ocr_lines")
     # kernel fan-out bound = the known fixture size: without it the
-    # pipeline would count `parsed`, re-running the XML serialize+parse
-    # UDF chain once just to learn it is 24 rows
+    # 24 rows would fan out into 2 x cores kernel tasks, most of them empty
     return extract_flat(
         interleaved_docs(spark, sf_dir), parsed, _weights(),
         n_rows_bound=N_MEDIA,

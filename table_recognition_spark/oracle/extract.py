@@ -200,7 +200,8 @@ def extract_corpus(
     visual_weights: dict | None = None,
 ) -> dict:
     """Whole corpus → {doc_id: output spans}, with per-media_ref kernel
-    results memoized (the distributed pipeline dedups identically)."""
+    results memoized (the distributed pipeline dedups identically).
+    Spans of a kind other than ``text`` or ``media`` emit nothing."""
     media_by_ref = {m["media_ref"]: m for m in media}
     kernel_cache: dict = {}
 
@@ -235,7 +236,7 @@ def extract_corpus(
                         "media_ref": "",
                     }
                 )
-            else:
+            elif s["kind"] == "media":
                 cells = cached_cells(s["media_ref"])
                 if cells is None:
                     continue

@@ -2,29 +2,34 @@
 
 Spark shape (SURVEY.md §3.1):
 
-    docs ──explode(spans)──┬── text spans ──JVM regexp boilerplate strip ──┐
-                           └── media spans ─┐                              │
-    media ──(ocr_lines,w,h only; image      │ distinct(media_ref)          │
-             bytes PRUNED from the scan) ───┴── join ── repartition ──     │
-                 mapInArrow(GNN kernel, Arrow batches) ── cells ──         │
-                 join back to span occurrences ────────────────────────────┤
-                                                                           ▼
+    docs ──posexplode(spans)──┬── text + media spans ──── left join ────────┐
+                              │                          on media_ref       │
+                              └── media refs ── distinct ─┐     ▲ cells     │
+    media ──(ocr_lines, w, h only; image bytes PRUNED) ── join  │           │
+           ── repartition ── mapInArrow(GNN kernel, Arrow batches)          │
+                                                                            ▼
+        text rows → JVM regexp boilerplate strip; media rows → their cells
             extract:      groupBy(doc_id) → collect_list → array_sort
             extract_flat: row_number over a doc_id window
 
 Scale properties, deliberately:
 - **Kernel runs once per distinct media_ref**, not per occurrence — shared
-  images across documents cost one forward pass; results fan back out with
-  an equi-join (AQE handles reference skew).
+  images across documents cost one forward pass; results fan back out
+  with one left join, which the planner's size rule makes a broadcast or
+  a shuffled join.
+- **Documents are read twice, with no Union**: one ``posexplode`` feeds
+  both span kinds, and the distinct-refs branch reads them once more.
 - **Column pruning**: the kernel needs only (ocr_lines, width, height); the
   potentially-huge ``image`` binary column never leaves the scan unless the
   caller asks for visual features.
 - **Only Python boundary** is the Arrow-batched ``mapInArrow`` kernel; the
   boilerplate strip is JVM-side ``regexp_replace`` inside whole-stage
   codegen.
-- **One shuffle** for reassembly, keyed by doc_id: ``extract`` re-numbers
-  offsets inside the collected array with ``transform``; ``extract_flat``
-  numbers flat rows with a window ``row_number``.
+- **One doc_id shuffle** for reassembly, ordered by (offset, array
+  position, cell index): ``extract`` re-numbers offsets inside the
+  collected array with ``transform``; ``extract_flat`` numbers flat rows
+  with a window ``row_number``. The explode and a broadcast join keep
+  the input's partitioning, so docs bucketed by doc_id skip that shuffle.
 """
 
 from __future__ import annotations
@@ -233,7 +238,10 @@ def recognize_tables(
     across tasks; on the 600-image ``kernel_heavy`` benchmark it beat both
     8× and 1× cores. The cap by ``n_rows_bound`` (an upper bound on the
     input row count; omitted = no cap) keeps a small input from paying for
-    tasks that get no rows.
+    tasks that get no rows. Nothing here counts the input to learn it: a
+    media-table count costs two Spark jobs on every call (~80 ms median,
+    4-core VM), more than the empty tasks it saves unless the input has
+    fewer than 2 × cores rows.
     Round-robin, NOT hash-by-ref: each input row is one complete media
     (ref + all its ocr lines), so the kernel needs no key co-location —
     and hash partitioning leaves collision stragglers on small/skewed ref
@@ -268,55 +276,68 @@ def _all_spans(
     n_rows_bound: int | None = None,
 ) -> DataFrame:
     """Shared pipeline core → un-numbered output spans
-    (doc_id, orig_offset, sub_idx, kind, text, media_ref).
+    (doc_id, orig_offset, pos, sub_idx, kind, text, media_ref).
+
+    One ``posexplode`` feeds both span kinds: text spans are stripped in
+    place and media spans left-join their cells. ``pos``, the span's
+    array position, breaks ties between spans that share an ``offset``,
+    as the oracle's stable sort does. Spans of any kind other than text
+    and media emit nothing.
 
     ``n_rows_bound`` caps the kernel fan-out (see
-    :func:`recognize_tables`); omitted, the media table's row count is
-    used — a cheap upper bound on |distinct refs| (a metadata-fast
-    parquet count), so a small media corpus never fans out into hundreds
-    of near-empty Python-boundary tasks. A caller whose ``media_df`` is
-    costly to count (a parsed-XML table, say) passes the bound."""
-    spans = docs_df.select("doc_id", F.explode("spans").alias("s")).select(
-        "doc_id",
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-        F.col("s.offset").alias("orig_offset"),
-    )
-
-    text = spans.filter(F.col("kind") == "text").select(
-        "doc_id",
-        "orig_offset",
-        F.lit(0).alias("sub_idx"),
-        F.lit("main_text").alias("kind"),
-        boilerplate.spark_strip_expr(F.col("text")).alias("text"),
-        F.lit("").alias("media_ref"),
-    )
-
-    media_spans = spans.filter(F.col("kind") == "media").select(
-        "doc_id", "orig_offset", "media_ref"
+    :func:`recognize_tables`, which also says why nothing counts the media
+    table for it); omitted, the fan-out is 2 × defaultParallelism and
+    building the plan runs no Spark job."""
+    spans = (
+        docs_df.select("doc_id", F.posexplode("spans").alias("pos", "s"))
+        .select(
+            "doc_id",
+            "pos",
+            F.col("s.kind").alias("kind"),
+            F.col("s.text").alias("text"),
+            F.col("s.media_ref").alias("media_ref"),
+            F.col("s.offset").alias("orig_offset"),
+        )
+        .filter(F.col("kind").isin("text", "media"))
     )
 
     # kernel once per distinct ref; recognize_tables' column selection
     # prunes the image bytes column at the scan (unless model='visual')
-    refs = media_spans.select("media_ref").distinct()
-    kernel_input = refs.join(media_df, "media_ref")
-    if n_rows_bound is None:
-        n_rows_bound = media_df.count()
+    refs = spans.filter(F.col("kind") == "media").select("media_ref").distinct()
     cells = recognize_tables(
-        kernel_input, weights, strategy, model, n_rows_bound=n_rows_bound
+        refs.join(media_df, "media_ref"),
+        weights,
+        strategy,
+        model,
+        n_rows_bound=n_rows_bound,
+    ).select(
+        F.col("media_ref").alias("cell_ref"),
+        "cell_idx",
+        F.col("text").alias("cell_text"),
     )
 
-    media_out = media_spans.join(cells, "media_ref").select(
-        "doc_id",
-        "orig_offset",
-        F.col("cell_idx").alias("sub_idx"),
-        F.lit("cell").alias("kind"),
-        "text",
-        "media_ref",
+    is_text = F.col("kind") == "text"
+    # a media span whose ref has no media row, or whose image has no
+    # cells, finds no cell and is dropped: the inner-join rule
+    return (
+        spans.join(
+            cells,
+            (F.col("media_ref") == F.col("cell_ref")) & ~is_text,
+            "left",
+        )
+        .filter(is_text | F.col("cell_idx").isNotNull())
+        .select(
+            "doc_id",
+            "orig_offset",
+            "pos",
+            F.coalesce("cell_idx", F.lit(0)).alias("sub_idx"),
+            F.when(is_text, "main_text").otherwise("cell").alias("kind"),
+            F.when(
+                is_text, boilerplate.spark_strip_expr(F.col("text"))
+            ).otherwise(F.col("cell_text")).alias("text"),
+            F.when(is_text, "").otherwise(F.col("media_ref")).alias("media_ref"),
+        )
     )
-
-    return text.unionByName(media_out)
 
 
 def extract(
@@ -330,7 +351,7 @@ def extract(
     Canonical semantics == ``oracle.extract_corpus``: text spans →
     kind='main_text' (boilerplate-stripped), media spans → one kind='cell'
     span per assembled table cell; media_refs absent from ``media_df`` emit
-    nothing (inner join).
+    nothing, as do spans of any kind other than text and media.
     """
     all_spans = _all_spans(docs_df, media_df, weights, **kwargs)
 
@@ -339,7 +360,10 @@ def extract(
         .agg(
             F.array_sort(
                 F.collect_list(
-                    F.struct("orig_offset", "sub_idx", "kind", "text", "media_ref")
+                    F.struct(
+                        "orig_offset", "pos", "sub_idx", "kind", "text",
+                        "media_ref",
+                    )
                 )
             ).alias("tmp")
         )
@@ -369,7 +393,7 @@ def extract_flat(
     from pyspark.sql import Window
 
     all_spans = _all_spans(docs_df, media_df, weights, **kwargs)
-    w = Window.partitionBy("doc_id").orderBy("orig_offset", "sub_idx")
+    w = Window.partitionBy("doc_id").orderBy("orig_offset", "pos", "sub_idx")
     return all_spans.select(
         "doc_id",
         (F.row_number().over(w) - 1).alias("offset"),

@@ -15,14 +15,23 @@ def _spans_tuples(spans):
     return [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans]
 
 
-def _run_parity(spark, corpus, weights, model="g2", **kwargs):
+def _run_parity(spark, corpus, weights, model="g2", fn=extract, **kwargs):
     docs, media, _ = corpus
     docs_df, media_df = corpus_to_spark(spark, docs, media)
-    out = extract(docs_df, media_df, weights, model=model, **kwargs)
-    got = {
-        r["doc_id"]: _spans_tuples([s.asDict() for s in r["spans"]])
-        for r in out.collect()
-    }
+    out = fn(docs_df, media_df, weights, model=model, **kwargs)
+    if fn is extract_flat:
+        by_doc = {}
+        for r in out.collect():
+            by_doc.setdefault(r["doc_id"], []).append(r.asDict())
+        got = {
+            did: _spans_tuples(sorted(rows, key=lambda s: s["offset"]))
+            for did, rows in by_doc.items()
+        }
+    else:
+        got = {
+            r["doc_id"]: _spans_tuples([s.asDict() for s in r["spans"]])
+            for r in out.collect()
+        }
     expected = {
         did: _spans_tuples(spans)
         for did, spans in extract_corpus(
@@ -112,6 +121,57 @@ def test_parity_zero_point_lines_in_batch(spark, weights, case):
             media[1], ocr_lines=[_without_points(x) for x in media[1]["ocr_lines"]]
         )
     _parity_in_one_batch(spark, weights, media)
+
+
+def _span(kind, offset, ref="", text=""):
+    return {"kind": kind, "text": text, "media_ref": ref, "offset": offset}
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("fn", [extract, extract_flat],
+                         ids=["extract", "extract_flat"])
+@pytest.mark.parametrize("media_first", [False, True],
+                         ids=["text_first", "media_first"])
+def test_parity_duplicate_offsets(spark, weights, fn, media_first):
+    """A text span and a media span with the same ``offset`` keep their
+    array order, as the oracle's stable sort does, in both outputs."""
+    from table_recognition_spark.fixtures.generate import make_corpus
+
+    _, media, _ = make_corpus(0, 2, seed=7)
+    ref = media[0]["media_ref"]
+    tied = [_span("text", 3, text="<p>tied</p>"), _span("media", 3, ref)]
+    if media_first:
+        tied.reverse()
+    docs = [{"doc_id": "tied", "spans": [
+        _span("media", 5, media[1]["media_ref"]),
+        *tied,
+        _span("text", 1, text="<p>first</p>"),
+    ]}]
+    _run_parity(spark, (docs, media, None), weights, fn=fn)
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("fn", [extract, extract_flat],
+                         ids=["extract", "extract_flat"])
+def test_unknown_span_kind_emits_nothing(spark, weights, fn):
+    """A span of a kind other than text or media emits nothing, even
+    when its media_ref names an existing image."""
+    from table_recognition_spark.fixtures.generate import make_corpus
+
+    _, media, _ = make_corpus(0, 1, seed=7)
+    ref = media[0]["media_ref"]
+    docs = [{"doc_id": "d", "spans": [
+        _span("text", 0, text="<p>hi</p>"),
+        _span("video", 1, ref),
+        _span("media", 2, ref),
+    ]}]
+    known = [{"doc_id": "d", "spans": [
+        s for s in docs[0]["spans"] if s["kind"] != "video"
+    ]}]
+    expected = extract_corpus(docs, media, weights)
+    assert any(s["kind"] == "cell" for s in expected["d"])
+    assert expected == extract_corpus(known, media, weights)
+    _run_parity(spark, (docs, media, None), weights, fn=fn)
 
 
 @pytest.mark.spark

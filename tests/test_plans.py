@@ -2,10 +2,12 @@
 pipeline survive a 100× scale-up, pinned so refactors can't silently
 lose them."""
 
+import re
+
 import pytest
 
 from table_recognition_spark.fixtures.generate import corpus_to_spark
-from table_recognition_spark.pipeline.extract import extract
+from table_recognition_spark.pipeline.extract import extract, extract_flat
 
 
 def _formatted_plan(df):
@@ -18,15 +20,23 @@ def _formatted_plan(df):
 
 
 @pytest.fixture(scope="module")
-def plan(spark, tiny_corpus, weights, tmp_path_factory):
+def parquet_corpus(spark, tiny_corpus, tmp_path_factory):
+    """(docs, media) read back from parquet, so scans show real
+    ReadSchema pruning."""
     docs, media, _ = tiny_corpus
     docs_df, media_df = corpus_to_spark(spark, docs, media)
-    # write to parquet so scans show real ReadSchema pruning
     base = tmp_path_factory.mktemp("plans")
     docs_df.write.parquet(str(base / "docs"))
     media_df.write.parquet(str(base / "media"))
-    d = spark.read.parquet(str(base / "docs"))
-    m = spark.read.parquet(str(base / "media"))
+    return (
+        spark.read.parquet(str(base / "docs")),
+        spark.read.parquet(str(base / "media")),
+    )
+
+
+@pytest.fixture(scope="module")
+def plan(parquet_corpus, weights):
+    d, m = parquet_corpus
     return _formatted_plan(extract(d, m, weights))
 
 
@@ -38,14 +48,59 @@ def test_image_column_pruned_from_media_scan(plan):
 
 
 def test_single_real_shuffle(plan):
-    """Reassembly is the only Exchange; everything else broadcasts."""
-    import re
-
+    """Both joins broadcast: the only shuffles are the distinct-refs
+    aggregate, the kernel fan-out and the reassembly."""
     exchanges = re.findall(r"\n\((\d+)\) (Exchange|BroadcastExchange)", plan)
     real = [e for e in exchanges if e[1] == "Exchange"]
-    # final groupBy + distinct(media_ref) aggregate + the deliberate
-    # kernel repartition (straggler-tail levelling)
+    # distinct(media_ref) aggregate + the deliberate kernel repartition
+    # (straggler-tail levelling) + the final groupBy(doc_id)
     assert len(real) <= 3, exchanges
+
+
+def test_documents_read_twice_no_union(plan):
+    """One explode feeds both span kinds (text spans and the cell join),
+    and the distinct-refs branch is the only other read of documents."""
+    doc_scans = [
+        b for b in plan.split("\n\n")
+        if re.match(r"\s*\(\d+\) Scan parquet", b) and "/docs]" in b
+    ]
+    assert len(doc_scans) == 2, doc_scans
+    assert "Union" not in plan, plan.split("\n\n")[0]
+
+
+def test_bucketed_docs_need_no_doc_shuffle(spark, parquet_corpus, weights,
+                                           tmp_path):
+    """Docs bucketed by doc_id keep that partitioning through the
+    explode and the broadcast cell join, so the reassembly window needs
+    no hash(doc_id) exchange; the unbucketed input still has one."""
+    d, m = parquet_corpus
+    # warehouse dir is a static conf: give the table its own location
+    spark.sql(f"CREATE DATABASE planbuck LOCATION '{tmp_path}/wh'")
+    try:
+        d.write.bucketBy(8, "doc_id").saveAsTable("planbuck.docs")
+        bucketed = spark.table("planbuck.docs")
+        for docs_df, n in ((bucketed, 0), (d, 1)):
+            p = _formatted_plan(extract_flat(docs_df, m, weights))
+            assert len(re.findall(r"hashpartitioning\(doc_id", p)) == n, (
+                p.split("\n\n")[0]
+            )
+    finally:
+        spark.sql("DROP DATABASE planbuck CASCADE")
+
+
+def test_building_flagship_starts_no_job(spark, parquet_corpus, weights):
+    """With no n_rows_bound, building the plan runs nothing: the kernel
+    fan-out is not sized by counting the media table."""
+    d, m = parquet_corpus
+    sc = spark.sparkContext
+    group = "test_building_flagship_starts_no_job"
+    sc.setJobGroup(group, "build extract_flat")
+    try:
+        extract_flat(d, m, weights)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_kernel_is_arrow_batched(plan):
