@@ -22,25 +22,11 @@ _REPO = os.path.dirname(os.path.abspath(__file__))
 if _REPO not in __import__("sys").path:
     __import__("sys").path.insert(0, _REPO)
 
-_WEIGHTS = None
-
 
 def _weights():
-    global _WEIGHTS
-    if _WEIGHTS is None:
-        from table_recognition_spark.core import gnn
+    from table_recognition_spark.core import gnn
 
-        # prefer the trained artifact (96.2% held-out edge accuracy on
-        # synthetic grids, weights/g2_trained_seed42.history.json); fall
-        # back to the frozen seeded init
-        for name in ("g2_trained_seed42.npz", "g2_seed42.npz"):
-            path = os.path.join(_REPO, "weights", name)
-            if os.path.exists(path):
-                _WEIGHTS = gnn.load_weights(path)
-                break
-        else:
-            _WEIGHTS = gnn.init_weights(42)
-    return _WEIGHTS
+    return gnn.default_weights()
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -158,7 +144,7 @@ def _extract_from_pagexml(spark: SparkSession, sf_dir: str) -> DataFrame:
         "media_ref", "width", "height",
         serialize_page_xml_col(F.col("ocr_lines")).alias("page_xml"),
     )
-    parsed = parse_page_xml_table(xml_media, "page_xml", "ocr_lines")
+    parsed = parse_page_xml_table(xml_media)
     # kernel fan-out bound = the known fixture size: without it the
     # 24 rows would fan out into 2 x cores kernel tasks, most of them empty
     return extract_flat(
@@ -174,39 +160,21 @@ def _extract_from_pagexml_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     input layout (graph.py:47-59), listed/partitioned/parsed as a
     first-class Spark source. Output must equal the straight-run
     flagship (same expected-parquet oracle as extract_interleaved)."""
-    import tempfile
-
     from table_recognition_spark.pipeline.extract import extract_flat
     from table_recognition_spark.pipeline.flagship import (
-        fixture_media,
+        N_MEDIA,
+        fixture_pagexml,
         interleaved_docs,
     )
-    from table_recognition_spark.sources.pagexml import ocr_lines_to_page_xml
     from table_recognition_spark.sources.pagexml_datasource import (
         register_pagexml_source,
     )
-
-    d = tempfile.mkdtemp(prefix="trs_pagexml_")
-    rows = (
-        fixture_media(spark)
-        .select("media_ref", "width", "height", "ocr_lines")
-        .collect()  # 24 fixture files — driver-side corpus materialization
-    )
-    for r in rows:
-        xml = ocr_lines_to_page_xml(
-            [ln.asDict(recursive=True) for ln in r.ocr_lines],
-            r.width,
-            r.height,
-        )
-        with open(os.path.join(d, f"{r.media_ref}.xml"), "w") as fh:
-            fh.write(xml)
-    from table_recognition_spark.pipeline.flagship import N_MEDIA
 
     register_pagexml_source(spark)
     parsed = (
         spark.read.format("pagexml")
         .option("numPartitions", "4")
-        .load(d)
+        .load(fixture_pagexml(spark))
     )
     # fan-out bound = the staged corpus size (see _extract_from_pagexml)
     return extract_flat(

@@ -51,12 +51,10 @@ def main() -> None:
     from table_recognition_spark.pipeline.checkpoint import CheckpointedExtract
     from table_recognition_spark.session import get_spark
 
-    here = os.path.dirname(os.path.abspath(__file__))
-    default_w = os.path.join(here, "weights", "g2_trained_seed42.npz")
-    if not os.path.exists(default_w):
-        default_w = os.path.join(here, "weights", "g2_seed42.npz")
-    wpath = args.weights or default_w
-    weights = gnn.load_weights(wpath)
+    weights = (
+        gnn.load_weights(args.weights) if args.weights
+        else gnn.default_weights()
+    )
 
     spark = get_spark("extract", parallelism=args.parallelism)
     docs = spark.read.parquet(args.docs)

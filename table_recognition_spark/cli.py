@@ -180,12 +180,7 @@ def _run_infer(cfg: ModeConfig) -> int:
     from .session import get_spark
 
     spark = get_spark("infer")
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    wpath = os.path.join(here, "weights", "g2_seed42.npz")
-    weights = (
-        gnn.load_weights(wpath) if os.path.exists(wpath)
-        else gnn.init_weights(42)
-    )
+    weights = gnn.default_weights()
     src = cfg.infer_input_dir
     if src and os.path.exists(os.path.join(src, "docs.parquet")):
         docs = spark.read.parquet(os.path.join(src, "docs.parquet"))

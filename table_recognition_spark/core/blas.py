@@ -23,24 +23,24 @@ def limit_blas_threads(n: int = 1) -> None:
     if _DONE:
         return
     _DONE = True
-    try:
-        import numpy as np
+    import numpy as np
 
-        candidates = []
-        for base in np.__path__:
-            candidates += glob.glob(
-                os.path.join(base, "..", "numpy.libs", "libopenblas*")
-            )
-            candidates += glob.glob(os.path.join(base, "*.libs", "libopenblas*"))
-        for path in candidates:
+    candidates = []
+    for base in np.__path__:
+        candidates += glob.glob(
+            os.path.join(base, "..", "numpy.libs", "libopenblas*")
+        )
+        candidates += glob.glob(os.path.join(base, "*.libs", "libopenblas*"))
+    for path in candidates:
+        try:
             lib = ctypes.CDLL(path)  # same handle as the loaded copy
-            for fn in (
-                "openblas_set_num_threads64_",
-                "openblas_set_num_threads",
-            ):
-                f = getattr(lib, fn, None)
-                if f is not None:
-                    f(int(n))
-                    return
-    except Exception:
-        pass  # best-effort: env-var pin remains the primary mechanism
+        except OSError:
+            continue  # best-effort: the env-var pin remains the primary mechanism
+        for fn in (
+            "openblas_set_num_threads64_",
+            "openblas_set_num_threads",
+        ):
+            f = getattr(lib, fn, None)
+            if f is not None:
+                f(int(n))
+                return

@@ -23,25 +23,35 @@ _DIST = os.path.join(
 )
 
 
-def _cached_parquet(spark: SparkSession, name: str, build_df) -> DataFrame:
-    """Scan ``dist/<name>.parquet``, first writing ``build_df()`` there if
-    it is absent (one coalesced file, published by an atomic rename)."""
-    cache = os.path.join(_DIST, f"{name}.parquet")
-    if not os.path.exists(cache):
+def _publish_once(name: str, write) -> str:
+    """Return ``dist/<name>``, first building it if absent: ``write(path)``
+    fills a private temp path, published by an atomic rename."""
+    path = os.path.join(_DIST, name)
+    if not os.path.exists(path):
         os.makedirs(_DIST, exist_ok=True)
         tmp = tempfile.mkdtemp(dir=_DIST)
         try:
             data = os.path.join(tmp, "data")
-            build_df().coalesce(1).write.mode("overwrite").parquet(data)
+            write(data)
             try:
-                os.rename(data, cache)
+                os.rename(data, path)
             except OSError:
-                # a concurrent writer published first; its file is identical
-                if not os.path.exists(cache):
+                # a concurrent writer published first; its output is identical
+                if not os.path.exists(path):
                     raise
         finally:  # never leave tmp residue
             shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(cache)
+    return path
+
+
+def _cached_parquet(spark: SparkSession, name: str, build_df) -> DataFrame:
+    """Scan ``dist/<name>.parquet``, first writing ``build_df()`` there if
+    it is absent (one coalesced file)."""
+
+    def write(data):
+        build_df().coalesce(1).write.mode("overwrite").parquet(data)
+
+    return spark.read.parquet(_publish_once(f"{name}.parquet", write))
 
 
 def interleaved_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -94,6 +104,32 @@ def fixture_media(spark: SparkSession, n_media: int = N_MEDIA) -> DataFrame:
         return corpus_to_spark(spark, [], media)[1]
 
     return _cached_parquet(spark, f"fixture_media_n{n_media}_seed42", build)
+
+
+def fixture_pagexml(spark: SparkSession, n_media: int = N_MEDIA) -> str:
+    """Directory of PAGE-XML files, one ``<media_ref>.xml`` per
+    :func:`fixture_media` row (its OCR lines and page size), written once
+    to ``dist/`` and reused thereafter; returns the directory."""
+    from ..sources.pagexml import ocr_lines_to_page_xml
+
+    def write(d):
+        os.makedirs(d)
+        rows = (
+            fixture_media(spark, n_media)
+            .select("media_ref", "width", "height", "ocr_lines")
+            .collect()
+        )
+        for r in rows:
+            xml = ocr_lines_to_page_xml(
+                [ln.asDict(recursive=True) for ln in r.ocr_lines],
+                r.width,
+                r.height,
+            )
+            path = os.path.join(d, f"{r.media_ref}.xml")
+            with open(path, "w", encoding="utf-8") as fh:
+                fh.write(xml)
+
+    return _publish_once(f"fixture_pagexml_n{n_media}_seed42", write)
 
 
 def fixture_gt(spark: SparkSession, n_media: int = N_MEDIA) -> DataFrame:

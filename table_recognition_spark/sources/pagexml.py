@@ -10,19 +10,29 @@ with ``Coords@points`` plus ``type``/``start-row``/``end-row``/
 
 This module provides:
 
-- the pure coordinate codec (both directions),
-- plain-python parsers/serializers for both XML dialects (serializers are
-  the fixture side of round-trip tests — the reference never writes
-  PAGE-XML, so only the parse direction has reference semantics),
-- Arrow-batched Spark column transforms (pandas UDFs) that turn an XML
-  string column into the engine's ``ocr_lines`` / ``cells`` nested
-  columns, so a user holding the reference's files can ingest them
-  straight into the extraction pipeline. Line ids follow document order,
-  matching the reference's ``Node.NODE_COUNTER`` assignment.
+- the coordinate codec (both directions) and its one decode rule,
+  :func:`_check_coords`: whitespace-separated ``x,y`` integer pairs of
+  at most 9 digits, a blank string is a line with no points, anything
+  else is a ``ValueError``;
+- one PAGE ``TextLine`` walk, :func:`_text_lines`, behind every PAGE-XML
+  reader: the plain-python :func:`parse_page_xml` and the Arrow builder
+  :func:`ocr_lines_array`, which turns parsed documents into the engine's
+  ``ocr_lines`` column from flat buffers (no python object per point).
+  Line ids follow document order, matching the reference's
+  ``Node.NODE_COUNTER`` assignment;
+- :func:`parse_page_xml_table`, the Spark transform for a table of
+  PAGE-XML strings (``mapInArrow`` over :func:`ocr_lines_array`; the
+  ``pagexml`` file source in ``pagexml_datasource.py`` uses the same
+  builder);
+- the cTDaR parser and the plain-python serializers for both dialects
+  (the fixture side of round-trip tests — the reference never writes
+  PAGE-XML, so only the parse direction has reference semantics), plus
+  pandas-UDF column transforms for cTDaR parsing and PAGE serializing.
 """
 
 from __future__ import annotations
 
+import re
 from xml.etree import ElementTree
 
 import pandas as pd
@@ -42,11 +52,25 @@ GT_CELLS_TYPE = (
 
 
 # ---------------------------------------------------------------- codec
+_INT = r"-?\d{1,9}"  # at most 9 digits: every value fits the int32 column
+_COORDS = re.compile(
+    rf"\s*({_INT},{_INT}(\s+{_INT},{_INT})*)?\s*", re.ASCII
+)
+
+
+def _check_coords(coords_string: str) -> str:
+    """The one decode rule for ``Coords@points``: whitespace-separated
+    ``x,y`` integer pairs, or a blank string (a line with no points)."""
+    if not _COORDS.fullmatch(coords_string):
+        raise ValueError(f"malformed Coords points {coords_string!r}")
+    return coords_string
+
+
 def coords_string_to_points(coords_string: str) -> list:
     """``"1,1 2,2" → [(1, 1), (2, 2)]`` (reference utils.py:15-33)."""
     return [
-        (int(p.split(",")[0]), int(p.split(",")[1]))
-        for p in coords_string.split(" ")
+        tuple(map(int, p.split(",")))
+        for p in _check_coords(coords_string).split()
     ]
 
 
@@ -55,23 +79,70 @@ def points_to_coords_string(points) -> str:
     return " ".join(f"{int(x)},{int(y)}" for x, y in points)
 
 
-# ------------------------------------------------- plain-python parsers
-def parse_page_xml(xml_string: str) -> list:
-    """PAGE-XML string → [{line_id, points, text}] in document order.
-
+# ------------------------------------------------------------- parsers
+def _text_lines(root):
+    """Yield ``(points, text)`` for every PAGE ``TextLine`` of a parsed
+    document, in document order — the only reader of ``Coords@points``.
     Mirrors reference graph.py:47-59 (xpath + Coords@points); the text is
     taken from ``TextEquiv/Unicode`` when present (the reference's OCR
     files carry it; its graph builder only consumes the coords)."""
-    root = ElementTree.fromstring(xml_string)
-    lines = root.findall("./xmlns:Page/xmlns:TextRegion/xmlns:TextLine", _NS)
-    out = []
-    for i, line in enumerate(lines):
+    for line in root.iterfind(
+        "./xmlns:Page/xmlns:TextRegion/xmlns:TextLine", _NS
+    ):
         coords = line.find("./xmlns:Coords", _NS)
-        pts = coords_string_to_points(coords.attrib["points"])
         uni = line.find("./xmlns:TextEquiv/xmlns:Unicode", _NS)
         text = uni.text if uni is not None and uni.text is not None else ""
-        out.append({"line_id": i, "points": pts, "text": text})
-    return out
+        yield coords.attrib["points"], text
+
+
+def parse_page_xml(xml_string: str) -> list:
+    """PAGE-XML string → [{line_id, points, text}] in document order."""
+    root = ElementTree.fromstring(xml_string)
+    return [
+        {"line_id": i, "points": coords_string_to_points(points),
+         "text": text}
+        for i, (points, text) in enumerate(_text_lines(root))
+    ]
+
+
+def ocr_lines_array(roots):
+    """Parsed PAGE-XML roots → the ``ocr_lines`` column (``OCR_LINES_TYPE``)
+    as one Arrow ``ListArray``, one element per root.
+
+    ElementTree is used only for structure (:func:`_text_lines`). Each
+    line's coords string is checked against the codec rule, then all of
+    them are decoded by one numpy parse, and the nested arrays (points
+    ``list<struct>``, lines ``list<struct>``) are assembled from flat
+    buffers — no python object per point or per line."""
+    import numpy as np
+    import pyarrow as pa
+
+    coords, texts, line_offsets = [], [], [0]
+    for root in roots:
+        for points, text in _text_lines(root):
+            coords.append(_check_coords(points))
+            texts.append(text)
+        line_offsets.append(len(texts))
+    xy = np.array(
+        " ".join(coords).replace(",", " ").split(), np.int32
+    ).reshape(-1, 2)
+    pt_offsets = np.zeros(len(coords) + 1, dtype=np.int32)
+    np.cumsum([c.count(",") for c in coords], out=pt_offsets[1:])
+    points = pa.ListArray.from_arrays(
+        pa.array(pt_offsets),
+        pa.StructArray.from_arrays(
+            [pa.array(xy[:, 0]), pa.array(xy[:, 1])], ["x", "y"]
+        ),
+    )
+    offsets = np.asarray(line_offsets, dtype=np.int32)
+    line_ids = np.arange(len(texts), dtype=np.int32) - np.repeat(
+        offsets[:-1], np.diff(offsets)
+    )
+    lines = pa.StructArray.from_arrays(
+        [pa.array(line_ids), points, pa.array(texts, pa.string())],
+        ["line_id", "points", "text"],
+    )
+    return pa.ListArray.from_arrays(pa.array(offsets), lines)
 
 
 def parse_ctdar_xml(xml_string: str) -> list:
@@ -170,32 +241,6 @@ def _cached_udf(name, build):
     return udfs[name]
 
 
-def parse_page_xml_col(col):
-    """Column transform: PAGE-XML string → ``ocr_lines`` nested column
-    (Arrow-batched; xml.etree per row inside the batch — parsing is
-    inherently per-document, the batching amortizes the python boundary)."""
-
-    def build():
-        @F.pandas_udf(OCR_LINES_TYPE)
-        def parse_page(xmls: pd.Series) -> pd.Series:
-            return xmls.map(
-                lambda s: [
-                    {
-                        "line_id": r["line_id"],
-                        "points": [
-                            {"x": x, "y": y} for x, y in r["points"]
-                        ],
-                        "text": r["text"],
-                    }
-                    for r in parse_page_xml(s)
-                ]
-            )
-
-        return parse_page
-
-    return _cached_udf("parse_page", build)(col)
-
-
 def parse_ctdar_xml_col(col):
     """Column transform: cTDaR GT string → ``cells`` nested column."""
 
@@ -237,123 +282,25 @@ def serialize_page_xml_col(col):
     return _cached_udf("ser_page", build)(col)
 
 
-def parse_page_xml_table(df, xml_col: str = "page_xml",
-                         out_col: str = "ocr_lines"):
-    """Arrow-native PAGE-XML ingestion (the scale path): one
-    ``mapInArrow`` pass that keeps every other column and replaces
-    ``xml_col`` with the parsed ``ocr_lines`` nested column.
-
-    ElementTree is used only for STRUCTURE (find lines / attributes);
-    all coordinate decoding is numpy over the document's concatenated
-    coords strings, and the nested Arrow arrays (points list<struct>,
-    lines list<struct>) are assembled directly from flat buffers — no
-    per-point (or per-line) python dict ever exists, unlike the
-    pandas-UDF column transform above (kept for small inputs / API
-    compatibility). Result-identical: pinned by tests/test_sources_xml.
-    """
-    import numpy as np
+def parse_page_xml_table(df):
+    """``page_xml`` string column → ``ocr_lines`` nested column, in one
+    ``mapInArrow`` pass over :func:`ocr_lines_array` that keeps every
+    other column (``ocr_lines`` goes last)."""
     import pyarrow as pa
 
-    out_field = pa.field(
-        out_col,
-        pa.list_(
-            pa.struct(
-                [
-                    pa.field("line_id", pa.int32()),
-                    pa.field(
-                        "points",
-                        pa.list_(
-                            pa.struct(
-                                [
-                                    pa.field("x", pa.int32()),
-                                    pa.field("y", pa.int32()),
-                                ]
-                            )
-                        ),
-                    ),
-                    pa.field("text", pa.string()),
-                ]
-            )
-        ),
-    )
+    keep = [f for f in df.schema.fields if f.name != "page_xml"]
+    names = [f.name for f in keep] + ["ocr_lines"]
 
     def fn(batches):
         for rb in batches:
-            xml_idx = rb.schema.get_field_index(xml_col)
-            xmls = rb.column(xml_idx).to_pylist()
-            texts: list = []
-            coord_strs: list = []
-            n_pts: list = []
-            line_offsets = [0]
-            for s in xmls:
-                root = ElementTree.fromstring(s)
-                lines = root.findall(
-                    "./xmlns:Page/xmlns:TextRegion/xmlns:TextLine", _NS
-                )
-                for line in lines:
-                    c = line.find("./xmlns:Coords", _NS)
-                    ps = c.attrib["points"]
-                    coord_strs.append(ps)
-                    n_pts.append(ps.count(",") if ps else 0)
-                    uni = line.find(
-                        "./xmlns:TextEquiv/xmlns:Unicode", _NS
-                    )
-                    texts.append(
-                        uni.text
-                        if uni is not None and uni.text is not None
-                        else ""
-                    )
-                line_offsets.append(len(texts))
-            # one numpy parse over all points in the batch
-            joined = " ".join(coord_strs).replace(",", " ")
-            flat = (
-                np.array(joined.split(), dtype=np.int64)
-                if joined
-                else np.empty(0, dtype=np.int64)
+            roots = map(ElementTree.fromstring,
+                        rb.column("page_xml").to_pylist())
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(n) for n in names[:-1]] + [ocr_lines_array(roots)],
+                names,
             )
-            xy = flat.reshape(-1, 2).astype(np.int32)
-            pt_offsets = np.zeros(len(n_pts) + 1, dtype=np.int32)
-            np.cumsum(np.asarray(n_pts, dtype=np.int32), out=pt_offsets[1:])
-            pts_struct = pa.StructArray.from_arrays(
-                [pa.array(xy[:, 0], pa.int32()),
-                 pa.array(xy[:, 1], pa.int32())],
-                ["x", "y"],
-            )
-            pts_list = pa.ListArray.from_arrays(
-                pa.array(pt_offsets, pa.int32()), pts_struct
-            )
-            line_ids = np.concatenate(
-                [
-                    np.arange(b - a, dtype=np.int32)
-                    for a, b in zip(line_offsets, line_offsets[1:])
-                ]
-            ) if texts else np.empty(0, dtype=np.int32)
-            line_struct = pa.StructArray.from_arrays(
-                [pa.array(line_ids, pa.int32()), pts_list,
-                 pa.array(texts, pa.string())],
-                ["line_id", "points", "text"],
-            )
-            lines_list = pa.ListArray.from_arrays(
-                pa.array(np.asarray(line_offsets, dtype=np.int32)),
-                line_struct,
-            )
-            arrays = [
-                rb.column(j) for j in range(rb.num_columns) if j != xml_idx
-            ] + [lines_list]
-            names = [
-                rb.schema.field(j).name
-                for j in range(rb.num_columns)
-                if j != xml_idx
-            ] + [out_col]
-            yield pa.RecordBatch.from_arrays(arrays, names)
 
-    out_schema = T.StructType.fromDDL(
-        ", ".join(
-            f"{f.name} {df.schema[f.name].dataType.simpleString()}"
-            for f in df.schema.fields
-            if f.name != xml_col
-        )
-        + f", {out_col} {OCR_LINES_TYPE}"
+    out_schema = T.StructType(
+        keep + [T.StructField("ocr_lines", T.DataType.fromDDL(OCR_LINES_TYPE))]
     )
-    _ = out_field
     return df.mapInArrow(fn, out_schema)

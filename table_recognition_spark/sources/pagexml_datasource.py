@@ -3,13 +3,14 @@ corpus as a first-class Spark source.
 
 The reference ingests OCR by globbing a directory of PAGE-XML files and
 parsing each one (``/root/reference/table_recognition/graph/graph.py:
-47-59``). The column-transform path (``parse_page_xml_table``) covers a
-user who already has the XML *strings* in a table; this module covers
-the file layout itself with a PySpark 4 Python DataSource
-(`pyspark.sql.datasource`): file listing happens once at planning time
-on the driver (cheap metadata), files are round-robined into input
-partitions, and each executor parses only its own files — the same
-list/partition/parse split a JVM FileFormat does, expressed in the
+47-59``). ``parse_page_xml_table`` covers a user who already has the XML
+*strings* in a table; this module covers the file layout itself with a
+PySpark 4 Python DataSource (`pyspark.sql.datasource`): file listing
+happens once at planning time on the driver (cheap metadata), files are
+round-robined into input partitions, and each executor parses only its
+own files, each once, and yields one Arrow ``RecordBatch`` per partition
+built by the same ``ocr_lines_array`` as the string-table transform — the
+same list/partition/parse split a JVM FileFormat does, expressed in the
 public Python API. One row per file:
 
     media_ref string   -- file stem (the reference keys images this way)
@@ -41,7 +42,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from .pagexml import OCR_LINES_TYPE, _NS, parse_page_xml
+from .pagexml import OCR_LINES_TYPE, _NS, ocr_lines_array
 
 PAGEXML_SCHEMA = (
     f"media_ref string, width int, height int, ocr_lines {OCR_LINES_TYPE}"
@@ -72,19 +73,26 @@ class PageXmlReader(DataSourceReader):
         return [_FilesPartition(files[i::n]) for i in range(n)]
 
     def read(self, partition: _FilesPartition):
-        for f in partition.files:
-            with open(f, encoding="utf-8") as fh:
-                xml = fh.read()
-            root = ElementTree.fromstring(xml)
-            page = root.find("./xmlns:Page", _NS)
-            width = int(page.attrib.get("imageWidth", 0)) if page is not None else 0
-            height = int(page.attrib.get("imageHeight", 0)) if page is not None else 0
-            lines = [
-                (r["line_id"], [(x, y) for x, y in r["points"]], r["text"])
-                for r in parse_page_xml(xml)
-            ]
-            stem = os.path.splitext(os.path.basename(f))[0]
-            yield (stem, width, height, lines)
+        import pyarrow as pa
+
+        roots = [ElementTree.parse(f).getroot() for f in partition.files]
+        pages = [root.find("./xmlns:Page", _NS) for root in roots]
+        attrs = [{} if page is None else page.attrib for page in pages]
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(
+                    [os.path.splitext(os.path.basename(f))[0]
+                     for f in partition.files],
+                    pa.string(),
+                ),
+                pa.array([int(a.get("imageWidth", 0)) for a in attrs],
+                         pa.int32()),
+                pa.array([int(a.get("imageHeight", 0)) for a in attrs],
+                         pa.int32()),
+                ocr_lines_array(roots),
+            ],
+            ["media_ref", "width", "height", "ocr_lines"],
+        )
 
 
 class PageXmlDataSource(DataSource):

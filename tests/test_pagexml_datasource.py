@@ -4,8 +4,9 @@ fixture media table, partition balance, and span-equal extraction when
 the datasource feeds the pipeline in place of the parquet media table.
 """
 
+import os
+
 import pytest
-from pyspark.sql import functions as F
 
 from table_recognition_spark.sources.pagexml import ocr_lines_to_page_xml
 from table_recognition_spark.sources.pagexml_datasource import (
@@ -16,7 +17,9 @@ from table_recognition_spark.sources.pagexml_datasource import (
 SF = "/root/testdata/sf0.001"
 
 
-def _write_corpus(spark, tmp_path):
+def _write_corpus(spark, tmp_path, blank_line=False):
+    """One PAGE-XML file per fixture media row; ``blank_line`` appends a
+    line whose ``Coords@points`` is empty to every file."""
     from table_recognition_spark.pipeline.flagship import fixture_media
 
     rows = (
@@ -25,11 +28,10 @@ def _write_corpus(spark, tmp_path):
         .collect()
     )
     for r in rows:
-        xml = ocr_lines_to_page_xml(
-            [ln.asDict(recursive=True) for ln in r.ocr_lines],
-            r.width,
-            r.height,
-        )
+        lines = [ln.asDict(recursive=True) for ln in r.ocr_lines]
+        if blank_line:
+            lines.append({"line_id": len(lines), "points": [], "text": "x"})
+        xml = ocr_lines_to_page_xml(lines, r.width, r.height)
         (tmp_path / f"{r.media_ref}.xml").write_text(xml)
     return rows
 
@@ -65,21 +67,49 @@ def test_pagexml_datasource_roundtrips_fixture_media(spark, tmp_path):
 def test_pagexml_datasource_feeds_extraction_span_equal(spark, tmp_path):
     """The datasource table must be a drop-in replacement for the
     parquet media table: same spans out of the flagship pipeline."""
-    import __spark_entry__ as E
+    _write_corpus(spark, tmp_path)
+    _assert_feeds_extraction_span_equal(spark, tmp_path)
+
+
+@pytest.mark.spark
+def test_pagexml_datasource_zero_point_line_span_equal(spark, tmp_path):
+    """An empty ``Coords@points`` is a line with no points, which the
+    kernel drops: a corpus with one in every file still extracts the same
+    spans as the parquet media table without them."""
+    _write_corpus(spark, tmp_path, blank_line=True)
+    _assert_feeds_extraction_span_equal(spark, tmp_path)
+
+
+def _assert_feeds_extraction_span_equal(spark, path):
+    from table_recognition_spark.core import gnn
     from table_recognition_spark.pipeline.extract import extract_flat
     from table_recognition_spark.pipeline.flagship import (
         fixture_media,
         interleaved_docs,
     )
 
-    _write_corpus(spark, tmp_path)
     register_pagexml_source(spark)
-    parsed = spark.read.format("pagexml").load(str(tmp_path))
+    parsed = spark.read.format("pagexml").load(str(path))
     docs = interleaved_docs(spark, SF)
-    w = E._weights()
+    w = gnn.default_weights()
     got = extract_flat(docs, parsed, w).collect()
     exp = extract_flat(docs, fixture_media(spark), w).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, exp))
+
+
+@pytest.mark.spark
+def test_pagexml_files_query_leaves_no_temp_dir(spark):
+    import glob
+    import tempfile
+
+    import __spark_entry__ as E
+
+    pattern = os.path.join(tempfile.gettempdir(), "trs_pagexml_*")
+    before = set(glob.glob(pattern))
+    query = E.queries()["extract_from_pagexml_files"]
+    for _ in range(2):
+        query(spark, SF).write.format("noop").mode("overwrite").save()
+    assert set(glob.glob(pattern)) <= before
 
 
 def test_pagexml_reader_partition_roundrobin(tmp_path):

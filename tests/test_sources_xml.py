@@ -10,13 +10,14 @@ from table_recognition_spark.operators.dataset_ops import (
     repair_gt_rows,
 )
 from table_recognition_spark.sources.pagexml import (
+    PAGE_NS,
     coords_string_to_points,
     gt_cells_to_ctdar_xml,
     ocr_lines_to_page_xml,
     parse_ctdar_xml,
     parse_ctdar_xml_col,
     parse_page_xml,
-    parse_page_xml_col,
+    parse_page_xml_table,
     points_to_coords_string,
     serialize_page_xml_col,
 )
@@ -65,6 +66,8 @@ def test_ctdar_xml_python_roundtrip():
 
 @pytest.mark.spark
 def test_page_xml_spark_roundtrip(spark):
+    """ocr_lines → PAGE-XML strings → ``parse_page_xml_table`` gives the
+    original nested column back and keeps every other column."""
     from table_recognition_spark.fixtures.generate import (
         corpus_to_spark, make_corpus,
     )
@@ -75,44 +78,72 @@ def test_page_xml_spark_roundtrip(spark):
         "media_ref", "image", "width", "height",
         serialize_page_xml_col(F.col("ocr_lines")).alias("page_xml"),
     )
-    back = xml_df.select(
-        "media_ref", "image", "width", "height",
-        parse_page_xml_col(F.col("page_xml")).alias("ocr_lines"),
-    )
+    back = parse_page_xml_table(xml_df)
+    assert [f.name for f in back.schema.fields] == [
+        "media_ref", "image", "width", "height", "ocr_lines",
+    ]
     orig = {r["media_ref"]: r["ocr_lines"]
             for r in media_df.select("media_ref", "ocr_lines").collect()}
     got = {r["media_ref"]: r["ocr_lines"]
            for r in back.select("media_ref", "ocr_lines").collect()}
     assert got == orig
+    # empty-input batch shape survives
+    assert parse_page_xml_table(xml_df.limit(0)).count() == 0
+
+
+def _one_line_page(points):
+    return (
+        f'<PcGts xmlns="{PAGE_NS}"><Page imageWidth="10" imageHeight="20">'
+        f'<TextRegion><TextLine><Coords points="{points}"/><TextEquiv>'
+        "<Unicode>cell</Unicode></TextEquiv></TextLine></TextRegion></Page>"
+        "</PcGts>"
+    )
 
 
 @pytest.mark.spark
-def test_page_xml_arrow_table_parse_equals_pandas_col(spark):
-    """The Arrow-native table parse (scale path: flat-buffer assembly,
-    no per-point python) is result-identical to the pandas-UDF column
-    transform AND to the original nested column."""
-    from table_recognition_spark.fixtures.generate import (
-        corpus_to_spark, make_corpus,
+@pytest.mark.parametrize(
+    "points, expected",
+    [
+        ("", []),
+        ("1,2 3 4,5,6", ValueError),
+        ("1,2 3,4 ", [(1, 2), (3, 4)]),
+        ("1,2 3000000000,4", ValueError),  # beyond the int32 column
+    ],
+)
+def test_coords_rule_agrees_across_readers(spark, tmp_path, points, expected):
+    """One decode rule for ``Coords@points``: the plain parser, the
+    string-table transform and the file source give the same points, or
+    all raise — none invents a point the string does not hold."""
+    from table_recognition_spark.sources.pagexml_datasource import (
+        register_pagexml_source,
     )
-    from table_recognition_spark.sources.pagexml import parse_page_xml_table
 
-    _, media, _ = make_corpus(0, 8, seed=12)
-    _, media_df = corpus_to_spark(spark, [], media)
-    xml_df = media_df.select(
-        "media_ref", "width", "height",
-        serialize_page_xml_col(F.col("ocr_lines")).alias("page_xml"),
-    )
-    via_table = parse_page_xml_table(xml_df, "page_xml", "ocr_lines")
-    assert [f.name for f in via_table.schema.fields] == [
-        "media_ref", "width", "height", "ocr_lines",
-    ]
-    orig = {r["media_ref"]: r["ocr_lines"]
-            for r in media_df.select("media_ref", "ocr_lines").collect()}
-    got = {r["media_ref"]: r["ocr_lines"]
-           for r in via_table.select("media_ref", "ocr_lines").collect()}
-    assert got == orig
-    # empty-input batch shape survives
-    assert parse_page_xml_table(xml_df.limit(0)).count() == 0
+    xml = _one_line_page(points)
+    (tmp_path / "r.xml").write_text(xml)
+    register_pagexml_source(spark)
+    readers = {
+        "parse_page_xml": lambda: parse_page_xml(xml)[0]["points"],
+        "parse_page_xml_table": lambda: parse_page_xml_table(
+            spark.createDataFrame(
+                [("r", xml)], "media_ref string, page_xml string"
+            )
+        ).collect(),
+        "pagexml": lambda: spark.read.format("pagexml").load(
+            str(tmp_path)
+        ).collect(),
+    }
+    for name, read in readers.items():
+        if expected is ValueError:
+            with pytest.raises(Exception, match="malformed Coords points"):
+                read()
+            continue
+        got = read()
+        if name != "parse_page_xml":
+            [row] = got
+            [line] = row["ocr_lines"]
+            assert (line["line_id"], line["text"]) == (0, "cell"), name
+            got = [(p["x"], p["y"]) for p in line["points"]]
+        assert got == expected, name
 
 
 @pytest.mark.spark
@@ -132,10 +163,7 @@ def test_extraction_from_page_xml_equals_direct(spark):
         "media_ref", "image", "width", "height",
         serialize_page_xml_col(F.col("ocr_lines")).alias("page_xml"),
     )
-    parsed_media = xml_media.select(
-        "media_ref", "image", "width", "height",
-        parse_page_xml_col(F.col("page_xml")).alias("ocr_lines"),
-    )
+    parsed_media = parse_page_xml_table(xml_media)
     direct = sorted(
         map(tuple, extract_flat(docs_df, media_df, w).collect())
     )
