@@ -186,11 +186,12 @@ def _extract_from_pagexml_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pipeline_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """North-rule resumability under the driver's hash gate: chunked
     extraction (doc-hash partitioned, per-chunk lineage commits via
-    pipeline/checkpoint.py), a simulated crash after 2 of 4 chunks,
-    then a resume that must skip the committed chunks; the recombined
+    pipeline/checkpoint.py), a simulated crash after 1 of 2 chunks,
+    then a resume that must skip the committed chunk; the recombined
     output is compared against the straight-run flagship's committed
     expected parquet (the SAME oracle as extract_interleaved — resume
     must be invisible in the result)."""
+    import shutil
     import tempfile
 
     from pyspark.sql import functions as F
@@ -205,33 +206,38 @@ def _pipeline_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = interleaved_docs(spark, sf_dir)
     media = fixture_media(spark)
-    # chunk store on tmpfs when available (round-7): the drive writes
-    # and re-reads two small parquet chunk datasets plus commit records;
-    # this sandbox's disk stalls under small-file fsync traffic (same
-    # rationale as the streaming drives' checkpoint location). The
-    # ~100 KB output stays behind for the returned DataFrame to read.
+    # chunk store on tmpfs when available: the drive writes and re-reads
+    # two small parquet chunk datasets plus commit records, and a slow
+    # disk stalls under small-file fsync traffic (same rationale as the
+    # streaming drives' checkpoint location). The result is materialised
+    # with localCheckpoint(), so the store is removed before the
+    # DataFrame is returned.
     base = "/dev/shm" if os.path.isdir("/dev/shm") else None
     ck = CheckpointedExtract(
         tempfile.mkdtemp(prefix="trs_ckpt_", dir=base), n_chunks=2
     )
     try:
-        ck.run(spark, docs, media, _weights(), fail_after=1)
-    except RuntimeError:
-        pass
-    assert len(ck.committed()) == 1, "crash must leave a partial run"
-    resumed = ck.run(spark, docs, media, _weights())
-    assert resumed == 1, "resume must run exactly the uncommitted chunk"
-    return (
-        ck.read_output(spark)
-        .select("doc_id", F.explode("spans").alias("s"))
-        .select(
-            "doc_id",
-            F.col("s.offset").cast("int").alias("offset"),
-            F.col("s.kind").alias("kind"),
-            F.col("s.text").alias("text"),
-            F.col("s.media_ref").alias("media_ref"),
+        try:
+            ck.run(spark, docs, media, _weights(), fail_after=1)
+        except RuntimeError:
+            pass
+        assert len(ck.committed()) == 1, "crash must leave a partial run"
+        resumed = ck.run(spark, docs, media, _weights())
+        assert resumed == 1, "resume must run exactly the uncommitted chunk"
+        return (
+            ck.read_output(spark)
+            .select("doc_id", F.explode("spans").alias("s"))
+            .select(
+                "doc_id",
+                F.col("s.offset").cast("int").alias("offset"),
+                F.col("s.kind").alias("kind"),
+                F.col("s.text").alias("text"),
+                F.col("s.media_ref").alias("media_ref"),
+            )
+            .localCheckpoint()
         )
-    )
+    finally:
+        shutil.rmtree(ck.out_dir, ignore_errors=True)
 
 
 _SPLIT_IDS = [i * 7 + 3 for i in range(20)]

@@ -3,12 +3,14 @@
 
     spark-submit --py-files trs.zip main.py \
         --docs /path/docs.parquet --media /path/media.parquet \
-        --out /path/out --chunks 64 [--parallelism N] [--resume]
+        --out /path/out --chunks 64 [--parallelism N] [--no-resume]
 
 On a cluster, omit --parallelism and set master/executors via
 spark-submit; locally it builds local[N]. The run is checkpointed per
-doc-hash chunk (lineage + docs/sec in out/_progress) and --resume (the
-default behavior) skips committed chunks.
+doc-hash chunk (lineage + docs/sec in out/_progress). By default it
+resumes: committed chunks are skipped, and a run whose inputs, weights
+or --chunks differ from the committed ones refuses to start.
+--no-resume removes --out first and recomputes everything.
 """
 
 from __future__ import annotations
@@ -43,7 +45,7 @@ def main() -> None:
     ap.add_argument(
         "--no-resume",
         action="store_true",
-        help="clear prior progress and recompute everything",
+        help="remove the output directory and recompute everything",
     )
     args = ap.parse_args()
 
@@ -60,12 +62,11 @@ def main() -> None:
     docs = spark.read.parquet(args.docs)
     media = spark.read.parquet(args.media)
 
-    ck = CheckpointedExtract(args.out, n_chunks=args.chunks)
     if args.no_resume:
         import shutil
 
-        shutil.rmtree(ck.progress_dir, ignore_errors=True)
-        os.makedirs(ck.progress_dir, exist_ok=True)
+        shutil.rmtree(args.out, ignore_errors=True)
+    ck = CheckpointedExtract(args.out, n_chunks=args.chunks)
 
     ran = ck.run(spark, docs, media, weights)
     prog = ck.read_progress(spark)

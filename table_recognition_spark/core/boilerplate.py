@@ -54,19 +54,3 @@ def spark_strip_expr(col):
     t = F.regexp_replace(t, TAG_PATTERN, " ")
     t = F.regexp_replace(t, WS_PATTERN, " ")
     return F.trim(t)
-
-
-def duckdb_strip_sql(expr: str) -> str:
-    """The identical transform as DuckDB SQL (for oracle queries).
-
-    RE2 does not support backreferences, so the block pattern is expanded
-    per tag (semantically identical on non-nested input).
-    """
-    t = expr
-    for tag in BOILER_TAGS.split("|"):
-        t = (
-            f"regexp_replace({t}, '(?is)<{tag}\\b[^>]*>.*?</{tag}\\s*>', ' ', 'g')"
-        )
-    t = f"regexp_replace({t}, '(?s)<[^>]*>', ' ', 'g')"
-    t = f"regexp_replace({t}, '\\s+', ' ', 'g')"
-    return f"trim({t})"

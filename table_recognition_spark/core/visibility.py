@@ -44,18 +44,6 @@ SAMPLING_RATE = 10  # degrees between rays (reference :14)
 WINDOW_SIZE = 30  # angular bin width (reference :62,:69)
 
 
-def render_label_image(bboxes: np.ndarray, img_w: int, img_h: int) -> np.ndarray:
-    """(h, w) int32 label plane; pixel value = node id + 1, 0 = empty.
-    Rectangles painted in ascending id order; the reference paints
-    [min_y:max_y, min_x:max_x] (exclusive upper edge) — preserved."""
-    img = np.zeros((img_h, img_w), dtype=np.int32)
-    b = np.asarray(bboxes, dtype=np.int64)
-    for i in range(len(b)):
-        x0, y0, x1, y1 = b[i]
-        img[max(y0, 0) : max(y1, 0), max(x0, 0) : max(x1, 0)] = i + 1
-    return img
-
-
 def _ray_steps(img_w: int, img_h: int) -> int:
     return int(np.ceil(np.hypot(img_w, img_h))) + 1
 
@@ -105,9 +93,8 @@ def visibility_edges(
 ) -> np.ndarray:
     """Discover directed edges; returns int64 (E, 2) sorted by (src, dst).
 
-    Result-identical to :func:`_visibility_edges_full_march` (the direct
-    transcription of the frozen spec, kept below for the equality test)
-    but with ~5-10× less memory traffic — the full-march version builds
+    Result-identical to the direct full-march transcription of the
+    frozen spec (the equality oracle in tests/test_visibility.py) but with ~5-10× less memory traffic — the full-march version builds
     (n, diag)-sized temporaries 38 times per image, which saturates the
     shared L3/DRAM at 16+ concurrent executor workers (measured: 0.86
     multiprocessing scaling efficiency 4→16 workers, dominated by this
@@ -395,75 +382,4 @@ def visibility_edges(
     edges = edges[edges[:, 0] != edges[:, 1]]
     if len(edges) == 0:
         return np.empty((0, 2), dtype=np.int64)
-    return np.unique(edges, axis=0)
-
-
-def _visibility_edges_full_march(
-    bboxes: np.ndarray, img_w: int, img_h: int
-) -> np.ndarray:
-    """Direct transcription of the frozen spec (round-1 implementation):
-    full-diagonal march for every node and angle. Kept as the equality
-    oracle for :func:`visibility_edges`; do not use in pipelines."""
-    n = len(bboxes)
-    if n <= 1:
-        return np.empty((0, 2), dtype=np.int64)
-
-    labels = render_label_image(bboxes, img_w, img_h)
-    centers = bbox_centers(bboxes)  # (n, 2) int
-    T = _ray_steps(img_w, img_h)
-    t = np.arange(T, dtype=np.float64)  # includes t=0 (the center pixel)
-
-    # best[node][bin] = (dist, theta_total, nbr)
-    best: list = [dict() for _ in range(n)]
-
-    for theta in range(0, 181, SAMPLING_RATE):
-        if theta in (0, 180):
-            d = np.array([0.0, 1.0])
-        else:
-            rad = np.radians(float(theta))
-            d = np.array([np.sin(rad), -np.cos(rad)])
-        for side, (sign, theta_total) in enumerate(
-            [(1.0, theta), (-1.0, 180 + theta)]
-        ):
-            # all nodes' ray pixels at once: (n, T)
-            xs = np.rint(centers[:, 0, None] + sign * d[0] * t).astype(np.int64)
-            ys = np.rint(centers[:, 1, None] + sign * d[1] * t).astype(np.int64)
-            inside = (xs >= 0) & (xs < img_w) & (ys >= 0) & (ys < img_h)
-            vals = np.zeros((n, T), dtype=np.int32)
-            vals[inside] = labels[ys[inside], xs[inside]]
-
-            own = vals == (np.arange(1, n + 1, dtype=np.int32)[:, None])
-            has_own = own.any(axis=1)
-            # last own step per node (0 where none — masked by has_own)
-            last_own = np.where(
-                has_own, T - 1 - np.argmax(own[:, ::-1], axis=1), 0
-            )
-            # foreign hit: first non-zero, non-own pixel after last_own
-            after = np.arange(T)[None, :] > last_own[:, None]
-            cand = after & inside & (vals > 0) & ~own
-            has_hit = cand.any(axis=1)
-            first_hit = np.argmax(cand, axis=1)
-
-            ok = has_own & has_hit
-            for i in np.flatnonzero(ok):
-                hit_t = int(first_hit[i])
-                nbr = int(vals[i, hit_t]) - 1
-                if nbr == i:
-                    continue
-                dist = hit_t - int(last_own[i])
-                key = theta_total // WINDOW_SIZE
-                cur = best[i].get(key)
-                cand_tuple = (dist, theta_total, nbr)
-                if cur is None or cand_tuple < cur:
-                    best[i][key] = cand_tuple
-
-    pairs = []
-    for i in range(n):
-        for _, (_, _, nbr) in sorted(best[i].items()):
-            pairs.append((i, nbr))
-            pairs.append((nbr, i))
-    if not pairs:
-        return np.empty((0, 2), dtype=np.int64)
-    edges = np.array(pairs, dtype=np.int64)
-    edges = edges[edges[:, 0] != edges[:, 1]]
     return np.unique(edges, axis=0)

@@ -54,24 +54,6 @@ def repair_gt_rows(gt_df: DataFrame, cells_col: str = "cells") -> DataFrame:
     )
 
 
-def missing_media_report(docs_df: DataFrame, media_df: DataFrame) -> DataFrame:
-    """The observable half of the reference's missing-file predicate
-    (``/root/reference/table_recognition/graph/graph.py`` skips images
-    whose file is absent with a warning, SURVEY F2): the extraction
-    pipeline's canonical semantic is the inner-join drop; this operator
-    reports WHAT was dropped — every (doc_id, media_ref) whose ref has
-    no media row — as a left-anti join (hash/broadcast by Catalyst's
-    choice; no driver-side existence checks)."""
-    spans = docs_df.select(
-        "doc_id", F.explode("spans").alias("s")
-    ).filter(F.col("s.kind") == "media").select(
-        "doc_id", F.col("s.media_ref").alias("media_ref")
-    )
-    return spans.join(
-        media_df.select("media_ref"), "media_ref", "left_anti"
-    ).select("doc_id", "media_ref")
-
-
 def filter_split(df: DataFrame, split, id_col: str = "doc_id") -> DataFrame:
     """Keep only rows whose id is in the split.
 

@@ -159,38 +159,19 @@ def _shingle_df(docs, n: int = 3):
 _SHINGLE_SIG_CACHE: dict = {"sess": None, "udf": None}
 
 
-def _minhash_sig_expr(shingles_col):
-    """The Catalyst-HOF minhash signature tree (round-2..4
-    implementation): sig[h] = array_min(transform(shingles,
-    t -> md5(h || ':' || t))) for h in 0..N_MINHASH-1. Kept as the
-    equality oracle for the fused UDF below (pinned by
-    tests/test_dedup_cap.py::test_fused_sig_udf_equals_hof_tree)."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(N_MINHASH - 1)),
-        lambda h: F.array_min(
-            F.transform(
-                shingles_col,
-                lambda t: F.md5(F.concat(h.cast("string"), F.lit(":"), t)),
-            )
-        ),
-    )
-
-
 def _shingle_sig_df(docs, n: int = 3):
     """(doc_id, shingles, sig): distinct 3-token shingles plus the
     N_MINHASH-hash minhash signature, both from ONE Arrow-batched
     pandas UDF.
 
     sig[h] = min over shingles of md5(f"{h}:{shingle}") — byte-identical
-    to the Catalyst tree in :func:`_minhash_sig_expr` (hex digests are
-    ASCII, so Python ``min``, Spark ``array_min`` and DuckDB
-    ``list_min`` order them identically) and to the DuckDB oracle in
-    :func:`dedup_minhash_lsh_sql`. Moving the 8×|shingles| md5's out of
+    to the Catalyst HOF tree it replaced (equality pinned by
+    tests/test_dedup_cap.py; hex digests are ASCII, so Python ``min``,
+    Spark ``array_min`` and DuckDB ``list_min`` order them identically)
+    and to the DuckDB oracle in :func:`dedup_minhash_lsh_sql`. Moving the 8×|shingles| md5's out of
     nested interpreted HOF lambdas (per-element lambda dispatch,
     ~3 s/6 k docs at sf0.1) into hashlib (~0.6 µs/call) makes the
-    signature stage vanish into the shingle scan. Works on streaming
-    DataFrames too (scalar pandas UDF, no aggregation), which is how
-    streaming/neardup.py keeps its signatures bit-identical to batch."""
+    signature stage vanish into the shingle scan."""
     import hashlib
     import re
 
@@ -237,21 +218,6 @@ def _shingle_sig_df(docs, n: int = 3):
         .select("doc_id", "ss.shingles", "ss.sig")
     )
 
-
-def _shingle_df_hof(docs, n: int = 3):
-    """The Catalyst-HOF shingle builder (round-2 implementation), kept
-    as the equality oracle for the batch UDF above. The repartition
-    barrier pins evaluation order: regex once per row → shuffle →
-    slice/concat once per shingle (CollapseProject would otherwise
-    re-run the regex per shingle index)."""
-    P = docs.sparkSession.sparkContext.defaultParallelism
-    tok_df = docs.select(
-        "doc_id", tokens(F.col("text")).alias("toks")
-    ).repartition(P)
-    return tok_df.select(
-        "doc_id",
-        F.array_distinct(_shingles(F.col("toks"), n)).alias("shingles"),
-    )
 
 def dedup_minhash_lsh(spark, sf_dir):
     """MinHash+LSH near-dup detection.
@@ -532,9 +498,6 @@ def _srp_planes():
     return rng.choice(
         np.array([-1, 1], dtype=np.int64), (EMB_BANDS * EMB_BITS, EMB_DIM)
     )
-
-
-_PLANTED_EMB_SPARK = None
 
 
 def _with_planted_emb(emb):

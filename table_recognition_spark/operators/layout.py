@@ -4,44 +4,22 @@ read path.
 Predicate pushdown only pays when the files' row-group statistics are
 tight: a corpus written in arrival order has every row group spanning
 the whole value domain, so min/max stats prune nothing and a selective
-range scan still reads every byte. ``write_range_layout`` re-clusters a
-table with ``repartitionByRange`` (one total range-exchange, sampled
-boundaries) + ``sortWithinPartitions`` before the parquet write, which
-makes row groups value-disjoint along the layout keys — a range
+range scan still reads every byte. Re-clustering a table on its layout
+keys before the parquet write (range buckets, or a z-order interleave
+for two keys) makes row groups value-disjoint along those keys — a range
 predicate then touches only the row groups whose [min, max] intersect
 it, and Spark/DuckDB/any parquet reader skips the rest from footer
 metadata alone.
 
 ``rowgroup_prune_stats`` measures the effect from the parquet footers
 (no scan): how many row groups a predicate can skip. The pytest pins a
->= 60% skip rate on the laid-out table vs ~0% on the arrival-order
+>= 60% skip rate on a range-laid-out table vs ~0% on the arrival-order
 write of the SAME rows (tests/test_layout.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-
-
-def write_range_layout(
-    df: DataFrame,
-    path: str,
-    keys: list[str],
-    n_files: int = 8,
-) -> None:
-    """Range-cluster ``df`` on ``keys`` and write parquet whose
-    row-group min/max statistics are tight along those keys.
-
-    Scale shape: ``repartitionByRange`` is ONE shuffle with sampled
-    range boundaries (no global sort barrier — each output partition
-    sorts independently), so the cost is the same order as any other
-    full-shuffle write; the payoff is every future selective scan."""
-    (
-        df.repartitionByRange(n_files, *keys)
-        .sortWithinPartitions(*keys)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
 
 
 def rowgroup_prune_stats(
@@ -95,13 +73,11 @@ def rowgroup_prune_stats(
 # by an ANALYTIC range bucketing of event_id (explicit boundaries, not
 # repartitionByRange's sampled ones — sampled boundaries depend on the
 # session's input-split config, which would make the written files, and
-# so the footer stats, vary across driver configs; write_range_layout
-# keeps the sampled path for production where determinism across
-# sessions doesn't matter). Spark then MEASURES how many row groups a
-# range predicate can skip from the real parquet footers, while the
-# DuckDB oracle derives the same counts relationally from the bucket
-# math — a genuine cross-engine check that the layout produces the
-# min/max stats the 100-TB scan-pruning story depends on.
+# so the footer stats, vary across driver configs). Spark then MEASURES
+# how many row groups a range predicate can skip from the real parquet
+# footers, while the DuckDB oracle derives the same counts relationally
+# from the bucket math — a genuine cross-engine check that the layout
+# produces the min/max stats the 100-TB scan-pruning story depends on.
 
 _LAYOUT_BUCKETS = 8
 

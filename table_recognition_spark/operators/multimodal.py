@@ -3,10 +3,10 @@ columns with typed metadata, processed by Arrow-batched ``mapInPandas``
 kernels.
 
 Real and tested, all pure numpy/stdlib: PNG + baseline JPEG decode,
-image stats, nearest-neighbour resize/thumbnail feature extraction,
-patch mean-pool embeddings, RIFF/WAVE PCM audio decode + stats, and a
-deterministic length-prefixed video container (TRV0, JPEG frames from
-our own encoder) with evenly-spaced frame sampling + per-frame stats.
+image stats, nearest-neighbour resize, patch mean-pool embeddings,
+RIFF/WAVE PCM audio decode + stats, and a deterministic length-prefixed
+video container (TRV0, JPEG frames from our own encoder) with
+evenly-spaced frame sampling + per-frame stats.
 Every decode goes through a magic-prefix codec registry, so a
 deployment that ships libjpeg-turbo/ffmpeg swaps the hot codec in
 without touching any operator — the registries are the injection seam,
@@ -32,15 +32,6 @@ IMAGE_STATS_SCHEMA = T.StructType(
         T.StructField("height", T.IntegerType()),
         T.StructField("mean_intensity", T.DoubleType()),
         T.StructField("ink_ratio", T.DoubleType()),
-    ]
-)
-
-THUMB_SCHEMA = T.StructType(
-    [
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("thumb_w", T.IntegerType()),
-        T.StructField("thumb_h", T.IntegerType()),
-        T.StructField("thumb", T.BinaryType()),
     ]
 )
 
@@ -242,13 +233,6 @@ def sample_frames(frames: list, n: int) -> list:
     return [(i, frames[i]) for i in idxs]
 
 
-def sample_video_frames(data: bytes, n: int) -> list:
-    """Container-bytes convenience wrapper over :func:`sample_frames`
-    (one container decode, then the even-stride sample)."""
-    _fps, frames = decode_video(data)
-    return sample_frames(frames, n)
-
-
 VIDEO_FRAME_STATS_SCHEMA = T.StructType(
     [
         T.StructField("media_ref", T.StringType()),
@@ -399,24 +383,6 @@ def resize_nearest(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
     ys = (np.arange(out_h) * h // out_h).clip(0, h - 1)
     xs = (np.arange(out_w) * w // out_w).clip(0, w - 1)
     return img[ys][:, xs]
-
-
-def thumbnails(media_df: DataFrame, size: int = 32) -> DataFrame:
-    """Nearest-neighbour thumbnails, re-encoded as PNG binary."""
-    from ..fixtures.generate import png_encode
-
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for ref, img_bytes in zip(pdf["media_ref"], pdf["image"]):
-                img = decode_image(img_bytes)
-                th = resize_nearest(img, size, size)
-                rows.append((ref, size, size, png_encode(th)))
-            yield pd.DataFrame(
-                rows, columns=["media_ref", "thumb_w", "thumb_h", "thumb"]
-            )
-
-    return media_df.select("media_ref", "image").mapInPandas(fn, THUMB_SCHEMA)
 
 
 def patch_embeddings(media_df: DataFrame, grid: int = 4) -> DataFrame:

@@ -31,12 +31,12 @@ _DOT_CACHE: dict = {"sess": None, "udf": None}
 def _dot_pandas(a, b):
     """Arrow-vectorized integer dot product over candidate pairs.
 
-    Exactly equal to the Catalyst HOF ``_dot`` (both are pure int64
-    arithmetic on the same quantized vectors) but scored as one numpy
+    Exactly equal to the Catalyst HOF integer dot it replaced (both are
+    pure int64 arithmetic on the same quantized vectors; equality is
+    pinned by tests/test_queries_duckdb.py) but scored as one numpy
     einsum per Arrow batch instead of a per-pair lambda chain — the HOF
     version cost ~1 ms/pair (10.6 s for 10k pairs in the round-1 bench).
-    ``_dot`` is retained as the oracle-matching baseline; equality is
-    pinned by tests/test_queries_duckdb.py. (The udf object is built
+    (The udf object is built
     lazily per SparkSession: the decorator binds a JVM-side _judf, so a
     module-level singleton would hold a dead py4j gateway once a session
     is stopped and another started in the same process, as tests and
@@ -67,14 +67,6 @@ def _quantized(emb):
             "embedding",
             lambda x: F.round(x.cast("double") * 1000, 0).cast("long"),
         ).alias("qv"),
-    )
-
-
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
     )
 
 

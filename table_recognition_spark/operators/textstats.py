@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .common import NORM_SQL, TOKEN_PATTERN, load, norm_text, tokens, tokens_sql
+from .common import NORM_SQL, load, norm_text, tokens, tokens_sql
 
 STOPWORDS = ["the", "a", "and", "of", "to", "in", "is", "for", "on", "with"]
 

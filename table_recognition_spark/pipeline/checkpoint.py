@@ -16,8 +16,10 @@ chunk directory), then atomically publish the progress record (write to a
 temp name, rename). A chunk is committed iff its progress record exists —
 a crash between the two steps re-runs the chunk, overwriting
 deterministically identical output (idempotent). Resume = skip committed
-chunks. Each record carries lineage (inputs, weights fingerprint,
-predicate) and docs/sec.
+chunks. Each record carries lineage (a digest of the docs and media input
+files, the weights fingerprint, the chunk count and the chunk predicate)
+and docs/sec; a run refuses to resume over records whose lineage differs
+from its own, since their chunks would mix with its outputs.
 """
 
 from __future__ import annotations
@@ -28,7 +30,7 @@ import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..core.gnn import weights_to_bytes
 from .extract import extract
@@ -62,6 +64,30 @@ class CheckpointedExtract:
             if f.startswith("chunk_") and f.endswith(".parquet")
         }
 
+    def _lineage(self, docs_df: DataFrame, media_df: DataFrame,
+                 weights: dict) -> str:
+        """What every committed chunk must share with this run."""
+        w_fp = hashlib.md5(weights_to_bytes(weights)).hexdigest()[:12]
+        # [] for an in-memory DataFrame
+        files = sorted(docs_df.inputFiles()) + ["|"] + sorted(
+            media_df.inputFiles())
+        in_fp = hashlib.md5("\n".join(files).encode()).hexdigest()[:12]
+        return (f"inputs=md5:{in_fp};weights=md5:{w_fp};"
+                f"n_chunks={self.n_chunks}")
+
+    def _check_lineage(self, lineage: str) -> None:
+        for chunk in sorted(self.committed()):
+            path = os.path.join(self.progress_dir, f"chunk_{chunk}.parquet")
+            got = pq.read_table(path, columns=["lineage"])["lineage"][0]
+            got = got.as_py().split(";predicate=")[0]
+            if got != lineage:
+                raise ValueError(
+                    f"chunk {chunk} in {self.out_dir} was committed under "
+                    f"{got!r}, this run is {lineage!r}: resume needs the "
+                    "same inputs, weights and chunk count (clear the "
+                    "output directory to start over)"
+                )
+
     def _chunk_predicate(self, chunk: int):
         return F.pmod(F.xxhash64("doc_id"), F.lit(self.n_chunks)) == chunk
 
@@ -93,34 +119,32 @@ class CheckpointedExtract:
         fail_after: int | None = None,
     ) -> int:
         """Process all uncommitted chunks; returns how many chunks ran.
-        ``fail_after=N`` simulates a crash after N chunk commits (tests)."""
-        w_fp = hashlib.md5(weights_to_bytes(weights)).hexdigest()[:12]
-        files = docs_df.inputFiles()  # [] for an in-memory DataFrame
-        inputs = files[0] if files else "in-memory"
+        Raises ``ValueError`` before any work when a committed chunk's
+        lineage differs from this run's. ``fail_after=N`` simulates a
+        crash after N chunk commits (tests)."""
+        lineage = self._lineage(docs_df, media_df, weights)
+        self._check_lineage(lineage)
         done = 0
         for chunk in range(self.n_chunks):
             if chunk in self.committed():
                 continue
             t0 = time.time()
             part = docs_df.filter(self._chunk_predicate(chunk))
-            out = extract(part, media_df, weights)
+            counts = Observation()
+            out = extract(part, media_df, weights).observe(
+                counts,
+                F.count(F.lit(1)).alias("n_docs"),
+                F.sum(F.size("spans")).alias("n_spans"),
+            )
             chunk_dir = os.path.join(self.data_dir, f"chunk={chunk}")
             out.write.mode("overwrite").parquet(chunk_dir)
-            row = (
-                spark.read.parquet(chunk_dir)
-                .agg(
-                    F.count("*").alias("n_docs"),
-                    F.sum(F.size("spans")).alias("n_spans"),
-                )
-                .collect()[0]
-            )
-            n_docs, n_spans = row["n_docs"], row["n_spans"]
+            n = counts.get
             secs = time.time() - t0
-            lineage = (
-                f"inputs={inputs};weights=md5:{w_fp};"
-                f"predicate=pmod(xxhash64(doc_id),{self.n_chunks})=={chunk}"
+            self._commit(
+                chunk, n["n_docs"], n["n_spans"] or 0, secs,
+                f"{lineage};predicate=pmod(xxhash64(doc_id),"
+                f"{self.n_chunks})=={chunk}",
             )
-            self._commit(chunk, n_docs, int(n_spans or 0), secs, lineage)
             done += 1
             if fail_after is not None and done >= fail_after:
                 raise RuntimeError(f"simulated crash after {done} chunks")

@@ -4,9 +4,9 @@ AQE's skew-join splitting covers most cases at runtime; these helpers are
 for the places AQE can't see — aggregation skew and deliberate key
 salting of a known-hot dimension:
 
-- ``salted_count``: two-phase aggregation — salt the grouping key,
-  partial-aggregate per (key, salt), then merge. Turns one hot reducer
-  into ``n_salts`` parallel ones.
+- ``with_salt``: a deterministic per-row salt; partial-aggregating per
+  (key, salt) and then merging turns one hot reducer into ``n_salts``
+  parallel ones.
 - ``salt_join``: replicate the small side ``n_salts`` times and salt the
   big side's key so a hot join key spreads over ``n_salts`` tasks.
 """
@@ -24,19 +24,6 @@ def with_salt(df: DataFrame, key: str, n_salts: int) -> DataFrame:
     return df.withColumn(
         "_salt", F.pmod(F.xxhash64(*cols), F.lit(n_salts))
     )
-
-
-def salted_count(
-    df: DataFrame, key: str, n_salts: int = 16
-) -> DataFrame:
-    """groupBy(key).count() resilient to a hot key: partial per
-    (key, salt), then merge. Result identical to the plain aggregate."""
-    partial = (
-        with_salt(df, key, n_salts)
-        .groupBy(key, "_salt")
-        .agg(F.count(F.lit(1)).alias("_c"))
-    )
-    return partial.groupBy(key).agg(F.sum("_c").alias("n"))
 
 
 def salt_join(

@@ -24,10 +24,10 @@ This module provides:
   PAGE-XML strings (``mapInArrow`` over :func:`ocr_lines_array`; the
   ``pagexml`` file source in ``pagexml_datasource.py`` uses the same
   builder);
-- the cTDaR parser and the plain-python serializers for both dialects
-  (the fixture side of round-trip tests — the reference never writes
-  PAGE-XML, so only the parse direction has reference semantics), plus
-  pandas-UDF column transforms for cTDaR parsing and PAGE serializing.
+- the cTDaR parser :func:`parse_ctdar_xml`, and the PAGE-XML
+  serializer with its pandas-UDF column transform (the fixture side of
+  round trips — the reference never writes PAGE-XML, so only the parse
+  direction has reference semantics).
 """
 
 from __future__ import annotations
@@ -44,10 +44,6 @@ _NS = {"xmlns": PAGE_NS}
 OCR_LINES_TYPE = (
     "array<struct<line_id:int,points:array<struct<x:int,y:int>>,"
     "text:string>>"
-)
-GT_CELLS_TYPE = (
-    "array<struct<type:string,start_row:int,end_row:int,start_col:int,"
-    "end_col:int,points:array<struct<x:int,y:int>>>>"
 )
 
 
@@ -196,90 +192,29 @@ def ocr_lines_to_page_xml(ocr_lines, width: int | None = None,
     return ElementTree.tostring(root, encoding="unicode")
 
 
-def gt_cells_to_ctdar_xml(cells) -> str:
-    """Fixture-side serializer for cTDaR GT (shape mirrors the reference's
-    own writer, dataset_editing/Table.py:49-57)."""
-    root = ElementTree.Element("document")
-    table = ElementTree.SubElement(root, "table")
-    for c in cells:
-        cell = ElementTree.SubElement(
-            table,
-            "cell",
-            {
-                "type": c["type"],
-                "start-row": str(c["start_row"]),
-                "end-row": str(c["end_row"]),
-                "start-col": str(c["start_col"]),
-                "end-col": str(c["end_col"]),
-            },
-        )
-        pts = [(p["x"], p["y"]) for p in c["points"]]
-        ElementTree.SubElement(
-            cell, "Coords", {"points": points_to_coords_string(pts)}
-        )
-    return ElementTree.tostring(root, encoding="unicode")
-
-
 # ----------------------------------------------------- Spark transforms
-# pandas-UDF objects are cached per SparkSession: the decorator binds a
+# The pandas-UDF object is cached per SparkSession: the decorator binds a
 # JVM-side _judf, so a module-level singleton would hold a dead py4j
 # gateway once a session is stopped and another started in the same
 # process (as tests and perfbench do).
-_UDF_CACHE: dict = {"sess": None, "udfs": {}}
-
-
-def _cached_udf(name, build):
-    from pyspark.sql import SparkSession
-
-    sess = SparkSession.getActiveSession()
-    if _UDF_CACHE["sess"] is not sess:
-        _UDF_CACHE["sess"] = sess
-        _UDF_CACHE["udfs"] = {}
-    udfs = _UDF_CACHE["udfs"]
-    if name not in udfs:
-        udfs[name] = build()
-    return udfs[name]
-
-
-def parse_ctdar_xml_col(col):
-    """Column transform: cTDaR GT string → ``cells`` nested column."""
-
-    def build():
-        @F.pandas_udf(GT_CELLS_TYPE)
-        def parse_ctdar(xmls: pd.Series) -> pd.Series:
-            return xmls.map(
-                lambda s: [
-                    {
-                        "type": r["type"],
-                        "start_row": r["start_row"],
-                        "end_row": r["end_row"],
-                        "start_col": r["start_col"],
-                        "end_col": r["end_col"],
-                        "points": [
-                            {"x": x, "y": y} for x, y in r["points"]
-                        ],
-                    }
-                    for r in parse_ctdar_xml(s)
-                ]
-            )
-
-        return parse_ctdar
-
-    return _cached_udf("parse_ctdar", build)(col)
+_SER_CACHE: dict = {"sess": None, "udf": None}
 
 
 def serialize_page_xml_col(col):
     """Column transform: ``ocr_lines`` nested column → PAGE-XML string
     (used to build XML-shaped inputs from fixtures in tests/queries)."""
+    from pyspark.sql import SparkSession
 
-    def build():
+    sess = SparkSession.getActiveSession()
+    if _SER_CACHE["udf"] is None or _SER_CACHE["sess"] is not sess:
+
         @F.pandas_udf("string")
         def ser_page(lines: pd.Series) -> pd.Series:
             return lines.map(ocr_lines_to_page_xml)
 
-        return ser_page
-
-    return _cached_udf("ser_page", build)(col)
+        _SER_CACHE["sess"] = sess
+        _SER_CACHE["udf"] = ser_page
+    return _SER_CACHE["udf"](col)
 
 
 def parse_page_xml_table(df):

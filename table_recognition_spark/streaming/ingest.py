@@ -2,12 +2,10 @@
 
 The reference is pure batch (SURVEY.md §2.9) and the north rule requires
 resumability rather than streaming — that lives in pipeline/checkpoint.py.
-These streams exist for continuous ingestion of new document partitions.
+These streams exist for continuous ingestion of new table partitions.
 
 Operators — each takes a stream DataFrame (``file_stream`` reads one):
 
-- ``stream_events_hourly``: watermarked tumbling-window aggregation (the
-  same logical plan as the batch ``rel_events_hourly``).
 - ``stream_sessions``: native session windows (the streaming analogue of
   the batch ``rel_events_sessions``).
 - ``stream_view_purchase_join``: watermarked stream-stream range join
@@ -15,12 +13,8 @@ Operators — each takes a stream DataFrame (``file_stream`` reads one):
 - ``stream_hll_users_daily_registers``: streaming HLL register maxes
   (the max-merge property is what makes the sketch streamable).
 - ``running_user_totals``: update-mode per-user running totals.
-- ``streaming/dedup.py::stream_dedup_exact`` (exact) and
-  ``streaming/neardup.py`` (MinHash-LSH): first-seen dedup state via
-  ``applyInPandasWithState``.
-- ``stream_extract``: foreachBatch wrapper that runs the extraction
-  pipeline on each micro-batch of docs — exactly-once via the
-  checkpointed sink contract.
+- ``streaming/dedup.py::stream_dedup_exact``: exact first-seen dedup
+  state via ``applyInPandasWithState``.
 
 Drives — each replays a fixture table through one operator as two
 micro-batches (``_drive_two_batch_stream``) under a DuckDB oracle:
@@ -66,47 +60,6 @@ def file_stream(
 
 def _value_c():
     return F.sum(cents(F.col("value"))).alias("value_c")
-
-
-def stream_events_hourly(
-    ev: DataFrame, watermark: str = "1 hour"
-) -> DataFrame:
-    return (
-        ev.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour"), F.col("event_type"))
-        .agg(F.count("*").alias("n"), _value_c())
-        .select(
-            F.date_format("window.start", "yyyy-MM-dd HH:00:00").alias("hour"),
-            "event_type",
-            "n",
-            "value_c",
-        )
-    )
-
-
-def stream_extract(
-    spark: SparkSession,
-    docs_stream: DataFrame,
-    media_df: DataFrame,
-    weights: dict,
-    out_dir: str,
-    checkpoint_dir: str,
-):
-    """Continuous extraction: each micro-batch of docs runs the batch
-    extract() plan and appends to parquet; Spark's streaming checkpoint
-    gives exactly-once per micro-batch."""
-    from ..pipeline.extract import extract
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        out = extract(batch_df, media_df, weights)
-        out.write.mode("append").parquet(out_dir)
-
-    return (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def stream_sessions(ev: DataFrame) -> DataFrame:

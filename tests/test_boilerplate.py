@@ -3,8 +3,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from oracles import duckdb_strip_sql
 from table_recognition_spark.core.boilerplate import (
-    duckdb_strip_sql,
     spark_strip_expr,
     strip_boilerplate,
 )

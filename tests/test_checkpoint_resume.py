@@ -1,10 +1,19 @@
 """Kill/resume idempotency (SURVEY.md §5.4): a run crashed mid-way and
-resumed must produce byte-identical table state to an uninterrupted run."""
+resumed must produce byte-identical table state to an uninterrupted run,
+and a resume never mixes chunks of another lineage."""
+
+import glob
+import os
+import tempfile
 
 import pytest
+from pyspark.sql import functions as F
 
+from table_recognition_spark.core import gnn
 from table_recognition_spark.fixtures.generate import corpus_to_spark
 from table_recognition_spark.pipeline.checkpoint import CheckpointedExtract
+
+SF = "/root/testdata/sf0.001"
 
 
 def _collect(df):
@@ -41,12 +50,18 @@ def test_crash_resume_equals_single_run(spark, tiny_corpus, weights, tmp_path):
 
     assert _collect(ck.read_output(spark)) == _collect(ref.read_output(spark))
 
-    # progress records carry lineage + throughput
+    # progress records carry lineage + throughput, and counts that
+    # match the committed output
     prog = ck.read_progress(spark).collect()
     assert len(prog) == 4
     for p in prog:
         assert "weights=md5:" in p["lineage"]
         assert p["docs_per_sec"] >= 0
+    out = ck.read_output(spark)
+    assert sum(p["n_docs"] for p in prog) == out.count() == len(docs)
+    assert sum(p["n_spans"] for p in prog) == out.agg(
+        F.sum(F.size("spans"))
+    ).first()[0]
 
 
 @pytest.mark.spark
@@ -56,3 +71,48 @@ def test_rerun_is_noop(spark, tiny_corpus, weights, tmp_path):
     ck = CheckpointedExtract(str(tmp_path / "once"), n_chunks=3)
     assert ck.run(spark, docs_df, media_df, weights) == 3
     assert ck.run(spark, docs_df, media_df, weights) == 0
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("change", ["n_chunks", "weights", "docs"])
+def test_resume_refuses_other_lineage(
+    spark, tiny_corpus, weights, tmp_path, change
+):
+    """A resume whose chunk count, weights or input files differ from
+    the committed chunks' raises before running anything: skipping those
+    chunks would mix another run's slices into this one's output."""
+    docs, media, _ = tiny_corpus
+    docs_df, media_df = corpus_to_spark(spark, docs, media)
+    for name in ("docs", "docs_copy"):
+        docs_df.write.parquet(str(tmp_path / name))
+    first = spark.read.parquet(str(tmp_path / "docs"))
+    out = str(tmp_path / "out")
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        CheckpointedExtract(out, n_chunks=4).run(
+            spark, first, media_df, weights, fail_after=1
+        )
+
+    n_chunks, w, d = 4, weights, first
+    if change == "n_chunks":
+        n_chunks = 2
+    elif change == "weights":
+        w = gnn.init_weights(7)
+    else:
+        d = spark.read.parquet(str(tmp_path / "docs_copy"))
+    ck = CheckpointedExtract(out, n_chunks=n_chunks)
+    with pytest.raises(ValueError, match="committed under"):
+        ck.run(spark, d, media_df, w)
+    assert len(ck.committed()) == 1
+
+
+@pytest.mark.spark
+def test_checkpoint_resume_query_leaves_no_chunk_store(spark):
+    """The driver query removes its chunk store before returning, and
+    the returned DataFrame still reads in full."""
+    import __spark_entry__ as E
+
+    parent = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
+    before = set(glob.glob(os.path.join(parent, "trs_ckpt_*")))
+    df = E.queries()["pipeline_checkpoint_resume"](spark, SF)
+    assert len(df.collect()) > 0
+    assert set(glob.glob(os.path.join(parent, "trs_ckpt_*"))) <= before

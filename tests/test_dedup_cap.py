@@ -99,10 +99,8 @@ def test_batch_udf_shingles_equal_hof(spark, adversarial_dir):
     including the empty-text and len<n edge cases."""
     import pandas as pd
 
-    from table_recognition_spark.operators.dedup import (
-        _shingle_df,
-        _shingle_df_hof,
-    )
+    from oracles import shingle_df_hof
+    from table_recognition_spark.operators.dedup import _shingle_df
 
     extra = spark.createDataFrame(
         pd.DataFrame(
@@ -119,23 +117,20 @@ def test_batch_udf_shingles_equal_hof(spark, adversarial_dir):
     a = {r["doc_id"]: sorted(r["shingles"])
          for r in _shingle_df(docs).collect()}
     b = {r["doc_id"]: sorted(r["shingles"])
-         for r in _shingle_df_hof(docs).collect()}
+         for r in shingle_df_hof(docs).collect()}
     assert a == b
 
 
 def test_fused_sig_udf_equals_hof_tree(spark, adversarial_dir):
     """The fused shingle+minhash-signature pandas UDF is byte-identical
     to the Catalyst HOF signature tree (the round-2..4 implementation,
-    kept as oracle in _minhash_sig_expr) — shingles AND all N_MINHASH
+    kept as oracle in tests/oracles.py) — shingles AND all N_MINHASH
     hashes, including empty-text / len<n edge cases."""
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from table_recognition_spark.operators.dedup import (
-        _minhash_sig_expr,
-        _shingle_df_hof,
-        _shingle_sig_df,
-    )
+    from oracles import minhash_sig_expr, shingle_df_hof
+    from table_recognition_spark.operators.dedup import _shingle_sig_df
 
     extra = spark.createDataFrame(
         pd.DataFrame(
@@ -153,8 +148,8 @@ def test_fused_sig_udf_equals_hof_tree(spark, adversarial_dir):
         r["doc_id"]: (sorted(r["shingles"]), list(r["sig"]))
         for r in _shingle_sig_df(docs).collect()
     }
-    hof_df = _shingle_df_hof(docs).select(
-        "doc_id", "shingles", _minhash_sig_expr(F.col("shingles")).alias("sig")
+    hof_df = shingle_df_hof(docs).select(
+        "doc_id", "shingles", minhash_sig_expr(F.col("shingles")).alias("sig")
     )
     hof = {
         r["doc_id"]: (sorted(r["shingles"]), list(r["sig"]))

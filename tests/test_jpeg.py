@@ -104,9 +104,7 @@ def test_progressive_fixture_decodes_to_pinned_pixels():
 def test_progressive_equals_baseline_decode():
     """decode(progressive(img)) == decode(baseline(img)) bit-for-bit on
     shapes that exercise EOB runs, ZRL, partial blocks and odd dims."""
-    from table_recognition_spark.core.jpeg import (
-        jpeg_encode_gray8_progressive,
-    )
+    from fixture_writers import jpeg_encode_gray8_progressive
 
     rng = np.random.default_rng(7)
     imgs = [_table_image()[:96, :120]]
@@ -174,10 +172,8 @@ def test_color_roundtrip_smooth_gradient():
 
     import numpy as np
 
-    from table_recognition_spark.core.jpeg import (
-        jpeg_decode_rgb,
-        jpeg_encode_rgb,
-    )
+    from fixture_writers import jpeg_encode_rgb
+    from table_recognition_spark.core.jpeg import jpeg_decode_rgb
 
     h, w = 40, 56
     yy, xx = np.mgrid[0:h, 0:w]
@@ -224,10 +220,8 @@ def test_color_stream_gray_decode_is_luma():
     consistent with the encoder's RGB→Y transform."""
     import numpy as np
 
-    from table_recognition_spark.core.jpeg import (
-        jpeg_decode_gray8,
-        jpeg_encode_rgb,
-    )
+    from fixture_writers import jpeg_encode_rgb
+    from table_recognition_spark.core.jpeg import jpeg_decode_gray8
 
     h, w = 32, 48
     yy, xx = np.mgrid[0:h, 0:w]

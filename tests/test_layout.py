@@ -9,11 +9,9 @@ the arrival-order write — the write-side half of predicate pushdown.
 import pytest
 from pyspark.sql import functions as F
 
+from fixture_writers import write_range_layout
 from table_recognition_spark.operators.common import load
-from table_recognition_spark.operators.layout import (
-    rowgroup_prune_stats,
-    write_range_layout,
-)
+from table_recognition_spark.operators.layout import rowgroup_prune_stats
 
 SF = "/root/testdata/sf0.001"
 

@@ -11,7 +11,6 @@ from table_recognition_spark.operators.multimodal import (
     image_stats,
     patch_embeddings,
     resize_nearest,
-    thumbnails,
 )
 
 
@@ -43,17 +42,6 @@ def test_image_stats_match_local_decode(spark, tiny_corpus):
             np.round(img.mean(dtype=np.float64), 6)
         )
         assert 0 < r["ink_ratio"] < 1
-
-
-@pytest.mark.spark
-def test_thumbnails_decode_and_deterministic(spark, tiny_corpus):
-    _, media, _ = tiny_corpus
-    _, media_df = corpus_to_spark(spark, [], media)
-    a = {r["media_ref"]: bytes(r["thumb"]) for r in thumbnails(media_df).collect()}
-    b = {r["media_ref"]: bytes(r["thumb"]) for r in thumbnails(media_df).collect()}
-    assert a == b
-    th = png_decode_gray8(a[media[0]["media_ref"]])
-    assert th.shape == (32, 32)
 
 
 @pytest.mark.spark
@@ -215,22 +203,26 @@ def test_video_container_roundtrip():
 
 def test_video_frame_sampling_even_spacing():
     from table_recognition_spark.operators.multimodal import (
-        sample_video_frames,
+        decode_video,
+        sample_frames,
         video_encode,
     )
+
+    def sample(blob, n):
+        return sample_frames(decode_video(blob)[1], n)
 
     frames = [bytes([i]) for i in range(12)]
     blob = video_encode(frames, fps=5)
     # n < total: evenly spaced bucket starts, deterministic
-    assert [i for i, _ in sample_video_frames(blob, 4)] == [0, 3, 6, 9]
+    assert [i for i, _ in sample(blob, 4)] == [0, 3, 6, 9]
     # n >= total: every frame once
-    assert [i for i, _ in sample_video_frames(blob, 99)] == list(range(12))
+    assert [i for i, _ in sample(blob, 99)] == list(range(12))
     # payloads come back from the right indices
-    assert [b for _, b in sample_video_frames(blob, 4)] == [
+    assert [b for _, b in sample(blob, 4)] == [
         bytes([0]), bytes([3]), bytes([6]), bytes([9])
     ]
     # empty container
-    assert sample_video_frames(video_encode([], fps=5), 4) == []
+    assert sample(video_encode([], fps=5), 4) == []
 
 
 def test_video_codec_injection_seam():
@@ -292,7 +284,7 @@ def test_fixture_video_frame_stats_pinned(spark):
     from table_recognition_spark.operators.multimodal import (
         decode_image,
         decode_video,
-        sample_video_frames,
+        sample_frames,
         video_frame_stats,
     )
     from table_recognition_spark.pipeline.flagship import fixture_video
@@ -316,7 +308,7 @@ def test_fixture_video_frame_stats_pinned(spark):
         _f, frames = decode_video(blob)
         assert _f == fps and len(frames) == n_frames
         rows = by_clip[ref]
-        expected = sample_video_frames(blob, 4)
+        expected = sample_frames(frames, 4)
         assert [r["frame_idx"] for r in rows] == [i for i, _ in expected]
         for r, (_i, fb) in zip(rows, expected):
             img = decode_image(fb)

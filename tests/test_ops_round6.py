@@ -12,6 +12,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from fixture_writers import write_range_layout
 from table_recognition_spark.operators.common import load
 from table_recognition_spark.operators import graph, incremental, layout
 
@@ -29,7 +30,7 @@ def test_zorder_prunes_both_dimensions_range_only_one(spark, tmp_path):
     lo, hi = int(mne) + span // 4, int(mne) + (span * 7) // 16
 
     range_dir = str(tmp_path / "range")
-    layout.write_range_layout(ev, range_dir, ["user_id"], n_files=8)
+    write_range_layout(ev, range_dir, ["user_id"], n_files=8)
     st_range = layout.rowgroup_prune_stats(range_dir, "event_id", lo, hi)
     # user_id-ranged files: event_id stats are domain-wide -> no pruning
     assert st_range["matching"] == st_range["total"]

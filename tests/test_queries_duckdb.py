@@ -6,7 +6,7 @@ and embeddings tables are identical at both scales)."""
 import pytest
 
 import __spark_entry__ as E
-from table_recognition_spark.queries.compare import compare
+from oracles import compare
 
 SF = "/root/testdata/sf0.001"
 # The committed-expected-parquet oracles are materialized at the
@@ -54,8 +54,9 @@ def test_pandas_dot_equals_hof_dot(spark):
     integer dot it replaced in the hot paths."""
     from pyspark.sql import functions as F
 
+    from oracles import hof_dot
     from table_recognition_spark.operators.similarity import (
-        _dot, _dot_pandas, _quantized,
+        _dot_pandas, _quantized,
     )
     from table_recognition_spark.operators.common import load
 
@@ -69,7 +70,7 @@ def test_pandas_dot_equals_hof_dot(spark):
         .limit(5000)
     )
     diff = pairs.select(
-        (_dot("qa", "qb") - _dot_pandas("qa", "qb")).alias("d")
+        (hof_dot("qa", "qb") - _dot_pandas("qa", "qb")).alias("d")
     ).filter(F.col("d") != 0)
     assert diff.count() == 0
 

@@ -5,6 +5,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from fixture_writers import gt_cells_to_ctdar_xml
 from table_recognition_spark.operators.dataset_ops import (
     filter_split,
     repair_gt_rows,
@@ -12,10 +13,8 @@ from table_recognition_spark.operators.dataset_ops import (
 from table_recognition_spark.sources.pagexml import (
     PAGE_NS,
     coords_string_to_points,
-    gt_cells_to_ctdar_xml,
     ocr_lines_to_page_xml,
     parse_ctdar_xml,
-    parse_ctdar_xml_col,
     parse_page_xml,
     parse_page_xml_table,
     points_to_coords_string,
@@ -173,31 +172,6 @@ def test_extraction_from_page_xml_equals_direct(spark):
     assert via_xml == direct
 
 
-@pytest.mark.spark
-def test_ctdar_spark_parse(spark):
-    from table_recognition_spark.fixtures.generate import make_corpus
-
-    _, _, gt = make_corpus(0, 5, seed=14)
-    rows = [(g["media_ref"], gt_cells_to_ctdar_xml(g["cells"])) for g in gt]
-    df = spark.createDataFrame(rows, "media_ref string, gt_xml string")
-    parsed = df.select(
-        "media_ref", parse_ctdar_xml_col(F.col("gt_xml")).alias("cells")
-    )
-    got = {r["media_ref"]: [c.asDict(recursive=True) for c in r["cells"]]
-           for r in parsed.collect()}
-    for g in gt:
-        exp = [
-            {
-                "type": c["type"], "start_row": c["start_row"],
-                "end_row": c["end_row"], "start_col": c["start_col"],
-                "end_col": c["end_col"],
-                "points": [{"x": p["x"], "y": p["y"]} for p in c["points"]],
-            }
-            for c in g["cells"]
-        ]
-        assert got[g["media_ref"]] == exp
-
-
 def _cell(type_, sr, er, sc=0, ec=0):
     return {"type": type_, "start_row": sr, "end_row": er,
             "start_col": sc, "end_col": ec,
@@ -296,47 +270,3 @@ def test_filter_split(spark):
                                      "doc_id string")
     got = sorted(r["doc_id"] for r in filter_split(df, split_df).collect())
     assert got == ["doc_1", "doc_2"]
-
-
-@pytest.mark.spark
-def test_missing_media_report(spark):
-    """F2 observability: dangling media_refs are reported exactly; docs
-    whose refs all resolve produce no rows; the extraction inner-join
-    drop and the report partition the media spans."""
-    import pandas as pd
-
-    from table_recognition_spark.operators.dataset_ops import (
-        missing_media_report,
-    )
-
-    docs = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "doc_id": ["d1", "d2", "d3"],
-                "spans": [
-                    [
-                        {"kind": "media", "text": "", "media_ref": "ok_1",
-                         "offset": 0},
-                        {"kind": "media", "text": "", "media_ref": "gone_a",
-                         "offset": 1},
-                    ],
-                    [
-                        {"kind": "text", "text": "t", "media_ref": "",
-                         "offset": 0},
-                    ],
-                    [
-                        {"kind": "media", "text": "", "media_ref": "gone_b",
-                         "offset": 0},
-                    ],
-                ],
-            }
-        )
-    )
-    media = spark.createDataFrame(
-        pd.DataFrame({"media_ref": ["ok_1", "unused"]})
-    )
-    got = sorted(
-        (r["doc_id"], r["media_ref"])
-        for r in missing_media_report(docs, media).collect()
-    )
-    assert got == [("d1", "gone_a"), ("d3", "gone_b")]

@@ -4,7 +4,8 @@ packaged by ``scripts/build_pyfiles.sh`` and launched via
 package source — so the import can only resolve through the shipped
 zip, exactly as on a real cluster. Output spans are checked span-equal
 against the no-Spark oracle and the per-chunk progress records
-(lineage + docs/sec) must exist.
+(lineage + docs/sec) must exist. A second run with ``--no-resume`` and
+fewer chunks into the same output directory must pass the same checks.
 """
 
 import os
@@ -114,61 +115,59 @@ def test_spark_submit_pyfiles_launch(tmp_path):
     # the child must not inherit a sys.path route into the repo
     env.pop("PYTHONPATH", None)
     env.setdefault("SPARK_DRIVER_MEM", "4g")
-    proc = subprocess.run(
-        [
-            SPARK_SUBMIT,
-            "--master",
-            "local[2]",
-            "--py-files",
-            "trs.zip",
-            "main.py",
-            "--docs",
-            docs_path,
-            "--media",
-            media_path,
-            "--out",
-            out,
-            "--chunks",
-            "3",
-            "--parallelism",
-            "2",
-            "--weights",
-            wpath,
-        ],
-        cwd=str(launch),
-        env=env,
-        capture_output=True,
-        text=True,
-        timeout=600,
-    )
-    assert proc.returncode == 0, proc.stderr[-3000:]
 
-    # 4. output spans == oracle (span-sequence equality per doc)
+    def submit(*args):
+        proc = subprocess.run(
+            [
+                SPARK_SUBMIT, "--master", "local[2]", "--py-files", "trs.zip",
+                "main.py", "--docs", docs_path, "--media", media_path,
+                "--out", out, "--parallelism", "2", "--weights", wpath,
+                *args,
+            ],
+            cwd=str(launch),
+            env=env,
+            capture_output=True,
+            text=True,
+            timeout=600,
+        )
+        assert proc.returncode == 0, proc.stderr[-3000:]
+
     import duckdb
 
-    rows = duckdb.sql(
-        f"SELECT doc_id, s['kind'], s['text'], s['media_ref'], s['offset'] "
-        f"FROM (SELECT doc_id, unnest(spans) AS s "
-        f"      FROM read_parquet('{out}/data/*/*.parquet')) "
-        f"ORDER BY 1, 5"
-    ).fetchall()
-    got: dict = {}
-    for doc_id, kind, text, media_ref, offset in rows:
-        got.setdefault(doc_id, []).append((kind, text, media_ref, offset))
     w = gnn.load_weights(wpath)
     exp = {
         k: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in v]
         for k, v in extract_corpus(docs, media, w).items()
     }
-    assert got == exp
 
-    # 5. every chunk committed a progress record with lineage + docs/sec
-    prog = duckdb.sql(
-        f"SELECT chunk, n_docs, docs_per_sec, lineage "
-        f"FROM read_parquet('{out}/_progress/*.parquet') ORDER BY chunk"
-    ).fetchall()
-    assert [r[0] for r in prog] == [0, 1, 2]
-    assert all(r[2] > 0 for r in prog)
-    lineage = prog[0][3]
-    assert "inputs=" in lineage and "weights=md5:" in lineage
-    assert "predicate=pmod(xxhash64(doc_id)" in lineage
+    def check(n_chunks):
+        # output spans == oracle (span-sequence equality per doc)
+        rows = duckdb.sql(
+            f"SELECT doc_id, s['kind'], s['text'], s['media_ref'], "
+            f"s['offset'] "
+            f"FROM (SELECT doc_id, unnest(spans) AS s "
+            f"      FROM read_parquet('{out}/data/*/*.parquet')) "
+            f"ORDER BY 1, 5"
+        ).fetchall()
+        got: dict = {}
+        for doc_id, kind, text, media_ref, offset in rows:
+            got.setdefault(doc_id, []).append((kind, text, media_ref, offset))
+        assert got == exp
+
+        # every chunk committed a progress record with lineage + docs/sec
+        prog = duckdb.sql(
+            f"SELECT chunk, n_docs, docs_per_sec, lineage "
+            f"FROM read_parquet('{out}/_progress/*.parquet') ORDER BY chunk"
+        ).fetchall()
+        assert [r[0] for r in prog] == list(range(n_chunks))
+        assert all(r[2] > 0 for r in prog)
+        lineage = prog[0][3]
+        assert "inputs=" in lineage and "weights=md5:" in lineage
+        assert "predicate=pmod(xxhash64(doc_id)" in lineage
+
+    submit("--chunks", "3")
+    check(3)
+    # a fresh run with fewer chunks into the same directory leaves no
+    # chunk of the first run behind
+    submit("--no-resume", "--chunks", "2")
+    check(2)

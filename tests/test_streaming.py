@@ -1,164 +1,9 @@
 import pytest
 from pyspark.sql import functions as F
 
-from table_recognition_spark.streaming.ingest import (
-    _drive_two_batch_stream,
-    file_stream,
-    stream_events_hourly,
-)
+from table_recognition_spark.streaming.ingest import file_stream
 
 SF = "/root/testdata/sf0.001"
-
-
-@pytest.mark.spark
-@pytest.mark.slow
-def test_stream_hourly_equals_batch(spark, tmp_path):
-    """The streaming tumbling-window agg must agree with the batch plan
-    once the bounded file stream drains."""
-    import shutil
-
-    events_dir = tmp_path / "events_in"
-    events_dir.mkdir()
-    shutil.copy(f"{SF}/events.parquet", events_dir / "events.parquet")
-    out = _drive_two_batch_stream(
-        spark, stream_events_hourly, str(events_dir), "complete"
-    )
-    got = {
-        (r["hour"], r["event_type"]): (r["n"], r["value_c"])
-        for r in out.collect()
-    }
-
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    exp = {
-        (r["hour"], r["event_type"]): (r["n"], r["value_c"])
-        for r in ev.groupBy(
-            F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH:00:00").alias(
-                "hour"
-            ),
-            "event_type",
-        )
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.round(F.col("value") * 100, 0).cast("long")).alias("value_c"),
-        )
-        .collect()
-    }
-    assert got == exp
-
-
-@pytest.mark.spark
-@pytest.mark.slow
-def test_stream_extract_foreachbatch(spark, tiny_corpus, weights, tmp_path):
-    """foreachBatch extraction over a file-streamed docs table matches the
-    batch pipeline output."""
-    from table_recognition_spark.fixtures.generate import (
-        DOCS_SCHEMA,
-        corpus_to_spark,
-    )
-    from table_recognition_spark.pipeline.extract import extract
-    from table_recognition_spark.streaming.ingest import stream_extract
-
-    docs, media, _ = tiny_corpus
-    docs_df, media_df = corpus_to_spark(spark, docs, media)
-    docs_path = str(tmp_path / "docs_in")
-    docs_df.write.parquet(docs_path)
-
-    docs_stream = (
-        spark.readStream.schema(DOCS_SCHEMA).format("parquet").load(docs_path)
-    )
-    q = stream_extract(
-        spark,
-        docs_stream,
-        media_df,
-        weights,
-        str(tmp_path / "out"),
-        str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination(120)
-
-    def canon(df):
-        return sorted(
-            (
-                r["doc_id"],
-                tuple(
-                    (s["kind"], s["text"], s["media_ref"], s["offset"])
-                    for s in r["spans"]
-                ),
-            )
-            for r in df.collect()
-        )
-
-    got = canon(spark.read.parquet(str(tmp_path / "out")))
-    exp = canon(extract(docs_df, media_df, weights))
-    assert got == exp
-
-
-@pytest.mark.spark
-@pytest.mark.slow
-def test_watermark_drops_late_events_append_mode(spark, tmp_path):
-    """Late-data semantics: in append mode a window is finalized once
-    the watermark passes its end; a late event arriving after that must
-    be DROPPED, not re-open the window. Two micro-batches through a
-    file source: batch 2 carries one late row (beyond the 30-min
-    watermark) and one fresh row that finalizes a second window."""
-    import pandas as pd
-
-    events_dir = tmp_path / "ev"
-    events_dir.mkdir()
-
-    def write_batch(rows):
-        pdf = pd.DataFrame(
-            rows,
-            columns=["event_id", "ts", "user_id", "event_type", "value",
-                     "props"],
-        )
-        pdf["ts"] = pd.to_datetime(pdf["ts"])
-        spark.createDataFrame(pdf).coalesce(1).write.mode("append").parquet(
-            str(events_dir)
-        )
-
-    write_batch(
-        [
-            (1, "2024-01-01 10:00:00", 1, "A", 1.0, "{}"),
-            (2, "2024-01-01 10:05:00", 1, "A", 1.0, "{}"),
-            (3, "2024-01-01 10:10:00", 2, "A", 1.0, "{}"),
-            (4, "2024-01-01 13:00:00", 2, "A", 1.0, "{}"),
-        ]
-    )
-    stream = stream_events_hourly(
-        file_stream(spark, str(events_dir)), watermark="30 minutes"
-    )
-    q = (
-        stream.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("wm_out")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # batch 2: event 5 is LATE (10:20 << watermark 12:30 after
-        # batch 1) and must be dropped; event 6 advances the watermark
-        # past 14:00, finalizing the 13:00 window
-        write_batch(
-            [
-                (5, "2024-01-01 10:20:00", 3, "A", 1.0, "{}"),
-                (6, "2024-01-01 14:40:00", 3, "A", 1.0, "{}"),
-            ]
-        )
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = {
-        (r["hour"], r["event_type"]): (r["n"], r["value_c"])
-        for r in spark.sql("SELECT * FROM wm_out").collect()
-    }
-    # the 10:00 window counts exactly the 3 on-time events — the late
-    # row did not reopen it; the 13:00 window was finalized by the
-    # watermark advance; the 14:00 window is still open (not emitted)
-    assert got[("2024-01-01 10:00:00", "A")] == (3, 300)
-    assert got[("2024-01-01 13:00:00", "A")] == (1, 100)
-    assert ("2024-01-01 14:00:00", "A") not in got
 
 
 @pytest.mark.spark

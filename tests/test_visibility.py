@@ -1,10 +1,8 @@
 import numpy as np
 import pytest
 
-from table_recognition_spark.core.visibility import (
-    render_label_image,
-    visibility_edges,
-)
+from oracles import render_label_image, visibility_edges_full_march
+from table_recognition_spark.core.visibility import visibility_edges
 
 
 def test_label_image_overwrite_order():
@@ -85,9 +83,6 @@ def test_optimized_equals_full_march():
     fixture images and adversarial small cases."""
     import numpy as np
 
-    from table_recognition_spark.core.visibility import (
-        _visibility_edges_full_march,
-    )
     from table_recognition_spark.fixtures.generate import _make_table_image
 
     for i in range(12):
@@ -106,7 +101,7 @@ def test_optimized_equals_full_march():
             dtype=np.int64,
         )
         got = visibility_edges(b, m["width"], m["height"])
-        exp = _visibility_edges_full_march(b, m["width"], m["height"])
+        exp = visibility_edges_full_march(b, m["width"], m["height"])
         assert np.array_equal(got, exp), f"mismatch on fixture {i}"
 
     # adversarial: overlapping boxes, box at border, wide+thin mix,
@@ -123,5 +118,5 @@ def test_optimized_equals_full_march():
             y1 = y0 + int(rng.integers(0, h - y0))
             b[j] = (x0, y0, x1, y1)
         got = visibility_edges(b, w, h)
-        exp = _visibility_edges_full_march(b, w, h)
+        exp = visibility_edges_full_march(b, w, h)
         assert np.array_equal(got, exp), f"mismatch on random trial {trial}"

@@ -139,10 +139,8 @@ def test_visual_path_ingests_color_jpeg_media(spark, weights):
     the same image (proving color actually reaches the CNN)."""
     import numpy as np
 
-    from table_recognition_spark.core.jpeg import (
-        jpeg_encode_gray8,
-        jpeg_encode_rgb,
-    )
+    from fixture_writers import jpeg_encode_rgb
+    from table_recognition_spark.core.jpeg import jpeg_encode_gray8
     from table_recognition_spark.fixtures.generate import (
         corpus_to_spark,
         make_corpus,
