@@ -120,31 +120,29 @@ def _media_video_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _extract_from_pagexml(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship extraction with the media table round-tripped through
     PAGE-XML strings — the reference's actual input format (graph.py:47-59)
-    — proving the XML ingestion path feeds the pipeline unchanged.
-    Span-equality vs the direct path is pinned in tests/test_sources_xml."""
-    from pyspark.sql import functions as F
-
+    — proving the XML ingestion path feeds the pipeline unchanged. Both
+    directions are JVM expressions (``to_xml`` / ``from_xml``), so the
+    kernel is the only Python in the plan. Span-equality vs the direct
+    path is pinned in tests/test_sources_xml."""
     from table_recognition_spark.pipeline.extract import extract_flat
     from table_recognition_spark.pipeline.flagship import (
+        N_MEDIA,
         fixture_media,
         interleaved_docs,
     )
     from table_recognition_spark.sources.pagexml import (
-        parse_page_xml_table,
-        serialize_page_xml_col,
+        page_xml_lines,
+        to_page_xml,
     )
 
-    # tiny fixture table: size partitions to the data (24 rows across 32
-    # near-empty tasks would just churn python workers in the two extra
-    # UDF stages this round-trip adds)
-    from table_recognition_spark.pipeline.flagship import N_MEDIA
-
-    media = fixture_media(spark).coalesce(4)
-    xml_media = media.select(
+    xml_media = fixture_media(spark).select(
         "media_ref", "width", "height",
-        serialize_page_xml_col(F.col("ocr_lines")).alias("page_xml"),
+        to_page_xml("ocr_lines", "width", "height").alias("page_xml"),
     )
-    parsed = parse_page_xml_table(xml_media)
+    parsed = xml_media.select(
+        "media_ref", "width", "height",
+        page_xml_lines("page_xml").alias("ocr_lines"),
+    )
     # kernel fan-out bound = the known fixture size: without it the
     # 24 rows would fan out into 2 x cores kernel tasks, most of them empty
     return extract_flat(
@@ -154,28 +152,21 @@ def _extract_from_pagexml(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _extract_from_pagexml_files(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship extraction with the media table ingested from a
-    directory of PAGE-XML FILES via the ``pagexml`` Python DataSource
-    (sources/pagexml_datasource.py) — the reference's actual on-disk
-    input layout (graph.py:47-59), listed/partitioned/parsed as a
-    first-class Spark source. Output must equal the straight-run
-    flagship (same expected-parquet oracle as extract_interleaved)."""
+    """Flagship extraction with the media table read from a directory of
+    PAGE-XML FILES by ``sources.pagexml.read_page_xml`` (the JVM
+    ``binaryFile`` source and ``from_xml``) — the reference's actual
+    on-disk input layout (graph.py:47-59). Output must equal the
+    straight-run flagship (same expected-parquet oracle as
+    extract_interleaved)."""
     from table_recognition_spark.pipeline.extract import extract_flat
     from table_recognition_spark.pipeline.flagship import (
         N_MEDIA,
         fixture_pagexml,
         interleaved_docs,
     )
-    from table_recognition_spark.sources.pagexml_datasource import (
-        register_pagexml_source,
-    )
+    from table_recognition_spark.sources.pagexml import read_page_xml
 
-    register_pagexml_source(spark)
-    parsed = (
-        spark.read.format("pagexml")
-        .option("numPartitions", "4")
-        .load(fixture_pagexml(spark))
-    )
+    parsed = read_page_xml(spark, fixture_pagexml(spark))
     # fan-out bound = the staged corpus size (see _extract_from_pagexml)
     return extract_flat(
         interleaved_docs(spark, sf_dir), parsed, _weights(),

@@ -22,7 +22,9 @@ re-expresses that surface over the Spark engine:
 - :func:`run_mode` — dispatch: data-preparation → seeded fixture corpus
   written as parquet (+ optional graph visualizations, reference
   data_preparation.py); train → the numpy training loop (core/train.py);
-  infer → the checkpointed extraction pipeline.
+  infer → one ``extract_flat`` run (no checkpointing) over the prepared
+  ``docs``/``media`` parquet, or the fixture corpus when there is none,
+  printing its output span count.
 """
 
 from __future__ import annotations

@@ -29,8 +29,6 @@ import io
 import numpy as np
 
 EDGE_CLASS_CELL = 0
-EDGE_CLASSES = ["cell", "horizontal", "vertical", "no-relationship"]
-NODE_CLASSES = ["header", "data"]
 
 # (in_node, in_edge, hidden, out_node, out_edge, residual) per MetaLayer,
 # node_edge_mlp_ending.py:12-26

@@ -25,10 +25,8 @@ public-spec (ITU-T T.81) baseline sequential DCT process:
 
 Throughput note: entropy decoding is an inherently serial bit walk, done
 here as one python loop per coefficient run (~0.2-0.5 s for a megapixel
-page). The codec registry in operators/multimodal.py stays an injection
-seam: a deployment that ships libjpeg-turbo via cv2/PIL swaps it in
-without touching any operator; this implementation is the
-no-native-dependency floor, not the scale path.
+page). This implementation is the no-native-dependency floor, not the
+scale path.
 """
 
 from __future__ import annotations

@@ -33,7 +33,6 @@ from __future__ import annotations
 
 import numpy as np
 
-from .bbox import bbox_centers  # noqa: F401  (re-export convenience)
 from .gnn import _log_softmax, _mlp2, _scatter_mean
 
 NODE_CROP = 10

@@ -7,10 +7,8 @@ image stats, nearest-neighbour resize, patch mean-pool embeddings,
 RIFF/WAVE PCM audio decode + stats, and a deterministic length-prefixed
 video container (TRV0, JPEG frames from our own encoder) with
 evenly-spaced frame sampling + per-frame stats.
-Every decode goes through a magic-prefix codec registry, so a
-deployment that ships libjpeg-turbo/ffmpeg swaps the hot codec in
-without touching any operator — the registries are the injection seam,
-not a stub.
+Each decode picks its codec by the payload's magic prefix; any other
+container raises ``NotImplementedError``.
 
 These run on the fixture media table (the driver's testdata carries no
 binary column), so their correctness check is rows-only plus pytest
@@ -43,49 +41,26 @@ EMBED_SCHEMA = T.StructType(
 )
 
 
-# Codec registry: container magic → decoder(bytes) -> HxW uint8 array.
 # The reference dataset is JPEG (graph.py:103,174 reads .jpg); both PNG
 # (our zlib-only decoder) and baseline JPEG (core/jpeg.py, pure-numpy
 # Huffman + dequant + IDCT) are built in, so the reference's actual
-# corpus is ingestible with no native codec library. The registry stays
-# an injection seam — ``register_codec(JPEG_MAGIC, cv2_decoder)`` at
-# deployment swaps in libjpeg-turbo for throughput without touching any
-# operator (exercised by tests/test_multimodal.py with an injected
-# fake codec).
+# corpus is ingestible with no native codec library.
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 JPEG_MAGIC = b"\xff\xd8\xff"
 
 
-def _jpeg_default(d):
-    from ..core.jpeg import jpeg_decode_gray8
-
-    return jpeg_decode_gray8(bytes(d))
-
-
-_CODECS: dict = {
-    PNG_MAGIC: lambda d: png_decode_gray8(bytes(d)),
-    JPEG_MAGIC: _jpeg_default,
-}
-
-
-def register_codec(magic: bytes, decoder) -> None:
-    """Install a decoder for a container magic prefix (e.g. a cv2/PIL
-    JPEG decoder in a deployment that ships one)."""
-    _CODECS[bytes(magic)] = decoder
-
-
 def decode_image(data: bytes) -> np.ndarray:
-    """Decode a binary image payload via the codec registry. PNG
-    (grayscale 8-bit zlib) and baseline-sequential JPEG are built in
-    pure-numpy; other containers raise until a codec is injected with
-    :func:`register_codec`."""
-    for magic, dec in _CODECS.items():
-        # Per-magic full-length match (same rule as audio/video), so an
-        # injected codec with a magic longer than the built-ins' still
-        # matches.
-        if bytes(data[: len(magic)]) == magic:
-            return dec(data)
-    raise NotImplementedError(f"unknown image container: {data[:8]!r}")
+    """Decode a binary image payload to an HxW uint8 array by its magic
+    prefix: PNG (grayscale 8-bit zlib) or baseline-sequential JPEG, both
+    pure numpy; any other container raises."""
+    head = bytes(data[:8])
+    if head.startswith(PNG_MAGIC):
+        return png_decode_gray8(bytes(data))
+    if head.startswith(JPEG_MAGIC):
+        from ..core.jpeg import jpeg_decode_gray8
+
+        return jpeg_decode_gray8(bytes(data))
+    raise NotImplementedError(f"unknown image container: {head!r}")
 
 
 def decode_image_visual(data: bytes) -> np.ndarray:
@@ -93,9 +68,8 @@ def decode_image_visual(data: bytes) -> np.ndarray:
     (H, W, 3) color via ``jpeg_decode_rgb`` — matching the 3-channel
     ``cv2.imread`` the reference feeds its CNN (graph.py:174) — while
     PNG (our grayscale fixture container) stays (H, W) and is
-    replicated to 3 channels inside ``crop_regions``. Unknown
-    containers defer to the injectable registry via
-    :func:`decode_image`."""
+    replicated to 3 channels inside ``crop_regions``; other containers
+    go to :func:`decode_image`."""
     head = bytes(data[:8])
     if head.startswith(JPEG_MAGIC):
         from ..core.jpeg import jpeg_decode_rgb
@@ -109,23 +83,15 @@ def decode_audio(data: bytes) -> np.ndarray:
     sample_rate). RIFF/WAVE PCM (8/16/32-bit int) is built in via the
     stdlib ``wave`` parser + numpy frombuffer — no codec library needed
     for the uncompressed container. Compressed codecs (mp3/aac/ogg)
-    raise until a decoder is injected with :func:`register_audio_codec`."""
-    for magic, dec in _AUDIO_CODECS.items():
-        # Match each magic against its own full length, so a codec
-        # registered with a >4-byte magic (e.g. an ID3-tagged mp3
-        # detector) still matches — same rule as decode_video.
-        if bytes(data[: len(magic)]) == magic:
-            return dec(data)
-    raise NotImplementedError(
-        f"audio decode: unknown/compressed container {data[:4]!r}; "
-        "inject a codec with register_audio_codec(magic, decoder)."
-    )
-
-
-def _wav_decode(data: bytes):
+    raise."""
     import io
     import wave
 
+    if bytes(data[:4]) != b"RIFF":
+        raise NotImplementedError(
+            f"audio decode: unknown/compressed container {bytes(data[:4])!r}"
+            "; only RIFF/WAVE PCM is built in"
+        )
     with wave.open(io.BytesIO(bytes(data)), "rb") as w:
         n = w.getnframes()
         sw = w.getsampwidth()
@@ -147,22 +113,11 @@ def _wav_decode(data: bytes):
     return x, rate
 
 
-_AUDIO_CODECS: dict = {b"RIFF": _wav_decode}
-
-
-def register_audio_codec(magic: bytes, decoder) -> None:
-    """Install an audio decoder for a container magic prefix (e.g. an
-    ffmpeg-backed mp3 decoder in a deployment that ships one)."""
-    _AUDIO_CODECS[bytes(magic)] = decoder
-
-
 # --- video ------------------------------------------------------------
-# Container registry, same shape as images/audio: magic prefix → decoder
-# returning (fps, [frame_bytes, ...]). Built in: TRV0, a deterministic
-# length-prefixed frame container whose frames are baseline JPEGs from
-# our own encoder (core/jpeg.py) — a fully real decode path with no
-# native codec library. Real-world containers (mp4/webm) raise until an
-# ffmpeg-backed decoder is injected with :func:`register_video_codec`.
+# Built in: TRV0, a deterministic length-prefixed frame container whose
+# frames are baseline JPEGs from our own encoder (core/jpeg.py) — a fully
+# real decode path with no native codec library. Real-world containers
+# (mp4/webm) raise.
 VIDEO_MAGIC = b"TRV0"
 
 
@@ -179,12 +134,17 @@ def video_encode(frames: list, fps: int) -> bytes:
     return b"".join(out)
 
 
-def _trv_decode(data: bytes):
+def decode_video(data: bytes):
+    """Decode a TRV0 video payload → (fps, [frame_bytes, ...]); any other
+    container raises."""
     import struct
 
     data = bytes(data)
     if data[:4] != VIDEO_MAGIC:
-        raise ValueError("not a TRV0 container")
+        raise NotImplementedError(
+            f"video decode: unknown container {data[:8]!r}; only TRV0 is "
+            "built in"
+        )
     fps, n = struct.unpack_from("<HI", data, 4)
     frames = []
     off = 10
@@ -194,30 +154,6 @@ def _trv_decode(data: bytes):
         frames.append(data[off : off + ln])
         off += ln
     return fps, frames
-
-
-_VIDEO_CODECS: dict = {VIDEO_MAGIC: _trv_decode}
-
-
-def register_video_codec(magic: bytes, decoder) -> None:
-    """Install a video container decoder for a magic prefix (e.g. an
-    ffmpeg-backed mp4 demux+decode in a deployment that ships one);
-    decoder(bytes) -> (fps, [encoded_frame_bytes, ...])."""
-    _VIDEO_CODECS[bytes(magic)] = decoder
-
-
-def decode_video(data: bytes):
-    """Decode a video payload → (fps, [frame_bytes, ...]) via the video
-    codec registry. Each registered magic is matched against its own
-    full length (a codec registered with an 8-byte magic works, same as
-    the image/audio registries)."""
-    for magic, dec in _VIDEO_CODECS.items():
-        if bytes(data[: len(magic)]) == magic:
-            return dec(data)
-    raise NotImplementedError(
-        f"video decode: unknown container {bytes(data[:8])!r}; inject a "
-        "codec with register_video_codec(magic, decoder)."
-    )
 
 
 def sample_frames(frames: list, n: int) -> list:
@@ -308,9 +244,9 @@ AUDIO_STATS_SCHEMA = T.StructType(
 
 
 def audio_stats(audio_df: DataFrame) -> DataFrame:
-    """(media_ref, audio:binary) → per-clip stats via the audio codec
-    registry — the same Arrow-batched ``mapInPandas`` shape as
-    :func:`image_stats`; WAV PCM real, compressed codecs injectable."""
+    """(media_ref, audio:binary) → per-clip stats via
+    :func:`decode_audio` — the same Arrow-batched ``mapInPandas`` shape
+    as :func:`image_stats`."""
 
     def fn(batches):
         for pdf in batches:

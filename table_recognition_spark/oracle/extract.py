@@ -60,7 +60,7 @@ def run_kernel_arrays(
 
         if visual_weights is None:
             visual_weights = visual.default_weights()
-        # codec registry: PNG fixtures stay grayscale (replicated to 3
+        # PNG fixtures stay grayscale (replicated to 3
         # channels in crop_regions); JPEG — the reference's actual
         # corpus container — decodes to (H, W, 3) color like the
         # reference's cv2.imread

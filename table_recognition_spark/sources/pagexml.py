@@ -11,23 +11,25 @@ with ``Coords@points`` plus ``type``/``start-row``/``end-row``/
 This module provides:
 
 - the coordinate codec (both directions) and its one decode rule,
-  :func:`_check_coords`: whitespace-separated ``x,y`` integer pairs of
-  at most 9 digits, a blank string is a line with no points, anything
-  else is a ``ValueError``;
-- one PAGE ``TextLine`` walk, :func:`_text_lines`, behind every PAGE-XML
-  reader: the plain-python :func:`parse_page_xml` and the Arrow builder
-  :func:`ocr_lines_array`, which turns parsed documents into the engine's
-  ``ocr_lines`` column from flat buffers (no python object per point).
-  Line ids follow document order, matching the reference's
-  ``Node.NODE_COUNTER`` assignment;
-- :func:`parse_page_xml_table`, the Spark transform for a table of
-  PAGE-XML strings (``mapInArrow`` over :func:`ocr_lines_array`; the
-  ``pagexml`` file source in ``pagexml_datasource.py`` uses the same
-  builder);
-- the cTDaR parser :func:`parse_ctdar_xml`, and the PAGE-XML
-  serializer with its pandas-UDF column transform (the fixture side of
-  round trips — the reference never writes PAGE-XML, so only the parse
-  direction has reference semantics).
+  ``_COORDS``: whitespace-separated ``x,y`` integer pairs of at most
+  9 digits; a blank string is a line with no points; anything else,
+  a missing ``Coords`` or a missing ``points`` included, is an error
+  ("malformed Coords points");
+- the plain-python reference readers :func:`parse_page_xml` and
+  :func:`parse_ctdar_xml`, and the fixture-side serializer
+  :func:`ocr_lines_to_page_xml` (the reference never writes PAGE-XML,
+  so only the parse direction has reference semantics);
+- the Spark readers, built from JVM expressions only (``from_xml`` /
+  ``to_xml`` and higher-order functions, no Python worker):
+  :func:`page_xml_lines` turns a PAGE-XML string column into the
+  engine's ``ocr_lines`` column, :func:`read_page_xml` reads a directory
+  of PAGE-XML files into ``media_ref, width, height, ocr_lines``, and
+  :func:`to_page_xml` writes the string column back.
+
+Both sides match elements by local name, so a PAGE document in any
+namespace (the 2019 or 2013 schema, a prefixed ``pc:`` form, or none)
+gives its lines. Line ids follow document order, matching the
+reference's ``Node.NODE_COUNTER`` assignment.
 """
 
 from __future__ import annotations
@@ -35,16 +37,9 @@ from __future__ import annotations
 import re
 from xml.etree import ElementTree
 
-import pandas as pd
-from pyspark.sql import functions as F, types as T
+from pyspark.sql import functions as F
 
 PAGE_NS = "http://schema.primaresearch.org/PAGE/gts/pagecontent/2019-07-15"
-_NS = {"xmlns": PAGE_NS}
-
-OCR_LINES_TYPE = (
-    "array<struct<line_id:int,points:array<struct<x:int,y:int>>,"
-    "text:string>>"
-)
 
 
 # ---------------------------------------------------------------- codec
@@ -54,20 +49,14 @@ _COORDS = re.compile(
 )
 
 
-def _check_coords(coords_string: str) -> str:
-    """The one decode rule for ``Coords@points``: whitespace-separated
-    ``x,y`` integer pairs, or a blank string (a line with no points)."""
-    if not _COORDS.fullmatch(coords_string):
+def coords_string_to_points(coords_string: str | None) -> list:
+    """``"1,1 2,2" → [(1, 1), (2, 2)]`` (reference utils.py:15-33) under
+    the one decode rule: whitespace-separated ``x,y`` integer pairs, or a
+    blank string (a line with no points). ``None`` (no ``Coords`` element
+    or no ``points``) is malformed."""
+    if coords_string is None or not _COORDS.fullmatch(coords_string):
         raise ValueError(f"malformed Coords points {coords_string!r}")
-    return coords_string
-
-
-def coords_string_to_points(coords_string: str) -> list:
-    """``"1,1 2,2" → [(1, 1), (2, 2)]`` (reference utils.py:15-33)."""
-    return [
-        tuple(map(int, p.split(",")))
-        for p in _check_coords(coords_string).split()
-    ]
+    return [tuple(map(int, p.split(","))) for p in coords_string.split()]
 
 
 def points_to_coords_string(points) -> str:
@@ -76,69 +65,34 @@ def points_to_coords_string(points) -> str:
 
 
 # ------------------------------------------------------------- parsers
-def _text_lines(root):
-    """Yield ``(points, text)`` for every PAGE ``TextLine`` of a parsed
-    document, in document order — the only reader of ``Coords@points``.
-    Mirrors reference graph.py:47-59 (xpath + Coords@points); the text is
-    taken from ``TextEquiv/Unicode`` when present (the reference's OCR
-    files carry it; its graph builder only consumes the coords)."""
-    for line in root.iterfind(
-        "./xmlns:Page/xmlns:TextRegion/xmlns:TextLine", _NS
-    ):
-        coords = line.find("./xmlns:Coords", _NS)
-        uni = line.find("./xmlns:TextEquiv/xmlns:Unicode", _NS)
-        text = uni.text if uni is not None and uni.text is not None else ""
-        yield coords.attrib["points"], text
+def _coords_points(elem, path: str) -> str | None:
+    """``points`` of the ``Coords`` element at ``path`` under ``elem``, or
+    None when the element or the attribute is missing."""
+    coords = elem.find(path)
+    return None if coords is None else coords.get("points")
 
 
 def parse_page_xml(xml_string: str) -> list:
-    """PAGE-XML string → [{line_id, points, text}] in document order."""
+    """PAGE-XML string → [{line_id, points, text}] in document order.
+
+    Mirrors reference graph.py:47-59 (xpath + Coords@points), matching
+    elements by local name; the text is the first
+    ``TextEquiv/Unicode`` when present (the reference's OCR files carry
+    it; its graph builder only consumes the coords)."""
     root = ElementTree.fromstring(xml_string)
-    return [
-        {"line_id": i, "points": coords_string_to_points(points),
-         "text": text}
-        for i, (points, text) in enumerate(_text_lines(root))
-    ]
-
-
-def ocr_lines_array(roots):
-    """Parsed PAGE-XML roots → the ``ocr_lines`` column (``OCR_LINES_TYPE``)
-    as one Arrow ``ListArray``, one element per root.
-
-    ElementTree is used only for structure (:func:`_text_lines`). Each
-    line's coords string is checked against the codec rule, then all of
-    them are decoded by one numpy parse, and the nested arrays (points
-    ``list<struct>``, lines ``list<struct>``) are assembled from flat
-    buffers — no python object per point or per line."""
-    import numpy as np
-    import pyarrow as pa
-
-    coords, texts, line_offsets = [], [], [0]
-    for root in roots:
-        for points, text in _text_lines(root):
-            coords.append(_check_coords(points))
-            texts.append(text)
-        line_offsets.append(len(texts))
-    xy = np.array(
-        " ".join(coords).replace(",", " ").split(), np.int32
-    ).reshape(-1, 2)
-    pt_offsets = np.zeros(len(coords) + 1, dtype=np.int32)
-    np.cumsum([c.count(",") for c in coords], out=pt_offsets[1:])
-    points = pa.ListArray.from_arrays(
-        pa.array(pt_offsets),
-        pa.StructArray.from_arrays(
-            [pa.array(xy[:, 0]), pa.array(xy[:, 1])], ["x", "y"]
-        ),
-    )
-    offsets = np.asarray(line_offsets, dtype=np.int32)
-    line_ids = np.arange(len(texts), dtype=np.int32) - np.repeat(
-        offsets[:-1], np.diff(offsets)
-    )
-    lines = pa.StructArray.from_arrays(
-        [pa.array(line_ids), points, pa.array(texts, pa.string())],
-        ["line_id", "points", "text"],
-    )
-    return pa.ListArray.from_arrays(pa.array(offsets), lines)
+    out = []
+    for i, line in enumerate(
+        root.iterfind("./{*}Page/{*}TextRegion/{*}TextLine")
+    ):
+        uni = line.find("./{*}TextEquiv/{*}Unicode")
+        out.append({
+            "line_id": i,
+            "points": coords_string_to_points(
+                _coords_points(line, "./{*}Coords")
+            ),
+            "text": "" if uni is None or uni.text is None else uni.text,
+        })
+    return out
 
 
 def parse_ctdar_xml(xml_string: str) -> list:
@@ -147,7 +101,6 @@ def parse_ctdar_xml(xml_string: str) -> list:
     root = ElementTree.fromstring(xml_string)
     out = []
     for cell in root.findall("./table/cell"):
-        coords = cell.find("./Coords")
         out.append(
             {
                 "type": cell.attrib["type"],
@@ -155,7 +108,9 @@ def parse_ctdar_xml(xml_string: str) -> list:
                 "end_row": int(cell.attrib["end-row"]),
                 "start_col": int(cell.attrib["start-col"]),
                 "end_col": int(cell.attrib["end-col"]),
-                "points": coords_string_to_points(coords.attrib["points"]),
+                "points": coords_string_to_points(
+                    _coords_points(cell, "./Coords")
+                ),
             }
         )
     return out
@@ -167,7 +122,7 @@ def ocr_lines_to_page_xml(ocr_lines, width: int | None = None,
     """Fixture-side serializer: ocr_lines rows → a PAGE-XML document the
     parser above round-trips exactly. ``width``/``height`` (optional)
     are written as the standard ``Page`` ``imageWidth``/``imageHeight``
-    attributes — the file-level metadata the ``pagexml`` DataSource
+    attributes — the file-level metadata :func:`read_page_xml`
     surfaces."""
     ElementTree.register_namespace("", PAGE_NS)
     root = ElementTree.Element(f"{{{PAGE_NS}}}PcGts")
@@ -192,50 +147,103 @@ def ocr_lines_to_page_xml(ocr_lines, width: int | None = None,
     return ElementTree.tostring(root, encoding="unicode")
 
 
-# ----------------------------------------------------- Spark transforms
-# The pandas-UDF object is cached per SparkSession: the decorator binds a
-# JVM-side _judf, so a module-level singleton would hold a dead py4j
-# gateway once a session is stopped and another started in the same
-# process (as tests and perfbench do).
-_SER_CACHE: dict = {"sess": None, "udf": None}
+# ------------------------------------------------------ Spark expressions
+# The expressions are Spark SQL text: parsing one costs a single JVM
+# call, where building the same tree from Column calls costs hundreds
+# (~0.3 s per query for the two PAGE-XML directions, measured on 4 cores).
+
+# the codec rule for the JVM regex engine: Java's \s and \d are the same
+# ASCII classes as Python's under re.ASCII; \z, unlike $, does not match
+# before a trailing line terminator
+_COORDS_JVM = r"\A(?:" + _COORDS.pattern + r")\z"
 
 
-def serialize_page_xml_col(col):
-    """Column transform: ``ocr_lines`` nested column → PAGE-XML string
-    (used to build XML-shaped inputs from fixtures in tests/queries)."""
-    from pyspark.sql import SparkSession
-
-    sess = SparkSession.getActiveSession()
-    if _SER_CACHE["udf"] is None or _SER_CACHE["sess"] is not sess:
-
-        @F.pandas_udf("string")
-        def ser_page(lines: pd.Series) -> pd.Series:
-            return lines.map(ocr_lines_to_page_xml)
-
-        _SER_CACHE["sess"] = sess
-        _SER_CACHE["udf"] = ser_page
-    return _SER_CACHE["udf"](col)
-
-
-def parse_page_xml_table(df):
-    """``page_xml`` string column → ``ocr_lines`` nested column, in one
-    ``mapInArrow`` pass over :func:`ocr_lines_array` that keeps every
-    other column (``ocr_lines`` goes last)."""
-    import pyarrow as pa
-
-    keep = [f for f in df.schema.fields if f.name != "page_xml"]
-    names = [f.name for f in keep] + ["ocr_lines"]
-
-    def fn(batches):
-        for rb in batches:
-            roots = map(ElementTree.fromstring,
-                        rb.column("page_xml").to_pylist())
-            yield pa.RecordBatch.from_arrays(
-                [rb.column(n) for n in names[:-1]] + [ocr_lines_array(roots)],
-                names,
-            )
-
-    out_schema = T.StructType(
-        keep + [T.StructField("ocr_lines", T.DataType.fromDDL(OCR_LINES_TYPE))]
+def _page(xml: str) -> str:
+    """SQL: PAGE-XML string expression → its ``Page`` struct (null when
+    the document has none). ``ignoreNamespace`` matches by local name, as
+    ``{*}`` does above; surrounding spaces of the text are kept, as
+    ElementTree keeps them."""
+    return (
+        f"from_xml({xml}, 'Page struct<_imageWidth:int,_imageHeight:int,"
+        "TextRegion:array<struct<TextLine:array<struct<"
+        "Coords:struct<_points:string>,"
+        "TextEquiv:array<struct<Unicode:string>>>>>>>', "
+        "map('ignoreNamespace', 'true', 'ignoreSurroundingSpaces', 'false', "
+        "'mode', 'FAILFAST')).Page"
     )
-    return df.mapInArrow(fn, out_schema)
+
+
+def _ocr_lines(page: str) -> str:
+    """SQL: ``Page`` struct expression → the ``ocr_lines`` column, ``[]``
+    for a page without lines; a line whose points break the codec rule
+    raises."""
+    return (
+        f"transform(flatten(transform(coalesce({page}.TextRegion, array()), "
+        "r -> coalesce(r.TextLine, array()))), (ln, i) -> named_struct("
+        "'line_id', i, "
+        f"'points', CASE WHEN ln.Coords._points RLIKE r'{_COORDS_JVM}' "
+        r"THEN transform(filter(split(ln.Coords._points, r'\s+'), "
+        "t -> t != ''), t -> named_struct("
+        "'x', CAST(substring_index(t, ',', 1) AS INT), "
+        "'y', CAST(substring_index(t, ',', -1) AS INT))) "
+        "ELSE raise_error(concat('malformed Coords points ', "
+        "coalesce(concat(\"'\", ln.Coords._points, \"'\"), 'None'))) END, "
+        "'text', coalesce(get(filter(ln.TextEquiv, "
+        "e -> e.Unicode IS NOT NULL), 0).Unicode, '')))"
+    )
+
+
+def page_xml_lines(xml: str):
+    """PAGE-XML string column (by name) → the engine's ``ocr_lines``
+    column, equal to :func:`parse_page_xml` on every document."""
+    return F.expr(_ocr_lines(_page(f"`{xml}`")))
+
+
+def read_page_xml(spark, path: str):
+    """Directory of PAGE-XML files (``*.xml``, recursively; Spark skips
+    empty files and names starting with ``_`` or ``.``) → one row per
+    file::
+
+        media_ref string   -- file stem (the reference keys images this way)
+        width int          -- Page@imageWidth (0 when absent)
+        height int         -- Page@imageHeight (0 when absent)
+        ocr_lines          -- as :func:`page_xml_lines`
+
+    Files are decoded as UTF-8: invalid bytes, or an XML declaration
+    that names another encoding, raise instead of decoding into wrong
+    text."""
+    enc = (r"regexp_extract(xml, r'^\uFEFF?<\?xml[^>]*?\sencoding\s*=\s*."
+           r"([A-Za-z][A-Za-z0-9._-]*)', 1)")
+    utf8 = (
+        f"CASE WHEN lower({enc}) IN ('', 'utf-8', 'utf8') THEN xml ELSE "
+        f"raise_error(concat('PAGE-XML file ', path, ' declares encoding ', "
+        f"{enc}, '; only UTF-8 is read')) END"
+    )
+    return spark.read.format("binaryFile").load(
+        path, recursiveFileLookup=True, pathGlobFilter="*.xml"
+    ).selectExpr(
+        "path", "decode(content, 'UTF-8') AS xml"
+    ).selectExpr(
+        r"regexp_extract(path, r'([^/]*)\.xml$', 1) AS media_ref",
+        _page(utf8) + " AS page",
+    ).selectExpr(
+        "media_ref",
+        "coalesce(page._imageWidth, 0) AS width",
+        "coalesce(page._imageHeight, 0) AS height",
+        _ocr_lines("page") + " AS ocr_lines",
+    )
+
+
+def to_page_xml(lines: str, width: str, height: str):
+    """``ocr_lines``, ``width`` and ``height`` columns (by name) →
+    PAGE-XML string column (``to_xml``) that :func:`parse_page_xml`
+    round-trips."""
+    return F.expr(
+        f"to_xml(named_struct('_xmlns', '{PAGE_NS}', 'Page', named_struct("
+        f"'_imageWidth', `{width}`, '_imageHeight', `{height}`, "
+        f"'TextRegion', named_struct('TextLine', transform(`{lines}`, "
+        "ln -> named_struct('Coords', named_struct('_points', array_join("
+        "transform(ln.points, p -> concat_ws(',', p.x, p.y)), ' ')), "
+        "'TextEquiv', named_struct('Unicode', ln.text)))))), "
+        "map('rowTag', 'PcGts'))"
+    )

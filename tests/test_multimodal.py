@@ -8,6 +8,7 @@ from table_recognition_spark.fixtures.generate import (
 from table_recognition_spark.operators.multimodal import (
     decode_audio,
     decode_image,
+    decode_video,
     image_stats,
     patch_embeddings,
     resize_nearest,
@@ -17,8 +18,10 @@ from table_recognition_spark.operators.multimodal import (
 def test_decode_image_stubs():
     with pytest.raises(NotImplementedError):
         decode_image(b"GIF89a...")
-    with pytest.raises(NotImplementedError, match="register_audio_codec"):
+    with pytest.raises(NotImplementedError, match="only RIFF/WAVE PCM"):
         decode_audio(b"OggS compressed")
+    with pytest.raises(NotImplementedError, match="only TRV0"):
+        decode_video(b"\x00\x00\x00\x20ftypisom fake mp4")
 
 
 def test_resize_nearest_dims():
@@ -54,47 +57,14 @@ def test_patch_embeddings_shape(spark, tiny_corpus):
 
 
 def test_jpeg_codec_injection_seam():
-    """decode_image must route JPEG payloads through an injected codec —
-    the deployment swap point for the reference's .jpg dataset — and the
-    mapInPandas operators must work end-to-end through it."""
-    import numpy as np
-    import pytest
-
-    from table_recognition_spark.operators import multimodal as mm
-
-    # deterministic fake "JPEG": magic + 2-byte dims + raw gray8 payload
-    def fake_jpeg_encode(img):
-        h, w = img.shape
-        return mm.JPEG_MAGIC + bytes([h, w]) + img.tobytes()
-
-    def fake_jpeg_decode(data):
-        body = bytes(data)[3:]
-        h, w = body[0], body[1]
-        return np.frombuffer(body[2:], dtype=np.uint8).reshape(h, w)
+    """decode_image routes JPEG payloads to the built-in pure-numpy
+    baseline codec and PNG payloads to the zlib decoder, by magic."""
+    from table_recognition_spark.core.jpeg import jpeg_encode_gray8
+    from table_recognition_spark.fixtures.generate import png_encode
 
     img = (np.arange(64, dtype=np.uint8).reshape(8, 8) * 3) % 251
-    payload = fake_jpeg_encode(img)
-
-    # before injection: the built-in pure-numpy baseline codec handles
-    # real JPEG bytes (the fake payload is not a valid stream)
-    from table_recognition_spark.core.jpeg import jpeg_encode_gray8
-
-    real = jpeg_encode_gray8(img)
-    assert mm.decode_image(real).shape == img.shape
-
-    # injection OVERRIDES the built-in (the libjpeg-turbo swap point)
-    builtin = mm._CODECS[mm.JPEG_MAGIC]
-    mm.register_codec(mm.JPEG_MAGIC, fake_jpeg_decode)
-    try:
-        out = mm.decode_image(payload)
-        assert np.array_equal(out, img)
-        # PNG path unaffected
-        from table_recognition_spark.fixtures.generate import png_encode
-
-        assert np.array_equal(mm.decode_image(png_encode(img)), img)
-    finally:
-        mm._CODECS[mm.JPEG_MAGIC] = builtin
-    assert mm.decode_image(real).shape == img.shape
+    assert decode_image(jpeg_encode_gray8(img)).shape == img.shape
+    assert np.array_equal(decode_image(png_encode(img)), img)
 
 
 def _wav_bytes(samples, rate=16000, ch=1, width=2):
@@ -131,10 +101,10 @@ def test_decode_audio_wav_pcm():
     stereo = np.stack([sig, -sig], axis=1).reshape(-1)
     x2, _ = decode_audio(_wav_bytes(stereo, ch=2))
     assert len(x2) == 1600 and np.abs(x2).max() < 1e-3
-    # compressed container still raises (injection seam)
+    # compressed container raises
     import pytest as _pt
 
-    with _pt.raises(NotImplementedError, match="register_audio_codec"):
+    with _pt.raises(NotImplementedError, match="only RIFF/WAVE PCM"):
         decode_audio(b"ID3\x03 mp3-ish")
 
 
@@ -223,55 +193,6 @@ def test_video_frame_sampling_even_spacing():
     ]
     # empty container
     assert sample(video_encode([], fps=5), 4) == []
-
-
-def test_video_codec_injection_seam():
-    import pytest as _pytest
-
-    from table_recognition_spark.operators.multimodal import (
-        _VIDEO_CODECS,
-        decode_video,
-        register_video_codec,
-    )
-
-    with _pytest.raises(NotImplementedError, match="register_video_codec"):
-        decode_video(b"\x00\x00\x00\x20ftypisom fake mp4")
-    register_video_codec(b"FAKE", lambda d: (1, [b"x"]))
-    try:
-        assert decode_video(b"FAKEvideo") == (1, [b"x"])
-    finally:
-        _VIDEO_CODECS.pop(b"FAKE")
-
-
-def test_long_magic_codecs_match_full_length():
-    """A codec registered with a magic longer than the built-ins' head
-    window still matches — image (>8 bytes) and audio (>4 bytes)
-    registries compare each magic against its own full length, same as
-    video."""
-    from table_recognition_spark.operators.multimodal import (
-        _AUDIO_CODECS,
-        _CODECS,
-        decode_audio,
-        decode_image,
-        register_audio_codec,
-        register_codec,
-    )
-
-    long_img = b"LONGIMAGEMAGIC"  # 14 bytes > the 8-byte PNG magic
-    long_aud = b"ID3\x04\x00\x00"  # 6 bytes > RIFF's 4
-    register_codec(long_img, lambda d: "img-decoded")
-    register_audio_codec(long_aud, lambda d: ("aud-decoded", 44100))
-    try:
-        assert decode_image(long_img + b"payload") == "img-decoded"
-        assert decode_audio(long_aud + b"payload") == ("aud-decoded", 44100)
-        # a partial prefix of the long magic must NOT match
-        import pytest as _pytest
-
-        with _pytest.raises(NotImplementedError):
-            decode_image(long_img[:6] + b"x" * 16)
-    finally:
-        _CODECS.pop(long_img)
-        _AUDIO_CODECS.pop(long_aud)
 
 
 @pytest.mark.spark

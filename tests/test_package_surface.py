@@ -1,7 +1,8 @@
 """The package keeps only what non-test code reaches.
 
-Every top-level function, class and module of ``table_recognition_spark``
-must be named (by a ``Name``, an ``Attribute`` or an import alias) from
+Every top-level function, class, module-level constant (a name bound by
+a top-level assignment) and module of ``table_recognition_spark`` must be
+named (by a ``Name``, an ``Attribute`` or an import alias) from
 live non-test code: the entry points ``__spark_entry__.py``, ``main.py``
 and ``bench.py``, ``scripts/``, ``perfbench/``, or a live package
 definition other than itself. Liveness is reachability from those roots,
@@ -24,7 +25,6 @@ _ROOT_FILES = ("__spark_entry__.py", "main.py", "bench.py")
 _ROOT_DIRS = ("scripts", "perfbench")
 
 _REFERENCE = "reference component in the README table"
-_SEAM = "codec injection seam for decoders the container does not ship"
 ALLOW = {
     "parse_ctdar_xml": _REFERENCE + " (S-rows)",
     "parse_page_xml": _REFERENCE + " (S-rows)",
@@ -32,9 +32,6 @@ ALLOW = {
     "edge_visibility_features": _REFERENCE + " (J6)",
     "polygons_see_each_other": _REFERENCE + " (J6)",
     "train_visual": "regenerates weights/g3_trained_seed42.npz",
-    "register_codec": _SEAM,
-    "register_audio_codec": _SEAM,
-    "register_video_codec": _SEAM,
 }
 
 
@@ -68,11 +65,19 @@ def _names(nodes):
     return out
 
 
+def _bound(node):
+    """Names a top-level assignment binds (dunder names excluded)."""
+    targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+    return [n.id for t in targets for n in ast.walk(t)
+            if isinstance(n, ast.Name) and not n.id.startswith("__")]
+
+
 def _units():
     """(key, name, module key or None, names used) for every unit.
 
     A unit is a root file, a package module (its statements outside
-    top-level definitions) or a top-level definition.
+    top-level definitions and assignments), a top-level definition or a
+    name a top-level assignment binds (using the names of its value).
     """
     units = []
     for f in _ROOT_FILES:
@@ -87,12 +92,18 @@ def _units():
         tree = _parse(path)
         defs = [n for n in tree.body if isinstance(
             n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))]
-        rest = [n for n in tree.body if n not in defs]
+        consts = [n for n in tree.body if isinstance(
+            n, (ast.Assign, ast.AnnAssign)) and n.value and _bound(n)]
+        rest = [n for n in tree.body if n not in defs and n not in consts]
         # a package __init__ is live whenever its package is imported
         units.append((rel, None if stem == "__init__" else stem, None,
                       _names(rest)))
         for n in defs:
             units.append((f"{rel}::{n.name}", n.name, rel, _names([n])))
+        for n in consts:
+            for name in _bound(n):
+                units.append((f"{rel}::{name}", name, rel,
+                              _names([n.value])))
     return units
 
 

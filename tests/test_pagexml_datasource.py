@@ -1,17 +1,17 @@
-"""PySpark-4 Python DataSource for the reference's directory-of-PAGE-XML
-corpus (`spark.read.format("pagexml")`): round-trip equality against the
-fixture media table, partition balance, and span-equal extraction when
-the datasource feeds the pipeline in place of the parquet media table.
+"""The file reader for the reference's directory-of-PAGE-XML corpus
+(``read_page_xml``): round-trip equality against the fixture media
+table, UTF-8 decoding, and span-equal extraction when the reader feeds
+the pipeline in place of the parquet media table.
 """
 
 import os
 
 import pytest
 
-from table_recognition_spark.sources.pagexml import ocr_lines_to_page_xml
-from table_recognition_spark.sources.pagexml_datasource import (
-    PageXmlReader,
-    register_pagexml_source,
+from table_recognition_spark.sources.pagexml import (
+    PAGE_NS,
+    ocr_lines_to_page_xml,
+    read_page_xml,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -46,13 +46,7 @@ def _key(ocr_lines):
 @pytest.mark.spark
 def test_pagexml_datasource_roundtrips_fixture_media(spark, tmp_path):
     rows = _write_corpus(spark, tmp_path)
-    register_pagexml_source(spark)
-    df = (
-        spark.read.format("pagexml")
-        .option("numPartitions", "4")
-        .load(str(tmp_path))
-    )
-    assert df.rdd.getNumPartitions() == 4
+    df = read_page_xml(spark, str(tmp_path))
     got = {
         r.media_ref: (r.width, r.height, _key(r.ocr_lines))
         for r in df.collect()
@@ -65,7 +59,7 @@ def test_pagexml_datasource_roundtrips_fixture_media(spark, tmp_path):
 
 @pytest.mark.spark
 def test_pagexml_datasource_feeds_extraction_span_equal(spark, tmp_path):
-    """The datasource table must be a drop-in replacement for the
+    """The file reader's table must be a drop-in replacement for the
     parquet media table: same spans out of the flagship pipeline."""
     _write_corpus(spark, tmp_path)
     _assert_feeds_extraction_span_equal(spark, tmp_path)
@@ -88,8 +82,7 @@ def _assert_feeds_extraction_span_equal(spark, path):
         interleaved_docs,
     )
 
-    register_pagexml_source(spark)
-    parsed = spark.read.format("pagexml").load(str(path))
+    parsed = read_page_xml(spark, str(path))
     docs = interleaved_docs(spark, SF)
     w = gnn.default_weights()
     got = extract_flat(docs, parsed, w).collect()
@@ -112,18 +105,39 @@ def test_pagexml_files_query_leaves_no_temp_dir(spark):
     assert set(glob.glob(pattern)) <= before
 
 
-def test_pagexml_reader_partition_roundrobin(tmp_path):
-    for i in range(10):
-        (tmp_path / f"f{i}.xml").write_text("<x/>")
-    r = PageXmlReader({"path": str(tmp_path), "numPartitions": "3"})
-    parts = r.partitions()
-    assert len(parts) == 3
-    allf = sorted(f for p in parts for f in p.files)
-    assert len(allf) == 10 and len(set(allf)) == 10
-    sizes = sorted(len(p.files) for p in parts)
-    assert sizes == [3, 3, 4]
+def _page(text, decl=""):
+    return (
+        f'{decl}<PcGts xmlns="{PAGE_NS}"><Page><TextRegion><TextLine>'
+        f'<Coords points="1,2"/><TextEquiv><Unicode>{text}</Unicode>'
+        "</TextEquiv></TextLine></TextRegion></Page></PcGts>"
+    )
 
 
-def test_pagexml_reader_requires_path():
-    with pytest.raises(ValueError):
-        PageXmlReader({})
+@pytest.mark.spark
+def test_pagexml_reader_roundtrips_utf8_text(spark, tmp_path):
+    """Non-ASCII UTF-8 text, a UTF-8 declaration, a byte-order mark and
+    a space in the file name all read back as written."""
+    text = "Zürich – 42 € ✓"
+    (tmp_path / "a b.xml").write_bytes(
+        b"\xef\xbb\xbf"
+        + _page(text, '<?xml version="1.0" encoding="UTF-8"?>').encode()
+    )
+    [row] = read_page_xml(spark, str(tmp_path)).collect()
+    assert (row.media_ref, row.width, row.height) == ("a b", 0, 0)
+    assert [(ln.line_id, ln.text) for ln in row.ocr_lines] == [(0, text)]
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("decl, text, match", [
+    pytest.param('<?xml version="1.0" encoding="ISO-8859-1"?>', "e",
+                 "declares encoding", id="declared-latin-1"),
+    pytest.param("", "\u00e9", "MALFORMED_CHARACTER_CODING",
+                 id="invalid-utf-8"),
+])
+def test_pagexml_reader_refuses_non_utf8(spark, tmp_path, decl, text, match):
+    """A file in another encoding raises rather than decoding into wrong
+    text: by its declaration even when its bytes happen to be valid
+    UTF-8, and by its bytes when they are not."""
+    (tmp_path / "l.xml").write_bytes(_page(text, decl).encode("latin-1"))
+    with pytest.raises(Exception, match=match):
+        read_page_xml(spark, str(tmp_path)).collect()

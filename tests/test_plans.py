@@ -116,6 +116,38 @@ def test_text_strip_is_jvm_side(plan):
     assert "ArrowEvalPython" not in plan
 
 
+def _python_nodes(node):
+    """Names of the nodes of an executed plan that run Python workers:
+    the execs in Spark's ``execution.python`` package and scans of a
+    Python data source. Descends through AQE and its query stages."""
+    cls = node.getClass().getName()
+    if cls.endswith("AdaptiveSparkPlanExec"):
+        return _python_nodes(node.executedPlan())
+    kids = [node.plan()] if cls.endswith("QueryStageExec") else []
+    it = node.children().iterator()
+    while it.hasNext():
+        kids.append(it.next())
+    scan = node.scan().getClass().getName() if cls.endswith(
+        "BatchScanExec") else ""
+    own = [node.nodeName()] if ".python." in cls + scan else []
+    return own + [n for k in kids for n in _python_nodes(k)]
+
+
+@pytest.mark.parametrize(
+    "query", ["extract_from_pagexml", "extract_from_pagexml_files"]
+)
+def test_pagexml_queries_run_python_only_in_kernel(spark, query):
+    """PAGE-XML is parsed and written by JVM expressions: the kernel's
+    ``MapInArrow`` is the only Python node left in the executed plan."""
+    import __spark_entry__ as E
+
+    df = E.queries()[query](spark, "/root/testdata/sf0.001")
+    df.collect()
+    assert _python_nodes(df._jdf.queryExecution().executedPlan()) == [
+        "MapInArrow"
+    ]
+
+
 def test_no_per_row_python_udf_registered():
     """Lint (SURVEY §7 hard part d): the engine never uses row-at-a-time
     F.udf in pipeline/operator code."""

@@ -3,7 +3,6 @@ GT repair and split loader."""
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from fixture_writers import gt_cells_to_ctdar_xml
 from table_recognition_spark.operators.dataset_ops import (
@@ -14,11 +13,12 @@ from table_recognition_spark.sources.pagexml import (
     PAGE_NS,
     coords_string_to_points,
     ocr_lines_to_page_xml,
+    page_xml_lines,
     parse_ctdar_xml,
     parse_page_xml,
-    parse_page_xml_table,
     points_to_coords_string,
-    serialize_page_xml_col,
+    read_page_xml,
+    to_page_xml,
 )
 
 
@@ -63,73 +63,124 @@ def test_ctdar_xml_python_roundtrip():
             assert got["points"] == [(p["x"], p["y"]) for p in exp["points"]]
 
 
+@pytest.mark.parametrize("coords", ["", "<Coords/>"])
+def test_ctdar_cell_without_points_is_malformed(coords):
+    xml = ('<document><table><cell type="data" start-row="0" end-row="0" '
+           f'start-col="0" end-col="0">{coords}</cell></table></document>')
+    with pytest.raises(ValueError, match="malformed Coords points"):
+        parse_ctdar_xml(xml)
+
+
 @pytest.mark.spark
 def test_page_xml_spark_roundtrip(spark):
-    """ocr_lines → PAGE-XML strings → ``parse_page_xml_table`` gives the
-    original nested column back and keeps every other column."""
+    """ocr_lines → PAGE-XML strings (``to_page_xml``) → ``page_xml_lines``
+    gives the original nested column back, and ``parse_page_xml`` reads
+    the same strings the same way, a line without points and markup in
+    the text too."""
     from table_recognition_spark.fixtures.generate import (
         corpus_to_spark, make_corpus,
     )
 
     _, media, _ = make_corpus(0, 8, seed=12)
+    media[0]["ocr_lines"].append({
+        "line_id": len(media[0]["ocr_lines"]), "points": [],
+        "text": " a<b>&c ",
+    })
     _, media_df = corpus_to_spark(spark, [], media)
-    xml_df = media_df.select(
-        "media_ref", "image", "width", "height",
-        serialize_page_xml_col(F.col("ocr_lines")).alias("page_xml"),
+    back = media_df.select(
+        "media_ref",
+        to_page_xml("ocr_lines", "width", "height").alias("page_xml"),
+    ).select("media_ref", "page_xml",
+             page_xml_lines("page_xml").alias("ocr_lines"))
+    assert back.schema["ocr_lines"].dataType.simpleString() == (
+        media_df.schema["ocr_lines"].dataType.simpleString()
     )
-    back = parse_page_xml_table(xml_df)
-    assert [f.name for f in back.schema.fields] == [
-        "media_ref", "image", "width", "height", "ocr_lines",
-    ]
     orig = {r["media_ref"]: r["ocr_lines"]
             for r in media_df.select("media_ref", "ocr_lines").collect()}
-    got = {r["media_ref"]: r["ocr_lines"]
-           for r in back.select("media_ref", "ocr_lines").collect()}
-    assert got == orig
-    # empty-input batch shape survives
-    assert parse_page_xml_table(xml_df.limit(0)).count() == 0
+    rows = back.collect()
+    assert {r["media_ref"]: r["ocr_lines"] for r in rows} == orig
+    for r in rows:
+        assert parse_page_xml(r["page_xml"]) == [
+            {"line_id": ln.line_id, "points": [tuple(p) for p in ln.points],
+             "text": ln.text}
+            for ln in orig[r["media_ref"]]
+        ]
 
 
 def _one_line_page(points):
-    return (
-        f'<PcGts xmlns="{PAGE_NS}"><Page imageWidth="10" imageHeight="20">'
-        f'<TextRegion><TextLine><Coords points="{points}"/><TextEquiv>'
-        "<Unicode>cell</Unicode></TextEquiv></TextLine></TextRegion></Page>"
-        "</PcGts>"
+    return _page(
+        '<TextRegion><TextLine><Coords points="' + points + '"/><TextEquiv>'
+        "<Unicode>cell</Unicode></TextEquiv></TextLine></TextRegion>"
     )
+
+
+def _page(body, ns=f' xmlns="{PAGE_NS}"', prefix=""):
+    return (
+        f'<{prefix}PcGts{ns}><{prefix}Page imageWidth="10" '
+        f'imageHeight="20">{body}</{prefix}Page></{prefix}PcGts>'
+    )
+
+
+def _line(points, text):
+    return (f'<TextLine><Coords points="{points}"/><TextEquiv>'
+            f"<Unicode>{text}</Unicode></TextEquiv></TextLine>")
+
+
+_CELL = [(0, [(1, 2)], "cell")]
+_REGION = "<TextRegion>" + _line("1,2", "cell") + "</TextRegion>"
 
 
 @pytest.mark.spark
 @pytest.mark.parametrize(
-    "points, expected",
+    "page, expected",
     [
-        ("", []),
+        ("", [(0, [], "cell")]),
         ("1,2 3 4,5,6", ValueError),
-        ("1,2 3,4 ", [(1, 2), (3, 4)]),
+        ("1,2 3,4 ", [(0, [(1, 2), (3, 4)], "cell")]),
         ("1,2 3000000000,4", ValueError),  # beyond the int32 column
+        pytest.param("1,2\u2028", ValueError, id="line-separator"),
+        pytest.param(_page("<TextRegion><TextLine><TextEquiv><Unicode>x"
+                           "</Unicode></TextEquiv></TextLine></TextRegion>"),
+                     ValueError, id="no-Coords"),
+        pytest.param(_page("<TextRegion><TextLine><Coords/></TextLine>"
+                           "</TextRegion>"),
+                     ValueError, id="no-points"),
+        pytest.param(_page("<TextRegion>" + _line("1,2", " a &amp; &lt;b ")
+                           + "<TextLine><Coords points='3,4'/></TextLine>"
+                           "</TextRegion>"),
+                     [(0, [(1, 2)], " a & <b "), (1, [(3, 4)], "")],
+                     id="text-spaces-entities-missing"),
+        pytest.param(_page(_REGION, ns=' xmlns="http://schema.'
+                           'primaresearch.org/PAGE/gts/pagecontent/'
+                           '2013-07-15"'),
+                     _CELL, id="namespace-2013"),
+        pytest.param(_page(_REGION, ns=""), _CELL, id="no-namespace"),
+        pytest.param(_page(_REGION.replace("<", "<pc:")
+                           .replace("<pc:/", "</pc:"),
+                           ns=f' xmlns:pc="{PAGE_NS}"', prefix="pc:"),
+                     _CELL, id="prefixed"),
+        pytest.param(_page(""), [], id="no-TextRegion"),
+        pytest.param(_page("<TextRegion/>" + _REGION + "<ImageRegion/>"
+                           "<TextRegion>" + _line("5,6", "b")
+                           + "</TextRegion>"),
+                     _CELL + [(1, [(5, 6)], "b")], id="several-TextRegions"),
     ],
 )
-def test_coords_rule_agrees_across_readers(spark, tmp_path, points, expected):
-    """One decode rule for ``Coords@points``: the plain parser, the
-    string-table transform and the file source give the same points, or
-    all raise — none invents a point the string does not hold."""
-    from table_recognition_spark.sources.pagexml_datasource import (
-        register_pagexml_source,
-    )
-
-    xml = _one_line_page(points)
-    (tmp_path / "r.xml").write_text(xml)
-    register_pagexml_source(spark)
+def test_coords_rule_agrees_across_readers(spark, tmp_path, page, expected):
+    """One decode rule for ``Coords@points`` and one line walk: the plain
+    parser, the string expression and the file reader give the same
+    ``ocr_lines``, or all raise — none invents a point the string does
+    not hold. ``page`` is a whole document or one line's points."""
+    xml = page if page.startswith("<") else _one_line_page(page)
+    (tmp_path / "r.xml").write_text(xml, encoding="utf-8")
     readers = {
-        "parse_page_xml": lambda: parse_page_xml(xml)[0]["points"],
-        "parse_page_xml_table": lambda: parse_page_xml_table(
-            spark.createDataFrame(
-                [("r", xml)], "media_ref string, page_xml string"
-            )
-        ).collect(),
-        "pagexml": lambda: spark.read.format("pagexml").load(
-            str(tmp_path)
-        ).collect(),
+        "parse_page_xml": lambda: parse_page_xml(xml),
+        "page_xml_lines": lambda: spark.createDataFrame(
+            [(xml,)], "page_xml string"
+        ).select(page_xml_lines("page_xml").alias("ocr_lines"))
+        .collect(),
+        "read_page_xml": lambda: read_page_xml(spark, str(tmp_path))
+        .collect(),
     }
     for name, read in readers.items():
         if expected is ValueError:
@@ -139,9 +190,9 @@ def test_coords_rule_agrees_across_readers(spark, tmp_path, points, expected):
         got = read()
         if name != "parse_page_xml":
             [row] = got
-            [line] = row["ocr_lines"]
-            assert (line["line_id"], line["text"]) == (0, "cell"), name
-            got = [(p["x"], p["y"]) for p in line["points"]]
+            got = row["ocr_lines"]
+        got = [(ln["line_id"], [tuple(p) for p in ln["points"]], ln["text"])
+               for ln in got]
         assert got == expected, name
 
 
@@ -158,11 +209,13 @@ def test_extraction_from_page_xml_equals_direct(spark):
     docs_df, media_df = corpus_to_spark(spark, docs, media)
     w = gnn.load_weights("weights/g2_seed42.npz")
 
-    xml_media = media_df.select(
+    parsed_media = media_df.select(
         "media_ref", "image", "width", "height",
-        serialize_page_xml_col(F.col("ocr_lines")).alias("page_xml"),
+        to_page_xml("ocr_lines", "width", "height").alias("page_xml"),
+    ).select(
+        "media_ref", "image", "width", "height",
+        page_xml_lines("page_xml").alias("ocr_lines"),
     )
-    parsed_media = parse_page_xml_table(xml_media)
     direct = sorted(
         map(tuple, extract_flat(docs_df, media_df, w).collect())
     )

@@ -134,7 +134,7 @@ def test_visual_path_ingests_color_jpeg_media(spark, weights):
     """The reference's actual corpus container is color JPEG
     (graph.py:103,174 reads .jpg via cv2). Swap a fixture media image
     for a color JPEG (own encoder) and the visual pipeline must decode
-    it through the codec registry to 3-channel crops — Spark and oracle
+    it by its JPEG magic to 3-channel crops — Spark and oracle
     span-equal, and the result must differ from a grayscale render of
     the same image (proving color actually reaches the CNN)."""
     import numpy as np
