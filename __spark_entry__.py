@@ -58,7 +58,8 @@ def _extract_interleaved_visibility(spark: SparkSession, sf_dir: str) -> DataFra
 
 def _extract_interleaved_visual(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship with the G3 visual model (numpy CNN over image crops) —
-    the reference's configured-default architecture."""
+    the reference's configured-default architecture; its weights pick it."""
+    from table_recognition_spark.core import visual
     from table_recognition_spark.pipeline.extract import extract_flat
     from table_recognition_spark.pipeline.flagship import (
         fixture_media,
@@ -68,8 +69,7 @@ def _extract_interleaved_visual(spark: SparkSession, sf_dir: str) -> DataFrame:
     return extract_flat(
         interleaved_docs(spark, sf_dir),
         fixture_media(spark),
-        _weights(),
-        model="visual",
+        visual.default_weights(),
     )
 
 
@@ -334,18 +334,20 @@ def _gt_repair_sql() -> str:
 # parquet was generated by the same Spark implementation it now gates,
 # so for THESE queries the rows+schema+hash check is a determinism /
 # regression pin, NOT an independent cross-check (a bug present at
-# gen_expected time would be committed as truth). The independent
-# correctness anchor for each of them is the no-Spark numpy oracle +
-# pinned-value pytests (oracle/extract.py, tests/test_jpeg.py,
-# tests/test_pipeline_parity.py). The SQL-oracled queries, by contrast,
-# ARE independently cross-checked (DuckDB recomputes from the raw
-# tables). Environment note: these outputs include float matmuls (G3
-# CNN forward, IVF k-means); artifacts were generated with numpy's
-# default OpenBLAS on x86-64 (linux, numpy 2.x) — a different BLAS /
-# FMA regime could in principle flip a low-order bit and break the
-# hash; if a cross-machine mismatch appears with all pytests green,
-# regenerate via scripts/gen_expected.py and diff values (tolerance),
-# not hashes.
+# gen_expected time would be committed as truth). The four extraction
+# parquets are also checked independently:
+# tests/test_expected_independent.py requires each to equal the no-Spark
+# numpy oracle (oracle/extract.py) over the same sf0.01 docs and fixture
+# media. The media-decode ones rest on pinned-value pytests
+# (tests/test_jpeg.py, tests/test_multimodal.py). The SQL-oracled
+# queries, by contrast, ARE independently cross-checked (DuckDB
+# recomputes from the raw tables). Environment note: these outputs
+# include float matmuls (G3 CNN forward, IVF k-means); artifacts were
+# generated with numpy's default OpenBLAS on x86-64 (linux, numpy 2.x)
+# — a different BLAS / FMA regime could in principle flip a low-order
+# bit and break the hash; if a cross-machine mismatch appears with all
+# pytests green, regenerate via scripts/gen_expected.py and diff values
+# (tolerance), not hashes.
 EXPECTED_ORACLE_QUERIES = [
     "extract_interleaved",
     "extract_interleaved_visibility",

@@ -41,7 +41,11 @@ def main() -> None:
     ap.add_argument("--out", required=True, help="output directory")
     ap.add_argument("--chunks", type=int, default=64)
     ap.add_argument("--parallelism", type=int, default=None)
-    ap.add_argument("--weights", default=None)
+    ap.add_argument(
+        "--weights",
+        default=None,
+        help="weights npz, G2 or G3: its arrays pick the model",
+    )
     ap.add_argument(
         "--no-resume",
         action="store_true",

@@ -176,13 +176,16 @@ def _run_train(cfg: ModeConfig) -> int:
 
 
 def _run_infer(cfg: ModeConfig) -> int:
-    from .core import gnn
+    from .core import gnn, visual
     from .pipeline.flagship import fixture_media, interleaved_docs
     from .pipeline.extract import extract_flat
     from .session import get_spark
 
     spark = get_spark("infer")
-    weights = gnn.default_weights()
+    weights = (
+        visual.default_weights() if cfg.visual_features
+        else gnn.default_weights()
+    )
     src = cfg.infer_input_dir
     if src and os.path.exists(os.path.join(src, "docs.parquet")):
         docs = spark.read.parquet(os.path.join(src, "docs.parquet"))
@@ -191,8 +194,7 @@ def _run_infer(cfg: ModeConfig) -> int:
         docs = interleaved_docs(spark, "/root/testdata/sf0.001")
         media = fixture_media(spark)
     n = extract_flat(
-        docs, media, weights, strategy=cfg.edge_discovery,
-        model="visual" if cfg.visual_features else "g2",
+        docs, media, weights, strategy=cfg.edge_discovery
     ).count()
     print(f"infer: {n} output spans")
     return 0

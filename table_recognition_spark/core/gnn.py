@@ -24,8 +24,6 @@ the single-node oracle and the Spark kernel.
 
 from __future__ import annotations
 
-import io
-
 import numpy as np
 
 EDGE_CLASS_CELL = 0
@@ -109,12 +107,12 @@ _RAW_MAGIC = b"TRW2"
 
 
 def weights_to_bytes(weights: dict) -> bytes:
-    """Serialize a weights dict for the wire (task closures, broadcasts,
-    checkpoint fingerprints). Raw layout — magic, little-endian u64
-    header length, JSON header [{n,d,s,o}...], concatenated C-order
-    array bytes — instead of npz: parsing 59 MB of npz (zip members,
-    CRCs, one alloc per array) cost ~0.6 s in EVERY python worker's
-    first visual task, while ``weights_from_bytes`` on this layout is
+    """Serialize a weights dict for the wire (broadcasts) and for its
+    content digest (broadcast key, checkpoint fingerprint). Raw layout —
+    magic, little-endian u64 header length, JSON header [{n,d,s,o}...],
+    concatenated C-order array bytes — instead of npz: parsing 59 MB of
+    npz (zip members, CRCs, one alloc per array) cost ~0.6 s in EVERY
+    python worker's first visual task, while ``weights_from_bytes`` on this layout is
     ~zero-copy (np.frombuffer views over the payload). Deterministic
     (sorted keys) so checkpoint fingerprints stay stable."""
     import json
@@ -135,26 +133,23 @@ def weights_to_bytes(weights: dict) -> bytes:
 
 
 def weights_from_bytes(data: bytes) -> dict:
-    """Inverse of :func:`weights_to_bytes`. Arrays are read-only
-    zero-copy views over ``data`` (forward passes never mutate weights).
-    Legacy npz payloads (pre-round-5 checkpoints) still parse."""
+    """Inverse of :func:`weights_to_bytes`, whose ``TRW2`` layout is the
+    only one it reads. Arrays are read-only zero-copy views over ``data``
+    (forward passes never mutate weights)."""
     import json
 
-    if data[:4] == _RAW_MAGIC:
-        hl = int.from_bytes(data[4:12], "little")
-        header = json.loads(bytes(data[12 : 12 + hl]))
-        base = 12 + hl
-        out = {}
-        for h in header:
-            n = 1
-            for dim in h["s"]:
-                n *= dim
-            out[h["n"]] = np.frombuffer(
-                data, dtype=np.dtype(h["d"]), count=n, offset=base + h["o"]
-            ).reshape(h["s"])
-        return out
-    with np.load(io.BytesIO(data)) as z:  # legacy npz payloads
-        return {k: z[k] for k in z.files}
+    hl = int.from_bytes(data[4:12], "little")
+    header = json.loads(bytes(data[12 : 12 + hl]))
+    base = 12 + hl
+    out = {}
+    for h in header:
+        n = 1
+        for dim in h["s"]:
+            n *= dim
+        out[h["n"]] = np.frombuffer(
+            data, dtype=np.dtype(h["d"]), count=n, offset=base + h["o"]
+        ).reshape(h["s"])
+    return out
 
 
 def _mlp2(w, prefix, x):

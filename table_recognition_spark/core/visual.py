@@ -328,6 +328,21 @@ def default_weights() -> dict:
     return _DEFAULT_WEIGHTS
 
 
+def is_visual(weights: dict) -> bool:
+    """True for G3 weights, False for G2: every G3 array is named
+    ``g3.*`` and no G2 array is, so the weights alone pick the model."""
+    return any(k.startswith("g3.") for k in weights)
+
+
+def cnn_features(node_crops: np.ndarray, edge_crops: np.ndarray,
+                 weights: dict):
+    """(node features (N,256), edge features (E,256)) of the crops."""
+    nv = _cnn_forward(node_crops, weights, "g3.node_cnn", NODE_CNN)
+    if not len(edge_crops):
+        return nv, np.zeros((0, 256), dtype=np.float32)
+    return nv, _cnn_forward(edge_crops, weights, "g3.edge_cnn", EDGE_CNN)
+
+
 def _linear(w, name, x):
     return x @ w[name + ".w"] + w[name + ".b"]
 
@@ -344,12 +359,12 @@ def forward(
 ):
     """Full G3 forward. Returns (node_log_probs (N,2), edge_log_probs (E,4)).
 
-    ``node_feats``/``edge_feats``: precomputed CNN features (256-d per
-    crop) — when given, the crop arguments are ignored and the CNN stage
-    is skipped. This is the cross-image fusion seam: a task holding many
-    images runs ONE batched CNN over all their crops (bit-identical to
-    per-image: ``conv2d`` runs one fixed-shape GEMM per crop) and feeds
-    the slices here."""
+    ``node_feats``/``edge_feats``: the crops' CNN features from
+    :func:`cnn_features` — when given, the crop arguments are ignored.
+    This is the cross-image fusion seam: a task holding many images runs
+    ONE batched CNN over all their crops (bit-identical to per-image:
+    ``conv2d`` runs one fixed-shape GEMM per crop) and feeds the slices
+    here."""
     x_geo = np.asarray(x_geo, dtype=np.float32)
     e_geo = np.asarray(edge_attr, dtype=np.float32)
     if edge_index.size:
@@ -358,16 +373,9 @@ def forward(
         row = col = np.empty(0, dtype=np.int64)
     n = len(x_geo)
 
-    if node_feats is not None:
-        nv = node_feats
-    else:
-        nv = _cnn_forward(node_crops, weights, "g3.node_cnn", NODE_CNN)
-    if edge_feats is not None:
-        ev = edge_feats
-    elif len(edge_crops):
-        ev = _cnn_forward(edge_crops, weights, "g3.edge_cnn", EDGE_CNN)
-    else:
-        ev = np.zeros((0, 256), dtype=np.float32)
+    nv, ev = node_feats, edge_feats
+    if nv is None:
+        nv, ev = cnn_features(node_crops, edge_crops, weights)
 
     x = _linear(w=weights, name="g3.node_join",
                 x=np.concatenate([x_geo, nv], axis=1)).astype(np.float32)

@@ -4,8 +4,10 @@ Implements the frozen canonical semantics of SURVEY.md §2.10-2.11 over the
 fixture corpus: for each document, walk spans in offset order; text spans
 pass through the boilerplate strip and re-emit as kind='main_text'; media
 spans run the table-recognition kernel (k-NN graph → geometry features →
-G2 GNN forward → argmax decode → cell assembly) and re-emit one
+GNN forward → argmax decode → cell assembly) and re-emit one
 kind='cell' span per assembled cell. Output offsets are dense 0..n-1.
+The weights pick the GNN: G2 (geometry only) or G3 (adds CNN features
+of image crops, so it reads the media's ``image`` bytes).
 
 De-facto reference inference path being re-expressed: load weights →
 forward → argmax (train.py:175-215, SURVEY.md §3.3) + our canonical cell
@@ -16,8 +18,11 @@ from __future__ import annotations
 
 import numpy as np
 
-from ..core import assemble, boilerplate, geometry, gnn, knn, visibility
+from ..core import (
+    assemble, boilerplate, geometry, gnn, knn, visibility, visual,
+)
 from ..core.bbox import polygons_to_bboxes
+from ..core.blas import limit_blas_threads
 
 EDGE_STRATEGIES = {
     "knn": lambda b, w, h: knn.knn_edges(b),
@@ -25,130 +30,73 @@ EDGE_STRATEGIES = {
 }
 
 
-def run_kernel_arrays(
-    bboxes: np.ndarray,
-    texts: list,
-    width: int,
-    height: int,
-    weights: dict,
-    strategy: str = "knn",
-    model: str = "g2",
-    image: bytes | None = None,
-    visual_weights: dict | None = None,
-) -> list:
-    """Array-form kernel: bboxes (n,4) int, texts list[str], rows already
-    in line_id order. This is THE kernel — the dict-based ``run_kernel``
-    and the Arrow-batched Spark path both funnel here, so parity is by
-    construction.
-
-    ``model``: 'g2' (geometry-only, SURVEY §2.8 G2) or 'visual' (G3 — the
-    reference's configured default, node_edge_mlp_ending_visual.py); the
-    visual model additionally needs the PNG ``image`` bytes and its own
-    ``visual_weights``.
-    """
-    if len(bboxes) == 0:
-        return []
-    from ..core.blas import limit_blas_threads
-
-    limit_blas_threads(1)
-    edges = EDGE_STRATEGIES[strategy](bboxes, width, height)
-    x = geometry.node_features(bboxes, width, height)
-    e = geometry.edge_features(edges, bboxes, width, height)
-    if model == "visual":
-        from ..core import visual
-        from ..operators.multimodal import decode_image_visual
-
-        if visual_weights is None:
-            visual_weights = visual.default_weights()
-        # PNG fixtures stay grayscale (replicated to 3
-        # channels in crop_regions); JPEG — the reference's actual
-        # corpus container — decodes to (H, W, 3) color like the
-        # reference's cv2.imread
-        img = decode_image_visual(bytes(image))
-        node_crops, edge_crops = visual.crop_regions(img, bboxes, edges)
-        node_lp, edge_lp = visual.forward(
-            x, edges, e, node_crops, edge_crops, visual_weights
-        )
-    else:
-        node_lp, edge_lp = gnn.forward(x, edges, e, weights)
-    _, edge_cls = gnn.decode(node_lp, edge_lp)
-    return assemble.assemble_cells(edges, edge_cls, bboxes, texts)
-
-
 def run_kernel_arrays_many(
-    images: list,
-    strategy: str = "knn",
-    visual_weights: dict | None = None,
+    images: list, weights: dict, strategy: str = "knn"
 ) -> list:
-    """Visual-model kernel over MANY images with the CNN feature
-    extraction fused across them: one im2col/GEMM chain per CNN for the
-    whole batch instead of one per image (small per-image crop batches
-    under-utilize the GEMM; at corpus scale a task holds many images).
+    """THE kernel, over one or many images: the Spark ``mapInArrow``
+    kernel calls it once per Arrow record batch and :func:`run_kernel`
+    with one image, so parity is by construction.
 
     ``images``: list of (bboxes (n,4) int64, texts, width, height,
-    image_bytes) tuples, each row already in line_id order. Returns one
-    cell-text list per input image.
+    image-bytes-or-None) tuples, each row already in line_id order.
+    Returns one cell-text list per input image; an image with no bboxes
+    has no cells.
 
-    Bit-identity with the per-image path (``run_kernel_arrays`` with
-    model='visual') holds because every fused op works on each crop
-    alone: ``conv2d`` multiplies a 3-D ``(B, H'·W', C·k·k)`` stack, so
-    each crop is its own GEMM with a fixed M whatever the batch size
-    (pinned by tests/test_visual.py), and depthwise/pool/avg are
-    elementwise per sample. A 2-D GEMM over rows stacked from several
-    images would not be exact: with OpenBLAS 0.3.23 (Haswell kernel),
-    an odd row count changes the last row's low bits. The no-Spark oracle stays per-image; span parity between the
-    two is exercised by the pipeline parity tests."""
-    from ..core import visual
-    from ..core.blas import limit_blas_threads
-    from ..operators.multimodal import decode_image_visual
-
+    The weights pick the model (:func:`visual.is_visual`). G2 runs
+    ``gnn.forward`` per image: a block-diagonal forward over several
+    images is not bit-identical to one image's. G3 decodes the image
+    bytes and runs ONE batched CNN over every image's crops instead of
+    a small under-utilized GEMM chain per image; that is bit-identical
+    to the image alone because every CNN op works on each crop alone:
+    ``conv2d`` multiplies a 3-D ``(B, H'·W', C·k·k)`` stack, so each crop
+    is its own GEMM with a fixed M whatever the batch size (pinned by
+    tests/test_visual.py), and depthwise/pool/avg are elementwise per
+    sample. A 2-D GEMM over rows stacked from several images would not
+    be exact: with OpenBLAS 0.3.23 (Haswell kernel), an odd row count
+    changes the last row's low bits."""
     limit_blas_threads(1)
-    if visual_weights is None:
-        visual_weights = visual.default_weights()
+    g3 = visual.is_visual(weights)
+    if g3:
+        from ..operators.multimodal import decode_image_visual
 
-    per_img = []  # (bboxes, texts, edges, x, e, n_nodes, n_edges)
-    node_crops_all, edge_crops_all = [], []
+    graphs, node_crops, edge_crops = [], [], []
     for bboxes, texts, width, height, image in images:
         if len(bboxes) == 0:
-            per_img.append(None)
+            graphs.append(None)
             continue
         edges = EDGE_STRATEGIES[strategy](bboxes, width, height)
         x = geometry.node_features(bboxes, width, height)
         e = geometry.edge_features(edges, bboxes, width, height)
-        img = decode_image_visual(bytes(image))
-        nc, ec = visual.crop_regions(img, bboxes, edges)
-        node_crops_all.append(nc)
-        edge_crops_all.append(ec)
-        per_img.append((bboxes, texts, edges, x, e, len(nc), len(ec)))
-
-    if not node_crops_all:
-        return [[] for _ in images]
-    nv_all = visual._cnn_forward(
-        np.concatenate(node_crops_all), visual_weights,
-        "g3.node_cnn", visual.NODE_CNN,
-    )
-    ec_cat = np.concatenate(edge_crops_all)
-    if len(ec_cat):
-        ev_all = visual._cnn_forward(
-            ec_cat, visual_weights, "g3.edge_cnn", visual.EDGE_CNN,
+        graphs.append((bboxes, texts, edges, x, e))
+        if g3:
+            # PNG fixtures stay grayscale (replicated to 3 channels in
+            # crop_regions); JPEG — the reference's actual corpus
+            # container — decodes to (H, W, 3) color like its cv2.imread
+            nc, ec = visual.crop_regions(
+                decode_image_visual(bytes(image)), bboxes, edges
+            )
+            node_crops.append(nc)
+            edge_crops.append(ec)
+    if g3 and node_crops:
+        nv, ev = visual.cnn_features(
+            np.concatenate(node_crops), np.concatenate(edge_crops), weights
         )
-    else:
-        ev_all = np.zeros((0, 256), dtype=np.float32)
 
     out, n_off, e_off = [], 0, 0
-    for item in per_img:
-        if item is None:
+    for graph in graphs:
+        if graph is None:
             out.append([])
             continue
-        bboxes, texts, edges, x, e, n_n, n_e = item
-        nv = nv_all[n_off : n_off + n_n]
-        ev = ev_all[e_off : e_off + n_e]
-        n_off += n_n
-        e_off += n_e
-        node_lp, edge_lp = visual.forward(
-            x, edges, e, None, None, visual_weights,
-            node_feats=nv, edge_feats=ev,
-        )
+        bboxes, texts, edges, x, e = graph
+        if g3:
+            n_end, e_end = n_off + len(x), e_off + len(edges)
+            node_lp, edge_lp = visual.forward(
+                x, edges, e, None, None, weights,
+                node_feats=nv[n_off:n_end], edge_feats=ev[e_off:e_end],
+            )
+            n_off, e_off = n_end, e_end
+        else:
+            node_lp, edge_lp = gnn.forward(x, edges, e, weights)
         _, edge_cls = gnn.decode(node_lp, edge_lp)
         out.append(assemble.assemble_cells(edges, edge_cls, bboxes, texts))
     return out
@@ -160,7 +108,7 @@ def run_kernel(
     height: int,
     weights: dict,
     strategy: str = "knn",
-    **kernel_opts,
+    image: bytes | None = None,
 ) -> list:
     """One image → ordered list of assembled cell texts.
 
@@ -168,6 +116,7 @@ def run_kernel(
     Lines are processed in line_id order (NODE_COUNTER semantics).
     ``strategy``: edge discovery — 'knn' (J1) or 'visibility' (J2, the
     reference's configured default), mirroring graph.py:34-37.
+    ``image``: the encoded page, read only by G3 weights.
     Lines with no points have no bbox and are dropped, so an image whose
     lines all have none has no cells, like one with no lines.
     """
@@ -186,9 +135,9 @@ def run_kernel(
     polys = [[pt(p) for p in line["points"]] for line in lines]
     texts = [line["text"] for line in lines]
     bboxes = polygons_to_bboxes(polys)
-    return run_kernel_arrays(
-        bboxes, texts, width, height, weights, strategy, **kernel_opts
-    )
+    return run_kernel_arrays_many(
+        [(bboxes, texts, width, height, image)], weights, strategy
+    )[0]
 
 
 def extract_corpus(
@@ -196,8 +145,6 @@ def extract_corpus(
     media: list,
     weights: dict,
     strategy: str = "knn",
-    model: str = "g2",
-    visual_weights: dict | None = None,
 ) -> dict:
     """Whole corpus → {doc_id: output spans}, with per-media_ref kernel
     results memoized (the distributed pipeline dedups identically).
@@ -208,19 +155,9 @@ def extract_corpus(
     def cached_cells(ref):
         if ref not in kernel_cache:
             m = media_by_ref.get(ref)
-            kernel_cache[ref] = (
-                None
-                if m is None
-                else run_kernel(
-                    m["ocr_lines"],
-                    m["width"],
-                    m["height"],
-                    weights,
-                    strategy,
-                    model=model,
-                    image=m.get("image") if model == "visual" else None,
-                    visual_weights=visual_weights,
-                )
+            kernel_cache[ref] = None if m is None else run_kernel(
+                m["ocr_lines"], m["width"], m["height"], weights, strategy,
+                image=m.get("image"),
             )
         return kernel_cache[ref]
 

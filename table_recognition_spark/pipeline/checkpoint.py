@@ -32,8 +32,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from ..core.gnn import weights_to_bytes
-from .extract import extract
+from .extract import extract, weights_digest
 
 PROGRESS_SCHEMA = pa.schema(
     [
@@ -67,7 +66,7 @@ class CheckpointedExtract:
     def _lineage(self, docs_df: DataFrame, media_df: DataFrame,
                  weights: dict) -> str:
         """What every committed chunk must share with this run."""
-        w_fp = hashlib.md5(weights_to_bytes(weights)).hexdigest()[:12]
+        w_fp = weights_digest(weights)[:12]
         # [] for an in-memory DataFrame
         files = sorted(docs_df.inputFiles()) + ["|"] + sorted(
             media_df.inputFiles())

@@ -19,9 +19,9 @@ Scale properties, deliberately:
   a shuffled join.
 - **Documents are read twice, with no Union**: one ``posexplode`` feeds
   both span kinds, and the distinct-refs branch reads them once more.
-- **Column pruning**: the kernel needs only (ocr_lines, width, height); the
-  potentially-huge ``image`` binary column never leaves the scan unless the
-  caller asks for visual features.
+- **Column pruning**: the G2 kernel needs only (ocr_lines, width, height);
+  the potentially-huge ``image`` binary column leaves the scan only for
+  G3 weights, whose CNN reads it.
 - **Only Python boundary** is the Arrow-batched ``mapInArrow`` kernel; the
   boilerplate strip is JVM-side ``regexp_replace`` inside whole-stage
   codegen.
@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..core import boilerplate
 from ..core.gnn import weights_from_bytes, weights_to_bytes
+from ..core.visual import is_visual
 
 CELLS_SCHEMA = T.StructType(
     [
@@ -61,29 +62,41 @@ OUT_SPAN_STRUCT = "struct<kind:string,text:string,media_ref:string,offset:int>"
 # ships a nested function by value, with a private copy of this dict.
 _WEIGHTS_CACHE: dict = {}
 
-# driver-side broadcast cache: one torrent distribution per
-# (SparkContext, weights-content) — repeated query invocations (and
-# bench repeats) reuse the live broadcast instead of re-shipping the
-# artifact (59 MB for G3, 145 KB for G2 — the latter used to ride the
-# task closure, i.e. ~37 MB of per-task IPC at 256 kernel tasks).
-# Holds a ref to the weights dict so an id() key can't be recycled.
+# driver-side memos: the content digest of each recent weights dict
+# (serializing and hashing the 64 MB G3 artifact takes ~0.3 s, so it must
+# not run on every query; an entry holds its dict so an id() key can't be
+# recycled), and one broadcast per digest on the caller's SparkContext —
+# repeated query invocations (and bench repeats) reuse the live broadcast
+# instead of re-shipping the artifact (59 MB for G3, 145 KB for G2 — the
+# latter used to ride the task closure, i.e. ~37 MB of per-task IPC at 256
+# kernel tasks). A broadcast holds its SparkContext, so entries of any
+# other context are dropped: a stopped context is not kept alive.
+_DIGESTS: dict = {}
 _BC_CACHE: dict = {}
 
 
-def _broadcast_weights(sc, wdict: dict):
-    """(broadcast, content-digest) for a weights dict, cached per
-    (SparkContext, dict identity) so repeated invocations reuse one
-    live broadcast and one serialization."""
-    key = (id(sc), id(wdict))
-    hit = _BC_CACHE.get(key)
+def weights_digest(wdict: dict) -> str:
+    """md5 hex of ``weights_to_bytes(wdict)``, memoized for the last few
+    dicts: the broadcast cache key and the checkpoint lineage's weights
+    fingerprint."""
+    hit = _DIGESTS.get(id(wdict))
     if hit is None:
-        wbytes = weights_to_bytes(wdict)
-        digest = hashlib.md5(wbytes).hexdigest()
-        bc = sc.broadcast(wbytes)
-        _BC_CACHE[key] = (wdict, digest, bc)
-        return bc, digest
-    _ref, digest, bc = hit
-    return bc, digest
+        if len(_DIGESTS) >= 8:
+            del _DIGESTS[next(iter(_DIGESTS))]
+        hit = (wdict, hashlib.md5(weights_to_bytes(wdict)).hexdigest())
+        _DIGESTS[id(wdict)] = hit
+    return hit[1]
+
+
+def _broadcast_weights(sc, wdict: dict):
+    """(broadcast, content digest) for a weights dict on ``sc``: one live
+    broadcast per content digest, created on the first call."""
+    digest = weights_digest(wdict)
+    for key in [k for k, (ctx, _) in _BC_CACHE.items() if ctx is not sc]:
+        del _BC_CACHE[key]
+    if digest not in _BC_CACHE:
+        _BC_CACHE[digest] = (sc, sc.broadcast(weights_to_bytes(wdict)))
+    return _BC_CACHE[digest][1], digest
 
 
 def _cached_weights(weights_bc, w_digest: str) -> dict:
@@ -96,23 +109,20 @@ def _cached_weights(weights_bc, w_digest: str) -> dict:
     return w
 
 
-def _kernel_fn(weights_bc, w_digest: str, strategy: str = "knn",
-               model: str = "g2"):
+def _kernel_fn(weights_bc, w_digest: str, strategy: str = "knn"):
     """Build the Arrow-batched kernel (``mapInArrow``).
 
     Each record batch is decoded into per-image inputs
-    ``(bboxes, texts, width, height, image-or-None)`` in one loop. The
-    nested ``ocr_lines`` column is consumed straight from the Arrow
-    buffers — per-line bboxes come from ``np.minimum/maximum.reduceat``
-    over the flat point arrays, never materializing per-point Python
-    dicts. (The earlier mapInPandas version did; at 32 concurrent workers
-    the dict materialization contended so badly it ran 3.7× SLOWER than
-    at 8 workers — measured 6.7 s → 24.7 s for the same input.)
-
-    ``model`` only picks the function from those inputs to cell lists:
-    ``run_kernel_arrays`` per image for G2, or for visual the fused
-    ``run_kernel_arrays_many`` — ONE batched CNN over every crop in the
-    record batch instead of a small under-utilized GEMM chain per image.
+    ``(bboxes, texts, width, height, image-or-None)`` in one loop and
+    handed to ``oracle.extract.run_kernel_arrays_many`` in one call, the
+    kernel the no-Spark oracle runs per image; the weights pick G2 or G3
+    there, and the ``image`` column is read only for G3. The nested
+    ``ocr_lines`` column is consumed straight from the Arrow buffers —
+    per-line bboxes come from ``np.minimum/maximum.reduceat`` over the
+    flat point arrays, never materializing per-point Python dicts. (The
+    earlier mapInPandas version did; at 32 concurrent workers the dict
+    materialization contended so badly it ran 3.7× SLOWER than at 8
+    workers — measured 6.7 s → 24.7 s for the same input.)
 
     The model's weights arrive via ``sparkContext.broadcast`` (one copy
     per executor, fetched once) — never the task closure, which is
@@ -125,29 +135,17 @@ def _kernel_fn(weights_bc, w_digest: str, strategy: str = "knn",
     """
 
     def fn(batches):
-        from ..core.blas import limit_blas_threads
-        from ..oracle.extract import run_kernel_arrays, run_kernel_arrays_many
+        from ..oracle.extract import run_kernel_arrays_many
 
-        limit_blas_threads(1)
         w = _cached_weights(weights_bc, w_digest)
-
-        if model == "visual":
-            def cells_of(inputs):
-                return run_kernel_arrays_many(inputs, strategy, w)
-        else:
-            def cells_of(inputs):
-                return [
-                    run_kernel_arrays(b, t, wd, ht, w, strategy)
-                    for b, t, wd, ht, _image in inputs
-                ]
+        g3 = is_visual(w)
 
         for rb in batches:
             refs = rb.column("media_ref").to_pylist()
             widths = rb.column("width").to_numpy(zero_copy_only=False)
             heights = rb.column("height").to_numpy(zero_copy_only=False)
             images = (
-                rb.column("image").to_pylist()
-                if model == "visual"
+                rb.column("image").to_pylist() if g3
                 else [None] * rb.num_rows
             )
             ocr = rb.column("ocr_lines")
@@ -197,7 +195,9 @@ def _kernel_fn(weights_bc, w_digest: str, strategy: str = "knn",
                 )
 
             out_refs, out_idxs, out_texts = [], [], []
-            for ref, cells in zip(kept_refs, cells_of(inputs)):
+            for ref, cells in zip(
+                kept_refs, run_kernel_arrays_many(inputs, w, strategy)
+            ):
                 out_refs += [ref] * len(cells)
                 out_idxs += range(len(cells))
                 out_texts += cells
@@ -216,16 +216,13 @@ def recognize_tables(
     media_df: DataFrame,
     weights: dict,
     strategy: str = "knn",
-    model: str = "g2",
     n_rows_bound: int | None = None,
 ) -> DataFrame:
     """Distinct media rows → (media_ref, cell_idx, text) via the GNN kernel.
 
-    model='visual' additionally reads the ``image`` binary column (the
-    only path that does — everything else prunes it at the scan) and runs
-    with ``visual.default_weights()`` in place of ``weights`` (the same
-    resolver the no-Spark oracle uses, so parity holds by construction).
-    The kernel's weights ship to executors as a broadcast.
+    The weights pick the model: G3 weights (``visual.is_visual``) also
+    read the ``image`` binary column — the only path that does; G2 prunes
+    it at the scan. The kernel's weights ship to executors as a broadcast.
 
     Fan-out: the rows are round-robined into
     ``max(1, min(2 × defaultParallelism, n_rows_bound))`` kernel tasks.
@@ -249,11 +246,8 @@ def recognize_tables(
     round-robin balances exactly."""
     sc = media_df.sparkSession.sparkContext
     cols = ["media_ref", "ocr_lines", "width", "height"]
-    if model == "visual":
-        from ..core import visual
-
+    if is_visual(weights):
         cols.append("image")
-        weights = visual.default_weights()
     n_tasks = 2 * sc.defaultParallelism
     if n_rows_bound is not None:
         n_tasks = max(1, min(n_tasks, n_rows_bound))
@@ -262,7 +256,7 @@ def recognize_tables(
         media_df.select(*cols)
         .repartition(n_tasks)
         .mapInArrow(
-            _kernel_fn(w_bc, w_digest, strategy, model), schema=CELLS_SCHEMA
+            _kernel_fn(w_bc, w_digest, strategy), schema=CELLS_SCHEMA
         )
     )
 
@@ -272,7 +266,6 @@ def _all_spans(
     media_df: DataFrame,
     weights: dict,
     strategy: str = "knn",
-    model: str = "g2",
     n_rows_bound: int | None = None,
 ) -> DataFrame:
     """Shared pipeline core → un-numbered output spans
@@ -302,13 +295,12 @@ def _all_spans(
     )
 
     # kernel once per distinct ref; recognize_tables' column selection
-    # prunes the image bytes column at the scan (unless model='visual')
+    # prunes the image bytes column at the scan (unless the weights are G3)
     refs = spans.filter(F.col("kind") == "media").select("media_ref").distinct()
     cells = recognize_tables(
         refs.join(media_df, "media_ref"),
         weights,
         strategy,
-        model,
         n_rows_bound=n_rows_bound,
     ).select(
         F.col("media_ref").alias("cell_ref"),

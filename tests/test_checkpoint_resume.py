@@ -116,3 +116,26 @@ def test_checkpoint_resume_query_leaves_no_chunk_store(spark):
     df = E.queries()["pipeline_checkpoint_resume"](spark, SF)
     assert len(df.collect()) > 0
     assert set(glob.glob(os.path.join(parent, "trs_ckpt_*"))) <= before
+
+
+@pytest.mark.spark
+def test_checkpointed_run_with_g3_weights(spark, tmp_path):
+    """G3 weights run the visual model through the checkpointed job (the
+    spark-submit path of ``main.py --weights``), span-equal to the
+    no-Spark oracle with the same weights."""
+    from table_recognition_spark.core import visual
+    from table_recognition_spark.fixtures.generate import make_corpus
+    from table_recognition_spark.oracle.extract import extract_corpus
+
+    docs, media, _ = make_corpus(4, 2, seed=13)
+    docs_df, media_df = corpus_to_spark(spark, docs, media)
+    vw = visual.default_weights()
+    ck = CheckpointedExtract(str(tmp_path / "g3"), n_chunks=2)
+    ck.run(spark, docs_df, media_df, vw)
+    expected = sorted(
+        (did, tuple((s["kind"], s["text"], s["media_ref"], s["offset"])
+                    for s in spans))
+        for did, spans in extract_corpus(docs, media, vw).items()
+    )
+    assert any(s[0] == "cell" for _, spans in expected for s in spans)
+    assert _collect(ck.read_output(spark)) == expected

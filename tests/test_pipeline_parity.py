@@ -15,10 +15,10 @@ def _spans_tuples(spans):
     return [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans]
 
 
-def _run_parity(spark, corpus, weights, model="g2", fn=extract, **kwargs):
+def _run_parity(spark, corpus, weights, fn=extract, **kwargs):
     docs, media, _ = corpus
     docs_df, media_df = corpus_to_spark(spark, docs, media)
-    out = fn(docs_df, media_df, weights, model=model, **kwargs)
+    out = fn(docs_df, media_df, weights, **kwargs)
     if fn is extract_flat:
         by_doc = {}
         for r in out.collect():
@@ -34,9 +34,7 @@ def _run_parity(spark, corpus, weights, model="g2", fn=extract, **kwargs):
         }
     expected = {
         did: _spans_tuples(spans)
-        for did, spans in extract_corpus(
-            docs, media, weights, model=model
-        ).items()
+        for did, spans in extract_corpus(docs, media, weights).items()
     }
     assert set(got) == set(expected)
     for did in sorted(expected):
@@ -53,7 +51,7 @@ def test_parity_with_kernel_repartition(spark, tiny_corpus, weights):
     _run_parity(spark, tiny_corpus, weights, n_rows_bound=7)
 
 
-def _parity_in_one_batch(spark, weights, media, model="g2"):
+def _parity_in_one_batch(spark, weights, media):
     """Parity for ``media`` run as one kernel task (``n_rows_bound=1``),
     so all rows share one Arrow record batch. One doc references every
     image, and one doc per image references only it."""
@@ -73,8 +71,7 @@ def _parity_in_one_batch(spark, weights, media, model="g2"):
         {"doc_id": f"only_{ref}", "spans": [image(ref, 0), text(1)]}
         for ref in refs
     ]
-    _run_parity(spark, (docs, media, None), weights, model=model,
-                n_rows_bound=1)
+    _run_parity(spark, (docs, media, None), weights, n_rows_bound=1)
 
 
 @pytest.mark.spark
@@ -82,12 +79,15 @@ def _parity_in_one_batch(spark, weights, media, model="g2"):
 def test_parity_empty_ocr_lines_in_batch(spark, weights, model):
     """A media row with no OCR lines, in the same Arrow record batch as two
     rows that have lines, yields no cells; the other rows' cells stay with
-    their own refs."""
+    their own refs. ``model`` picks the weights: G2, or G3 (visual)."""
+    from table_recognition_spark.core import visual
     from table_recognition_spark.fixtures.generate import make_corpus
 
     _, media, _ = make_corpus(0, 3, seed=5)
     media[1] = dict(media[1], ocr_lines=[])
-    _parity_in_one_batch(spark, weights, media, model)
+    if model == "visual":
+        weights = visual.default_weights()
+    _parity_in_one_batch(spark, weights, media)
 
 
 def _without_points(line):

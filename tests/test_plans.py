@@ -40,11 +40,22 @@ def plan(parquet_corpus, weights):
     return _formatted_plan(extract(d, m, weights))
 
 
-def test_image_column_pruned_from_media_scan(plan):
-    """The potentially-huge binary column must never leave the scan."""
-    for block in plan.split("\n\n"):
-        if "media" in block and "ReadSchema" in block:
-            assert "image" not in block, block
+def _media_scans(plan):
+    return [b for b in plan.split("\n\n")
+            if re.match(r"\s*\(\d+\) Scan parquet", b) and "/media]" in b]
+
+
+def test_image_column_pruned_from_media_scan(plan, parquet_corpus):
+    """With G2 weights the potentially-huge binary column never leaves
+    the scan; G3 weights, whose CNN reads it, are the one path that
+    does."""
+    from table_recognition_spark.core import visual
+
+    g2 = _media_scans(plan)
+    assert g2 and all("image" not in b for b in g2), g2
+    d, m = parquet_corpus
+    g3 = _media_scans(_formatted_plan(extract(d, m, visual.default_weights())))
+    assert g3 and all("image" in b for b in g3), g3
 
 
 def test_single_real_shuffle(plan):

@@ -1,7 +1,7 @@
 import numpy as np
 import pytest
 
-from table_recognition_spark.core import visual
+from table_recognition_spark.core import gnn, visual
 
 
 def test_bilinear_resize_identity_and_shape():
@@ -67,7 +67,7 @@ def test_forward_shapes_and_determinism():
 
 @pytest.mark.spark
 @pytest.mark.slow
-def test_pipeline_parity_visual(spark, weights):
+def test_pipeline_parity_visual(spark):
     from table_recognition_spark.fixtures.generate import (
         corpus_to_spark,
         make_corpus,
@@ -77,22 +77,19 @@ def test_pipeline_parity_visual(spark, weights):
 
     docs, media, _ = make_corpus(4, 2, seed=13)
     docs_df, media_df = corpus_to_spark(spark, docs, media)
+    # whichever G3 weights the repo ships (trained artifact when present,
+    # else seeded init): the weights pick the model
+    vw = visual.default_weights()
     got = {
         r["doc_id"]: [
             (s["kind"], s["text"], s["media_ref"], s["offset"])
             for s in r["spans"]
         ]
-        for r in extract(docs_df, media_df, weights, model="visual").collect()
+        for r in extract(docs_df, media_df, vw).collect()
     }
-    # same resolver the Spark kernel uses (trained artifact when
-    # present, else seeded init) — parity must hold for whichever the
-    # repo currently ships
-    vw = visual.default_weights()
     exp = {
         k: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in v]
-        for k, v in extract_corpus(
-            docs, media, weights, model="visual", visual_weights=vw
-        ).items()
+        for k, v in extract_corpus(docs, media, vw).items()
     }
     assert got == exp
 
@@ -130,7 +127,7 @@ def test_crop_regions_color_input():
 
 
 @pytest.mark.spark
-def test_visual_path_ingests_color_jpeg_media(spark, weights):
+def test_visual_path_ingests_color_jpeg_media(spark):
     """The reference's actual corpus container is color JPEG
     (graph.py:103,174 reads .jpg via cv2). Swap a fixture media image
     for a color JPEG (own encoder) and the visual pipeline must decode
@@ -158,16 +155,17 @@ def test_visual_path_ingests_color_jpeg_media(spark, weights):
         ).clip(0, 255).astype(np.uint8)
         m["image"] = jpeg_encode_rgb(rgb)
     docs_df, media_df = corpus_to_spark(spark, docs, media)
+    vw = visual.default_weights()
     got = {
         r["doc_id"]: [
             (s["kind"], s["text"], s["media_ref"], s["offset"])
             for s in r["spans"]
         ]
-        for r in extract(docs_df, media_df, weights, model="visual").collect()
+        for r in extract(docs_df, media_df, vw).collect()
     }
     exp = {
         k: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in v]
-        for k, v in extract_corpus(docs, media, weights, model="visual").items()
+        for k, v in extract_corpus(docs, media, vw).items()
     }
     assert got == exp
     assert any(
@@ -181,7 +179,7 @@ def test_visual_path_ingests_color_jpeg_media(spark, weights):
         from table_recognition_spark.core.jpeg import jpeg_decode_gray8
 
         m["image"] = jpeg_encode_gray8(jpeg_decode_gray8(orig["image"]))
-    exp_gray = extract_corpus(docs, media_gray, weights, model="visual")
+    exp_gray = extract_corpus(docs, media_gray, vw)
     from table_recognition_spark.operators.multimodal import (
         decode_image_visual,
     )
@@ -226,12 +224,12 @@ def test_fused_cnn_bit_identical_to_per_image():
 
 
 def test_run_kernel_arrays_many_matches_per_image():
-    """The fused many-image kernel returns exactly the per-image
-    kernel's cells for every image, including empty-bbox rows."""
+    """The kernel over a batch of images returns exactly each image's
+    cells when it runs alone, including empty-bbox rows, for G3 and G2
+    weights alike."""
     from table_recognition_spark.fixtures.generate import _make_table_image
     from table_recognition_spark.oracle.extract import (
         polygons_to_bboxes,
-        run_kernel_arrays,
         run_kernel_arrays_many,
     )
 
@@ -249,13 +247,11 @@ def test_run_kernel_arrays_many_matches_per_image():
              m["height"], m["image"])
         )
     inputs.insert(1, (np.empty((0, 4), dtype=np.int64), [], 10, 10, b""))
-    fused = run_kernel_arrays_many(inputs, "knn", vw)
-    assert fused[1] == []
-    for inp, cells in zip(inputs, fused):
-        if len(inp[0]) == 0:
-            continue
-        exp = run_kernel_arrays(
-            inp[0], inp[1], inp[2], inp[3], None, "knn",
-            model="visual", image=inp[4], visual_weights=vw,
-        )
-        assert cells == exp and len(cells) > 0
+    for w in (vw, gnn.default_weights()):
+        batch = run_kernel_arrays_many(inputs, w, "knn")
+        assert batch[1] == []
+        for inp, cells in zip(inputs, batch):
+            if len(inp[0]) == 0:
+                continue
+            assert cells == run_kernel_arrays_many([inp], w, "knn")[0]
+            assert len(cells) > 0

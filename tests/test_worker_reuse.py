@@ -157,3 +157,31 @@ def test_weights_parsed_once_per_worker(spark, weights, tmp_path):
     assert pids, "no worker parsed the weights"
     assert len(pids) == len(set(pids)), f"parsed twice in a worker: {pids}"
     assert len(pids) < n_tasks, "no task ran on a reused worker"
+
+
+def test_broadcast_cache_holds_only_the_callers_context(weights, monkeypatch):
+    """Driver side, one broadcast per weights content on the caller's
+    SparkContext: the same dict on the same context broadcasts once, and
+    a second context gets its own broadcast while the cache drops the
+    first's (a broadcast holds its context, so a stopped one would stay
+    alive)."""
+    # the module, not the ``extract`` function the package re-exports
+    ex = importlib.import_module("table_recognition_spark.pipeline.extract")
+
+    class Context:
+        def __init__(self):
+            self.sent = 0
+
+        def broadcast(self, data):
+            self.sent += 1
+            return object()
+
+    monkeypatch.setattr(ex, "_BC_CACHE", {})
+    first, second = Context(), Context()
+    bc, digest = ex._broadcast_weights(first, weights)
+    assert ex._broadcast_weights(first, weights) == (bc, digest)
+    assert first.sent == 1
+
+    bc2, digest2 = ex._broadcast_weights(second, weights)
+    assert (second.sent, digest2) == (1, digest) and bc2 is not bc
+    assert [ctx for ctx, _ in ex._BC_CACHE.values()] == [second]
