@@ -17,28 +17,23 @@ import numpy as np
 from .gnn import EDGE_CLASS_CELL
 
 
-def _union_find(n: int, pairs: np.ndarray) -> np.ndarray:
-    parent = np.arange(n, dtype=np.int64)
-
-    def find(a):
-        root = a
-        while parent[root] != root:
-            root = parent[root]
-        while parent[a] != root:
-            parent[a], a = root, parent[a]
-        return root
-
-    for s, d in pairs:
-        rs, rd = find(s), find(d)
-        if rs != rd:
-            # deterministic: smaller root wins
-            if rs < rd:
-                parent[rd] = rs
-            else:
-                parent[rs] = rd
-    for i in range(n):
-        parent[i] = find(i)
-    return parent
+def _components(n: int, pairs: np.ndarray) -> np.ndarray:
+    """Connected components of ``n`` nodes under undirected ``pairs``, by
+    min-label propagation with pointer jumping: each node's label ends as
+    the smallest node id of its component."""
+    label = np.arange(n, dtype=np.int64)
+    if not len(pairs):
+        return label
+    s, d = pairs[:, 0], pairs[:, 1]
+    while True:
+        new = label.copy()
+        m = np.minimum(label[s], label[d])
+        np.minimum.at(new, s, m)
+        np.minimum.at(new, d, m)
+        new = new[new]
+        if np.array_equal(new, label):
+            return label
+        label = new
 
 
 def assemble_cells(
@@ -53,28 +48,48 @@ def assemble_cells(
     ``bboxes``: (n, 4); ``texts``: n line strings (line_id == row index).
     Isolated lines form singleton cells.
     """
+    return assemble_cells_many(
+        np.asarray(edge_index).reshape(-1, 2), np.asarray(edge_cls),
+        np.asarray(bboxes).reshape(-1, 4), texts,
+        np.array([0, len(bboxes)]),
+    )[1]
+
+
+def assemble_cells_many(
+    edge_index: np.ndarray,
+    edge_cls: np.ndarray,
+    bboxes: np.ndarray,
+    texts,
+    node_off: np.ndarray,
+):
+    """:func:`assemble_cells` of many images in array passes.
+
+    Image ``i`` owns rows ``node_off[i]:node_off[i + 1]`` of ``bboxes``
+    and ``texts`` (a sequence of N strings); ``edge_index`` holds batch
+    rows. Returns ``(cell_img, cells)``: every image's cells in order,
+    image after image, with ``cell_img[c]`` the image of ``cells[c]``.
+    """
     n = len(bboxes)
     if n == 0:
-        return []
-    cell_pairs = (
-        edge_index[edge_cls == EDGE_CLASS_CELL]
-        if len(edge_index)
-        else np.empty((0, 2), dtype=np.int64)
-    )
-    comp = _union_find(n, cell_pairs)
-
+        return np.empty(0, dtype=np.int64), []
+    comp = _components(n, edge_index[edge_cls == EDGE_CLASS_CELL])
+    img = np.repeat(np.arange(len(node_off) - 1), np.diff(node_off))
     b = np.asarray(bboxes, dtype=np.int64)
-    order = np.lexsort((np.arange(n), b[:, 0], b[:, 1]))  # (ymin, xmin, id)
-
-    members: dict = {}
-    for i in order:
-        members.setdefault(comp[i], []).append(int(i))
-
-    comps = []
-    for root, ids in members.items():
-        ymin = int(b[ids, 1].min())
-        xmin = int(b[ids, 0].min())
-        comps.append((ymin, xmin, min(ids), ids))
-    comps.sort(key=lambda t: (t[0], t[1], t[2]))
-
-    return ["\n".join(texts[i] for i in ids) for _, _, _, ids in comps]
+    ymin = np.full(n, np.iinfo(np.int64).max)
+    xmin = np.full(n, np.iinfo(np.int64).max)
+    np.minimum.at(ymin, comp, b[:, 1])
+    np.minimum.at(xmin, comp, b[:, 0])
+    # components by (ymin, xmin, min line id) of the component bbox, and
+    # lines within one by (ymin, xmin, line id); a component's label is
+    # its min line id
+    order = np.lexsort((
+        np.arange(n), b[:, 0], b[:, 1], comp, xmin[comp], ymin[comp], img,
+    ))
+    comp = comp[order]
+    starts = np.flatnonzero(np.r_[True, comp[1:] != comp[:-1]])
+    lines = np.asarray(texts, dtype=object)[order].tolist()
+    bounds = np.r_[starts, n].tolist()
+    cells = [
+        "\n".join(lines[s:e]) for s, e in zip(bounds[:-1], bounds[1:])
+    ]
+    return img[order][starts], cells

@@ -27,13 +27,16 @@ import sys
 
 import numpy as np
 
-from .bbox import bbox_centers, rects_intersect
+from .bbox import (
+    bbox_centers, image_chunks, pad_images, rects_intersect,
+)
 
 _EPS = sys.float_info.epsilon
 
 
-def node_features(bboxes: np.ndarray, img_w: int, img_h: int) -> np.ndarray:
-    """(n, 4) float32 node input features."""
+def node_features(bboxes: np.ndarray, img_w, img_h) -> np.ndarray:
+    """(n, 4) float32 node input features. ``img_w``/``img_h``: the
+    image size, or one value per row for the rows of many images."""
     b = np.asarray(bboxes, dtype=np.float64)
     c = bbox_centers(bboxes).astype(np.float64)
     f = np.empty((len(b), 4), dtype=np.float64)
@@ -44,37 +47,152 @@ def node_features(bboxes: np.ndarray, img_w: int, img_h: int) -> np.ndarray:
     return f.astype(np.float32)
 
 
-def _corrected_overlap(lo, hi, occ_lo, occ_hi):
-    """Pixel-range subtraction (geometry_graph_colorer.py:107-120).
+def _surviving_span(lo, hi, occ_row, occ_lo, occ_hi):
+    """Pixel-range subtraction (geometry_graph_colorer.py:107-120) for
+    many ranges at once.
 
-    Start with the closed integer range [lo, hi]; subtract each occluder's
-    closed range; return (last - first) of what survives, else 0.
+    Row ``r`` starts from the closed integer range ``[lo[r], hi[r]]`` and
+    loses each of its occluders' closed ranges ``[occ_lo[p], occ_hi[p]]``
+    (``occ_row[p] == r``, grouped by row); returns (last - first) of what
+    survives, else 0. The first surviving pixel is ``lo`` or the pixel
+    just past some occluder's end; the last is ``hi`` or the pixel just
+    before some occluder's start — so testing those candidates against
+    the row's occluders finds both without walking pixels.
     """
-    width = hi - lo + 1
-    mask = np.ones(width, dtype=bool)
-    for a, b in zip(occ_lo, occ_hi):
-        s = max(int(a), lo) - lo
-        e = min(int(b), hi) - lo
-        if e >= s:
-            mask[s : e + 1] = False
-    idx = np.flatnonzero(mask)
-    if idx.size == 0:
-        return 0.0
-    return float(idx[-1] - idx[0])
+    R = len(lo)
+    cnt = np.bincount(occ_row, minlength=R)
+    occ_start = np.cumsum(cnt) - cnt
+    ids = np.arange(R)
+    rows = np.concatenate([ids, occ_row, ids, occ_row])
+    vals = np.concatenate([lo, occ_hi + 1, hi, occ_lo - 1])
+    n_first = R + len(occ_row)
+    # every (candidate, occluder of its row) pair
+    reps = cnt[rows]
+    cand = np.repeat(np.arange(len(rows)), reps)
+    occ = np.repeat(occ_start[rows] - np.cumsum(reps) + reps, reps) + (
+        np.arange(len(cand))
+    )
+    hit = (occ_lo[occ] <= vals[cand]) & (vals[cand] <= occ_hi[occ])
+    free = np.ones(len(rows), dtype=bool)
+    free[cand[hit]] = False
+    free &= (lo[rows] <= vals) & (vals <= hi[rows])
+    first = np.full(R, np.iinfo(np.int64).max)
+    last = np.full(R, np.iinfo(np.int64).min)
+    f, la = free[:n_first], free[n_first:]
+    np.minimum.at(first, rows[:n_first][f], vals[:n_first][f])
+    np.maximum.at(last, rows[n_first:][la], vals[n_first:][la])
+    span = np.zeros(R, dtype=np.int64)
+    some = first <= hi
+    span[some] = last[some] - first[some]
+    return span
+
+
+def _occluders(box, src, dst, img, bboxes, node_off):
+    """(edge row, node) pairs, grouped by edge row: the nodes of each
+    edge's image, other than its two ends, whose bbox meets the edge's
+    occlusion ``box`` (closed intervals, geometry_graph_colorer.py:99,132).
+    ``img``: each edge's image, non-decreasing."""
+    rel_off = np.searchsorted(img, np.arange(len(node_off)))
+    rows, nodes = [], []
+    for a, b in image_chunks(node_off):
+        if rel_off[a] == rel_off[b]:
+            continue
+        nodes_p, sizes = pad_images(bboxes, node_off, a, b)
+        boxes_p, counts = pad_images(box, rel_off, a, b)
+        hits = rects_intersect(boxes_p, nodes_p)  # (images, r_max, n_max)
+        hits &= np.arange(hits.shape[1])[:, None] < counts[:, None, None]
+        hits &= np.arange(hits.shape[2]) < sizes[:, None, None]
+        # the edge's own ends never occlude it
+        r = np.arange(rel_off[a], rel_off[b])
+        c = img[r] - a
+        k = r - rel_off[img[r]]
+        hits[c, k, src[r] - node_off[img[r]]] = False
+        hits[c, k, dst[r] - node_off[img[r]]] = False
+        c, k, j = np.nonzero(hits)
+        rows.append(rel_off[a + c] + k)
+        nodes.append(node_off[a + c] + j)
+    if not rows:
+        return np.empty(0, np.int64), np.empty(0, np.int64)
+    return np.concatenate(rows), np.concatenate(nodes)
+
+
+def _overlap(b, src, dst, img, node_off, axis):
+    """Occlusion-corrected overlap along ``axis`` (0: x, 1: y) of every
+    edge, normalized by the smaller side (:79-125, :127-156)."""
+    o = 1 - axis
+    b1, b2 = b[src], b[dst]
+    lo = np.maximum(b1[:, axis], b2[:, axis])
+    hi = np.minimum(b1[:, axis + 2], b2[:, axis + 2])
+    # raw overlaps (:83-91), closed-int coordinates; raw overlap <= 0 stays
+    # 0 and is not normalized
+    raw = np.maximum(0, hi - lo)
+    out = raw.astype(np.float64)
+    rel = np.flatnonzero(raw > 0)
+    if not rel.size:
+        return out
+    # occlusion box (:95-98, :127-130): the overlap along ``axis``, the
+    # middle two of the four edges across it
+    mid = np.sort(
+        np.stack(
+            [b1[rel, o], b2[rel, o], b1[rel, o + 2], b2[rel, o + 2]], axis=1
+        ),
+        axis=1,
+    )
+    box = np.empty((len(rel), 4), dtype=np.int64)
+    box[:, axis], box[:, axis + 2] = lo[rel], hi[rel]
+    box[:, o], box[:, o + 2] = mid[:, 1], mid[:, 2]
+    occ_row, occ_node = _occluders(
+        box, src[rel], dst[rel], img[rel], b, node_off
+    )
+    span = _surviving_span(
+        lo[rel], hi[rel], occ_row, b[occ_node, axis], b[occ_node, axis + 2]
+    )
+    side = np.minimum(
+        np.abs(b1[rel, axis + 2] - b1[rel, axis]),
+        np.abs(b2[rel, axis + 2] - b2[rel, axis]),
+    ).astype(np.float64)
+    # normalization is unconditional in the reference (:121-122,
+    # :155-156); a fully-occluded (empty) range gives 0 / side == 0
+    out[rel] = span / side
+    return out
 
 
 def edge_features(
     edges: np.ndarray, bboxes: np.ndarray, img_w: int, img_h: int
 ) -> np.ndarray:
     """(E, 6) float32 edge input features."""
+    b = np.asarray(bboxes, dtype=np.int64).reshape(-1, 4)
+    return edge_features_many(
+        np.asarray(edges, dtype=np.int64).reshape(-1, 2), b,
+        [img_w], [img_h], np.array([0, len(b)]),
+    )
+
+
+def edge_features_many(
+    edges: np.ndarray,
+    bboxes: np.ndarray,
+    widths,
+    heights,
+    node_off: np.ndarray,
+) -> np.ndarray:
+    """:func:`edge_features` of many images in array passes.
+
+    ``bboxes``: (N, 4) int64, image ``i`` owning rows
+    ``node_off[i]:node_off[i + 1]``, of size ``widths[i]`` ×
+    ``heights[i]``; ``edges``: (E, 2) batch row ids, grouped by image in
+    image order (as :func:`knn.knn_edges_many` returns them).
+    """
     E = len(edges)
     if E == 0:
         return np.empty((0, 6), dtype=np.float32)
 
-    b = np.asarray(bboxes, dtype=np.int64)
+    b = bboxes
     c = bbox_centers(b)  # int centers
     src = edges[:, 0]
     dst = edges[:, 1]
+    img = np.searchsorted(node_off, src, side="right") - 1
+    img_w = np.asarray(widths, dtype=np.float64)[img]
+    img_h = np.asarray(heights, dtype=np.float64)[img]
 
     c1 = c[src].astype(np.float64)
     c2 = c[dst].astype(np.float64)
@@ -99,80 +217,12 @@ def edge_features(
         (orientation < 5.0) | (orientation > 175.0), 180.0, orientation
     )
 
-    # raw overlaps (:83-91), closed-int coordinates
-    b1 = b[src]
-    b2 = b[dst]
-    x_min = np.maximum(b1[:, 0], b2[:, 0])
-    x_max = np.minimum(b1[:, 2], b2[:, 2])
-    x_raw = np.maximum(0, x_max - x_min)
-    y_min = np.maximum(b1[:, 1], b2[:, 1])
-    y_max = np.minimum(b1[:, 3], b2[:, 3])
-    y_raw = np.maximum(0, y_max - y_min)
-
-    x_overlap = x_raw.astype(np.float64)
-    y_overlap = y_raw.astype(np.float64)
-
-    # occlusion boxes for edges with positive raw overlap (:95-98, :127-130)
-    x_idx = np.flatnonzero(x_raw > 0)
-    y_idx = np.flatnonzero(y_raw > 0)
-
-    if x_idx.size:
-        ys = np.sort(
-            np.stack(
-                [b1[x_idx, 1], b2[x_idx, 1], b1[x_idx, 3], b2[x_idx, 3]], axis=1
-            ),
-            axis=1,
-        )
-        boxes = np.stack(
-            [x_min[x_idx], ys[:, 1], x_max[x_idx], ys[:, 2]], axis=1
-        )
-        hits = rects_intersect(boxes, b)  # (len(x_idx), n)
-        hits[np.arange(len(x_idx)), src[x_idx]] = False
-        hits[np.arange(len(x_idx)), dst[x_idx]] = False
-        min_w = np.minimum(
-            np.abs(b1[:, 2] - b1[:, 0]), np.abs(b2[:, 2] - b2[:, 0])
-        ).astype(np.float64)
-        for row, e in enumerate(x_idx):
-            occ = np.flatnonzero(hits[row])
-            if occ.size:
-                ov = _corrected_overlap(
-                    int(x_min[e]), int(x_max[e]), b[occ, 0], b[occ, 2]
-                )
-            else:
-                ov = float(x_max[e] - x_min[e])
-            # normalization is unconditional in the reference (:121-122);
-            # a fully-occluded (empty) range gives 0 / min_w == 0
-            x_overlap[e] = ov / min_w[e]
-
-    if y_idx.size:
-        xs = np.sort(
-            np.stack(
-                [b1[y_idx, 0], b2[y_idx, 0], b1[y_idx, 2], b2[y_idx, 2]], axis=1
-            ),
-            axis=1,
-        )
-        boxes = np.stack(
-            [xs[:, 1], y_min[y_idx], xs[:, 2], y_max[y_idx]], axis=1
-        )
-        hits = rects_intersect(boxes, b)
-        hits[np.arange(len(y_idx)), src[y_idx]] = False
-        hits[np.arange(len(y_idx)), dst[y_idx]] = False
-        min_h = np.minimum(
-            np.abs(b1[:, 3] - b1[:, 1]), np.abs(b2[:, 3] - b2[:, 1])
-        ).astype(np.float64)
-        for row, e in enumerate(y_idx):
-            occ = np.flatnonzero(hits[row])
-            if occ.size:
-                ov = _corrected_overlap(
-                    int(y_min[e]), int(y_max[e]), b[occ, 1], b[occ, 3]
-                )
-            else:
-                ov = float(y_max[e] - y_min[e])
-            # unconditional normalization, mirroring :155-156
-            y_overlap[e] = ov / min_h[e]
-
     feats = np.stack(
-        [distance, avg[:, 0], avg[:, 1], orientation, x_overlap, y_overlap],
+        [
+            distance, avg[:, 0], avg[:, 1], orientation,
+            _overlap(b, src, dst, img, node_off, 0),
+            _overlap(b, src, dst, img, node_off, 1),
+        ],
         axis=1,
     )
     return feats.astype(np.float32)

@@ -152,11 +152,27 @@ def weights_from_bytes(data: bytes) -> dict:
     return out
 
 
-def _mlp2(w, prefix, x):
-    """Linear → ReLU → Linear (every MLP in the model has this shape)."""
-    h = x @ w[prefix + ".0.w"] + w[prefix + ".0.b"]
+def _matmul_blocks(x, w, off):
+    """``x @ w``, one GEMM per row block ``off[i]:off[i + 1]``: a block's
+    rows are bit-identical to the product of that block alone, which one
+    GEMM over rows stacked from several images is not (with OpenBLAS an
+    odd row count changes the last row's low bits)."""
+    out = np.empty((len(x), w.shape[1]), dtype=np.result_type(x, w))
+    for s, e in zip(off[:-1].tolist(), off[1:].tolist()):
+        if e > s:
+            np.matmul(x[s:e], w, out=out[s:e])
+    return out
+
+
+def _mlp2(w, prefix, x, off):
+    """Linear → ReLU → Linear (every MLP in the model has this shape),
+    its GEMMs per row block ``off``."""
+    h = _matmul_blocks(x, w[prefix + ".0.w"], off)
+    h += w[prefix + ".0.b"]
     np.maximum(h, 0.0, out=h)
-    return h @ w[prefix + ".1.w"] + w[prefix + ".1.b"]
+    out = _matmul_blocks(h, w[prefix + ".1.w"], off)
+    out += w[prefix + ".1.b"]
+    return out
 
 
 def _scatter_mean(values, index, n):
@@ -175,6 +191,12 @@ def _log_softmax(z):
     return (z - m) - np.log(e.sum(axis=1, keepdims=True))
 
 
+def _edge_ends(edge_index):
+    if edge_index.size:
+        return edge_index[:, 0], edge_index[:, 1]
+    return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
+
+
 def forward(
     x: np.ndarray, edge_index: np.ndarray, edge_attr: np.ndarray, weights: dict
 ):
@@ -183,34 +205,50 @@ def forward(
     x: (N, 4) float32; edge_index: (E, 2) int; edge_attr: (E, 6) float32.
     Returns (node_log_probs (N,2), edge_log_probs (E,4)).
     """
+    return forward_many(
+        x, edge_index, edge_attr, weights,
+        np.array([0, len(x)]), np.array([0, len(edge_attr)]),
+    )
+
+
+def forward_many(x, edge_index, edge_attr, weights, node_off, edge_off):
+    """:func:`forward` of many images in one pass, bit-identical to each
+    image's own: image ``i`` owns node rows ``node_off[i]:node_off[i+1]``
+    and edge rows ``edge_off[i]:edge_off[i+1]``, and ``edge_index`` holds
+    batch node rows. Gathers, concatenations, bias adds, residuals,
+    ``scatter_mean`` (each node's messages added in the same order) and
+    ``log_softmax`` are row-wise, so they run batch-wide; only the GEMMs
+    run per image (:func:`_matmul_blocks`)."""
     x = np.asarray(x, dtype=np.float32)
     e = np.asarray(edge_attr, dtype=np.float32)
-    if edge_index.size:
-        row = edge_index[:, 0]
-        col = edge_index[:, 1]
-    else:
-        row = np.empty(0, dtype=np.int64)
-        col = np.empty(0, dtype=np.int64)
+    row, col = _edge_ends(edge_index)
     n = len(x)
 
     for i, (_ni, _ei, _hid, _no, _eo, residual) in enumerate(LAYER_SPECS, 1):
         # edge model first (PyG MetaLayer order)
         e_new = _mlp2(
-            weights, f"l{i}.edge", np.concatenate([x[row], x[col], e], axis=1)
+            weights, f"l{i}.edge",
+            np.concatenate([x[row], x[col], e], axis=1), edge_off,
         )
         if residual:
-            e_new = e_new + e
+            e_new += e
         e = e_new
         # node model
-        m = _mlp2(weights, f"l{i}.node1", np.concatenate([x[col], e], axis=1))
+        m = _mlp2(
+            weights, f"l{i}.node1", np.concatenate([x[col], e], axis=1),
+            edge_off,
+        )
         agg = _scatter_mean(m, row, n)
-        x_new = _mlp2(weights, f"l{i}.node2", np.concatenate([x, agg], axis=1))
+        x_new = _mlp2(
+            weights, f"l{i}.node2", np.concatenate([x, agg], axis=1),
+            node_off,
+        )
         if residual:
-            x_new = x_new + x
+            x_new += x
         x = x_new
 
-    node_logits = _mlp2(weights, "head.node", x)
-    edge_logits = _mlp2(weights, "head.edge", e)
+    node_logits = _mlp2(weights, "head.node", x, node_off)
+    edge_logits = _mlp2(weights, "head.edge", e, edge_off)
     return _log_softmax(node_logits), _log_softmax(edge_logits)
 
 

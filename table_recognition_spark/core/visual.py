@@ -33,7 +33,9 @@ from __future__ import annotations
 
 import numpy as np
 
-from .gnn import _log_softmax, _mlp2, _scatter_mean
+from .gnn import (
+    _edge_ends, _log_softmax, _matmul_blocks, _mlp2, _scatter_mean,
+)
 
 NODE_CROP = 10
 EDGE_CROP = 16
@@ -68,27 +70,38 @@ EDGE_CNN = [
 ]
 
 
-def bilinear_resize(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-    """(H, W) float → (out_h, out_w), half-pixel centers."""
-    h, w = img.shape
+def _resize_regions(img, y0, x0, h, w, out_h, out_w):
+    """Bilinear resize (half-pixel centers) of many regions of one image
+    at once: region ``r`` is ``img[y0[r]:y0[r]+h[r], x0[r]:x0[r]+w[r]]``;
+    ``img`` is (H, W) or (H, W, C), the result (R, out_h, out_w[, C])
+    float64.
+    An empty region (``h`` or ``w`` ≤ 0) resizes to zeros, as a 1×1
+    black one would."""
+    empty = (h <= 0) | (w <= 0)
+    y0, x0 = np.where(empty, 0, y0), np.where(empty, 0, x0)
+    h = np.where(empty, 1, h)[:, None]
+    w = np.where(empty, 1, w)[:, None]
     ys = (np.arange(out_h) + 0.5) * h / out_h - 0.5
     xs = (np.arange(out_w) + 0.5) * w / out_w - 0.5
-    y0 = np.clip(np.floor(ys).astype(np.int64), 0, h - 1)
-    x0 = np.clip(np.floor(xs).astype(np.int64), 0, w - 1)
-    y1 = np.clip(y0 + 1, 0, h - 1)
-    x1 = np.clip(x0 + 1, 0, w - 1)
-    wy = np.clip(ys - y0, 0.0, 1.0)[:, None]
-    wx = np.clip(xs - x0, 0.0, 1.0)[None, :]
-    a = img[np.ix_(y0, x0)]
-    b = img[np.ix_(y0, x1)]
-    c = img[np.ix_(y1, x0)]
-    d = img[np.ix_(y1, x1)]
-    return (
-        a * (1 - wy) * (1 - wx)
-        + b * (1 - wy) * wx
-        + c * wy * (1 - wx)
-        + d * wy * wx
+    yi0 = np.clip(np.floor(ys).astype(np.int64), 0, h - 1)
+    xi0 = np.clip(np.floor(xs).astype(np.int64), 0, w - 1)
+    yi1 = np.clip(yi0 + 1, 0, h - 1)
+    xi1 = np.clip(xi0 + 1, 0, w - 1)
+    tail = (None,) * (img.ndim - 2)  # channels broadcast over weights
+    wy = np.clip(ys - yi0, 0.0, 1.0)[(slice(None), slice(None), None) + tail]
+    wx = np.clip(xs - xi0, 0.0, 1.0)[(slice(None), None, slice(None)) + tail]
+    r0 = (y0[:, None] + yi0)[:, :, None]
+    r1 = (y0[:, None] + yi1)[:, :, None]
+    c0 = (x0[:, None] + xi0)[:, None, :]
+    c1 = (x0[:, None] + xi1)[:, None, :]
+    out = (
+        img[r0, c0] * (1 - wy) * (1 - wx)
+        + img[r0, c1] * (1 - wy) * wx
+        + img[r1, c0] * wy * (1 - wx)
+        + img[r1, c1] * wy * wx
     )
+    out[empty] = 0.0
+    return out
 
 
 def crop_regions(image: np.ndarray, bboxes: np.ndarray, edges: np.ndarray):
@@ -96,52 +109,37 @@ def crop_regions(image: np.ndarray, bboxes: np.ndarray, edges: np.ndarray):
     (E,3,16,16)) float32 in [0,255]. Accepts (H, W) grayscale
     (replicated to 3 channels) or (H, W, 3) color (e.g.
     ``jpeg_decode_rgb`` output — per-channel bilinear resize, matching
-    the reference's 3-channel ``cv2.imread`` crops, graph.py:174)."""
+    the reference's 3-channel ``cv2.imread`` crops, graph.py:174).
+    Every crop of one size is cut and resized in one array pass."""
     color = image.ndim == 3
     h, w = image.shape[:2]
     img = image.astype(np.float32)
 
-    def crop(x0, y0, x1, y1, dim):
-        x0 = max(int(x0) - CROP_PAD, 0)
-        x1 = min(int(x1) + CROP_PAD, w)
-        y0 = max(int(y0) - CROP_PAD, 0)
-        y1 = min(int(y1) + CROP_PAD, h)
-        region = img[y0:y1, x0:x1]
-        if region.size == 0:
-            region = np.zeros(
-                (1, 1, 3) if color else (1, 1), dtype=np.float32
-            )
-        if color:
-            return np.stack(
-                [
-                    bilinear_resize(region[..., c], dim, dim)
-                    for c in range(3)
-                ]
-            ).astype(np.float32)
-        r = bilinear_resize(region, dim, dim).astype(np.float32)
-        return np.broadcast_to(r, (3, dim, dim))
+    def bounds(lo, hi, size):
+        # the padded box clamped to the image, then read as the slice
+        # ``lo:hi`` (a negative end counts from the far side)
+        lo = np.minimum(np.maximum(lo - CROP_PAD, 0), size)
+        hi = np.minimum(hi + CROP_PAD, size)
+        return lo, np.where(hi < 0, np.maximum(hi + size, 0), hi) - lo
 
-    node_crops = np.stack(
-        [crop(b[0], b[1], b[2], b[3], NODE_CROP) for b in bboxes]
-    ).astype(np.float32)
-    if len(edges):
-        eb = np.stack(
-            [
-                (
-                    min(bboxes[s][0], bboxes[d][0]),
-                    min(bboxes[s][1], bboxes[d][1]),
-                    max(bboxes[s][2], bboxes[d][2]),
-                    max(bboxes[s][3], bboxes[d][3]),
-                )
-                for s, d in edges
-            ]
-        )
-        edge_crops = np.stack(
-            [crop(b[0], b[1], b[2], b[3], EDGE_CROP) for b in eb]
-        ).astype(np.float32)
-    else:
-        edge_crops = np.zeros((0, 3, EDGE_CROP, EDGE_CROP), dtype=np.float32)
-    return node_crops, edge_crops
+    def crops(boxes, dim):
+        x0, cw = bounds(boxes[:, 0], boxes[:, 2], w)
+        y0, ch = bounds(boxes[:, 1], boxes[:, 3], h)
+        r = _resize_regions(img, y0, x0, ch, cw, dim, dim)
+        if color:
+            return r.transpose(0, 3, 1, 2).astype(np.float32)
+        r = r.astype(np.float32)[:, None]
+        return np.broadcast_to(r, (len(r), 3, dim, dim)).copy()
+
+    b = np.asarray(bboxes, dtype=np.int64).reshape(-1, 4)
+    e = np.asarray(edges, dtype=np.int64).reshape(-1, 2)
+    # an edge's crop is the union bbox of its two ends
+    eb = np.concatenate(
+        [np.minimum(b[e[:, 0], :2], b[e[:, 1], :2]),
+         np.maximum(b[e[:, 0], 2:], b[e[:, 1], 2:])],
+        axis=1,
+    )
+    return crops(b, NODE_CROP), crops(eb, EDGE_CROP)
 
 
 # ------------------------------------------------------------- conv ops
@@ -343,8 +341,10 @@ def cnn_features(node_crops: np.ndarray, edge_crops: np.ndarray,
     return nv, _cnn_forward(edge_crops, weights, "g3.edge_cnn", EDGE_CNN)
 
 
-def _linear(w, name, x):
-    return x @ w[name + ".w"] + w[name + ".b"]
+def _linear(w, name, x, off):
+    out = _matmul_blocks(x, w[name + ".w"], off)
+    out += w[name + ".b"]
+    return out
 
 
 def forward(
@@ -354,50 +354,60 @@ def forward(
     node_crops: np.ndarray,
     edge_crops: np.ndarray,
     weights: dict,
-    node_feats: np.ndarray | None = None,
-    edge_feats: np.ndarray | None = None,
 ):
-    """Full G3 forward. Returns (node_log_probs (N,2), edge_log_probs (E,4)).
+    """Full G3 forward. Returns (node_log_probs (N,2), edge_log_probs (E,4))."""
+    nv, ev = cnn_features(node_crops, edge_crops, weights)
+    return forward_many(
+        x_geo, edge_index, edge_attr, nv, ev, weights,
+        np.array([0, len(x_geo)]), np.array([0, len(edge_attr)]),
+    )
 
-    ``node_feats``/``edge_feats``: the crops' CNN features from
-    :func:`cnn_features` — when given, the crop arguments are ignored.
-    This is the cross-image fusion seam: a task holding many images runs
-    ONE batched CNN over all their crops (bit-identical to per-image:
-    ``conv2d`` runs one fixed-shape GEMM per crop) and feeds the slices
-    here."""
+
+def forward_many(
+    x_geo, edge_index, edge_attr, node_feats, edge_feats, weights,
+    node_off, edge_off,
+):
+    """:func:`forward` of many images in one pass, from the crops' CNN
+    features (:func:`cnn_features`), bit-identical to each image's own;
+    the row layout is :func:`gnn.forward_many`'s. A task holding many
+    images runs ONE batched CNN over all their crops (bit-identical to
+    per-image: ``conv2d`` runs one fixed-shape GEMM per crop), then this
+    one pass with a GEMM per image."""
     x_geo = np.asarray(x_geo, dtype=np.float32)
     e_geo = np.asarray(edge_attr, dtype=np.float32)
-    if edge_index.size:
-        row, col = edge_index[:, 0], edge_index[:, 1]
-    else:
-        row = col = np.empty(0, dtype=np.int64)
+    row, col = _edge_ends(edge_index)
     n = len(x_geo)
 
-    nv, ev = node_feats, edge_feats
-    if nv is None:
-        nv, ev = cnn_features(node_crops, edge_crops, weights)
-
-    x = _linear(w=weights, name="g3.node_join",
-                x=np.concatenate([x_geo, nv], axis=1)).astype(np.float32)
-    e = _linear(w=weights, name="g3.edge_join",
-                x=np.concatenate([e_geo, ev], axis=1)).astype(np.float32)
+    x = _linear(weights, "g3.node_join",
+                np.concatenate([x_geo, node_feats], axis=1),
+                node_off).astype(np.float32)
+    e = _linear(weights, "g3.edge_join",
+                np.concatenate([e_geo, edge_feats], axis=1),
+                edge_off).astype(np.float32)
 
     for i, (_ni, _ei, _hid, _no, _eo, residual) in enumerate(
         VISUAL_LAYER_SPECS, 1
     ):
         e_new = _mlp2(
-            weights, f"g3.l{i}.edge", np.concatenate([x[row], x[col], e], axis=1)
+            weights, f"g3.l{i}.edge",
+            np.concatenate([x[row], x[col], e], axis=1), edge_off,
         )
         if residual:  # pragma: no cover - all False in G3
-            e_new = e_new + e
+            e_new += e
         e = e_new
-        m = _mlp2(weights, f"g3.l{i}.node1", np.concatenate([x[col], e], axis=1))
+        m = _mlp2(
+            weights, f"g3.l{i}.node1", np.concatenate([x[col], e], axis=1),
+            edge_off,
+        )
         agg = _scatter_mean(m, row, n)
-        x_new = _mlp2(weights, f"g3.l{i}.node2", np.concatenate([x, agg], axis=1))
+        x_new = _mlp2(
+            weights, f"g3.l{i}.node2", np.concatenate([x, agg], axis=1),
+            node_off,
+        )
         if residual:  # pragma: no cover
-            x_new = x_new + x
+            x_new += x
         x = x_new
 
-    node_logits = _mlp2(weights, "g3.head.node", x)
-    edge_logits = _mlp2(weights, "g3.head.edge", e)
+    node_logits = _mlp2(weights, "g3.head.node", x, node_off)
+    edge_logits = _mlp2(weights, "g3.head.edge", e, edge_off)
     return _log_softmax(node_logits), _log_softmax(edge_logits)

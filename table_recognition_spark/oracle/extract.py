@@ -7,7 +7,10 @@ spans run the table-recognition kernel (k-NN graph → geometry features →
 GNN forward → argmax decode → cell assembly) and re-emit one
 kind='cell' span per assembled cell. Output offsets are dense 0..n-1.
 The weights pick the GNN: G2 (geometry only) or G3 (adds CNN features
-of image crops, so it reads the media's ``image`` bytes).
+of image crops, so it reads the media's ``image`` bytes). The kernel
+(:func:`run_kernel_batch`) computes a whole batch of images in array
+passes, bit-identical to one image at a time; the oracle calls it with
+one image, the Spark kernel with each Arrow record batch.
 
 De-facto reference inference path being re-expressed: load weights →
 forward → argmax (train.py:175-215, SURVEY.md §3.3) + our canonical cell
@@ -15,6 +18,8 @@ assembly (§2.11; absent in the reference).
 """
 
 from __future__ import annotations
+
+import itertools
 
 import numpy as np
 
@@ -24,82 +29,123 @@ from ..core import (
 from ..core.bbox import polygons_to_bboxes
 from ..core.blas import limit_blas_threads
 
+def _visibility_edges_many(bboxes, node_off, widths, heights):
+    """``visibility.visibility_edges`` per image, in batch rows."""
+    parts = [np.empty((0, 2), dtype=np.int64)]
+    for i, (s, e) in enumerate(zip(node_off[:-1], node_off[1:])):
+        parts.append(
+            visibility.visibility_edges(bboxes[s:e], widths[i], heights[i])
+            + s
+        )
+    return np.concatenate(parts)
+
+
 EDGE_STRATEGIES = {
-    "knn": lambda b, w, h: knn.knn_edges(b),
-    "visibility": visibility.visibility_edges,
+    "knn": lambda b, off, w, h: knn.knn_edges_many(b, off),
+    "visibility": _visibility_edges_many,
 }
+
+
+def run_kernel_batch(
+    bboxes: np.ndarray,
+    texts,
+    node_off: np.ndarray,
+    widths,
+    heights,
+    images,
+    weights: dict,
+    strategy: str = "knn",
+):
+    """THE kernel, over one record batch of images in array passes: the
+    Spark ``mapInArrow`` kernel calls it once per Arrow record batch and
+    :func:`run_kernel` with one image, so parity is by construction.
+
+    Image ``i`` owns rows ``node_off[i]:node_off[i + 1]`` of ``bboxes``
+    ((N, 4) int64) and ``texts`` (N strings), in line_id order; it is
+    ``widths[i]`` × ``heights[i]`` and ``images[i]`` is its encoded page
+    (read only by G3 weights). An image with no rows has no cells.
+    Returns ``(cell_img, cells)``: every image's cell texts in order,
+    image after image, with ``cell_img[c]`` the image of ``cells[c]``.
+
+    Each step runs over the whole batch and is bit-identical to running
+    each image alone: k-NN graphs, node and edge features and cell
+    assembly are array passes in batch row ids; the GNN runs its gathers,
+    scatter-means and softmaxes batch-wide and one GEMM per image per
+    Linear (``gnn._matmul_blocks``) — a GEMM over rows stacked from
+    several images would not be exact. The weights pick the model
+    (:func:`visual.is_visual`). G3 decodes each image and runs ONE
+    batched CNN over every image's crops; that is exact because every
+    CNN op works on each crop alone: ``conv2d`` multiplies a 3-D
+    ``(B, H'·W', C·k·k)`` stack, so each crop is its own GEMM with a
+    fixed M whatever the batch size (pinned by tests/test_visual.py),
+    and depthwise/pool/avg are elementwise per sample."""
+    limit_blas_threads(1)
+    node_off = np.asarray(node_off, dtype=np.int64)
+    if node_off[-1] == 0:
+        return np.empty(0, dtype=np.int64), []
+    sizes = np.diff(node_off)
+    widths = np.asarray(widths, dtype=np.int64)
+    heights = np.asarray(heights, dtype=np.int64)
+    edges = EDGE_STRATEGIES[strategy](bboxes, node_off, widths, heights)
+    edge_off = np.searchsorted(edges[:, 0], node_off)
+    x = geometry.node_features(
+        bboxes, np.repeat(widths, sizes), np.repeat(heights, sizes)
+    )
+    e = geometry.edge_features_many(edges, bboxes, widths, heights, node_off)
+    if visual.is_visual(weights):
+        from ..operators.multimodal import decode_image_visual
+
+        node_crops, edge_crops = [], []
+        for i in np.flatnonzero(sizes).tolist():
+            s, t = node_off[i], node_off[i + 1]
+            # PNG fixtures stay grayscale (replicated to 3 channels in
+            # crop_regions); JPEG — the reference's actual corpus
+            # container — decodes to (H, W, 3) color like its cv2.imread
+            nc, ec = visual.crop_regions(
+                decode_image_visual(bytes(images[i])), bboxes[s:t],
+                edges[edge_off[i] : edge_off[i + 1]] - s,
+            )
+            node_crops.append(nc)
+            edge_crops.append(ec)
+        nv, ev = visual.cnn_features(
+            np.concatenate(node_crops), np.concatenate(edge_crops), weights
+        )
+        node_lp, edge_lp = visual.forward_many(
+            x, edges, e, nv, ev, weights, node_off, edge_off
+        )
+    else:
+        node_lp, edge_lp = gnn.forward_many(
+            x, edges, e, weights, node_off, edge_off
+        )
+    _, edge_cls = gnn.decode(node_lp, edge_lp)
+    return assemble.assemble_cells_many(
+        edges, edge_cls, bboxes, texts, node_off
+    )
 
 
 def run_kernel_arrays_many(
     images: list, weights: dict, strategy: str = "knn"
 ) -> list:
-    """THE kernel, over one or many images: the Spark ``mapInArrow``
-    kernel calls it once per Arrow record batch and :func:`run_kernel`
-    with one image, so parity is by construction.
-
-    ``images``: list of (bboxes (n,4) int64, texts, width, height,
-    image-bytes-or-None) tuples, each row already in line_id order.
-    Returns one cell-text list per input image; an image with no bboxes
-    has no cells.
-
-    The weights pick the model (:func:`visual.is_visual`). G2 runs
-    ``gnn.forward`` per image: a block-diagonal forward over several
-    images is not bit-identical to one image's. G3 decodes the image
-    bytes and runs ONE batched CNN over every image's crops instead of
-    a small under-utilized GEMM chain per image; that is bit-identical
-    to the image alone because every CNN op works on each crop alone:
-    ``conv2d`` multiplies a 3-D ``(B, H'·W', C·k·k)`` stack, so each crop
-    is its own GEMM with a fixed M whatever the batch size (pinned by
-    tests/test_visual.py), and depthwise/pool/avg are elementwise per
-    sample. A 2-D GEMM over rows stacked from several images would not
-    be exact: with OpenBLAS 0.3.23 (Haswell kernel), an odd row count
-    changes the last row's low bits."""
-    limit_blas_threads(1)
-    g3 = visual.is_visual(weights)
-    if g3:
-        from ..operators.multimodal import decode_image_visual
-
-    graphs, node_crops, edge_crops = [], [], []
-    for bboxes, texts, width, height, image in images:
-        if len(bboxes) == 0:
-            graphs.append(None)
-            continue
-        edges = EDGE_STRATEGIES[strategy](bboxes, width, height)
-        x = geometry.node_features(bboxes, width, height)
-        e = geometry.edge_features(edges, bboxes, width, height)
-        graphs.append((bboxes, texts, edges, x, e))
-        if g3:
-            # PNG fixtures stay grayscale (replicated to 3 channels in
-            # crop_regions); JPEG — the reference's actual corpus
-            # container — decodes to (H, W, 3) color like its cv2.imread
-            nc, ec = visual.crop_regions(
-                decode_image_visual(bytes(image)), bboxes, edges
-            )
-            node_crops.append(nc)
-            edge_crops.append(ec)
-    if g3 and node_crops:
-        nv, ev = visual.cnn_features(
-            np.concatenate(node_crops), np.concatenate(edge_crops), weights
-        )
-
-    out, n_off, e_off = [], 0, 0
-    for graph in graphs:
-        if graph is None:
-            out.append([])
-            continue
-        bboxes, texts, edges, x, e = graph
-        if g3:
-            n_end, e_end = n_off + len(x), e_off + len(edges)
-            node_lp, edge_lp = visual.forward(
-                x, edges, e, None, None, weights,
-                node_feats=nv[n_off:n_end], edge_feats=ev[e_off:e_end],
-            )
-            n_off, e_off = n_end, e_end
-        else:
-            node_lp, edge_lp = gnn.forward(x, edges, e, weights)
-        _, edge_cls = gnn.decode(node_lp, edge_lp)
-        out.append(assemble.assemble_cells(edges, edge_cls, bboxes, texts))
-    return out
+    """:func:`run_kernel_batch` over a list of (bboxes (n,4) int64,
+    texts, width, height, image-bytes-or-None) tuples, each row already
+    in line_id order. Returns one cell-text list per input image."""
+    node_off = np.cumsum([0] + [len(im[0]) for im in images])
+    bboxes = np.concatenate(
+        [np.empty((0, 4), dtype=np.int64)]
+        + [np.asarray(im[0], dtype=np.int64).reshape(-1, 4) for im in images]
+    )
+    cell_img, cells = run_kernel_batch(
+        bboxes,
+        list(itertools.chain.from_iterable(im[1] for im in images)),
+        node_off,
+        [im[2] for im in images],
+        [im[3] for im in images],
+        [im[4] for im in images],
+        weights,
+        strategy,
+    )
+    bounds = np.searchsorted(cell_img, np.arange(len(images) + 1)).tolist()
+    return [cells[a:b] for a, b in zip(bounds[:-1], bounds[1:])]
 
 
 def run_kernel(

@@ -75,27 +75,39 @@ _DIGESTS: dict = {}
 _BC_CACHE: dict = {}
 
 
+def _memo_digest(wdict: dict, data: bytes) -> str:
+    """Memoize and return the md5 hex of ``data``, the serialized
+    ``wdict``, keeping the last few dicts."""
+    if len(_DIGESTS) >= 8:
+        del _DIGESTS[next(iter(_DIGESTS))]
+    _DIGESTS[id(wdict)] = (wdict, hashlib.md5(data).hexdigest())
+    return _DIGESTS[id(wdict)][1]
+
+
 def weights_digest(wdict: dict) -> str:
     """md5 hex of ``weights_to_bytes(wdict)``, memoized for the last few
     dicts: the broadcast cache key and the checkpoint lineage's weights
     fingerprint."""
     hit = _DIGESTS.get(id(wdict))
-    if hit is None:
-        if len(_DIGESTS) >= 8:
-            del _DIGESTS[next(iter(_DIGESTS))]
-        hit = (wdict, hashlib.md5(weights_to_bytes(wdict)).hexdigest())
-        _DIGESTS[id(wdict)] = hit
-    return hit[1]
+    return hit[1] if hit else _memo_digest(wdict, weights_to_bytes(wdict))
 
 
 def _broadcast_weights(sc, wdict: dict):
     """(broadcast, content digest) for a weights dict on ``sc``: one live
-    broadcast per content digest, created on the first call."""
+    broadcast per content digest, created on the first call. A dict not
+    yet digested is serialized once, for its digest and its broadcast
+    both (~0.3 s for G3)."""
+    data = None
+    if id(wdict) not in _DIGESTS:
+        data = weights_to_bytes(wdict)
+        _memo_digest(wdict, data)
     digest = weights_digest(wdict)
     for key in [k for k, (ctx, _) in _BC_CACHE.items() if ctx is not sc]:
         del _BC_CACHE[key]
     if digest not in _BC_CACHE:
-        _BC_CACHE[digest] = (sc, sc.broadcast(weights_to_bytes(wdict)))
+        _BC_CACHE[digest] = (sc, sc.broadcast(
+            weights_to_bytes(wdict) if data is None else data
+        ))
     return _BC_CACHE[digest][1], digest
 
 
@@ -112,14 +124,15 @@ def _cached_weights(weights_bc, w_digest: str) -> dict:
 def _kernel_fn(weights_bc, w_digest: str, strategy: str = "knn"):
     """Build the Arrow-batched kernel (``mapInArrow``).
 
-    Each record batch is decoded into per-image inputs
-    ``(bboxes, texts, width, height, image-or-None)`` in one loop and
-    handed to ``oracle.extract.run_kernel_arrays_many`` in one call, the
-    kernel the no-Spark oracle runs per image; the weights pick G2 or G3
-    there, and the ``image`` column is read only for G3. The nested
-    ``ocr_lines`` column is consumed straight from the Arrow buffers —
-    per-line bboxes come from ``np.minimum/maximum.reduceat`` over the
-    flat point arrays, never materializing per-point Python dicts. (The
+    Each record batch is decoded into flat arrays — every image's lines
+    in line_id order, with row offsets — and handed to
+    ``oracle.extract.run_kernel_batch`` in one call, the kernel the
+    no-Spark oracle runs per image; the weights pick G2 or G3 there, and
+    the ``image`` column is read only for G3. The nested ``ocr_lines``
+    column is consumed straight from the Arrow buffers — per-line bboxes
+    come from ``np.minimum/maximum.reduceat`` over the flat point arrays,
+    and texts are taken by Arrow, never materializing per-point or
+    per-line Python objects outside the kernel. (The
     earlier mapInPandas version did; at 32 concurrent workers the dict
     materialization contended so badly it ran 3.7× SLOWER than at 8
     workers — measured 6.7 s → 24.7 s for the same input.)
@@ -135,13 +148,12 @@ def _kernel_fn(weights_bc, w_digest: str, strategy: str = "knn"):
     """
 
     def fn(batches):
-        from ..oracle.extract import run_kernel_arrays_many
+        from ..oracle.extract import run_kernel_batch
 
         w = _cached_weights(weights_bc, w_digest)
         g3 = is_visual(w)
 
         for rb in batches:
-            refs = rb.column("media_ref").to_pylist()
             widths = rb.column("width").to_numpy(zero_copy_only=False)
             heights = rb.column("height").to_numpy(zero_copy_only=False)
             images = (
@@ -152,7 +164,6 @@ def _kernel_fn(weights_bc, w_digest: str, strategy: str = "knn"):
             row_off = ocr.offsets.to_numpy(zero_copy_only=False)
             lines = ocr.values
             line_ids = lines.field("line_id").to_numpy(zero_copy_only=False)
-            texts_all = lines.field("text").to_pylist()
             pts_list = lines.field("points")
             pts_off = pts_list.offsets.to_numpy(zero_copy_only=False)
             pts = pts_list.values
@@ -175,38 +186,38 @@ def _kernel_fn(weights_bc, w_digest: str, strategy: str = "knn"):
                     axis=1,
                 )
 
-            kept_refs, inputs = [], []
-            for r in range(rb.num_rows):
-                kept = int(row_off[r]) + np.flatnonzero(
-                    has_pts[row_off[r] : row_off[r + 1]]
-                )
-                if not len(kept):  # no lines with points: no cells
-                    continue
-                order = kept[np.argsort(line_ids[kept], kind="stable")]
-                kept_refs.append(refs[r])
-                inputs.append(
-                    (
-                        bboxes_all[order],
-                        [texts_all[j] for j in order],
-                        int(widths[r]),
-                        int(heights[r]),
-                        images[r],
-                    )
-                )
+            # the kept lines of every row, row by row, each row's in
+            # (stable) line_id order
+            row = np.repeat(np.arange(rb.num_rows), np.diff(row_off))
+            kept = row_off[0] + np.flatnonzero(has_pts[row_off[0]:row_off[-1]])
+            row = row[kept - row_off[0]]
+            order = np.lexsort((line_ids[kept], row))
+            kept = kept[order]
+            node_off = np.searchsorted(row[order], np.arange(rb.num_rows + 1))
 
-            out_refs, out_idxs, out_texts = [], [], []
-            for ref, cells in zip(
-                kept_refs, run_kernel_arrays_many(inputs, w, strategy)
-            ):
-                out_refs += [ref] * len(cells)
-                out_idxs += range(len(cells))
-                out_texts += cells
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "media_ref": pa.array(out_refs, pa.string()),
-                    "cell_idx": pa.array(out_idxs, pa.int32()),
-                    "text": pa.array(out_texts, pa.string()),
-                }
+            cell_img, cells = run_kernel_batch(
+                bboxes_all[kept],
+                lines.field("text").take(pa.array(kept)).to_numpy(
+                    zero_copy_only=False
+                ),
+                node_off,
+                widths,
+                heights,
+                images,
+                w,
+                strategy,
+            )
+            # a cell's index within its image
+            cell_idx = np.arange(len(cells)) - np.searchsorted(
+                cell_img, cell_img
+            )
+            yield pa.RecordBatch.from_arrays(
+                [
+                    rb.column("media_ref").take(pa.array(cell_img)),
+                    pa.array(cell_idx, pa.int32()),
+                    pa.array(cells, pa.string()),
+                ],
+                names=["media_ref", "cell_idx", "text"],
             )
 
     return fn
@@ -225,20 +236,23 @@ def recognize_tables(
     it at the scan. The kernel's weights ship to executors as a broadcast.
 
     Fan-out: the rows are round-robined into
-    ``max(1, min(2 × defaultParallelism, n_rows_bound))`` kernel tasks.
-    Every task pays a fixed Python-worker cost before the kernel runs:
-    an identity ``mapInArrow`` task on a reused worker took ~220 ms of
-    worker CPU at PySpark 4.1.2 / Python 3.11, nearly all of it re-reading
-    zip archives, and ~38 ms once ``zipdir.py`` skips unchanged ones
-    (4-core VM; a 32-task job 2.2 s → 0.9 s, an 8-task one 0.4 s). 2×
-    cores still lets the scheduler level the ~3× spread of per-image cost
-    across tasks; on the 600-image ``kernel_heavy`` benchmark it beat both
-    8× and 1× cores. The cap by ``n_rows_bound`` (an upper bound on the
+    ``max(1, min(defaultParallelism, n_rows_bound))`` kernel tasks, one
+    per core. Every task pays a fixed Python-worker cost before the
+    kernel runs: an identity ``mapInArrow`` task on a reused worker took
+    ~220 ms of worker CPU at PySpark 4.1.2 / Python 3.11, nearly all of
+    it re-reading zip archives, and ~38 ms once ``zipdir.py`` skips
+    unchanged ones (4-core VM; a 32-task job 2.2 s → 0.9 s, an 8-task one
+    0.4 s). The kernel computes a whole record batch in array passes, so
+    a task's cost grows with its image count, not per image call, and
+    round-robin gives every task the same count; more tasks than cores
+    only add that fixed cost (alternating pairs on the 600-image
+    ``kernel_heavy`` benchmark, 4-core VM, favoured 1× over 2× cores).
+    The cap by ``n_rows_bound`` (an upper bound on the
     input row count; omitted = no cap) keeps a small input from paying for
     tasks that get no rows. Nothing here counts the input to learn it: a
     media-table count costs two Spark jobs on every call (~80 ms median,
     4-core VM), more than the empty tasks it saves unless the input has
-    fewer than 2 × cores rows.
+    fewer rows than cores.
     Round-robin, NOT hash-by-ref: each input row is one complete media
     (ref + all its ocr lines), so the kernel needs no key co-location —
     and hash partitioning leaves collision stragglers on small/skewed ref
@@ -248,7 +262,7 @@ def recognize_tables(
     cols = ["media_ref", "ocr_lines", "width", "height"]
     if is_visual(weights):
         cols.append("image")
-    n_tasks = 2 * sc.defaultParallelism
+    n_tasks = sc.defaultParallelism
     if n_rows_bound is not None:
         n_tasks = max(1, min(n_tasks, n_rows_bound))
     w_bc, w_digest = _broadcast_weights(sc, weights)
@@ -279,7 +293,7 @@ def _all_spans(
 
     ``n_rows_bound`` caps the kernel fan-out (see
     :func:`recognize_tables`, which also says why nothing counts the media
-    table for it); omitted, the fan-out is 2 × defaultParallelism and
+    table for it); omitted, the fan-out is defaultParallelism and
     building the plan runs no Spark job."""
     spans = (
         docs_df.select("doc_id", F.posexplode("spans").alias("pos", "s"))

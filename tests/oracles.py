@@ -10,8 +10,18 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from table_recognition_spark.core.bbox import bbox_centers
+from table_recognition_spark.core.bbox import (
+    bbox_centers,
+    rect_min_distance,
+    rects_intersect,
+)
 from table_recognition_spark.core.boilerplate import BOILER_TAGS
+from table_recognition_spark.core.gnn import (
+    EDGE_CLASS_CELL,
+    LAYER_SPECS,
+    _log_softmax,
+    _scatter_mean,
+)
 from table_recognition_spark.core.visibility import (
     SAMPLING_RATE,
     WINDOW_SIZE,
@@ -235,3 +245,252 @@ def visibility_edges_full_march(
     edges = np.array(pairs, dtype=np.int64)
     edges = edges[edges[:, 0] != edges[:, 1]]
     return np.unique(edges, axis=0)
+
+
+# ------------------------------------------- table-recognition kernel
+# The per-image kernel that the many-image array passes replaced: the
+# bitwise reference for knn.knn_edges_many, geometry.edge_features_many,
+# gnn.forward_many and assemble.assemble_cells_many.
+def knn_edges_per_image(bboxes: np.ndarray, k: int = 4) -> np.ndarray:
+    n = len(bboxes)
+    if n == 0:
+        return np.empty((0, 2), dtype=np.int64)
+    dist = rect_min_distance(bboxes, bboxes)
+    kk = min(k, n)
+    ids = np.arange(n, dtype=np.int64)
+    order = np.lexsort((np.broadcast_to(ids, (n, n)), dist), axis=1)
+    nearest = order[:, :kk]
+    src = np.repeat(ids, kk)
+    dst = nearest.reshape(-1)
+    edges = np.concatenate(
+        [np.stack([src, dst], axis=1), np.stack([dst, src], axis=1)], axis=0
+    )
+    edges = edges[edges[:, 0] != edges[:, 1]]
+    return np.unique(edges, axis=0)
+
+
+def corrected_overlap_loop(lo, hi, occ_lo, occ_hi):
+    """Start with the closed integer range [lo, hi]; subtract each
+    occluder's closed range; return (last - first) of what survives,
+    else 0 (geometry_graph_colorer.py:107-120)."""
+    width = hi - lo + 1
+    mask = np.ones(width, dtype=bool)
+    for a, b in zip(occ_lo, occ_hi):
+        s = max(int(a), lo) - lo
+        e = min(int(b), hi) - lo
+        if e >= s:
+            mask[s : e + 1] = False
+    idx = np.flatnonzero(mask)
+    if idx.size == 0:
+        return 0.0
+    return float(idx[-1] - idx[0])
+
+
+def edge_features_per_image(
+    edges: np.ndarray, bboxes: np.ndarray, img_w: int, img_h: int
+) -> np.ndarray:
+    eps = float(np.finfo(np.float64).eps)
+    E = len(edges)
+    if E == 0:
+        return np.empty((0, 6), dtype=np.float32)
+    b = np.asarray(bboxes, dtype=np.int64)
+    c = bbox_centers(b)
+    src = edges[:, 0]
+    dst = edges[:, 1]
+    c1 = c[src].astype(np.float64)
+    c2 = c[dst].astype(np.float64)
+    n1 = np.stack([c1[:, 0] / img_w, c1[:, 1] / img_h], axis=1)
+    n2 = np.stack([c2[:, 0] / img_w, c2[:, 1] / img_h], axis=1)
+    distance = np.linalg.norm(n1 - n2, axis=1)
+    avg = (n1 + n2) / 2.0
+    ci1 = c[src]
+    ci2 = c[dst]
+    n1_right = ci1[:, 0] > ci2[:, 0]
+    right = np.where(n1_right[:, None], ci1, ci2).astype(np.float64)
+    left = np.where(n1_right[:, None], ci2, ci1).astype(np.float64)
+    x_dist = right[:, 0] - left[:, 0]
+    y_dist = np.abs(right[:, 1] - left[:, 1])
+    orientation = np.degrees(np.arctan(y_dist / (x_dist + eps)))
+    flip = (right[:, 1] - left[:, 1]) > 0
+    orientation = np.where(flip, 90.0 + (90.0 - orientation), orientation)
+    orientation = np.where(
+        (orientation < 5.0) | (orientation > 175.0), 180.0, orientation
+    )
+    b1 = b[src]
+    b2 = b[dst]
+    overlaps = []
+    for axis in (0, 1):
+        o = 1 - axis
+        lo = np.maximum(b1[:, axis], b2[:, axis])
+        hi = np.minimum(b1[:, axis + 2], b2[:, axis + 2])
+        raw = np.maximum(0, hi - lo)
+        out = raw.astype(np.float64)
+        side = np.minimum(
+            np.abs(b1[:, axis + 2] - b1[:, axis]),
+            np.abs(b2[:, axis + 2] - b2[:, axis]),
+        ).astype(np.float64)
+        for e in np.flatnonzero(raw > 0):
+            mid = np.sort([b1[e, o], b2[e, o], b1[e, o + 2], b2[e, o + 2]])
+            box = np.empty(4, dtype=np.int64)
+            box[axis], box[axis + 2] = lo[e], hi[e]
+            box[o], box[o + 2] = mid[1], mid[2]
+            hits = rects_intersect(box[None], b)[0]
+            hits[src[e]] = hits[dst[e]] = False
+            occ = np.flatnonzero(hits)
+            if occ.size:
+                ov = corrected_overlap_loop(
+                    int(lo[e]), int(hi[e]), b[occ, axis], b[occ, axis + 2]
+                )
+            else:
+                ov = float(hi[e] - lo[e])
+            out[e] = ov / side[e]
+        overlaps.append(out)
+    feats = np.stack(
+        [distance, avg[:, 0], avg[:, 1], orientation, *overlaps], axis=1
+    )
+    return feats.astype(np.float32)
+
+
+def _mlp2_ref(w, prefix, x):
+    h = x @ w[prefix + ".0.w"] + w[prefix + ".0.b"]
+    np.maximum(h, 0.0, out=h)
+    return h @ w[prefix + ".1.w"] + w[prefix + ".1.b"]
+
+
+def gnn_forward_per_image(x, edge_index, edge_attr, weights):
+    """One image's G2 forward, one plain GEMM per Linear."""
+    x = np.asarray(x, dtype=np.float32)
+    e = np.asarray(edge_attr, dtype=np.float32)
+    row = edge_index[:, 0] if edge_index.size else np.empty(0, np.int64)
+    col = edge_index[:, 1] if edge_index.size else np.empty(0, np.int64)
+    n = len(x)
+    for i, (*_, residual) in enumerate(LAYER_SPECS, 1):
+        e_new = _mlp2_ref(
+            weights, f"l{i}.edge", np.concatenate([x[row], x[col], e], axis=1)
+        )
+        if residual:
+            e_new = e_new + e
+        e = e_new
+        m = _mlp2_ref(
+            weights, f"l{i}.node1", np.concatenate([x[col], e], axis=1)
+        )
+        agg = _scatter_mean(m, row, n)
+        x_new = _mlp2_ref(
+            weights, f"l{i}.node2", np.concatenate([x, agg], axis=1)
+        )
+        if residual:
+            x_new = x_new + x
+        x = x_new
+    node_logits = _mlp2_ref(weights, "head.node", x)
+    edge_logits = _mlp2_ref(weights, "head.edge", e)
+    return _log_softmax(node_logits), _log_softmax(edge_logits)
+
+
+def union_find(n: int, pairs: np.ndarray) -> np.ndarray:
+    parent = np.arange(n, dtype=np.int64)
+
+    def find(a):
+        root = a
+        while parent[root] != root:
+            root = parent[root]
+        while parent[a] != root:
+            parent[a], a = root, parent[a]
+        return root
+
+    for s, d in pairs:
+        rs, rd = find(s), find(d)
+        if rs != rd:
+            if rs < rd:
+                parent[rd] = rs
+            else:
+                parent[rs] = rd
+    for i in range(n):
+        parent[i] = find(i)
+    return parent
+
+
+def assemble_cells_per_image(edge_index, edge_cls, bboxes, texts) -> list:
+    n = len(bboxes)
+    if n == 0:
+        return []
+    cell_pairs = (
+        edge_index[edge_cls == EDGE_CLASS_CELL]
+        if len(edge_index)
+        else np.empty((0, 2), dtype=np.int64)
+    )
+    comp = union_find(n, cell_pairs)
+    b = np.asarray(bboxes, dtype=np.int64)
+    order = np.lexsort((np.arange(n), b[:, 0], b[:, 1]))
+    members: dict = {}
+    for i in order:
+        members.setdefault(comp[i], []).append(int(i))
+    comps = []
+    for ids in members.values():
+        comps.append((int(b[ids, 1].min()), int(b[ids, 0].min()), min(ids), ids))
+    comps.sort(key=lambda t: (t[0], t[1], t[2]))
+    return ["\n".join(texts[i] for i in ids) for _, _, _, ids in comps]
+
+
+def bilinear_resize_one(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
+    """One region's half-pixel-center bilinear resize."""
+    h, w = img.shape
+    ys = (np.arange(out_h) + 0.5) * h / out_h - 0.5
+    xs = (np.arange(out_w) + 0.5) * w / out_w - 0.5
+    y0 = np.clip(np.floor(ys).astype(np.int64), 0, h - 1)
+    x0 = np.clip(np.floor(xs).astype(np.int64), 0, w - 1)
+    y1 = np.clip(y0 + 1, 0, h - 1)
+    x1 = np.clip(x0 + 1, 0, w - 1)
+    wy = np.clip(ys - y0, 0.0, 1.0)[:, None]
+    wx = np.clip(xs - x0, 0.0, 1.0)[None, :]
+    a = img[np.ix_(y0, x0)]
+    b = img[np.ix_(y0, x1)]
+    c = img[np.ix_(y1, x0)]
+    d = img[np.ix_(y1, x1)]
+    return (
+        a * (1 - wy) * (1 - wx)
+        + b * (1 - wy) * wx
+        + c * wy * (1 - wx)
+        + d * wy * wx
+    )
+
+
+def crop_regions_per_crop(image, bboxes, edges, pad=20):
+    """G3 crops cut and resized one at a time: the bitwise reference for
+    ``visual.crop_regions``."""
+    color = image.ndim == 3
+    h, w = image.shape[:2]
+    img = image.astype(np.float32)
+
+    def crop(x0, y0, x1, y1, dim):
+        x0 = max(int(x0) - pad, 0)
+        x1 = min(int(x1) + pad, w)
+        y0 = max(int(y0) - pad, 0)
+        y1 = min(int(y1) + pad, h)
+        region = img[y0:y1, x0:x1]
+        if region.size == 0:
+            region = np.zeros(
+                (1, 1, 3) if color else (1, 1), dtype=np.float32
+            )
+        if color:
+            return np.stack(
+                [bilinear_resize_one(region[..., c], dim, dim)
+                 for c in range(3)]
+            ).astype(np.float32)
+        r = bilinear_resize_one(region, dim, dim).astype(np.float32)
+        return np.broadcast_to(r, (3, dim, dim))
+
+    node_crops = np.stack(
+        [crop(b[0], b[1], b[2], b[3], 10) for b in bboxes]
+    ).astype(np.float32)
+    if len(edges):
+        eb = np.stack([
+            (min(bboxes[s][0], bboxes[d][0]), min(bboxes[s][1], bboxes[d][1]),
+             max(bboxes[s][2], bboxes[d][2]), max(bboxes[s][3], bboxes[d][3]))
+            for s, d in edges
+        ])
+        edge_crops = np.stack(
+            [crop(b[0], b[1], b[2], b[3], 16) for b in eb]
+        ).astype(np.float32)
+    else:
+        edge_crops = np.zeros((0, 3, 16, 16), dtype=np.float32)
+    return node_crops, edge_crops

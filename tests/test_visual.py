@@ -4,11 +4,19 @@ import pytest
 from table_recognition_spark.core import gnn, visual
 
 
+def _resize(img, out_h, out_w):
+    """The whole of ``img`` as one region of ``visual._resize_regions``."""
+    one = np.zeros(1, dtype=np.int64)
+    return visual._resize_regions(
+        img, one, one, one + img.shape[0], one + img.shape[1], out_h, out_w
+    )[0]
+
+
 def test_bilinear_resize_identity_and_shape():
     img = np.arange(100, dtype=np.float32).reshape(10, 10)
-    same = visual.bilinear_resize(img, 10, 10)
+    same = _resize(img, 10, 10)
     assert np.allclose(same, img, atol=1e-5)
-    up = visual.bilinear_resize(img, 16, 16)
+    up = _resize(img, 16, 16)
     assert up.shape == (16, 16)
     assert up.min() >= img.min() - 1e-5 and up.max() <= img.max() + 1e-5
 
@@ -132,8 +140,9 @@ def test_visual_path_ingests_color_jpeg_media(spark):
     (graph.py:103,174 reads .jpg via cv2). Swap a fixture media image
     for a color JPEG (own encoder) and the visual pipeline must decode
     it by its JPEG magic to 3-channel crops — Spark and oracle
-    span-equal, and the result must differ from a grayscale render of
-    the same image (proving color actually reaches the CNN)."""
+    span-equal, and the CNN features must differ from a grayscale
+    render's of the same image (proving color actually reaches the
+    CNN)."""
     import numpy as np
 
     from fixture_writers import jpeg_encode_rgb
@@ -171,15 +180,8 @@ def test_visual_path_ingests_color_jpeg_media(spark):
     assert any(
         s[0] == "cell" for spans in got.values() for s in spans
     )
-    # gray-JPEG variant of the same pages: the color information must
-    # be able to change the kernel's crops (lossy-codec luma of the
-    # tinted image != the color planes)
-    media_gray = [dict(m) for m in media]
-    for m, orig in zip(media_gray, media):
-        from table_recognition_spark.core.jpeg import jpeg_decode_gray8
-
-        m["image"] = jpeg_encode_gray8(jpeg_decode_gray8(orig["image"]))
-    exp_gray = extract_corpus(docs, media_gray, vw)
+    from table_recognition_spark.core.bbox import polygons_to_bboxes
+    from table_recognition_spark.core.jpeg import jpeg_decode_gray8
     from table_recognition_spark.operators.multimodal import (
         decode_image_visual,
     )
@@ -188,7 +190,25 @@ def test_visual_path_ingests_color_jpeg_media(spark):
     assert img.ndim == 3 and img.shape[2] == 3
     # channels genuinely differ (tinted source)
     assert not np.array_equal(img[..., 0], img[..., 2])
-    _ = exp_gray  # runs the gray path end-to-end on the same pages
+    # a gray-JPEG render of the same page gives other CNN features: the
+    # color planes reach the CNN (lossy-codec luma of the tinted image !=
+    # the color planes)
+    gray = decode_image_visual(
+        jpeg_encode_gray8(jpeg_decode_gray8(media[0]["image"]))
+    )
+    bboxes = polygons_to_bboxes(
+        [[(p["x"], p["y"]) for p in li["points"]]
+         for li in media[0]["ocr_lines"]]
+    )
+    no_edges = np.empty((0, 2), dtype=np.int64)
+    feats = [
+        visual.cnn_features(
+            visual.crop_regions(page, bboxes, no_edges)[0],
+            np.empty((0, 3, visual.EDGE_CROP, visual.EDGE_CROP)), vw,
+        )[0]
+        for page in (img, gray)
+    ]
+    assert not np.array_equal(*feats)
 
 
 def test_fused_cnn_bit_identical_to_per_image():
@@ -255,3 +275,31 @@ def test_run_kernel_arrays_many_matches_per_image():
                 continue
             assert cells == run_kernel_arrays_many([inp], w, "knn")[0]
             assert len(cells) > 0
+
+
+def test_crop_regions_bitwise_equals_per_crop_reference():
+    """Every crop of one size is cut and resized in one array pass,
+    bit-identical to cutting and resizing each crop alone
+    (tests/oracles.py) — gray and color pages, boxes inside, across and
+    beyond the page edges (empty and slice-wrapped regions), zero-size
+    boxes."""
+    import oracles
+
+    rng = np.random.default_rng(5)
+    for trial in range(20):
+        h, w = (int(v) for v in rng.integers(30, 90, size=2))
+        page = rng.integers(0, 256, (h, w) if trial % 2 else (h, w, 3))
+        page = page.astype(np.uint8)
+        n = int(rng.integers(1, 12))
+        x = rng.integers(-60, w + 40, n)
+        y = rng.integers(-60, h + 40, n)
+        b = np.stack(
+            [x, y, x + rng.integers(0, 30, n), y + rng.integers(0, 20, n)],
+            axis=1,
+        )
+        edges = np.argwhere(~np.eye(n, dtype=bool))[: int(rng.integers(0, 20))]
+        got = visual.crop_regions(page, b, edges)
+        exp = oracles.crop_regions_per_crop(page, b, edges)
+        for g, e in zip(got, exp):
+            assert g.shape == e.shape and g.dtype == e.dtype
+            assert np.array_equal(g.view(np.uint32), e.view(np.uint32))

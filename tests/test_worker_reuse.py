@@ -2,6 +2,7 @@
 archive directories (``zipdir.py``) and parsed kernel weights
 (``pipeline.extract._cached_weights``)."""
 
+import hashlib
 import importlib
 import sys
 import zipfile
@@ -10,6 +11,7 @@ import zipimport
 import pytest
 
 from table_recognition_spark import zipdir
+from table_recognition_spark.core import gnn
 
 needs_lazy_zip_reread = pytest.mark.skipif(
     sys.version_info >= (3, 13),
@@ -185,3 +187,30 @@ def test_broadcast_cache_holds_only_the_callers_context(weights, monkeypatch):
     bc2, digest2 = ex._broadcast_weights(second, weights)
     assert (second.sent, digest2) == (1, digest) and bc2 is not bc
     assert [ctx for ctx, _ in ex._BC_CACHE.values()] == [second]
+
+
+def test_first_broadcast_serializes_the_weights_once(weights, monkeypatch):
+    """A weights dict not yet digested is serialized once for both its
+    content digest and its broadcast, and the broadcast ships those very
+    bytes; the digest memo then answers ``weights_digest``."""
+    ex = importlib.import_module("table_recognition_spark.pipeline.extract")
+    calls = []
+
+    def to_bytes(w):
+        calls.append(w)
+        return gnn.weights_to_bytes(w)
+
+    class Context:
+        def broadcast(self, data):
+            self.data = data
+            return object()
+
+    monkeypatch.setattr(ex, "_BC_CACHE", {})
+    monkeypatch.setattr(ex, "_DIGESTS", {})
+    monkeypatch.setattr(ex, "weights_to_bytes", to_bytes)
+    ctx = Context()
+    _, digest = ex._broadcast_weights(ctx, weights)
+    assert len(calls) == 1
+    assert ctx.data == gnn.weights_to_bytes(weights)
+    assert digest == hashlib.md5(ctx.data).hexdigest()
+    assert ex.weights_digest(weights) == digest and len(calls) == 1
