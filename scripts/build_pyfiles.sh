@@ -1,10 +1,11 @@
 #!/usr/bin/env bash
 # Package the engine for spark-submit --py-files.
 #   ./scripts/build_pyfiles.sh            -> dist/table_recognition_spark.zip
-# Cluster launch (the weights artifact ships via --files):
+# Cluster launch (the zip holds no weights: the driver loads --weights,
+# G2 or G3, and broadcasts them to the executors):
 #   spark-submit --py-files dist/table_recognition_spark.zip \
-#       --files weights/g2_trained_seed42.npz \
-#       main.py --docs ... --media ... --out ... --chunks 256
+#       main.py --weights weights/g2_trained_seed42.npz \
+#       --docs ... --media ... --out ... --chunks 256
 set -euo pipefail
 cd "$(dirname "$0")/.."
 mkdir -p dist

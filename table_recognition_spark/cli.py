@@ -21,8 +21,9 @@ re-expresses that surface over the Spark engine:
   ``epochs``, ``learning_rate``, paths).
 - :func:`run_mode` — dispatch: data-preparation → seeded fixture corpus
   written as parquet (+ optional graph visualizations, reference
-  data_preparation.py); train → the numpy training loop (core/train.py);
-  infer → one ``extract_flat`` run (no checkpointing) over the prepared
+  data_preparation.py); train → the numpy training loop (core/train.py)
+  on the model (``visual_features``: G3, else G2) and the graphs
+  (``edge_discovery``) that infer uses; infer → one ``extract_flat`` run (no checkpointing) over the prepared
   ``docs``/``media`` parquet, or the fixture corpus when there is none,
   printing its output span count.
 """
@@ -159,15 +160,19 @@ def _run_data_preparation(cfg: ModeConfig) -> int:
 
 
 def _run_train(cfg: ModeConfig) -> int:
-    from .core import gnn
+    from .core import gnn, visual
     from .core import train as trainer
 
+    # the model and graphs --infer runs: G3 with visual_features, else G2
+    init = visual.init_weights if cfg.visual_features else gnn.init_weights
     best_w, history = trainer.train(
+        weights=init(42),
         n_train_imgs=64,
         n_valid_imgs=16,
         epochs=cfg.epochs,
         lr=cfg.learning_rate,
         seed=42,
+        strategy=cfg.edge_discovery,
     )
     gnn.save_weights(best_w, cfg.model_path)
     acc = history[-1]["valid_edge_acc"] if history else None

@@ -17,9 +17,12 @@ node_edge_mlp_ending.py:9-113 exactly:
   {0: header, 1: data} per output.py:10-26.
 
 Weights: the reference ships no trained checkpoint and no inference entry
-point (SURVEY.md §2.10.10), so the canonical artifact is a fixed seeded
-Xavier-uniform float32 initialization (weights/g2_seed42.npz), shared by
-the single-node oracle and the Spark kernel.
+point (SURVEY.md §2.10.10). The seeded Xavier-uniform float32
+initialization (:func:`init_weights`, frozen as weights/g2_seed42.npz) is
+what ``core/train.py`` trains into the default artifact
+(:func:`default_weights`), shared by the single-node oracle and the Spark
+kernel. G3 (core/visual.py) runs the same MetaLayer body on its own
+weights (:func:`_metalayers_heads`).
 """
 
 from __future__ import annotations
@@ -77,30 +80,31 @@ def load_weights(path: str) -> dict:
         return {k: z[k] for k in z.files}
 
 
-_DEFAULT_WEIGHTS: dict | None = None
+_DEFAULT_WEIGHTS: dict = {}
+
+
+def _committed_weights(name: str) -> dict:
+    """The committed artifact ``weights/<name>`` next to the package,
+    loaded once per process; callers treat the dict as immutable. A
+    missing artifact (e.g. the package imported from a ``--py-files``
+    zip: pass ``main.py --weights`` there) raises an error naming it."""
+    if name not in _DEFAULT_WEIGHTS:
+        import os
+
+        here = os.path.dirname(os.path.dirname(os.path.dirname(
+            os.path.abspath(__file__))))
+        _DEFAULT_WEIGHTS[name] = load_weights(
+            os.path.join(here, "weights", name)
+        )
+    return _DEFAULT_WEIGHTS[name]
 
 
 def default_weights() -> dict:
     """G2 weights shared by the flagship, the spark-submit job
     (``main.py``) and ``--infer``: the trained artifact
-    (``weights/g2_trained_seed42.npz``, 96.2% held-out edge accuracy on
-    synthetic grids, ``weights/g2_trained_seed42.history.json``) when
-    present, else the frozen seeded init (``weights/g2_seed42.npz``).
-    Loaded once per process; callers treat the dict as immutable."""
-    global _DEFAULT_WEIGHTS
-    if _DEFAULT_WEIGHTS is None:
-        import os
-
-        here = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.dirname(
-                os.path.abspath(__file__)))),
-            "weights",
-        )
-        path = os.path.join(here, "g2_trained_seed42.npz")
-        if not os.path.exists(path):
-            path = os.path.join(here, "g2_seed42.npz")
-        _DEFAULT_WEIGHTS = load_weights(path)
-    return _DEFAULT_WEIGHTS
+    ``weights/g2_trained_seed42.npz`` (96.2% held-out edge accuracy on
+    synthetic grids, ``weights/g2_trained_seed42.history.json``)."""
+    return _committed_weights("g2_trained_seed42.npz")
 
 
 _RAW_MAGIC = b"TRW2"
@@ -219,15 +223,27 @@ def forward_many(x, edge_index, edge_attr, weights, node_off, edge_off):
     ``scatter_mean`` (each node's messages added in the same order) and
     ``log_softmax`` are row-wise, so they run batch-wide; only the GEMMs
     run per image (:func:`_matmul_blocks`)."""
-    x = np.asarray(x, dtype=np.float32)
-    e = np.asarray(edge_attr, dtype=np.float32)
+    return _metalayers_heads(
+        np.asarray(x, dtype=np.float32), edge_index,
+        np.asarray(edge_attr, dtype=np.float32), weights, node_off,
+        edge_off, "", LAYER_SPECS,
+    )
+
+
+def _metalayers_heads(x, edge_index, e, weights, node_off, edge_off,
+                      prefix, specs):
+    """The MetaLayer stack ``specs`` and both heads, from float32 node
+    and edge features, with the weights named ``prefix + "l1.edge.0.w"``
+    and so on: G2 (``""``, :data:`LAYER_SPECS`) and G3 (``"g3."``,
+    ``visual.VISUAL_LAYER_SPECS``, after its joins) share this body.
+    Returns (node_log_probs, edge_log_probs)."""
     row, col = _edge_ends(edge_index)
     n = len(x)
 
-    for i, (_ni, _ei, _hid, _no, _eo, residual) in enumerate(LAYER_SPECS, 1):
+    for i, (*_dims, residual) in enumerate(specs, 1):
         # edge model first (PyG MetaLayer order)
         e_new = _mlp2(
-            weights, f"l{i}.edge",
+            weights, f"{prefix}l{i}.edge",
             np.concatenate([x[row], x[col], e], axis=1), edge_off,
         )
         if residual:
@@ -235,20 +251,20 @@ def forward_many(x, edge_index, edge_attr, weights, node_off, edge_off):
         e = e_new
         # node model
         m = _mlp2(
-            weights, f"l{i}.node1", np.concatenate([x[col], e], axis=1),
-            edge_off,
+            weights, f"{prefix}l{i}.node1",
+            np.concatenate([x[col], e], axis=1), edge_off,
         )
         agg = _scatter_mean(m, row, n)
         x_new = _mlp2(
-            weights, f"l{i}.node2", np.concatenate([x, agg], axis=1),
+            weights, f"{prefix}l{i}.node2", np.concatenate([x, agg], axis=1),
             node_off,
         )
         if residual:
             x_new += x
         x = x_new
 
-    node_logits = _mlp2(weights, "head.node", x, node_off)
-    edge_logits = _mlp2(weights, "head.edge", e, edge_off)
+    node_logits = _mlp2(weights, prefix + "head.node", x, node_off)
+    edge_logits = _mlp2(weights, prefix + "head.edge", e, edge_off)
     return _log_softmax(node_logits), _log_softmax(edge_logits)
 
 

@@ -1,12 +1,17 @@
-"""Offline training for the G2 kernel — pure numpy backprop.
+"""Offline training for the table-recognition kernel — pure numpy backprop.
 
-The reference trains with torch/PyG (train.py:36-173); torch is not in
-this environment, and training is a one-off offline step anyway
-(SURVEY.md §2.8 G5: the deployed pipeline ships fixed weights). This
-module hand-rolls the exact backward pass of ``gnn.forward`` so we can
-produce a *meaningful* weights artifact: trained on seeded synthetic
-grid tables with ground-truth edge labels derived by the reference's own
-labeling rules (core/labels.py).
+The reference trains with torch/PyG in one loop (train.py:36-173), and
+its configured ``model_name`` picks the network it trains; torch is not
+in this environment, and training is a one-off offline step anyway
+(SURVEY.md §2.8 G5: the deployed pipeline ships fixed weights). Here, as
+in inference, the weights pick the model (:func:`visual.is_visual`):
+``train(gnn.init_weights(seed))`` trains G2 and
+``train(visual.init_weights(seed))`` trains G3, on seeded synthetic grid
+tables with ground-truth edge labels derived by the reference's own
+labeling rules (core/labels.py). This module hand-rolls the exact
+backward pass of the MetaLayer stack and edge head both models share
+(:func:`gnn._metalayers_heads`); core/visual_train.py adds G3's crop
+CNNs and join linears around it.
 
 Faithful to the reference where it matters:
 - loss = NLL on **edges only** — the node loss is commented out in the
@@ -14,16 +19,17 @@ Faithful to the reference where it matters:
   initialization, exactly like the reference's checkpoint would.
 - Adam, lr 3e-4 (config.ini:35).
 - best-valid-accuracy checkpointing (train.py:144-147).
-Deliberately NOT reproduced: the gradient-accumulation step-without-
-backward quirk (train.py:161-166, SURVEY.md §2.8 G5) — a training-only
-artifact with no bearing on inference semantics.
+Deliberately NOT reproduced: dropout in the heads (the identity at eval;
+a training-only regularizer) and the gradient-accumulation
+step-without-backward quirk (train.py:161-166, SURVEY.md §2.8 G5) —
+training-only artifacts with no bearing on inference semantics.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from . import gnn, knn, labels
+from . import gnn, knn, labels, visual
 from .bbox import polygons_to_bboxes
 from .geometry import edge_features, node_features
 
@@ -47,71 +53,82 @@ def _mlp2_bwd(w, g, prefix, dout, cache):
     return dh @ w[prefix + ".0.w"].T
 
 
-def forward_cached(x, edge_index, edge_attr, w):
-    """gnn.forward with every intermediate cached for backward."""
-    row = edge_index[:, 0] if len(edge_index) else np.empty(0, dtype=np.int64)
-    col = edge_index[:, 1] if len(edge_index) else np.empty(0, dtype=np.int64)
+def _stack_fwd(x, edge_index, e, w, prefix, specs):
+    """The MetaLayer stack ``specs`` and the edge head, with the weights
+    named ``prefix + "l1.edge.0.w"`` and so on, every intermediate cached
+    for :func:`_stack_bwd`. Returns (raw edge logits, state)."""
+    row, col = gnn._edge_ends(edge_index)
     n = len(x)
     caches = []
-    e = edge_attr
-    for i, (_ni, _ei, _hid, _no, _eo, residual) in enumerate(
-        gnn.LAYER_SPECS, 1
-    ):
+    for i, (*_dims, residual) in enumerate(specs, 1):
         e_in = np.concatenate([x[row], x[col], e], axis=1)
-        e_new, ce = _mlp2_fwd(w, f"l{i}.edge", e_in)
+        e_new, ce = _mlp2_fwd(w, f"{prefix}l{i}.edge", e_in)
         if residual:
             e_new = e_new + e
         m_in = np.concatenate([x[col], e_new], axis=1)
-        m, cm = _mlp2_fwd(w, f"l{i}.node1", m_in)
+        m, cm = _mlp2_fwd(w, f"{prefix}l{i}.node1", m_in)
         counts = np.bincount(row, minlength=n).astype(m.dtype)
         denom = np.maximum(counts, 1.0)
         agg = np.zeros((n, m.shape[1]), dtype=m.dtype)
         np.add.at(agg, row, m)
         agg = agg / denom[:, None]
         n_in = np.concatenate([x, agg], axis=1)
-        x_new, cn = _mlp2_fwd(w, f"l{i}.node2", n_in)
+        x_new, cn = _mlp2_fwd(w, f"{prefix}l{i}.node2", n_in)
         if residual:
             x_new = x_new + x
-        caches.append((x, e, ce, cm, cn, denom, residual))
+        caches.append((x.shape[1], ce, cm, cn, denom))
         x, e = x_new, e_new
-    edge_logits, ch = _mlp2_fwd(w, "head.edge", e)
+    edge_logits, ch = _mlp2_fwd(w, prefix + "head.edge", e)
     return edge_logits, (caches, row, col, n, ch)
 
 
-def backward(dlogits, w, state):
-    """Gradients of edge-NLL wrt every weight (edge head + MetaLayers)."""
+def _stack_bwd(dlogits, w, state, prefix, specs):
+    """Backward of :func:`_stack_fwd`: returns (g, dx, de) — the
+    gradients of every key of ``w`` (zero outside the stack and the edge
+    head) and of the stack's input node and edge features."""
     caches, row, col, n, ch = state
     g = {k: np.zeros_like(v) for k, v in w.items()}
-    de = _mlp2_bwd(w, g, "head.edge", dlogits, ch)
+    de = _mlp2_bwd(w, g, prefix + "head.edge", dlogits, ch)
     # the final node features feed nothing under edge-only loss
     dt = de.dtype
-    dx_out = np.zeros((n, 16), dtype=dt)
-    for i in range(len(gnn.LAYER_SPECS), 0, -1):
-        x_in, e_in_prev, ce, cm, cn, denom, residual = caches[i - 1]
+    dx_out = np.zeros((n, specs[-1][3]), dtype=dt)
+    for i in range(len(specs), 0, -1):
+        d, ce, cm, cn, denom = caches[i - 1]
+        residual = specs[i - 1][-1]
         # --- node submodel backward (x_new = mlp2([x, agg]) (+x)) ---
-        dn_in = _mlp2_bwd(w, g, f"l{i}.node2", dx_out, cn)
-        dx_cur = dn_in[:, : x_in.shape[1]].astype(dt)
-        dagg = dn_in[:, x_in.shape[1] :]
+        dn_in = _mlp2_bwd(w, g, f"{prefix}l{i}.node2", dx_out, cn)
+        dx_cur = dn_in[:, :d].astype(dt)
+        dagg = dn_in[:, d:]
         if residual:
             dx_cur = dx_cur + dx_out
-        dm = (dagg / denom[:, None])[row] if len(row) else np.zeros((0, dagg.shape[1]))
-        dm_in = _mlp2_bwd(w, g, f"l{i}.node1", dm.astype(dt), cm)
+        dm = (dagg / denom[:, None])[row]
+        dm_in = _mlp2_bwd(w, g, f"{prefix}l{i}.node1", dm.astype(dt), cm)
         # m_in = [x[col], e_new]
-        if len(col):
-            np.add.at(dx_cur, col, dm_in[:, : x_in.shape[1]])
-        de_total = de + dm_in[:, x_in.shape[1] :]
+        np.add.at(dx_cur, col, dm_in[:, :d])
+        de_total = de + dm_in[:, d:]
         # --- edge submodel backward (e_new = mlp_e([x[row],x[col],e]) (+e)) ---
-        de_in = _mlp2_bwd(w, g, f"l{i}.edge", de_total.astype(dt), ce)
-        d = x_in.shape[1]
-        if len(row):
-            np.add.at(dx_cur, row, de_in[:, :d])
-            np.add.at(dx_cur, col, de_in[:, d : 2 * d])
+        de_in = _mlp2_bwd(
+            w, g, f"{prefix}l{i}.edge", de_total.astype(dt), ce
+        )
+        np.add.at(dx_cur, row, de_in[:, :d])
+        np.add.at(dx_cur, col, de_in[:, d : 2 * d])
         de_prev = de_in[:, 2 * d :]
         if residual:
             de_prev = de_prev + de_total
         dx_out = dx_cur
         de = de_prev.astype(dt)
-    return g
+    return g, dx_out, de
+
+
+def forward_cached(x, edge_index, edge_attr, w):
+    """gnn.forward with every intermediate cached for :func:`backward`;
+    returns raw edge logits (pre-log-softmax) and the state."""
+    return _stack_fwd(x, edge_index, edge_attr, w, "", gnn.LAYER_SPECS)
+
+
+def backward(dlogits, w, state):
+    """Gradients of edge-NLL wrt every G2 weight (edge head + MetaLayers)."""
+    return _stack_bwd(dlogits, w, state, "", gnn.LAYER_SPECS)[0]
 
 
 def nll_grad(edge_logits, y):
@@ -148,8 +165,11 @@ class Adam:
 
 
 # ---------------------------------------------------------------- data
-def graph_from_media(m, g, strategy: str = "knn"):
-    """fixture media+gt row → (x, edge_index, edge_attr, edge_labels)."""
+def graph_from_media(m, g, strategy: str = "knn", crops: bool = False):
+    """fixture media+gt row → (x, edge_index, edge_attr, edge_labels);
+    with ``crops`` (G3 training) → (x, edge_index, edge_attr, node_crops,
+    edge_crops, edge_labels), the crops cut by the same
+    ``visual.crop_regions`` the inference kernel uses."""
     from .visibility import visibility_edges
 
     lines = sorted(m["ocr_lines"], key=lambda d: d["line_id"])
@@ -177,10 +197,16 @@ def graph_from_media(m, g, strategy: str = "knn"):
          for c in cells]
     )
     _, ey = labels.label_graph(nb, edges, cb, [c["type"] for c in cells], grid)
-    return x, edges, ea, ey
+    if not crops:
+        return x, edges, ea, ey
+    from ..fixtures.generate import png_decode_gray8
+
+    nc, ec = visual.crop_regions(png_decode_gray8(m["image"]), nb, edges)
+    return x, edges, ea, nc, ec, ey
 
 
 def train(
+    weights: dict,
     n_train_imgs: int = 400,
     n_valid_imgs: int = 80,
     epochs: int = 30,
@@ -190,37 +216,47 @@ def train(
     strategy: str = "knn",
     verbose: bool = False,
 ):
-    """Train on seeded synthetic grids; returns (best_weights, history)."""
+    """Train from the initial ``weights`` on seeded synthetic grids;
+    returns (best_weights, history). The weights pick the model:
+    ``gnn.init_weights(seed)`` trains G2, ``visual.init_weights(seed)``
+    G3. Each G3 step backprops two crop CNNs, so its artifact was
+    trained on a smaller budget (the ``config`` of
+    ``weights/g3_trained_seed42.history.json``). ``weights`` itself is
+    not modified."""
     from ..fixtures.generate import make_corpus
+
+    crops = visual.is_visual(weights)
+    if crops:
+        from .visual_train import backward as bwd, forward_cached as fwd
+
+        infer = visual.forward
+    else:
+        fwd, bwd, infer = forward_cached, backward, gnn.forward
+
+    def graphs(media, gt):
+        return [
+            t
+            for t in (
+                graph_from_media(m, g, strategy, crops)
+                for m, g in zip(media, gt)
+            )
+            if t is not None
+        ]
 
     _, media_t, gt_t = make_corpus(0, n_train_imgs, seed=seed)
     _, media_v, gt_v = make_corpus(0, n_valid_imgs, seed=seed + 1)
-    train_g = [
-        t
-        for t in (
-            graph_from_media(m, g, strategy)
-            for m, g in zip(media_t, gt_t)
-        )
-        if t is not None
-    ]
-    valid_g = [
-        t
-        for t in (
-            graph_from_media(m, g, strategy)
-            for m, g in zip(media_v, gt_v)
-        )
-        if t is not None
-    ]
+    train_g = graphs(media_t, gt_t)
+    valid_g = graphs(media_v, gt_v)
 
-    w = gnn.init_weights(seed)
+    w = dict(weights)
     opt = Adam(w, lr=lr)
     rng = np.random.default_rng(seed)
     best_acc, best_w, history = -1.0, dict(w), []
 
     def valid_acc(weights):
         hit = tot = 0
-        for x, e, ea, y in valid_g:
-            _, elp = gnn.forward(x, e, ea, weights)
+        for *inputs, y in valid_g:
+            _, elp = infer(*inputs, weights)
             hit += int((elp.argmax(axis=1) == y).sum())
             tot += len(y)
         return hit / max(tot, 1)
@@ -231,10 +267,10 @@ def train(
         for start in range(0, len(order), batch_graphs):
             g_acc = None
             for j in order[start : start + batch_graphs]:
-                x, e, ea, y = train_g[j]
-                logits, state = forward_cached(x, e, ea, w)
+                *inputs, y = train_g[j]
+                logits, state = fwd(*inputs, w)
                 loss, dlg = nll_grad(logits, y)
-                grads = backward(dlg, w, state)
+                grads = bwd(dlg, w, state)
                 losses.append(loss)
                 if g_acc is None:
                     g_acc = grads
@@ -246,7 +282,7 @@ def train(
         history.append({"epoch": epoch, "loss": float(np.mean(losses)),
                         "valid_edge_acc": acc})
         if verbose:
-            print(history[-1])
+            print(history[-1], flush=True)
         if acc > best_acc:
             best_acc, best_w = acc, {k: v.copy() for k, v in w.items()}
     return best_w, history

@@ -25,7 +25,9 @@ permutation, not semantics we preserve); grayscale fixture images are
 replicated to 3 channels; pixel values stay in [0, 255] float32 (the
 reference applies no normalization).
 
-Weights: fixed seeded Xavier-uniform float32 (weights/g3_seed42.npz),
+Weights: every array is named ``g3.*`` (:func:`is_visual`); the seeded
+Xavier-uniform float32 init (:func:`init_weights`) is trained by
+``core/train.py`` into the default artifact (:func:`default_weights`),
 shared by oracle and executors — the reference ships no checkpoint.
 """
 
@@ -33,9 +35,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .gnn import (
-    _edge_ends, _log_softmax, _matmul_blocks, _mlp2, _scatter_mean,
-)
+from .gnn import _committed_weights, _matmul_blocks, _metalayers_heads
 
 NODE_CROP = 10
 EDGE_CROP = 16
@@ -294,36 +294,15 @@ def init_weights(seed: int = 42) -> dict:
     return w
 
 
-_DEFAULT_WEIGHTS: dict | None = None
-
-
 def default_weights() -> dict:
-    """G3 weights resolution shared by the Spark kernel and the no-Spark
-    oracle (so parity holds by construction): the committed trained
-    artifact (``weights/g3_trained_seed42.npz`` — numpy-backprop-trained
-    by core/visual_train.py) when present, else the frozen seeded init.
-
-    Cached module-level after the first load: the 59 MB npz costs ~1.2 s
-    to decompress, and every visual-query invocation resolves weights
-    driver-side — callers treat the returned dict as immutable (training
-    code inits its own)."""
-    global _DEFAULT_WEIGHTS
-    if _DEFAULT_WEIGHTS is not None:
-        return _DEFAULT_WEIGHTS
-    import os
-
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__)))),
-        "weights",
-        "g3_trained_seed42.npz",
-    )
-    if os.path.exists(path):
-        data = np.load(path)
-        _DEFAULT_WEIGHTS = {k: data[k] for k in data.files}
-    else:  # pragma: no cover - artifact is committed
-        _DEFAULT_WEIGHTS = init_weights(42)
-    return _DEFAULT_WEIGHTS
+    """G3 weights shared by the Spark kernel and the no-Spark oracle (so
+    parity holds by construction): the committed trained artifact
+    ``weights/g3_trained_seed42.npz``, trained from :func:`init_weights`
+    by ``core/train.py``'s loop. Loaded once per process by
+    :func:`gnn.load_weights` (the 59 MB npz costs ~1.2 s to decompress,
+    and every visual-query invocation resolves weights driver-side); a
+    missing artifact raises an error naming it."""
+    return _committed_weights("g3_trained_seed42.npz")
 
 
 def is_visual(weights: dict) -> bool:
@@ -375,39 +354,13 @@ def forward_many(
     one pass with a GEMM per image."""
     x_geo = np.asarray(x_geo, dtype=np.float32)
     e_geo = np.asarray(edge_attr, dtype=np.float32)
-    row, col = _edge_ends(edge_index)
-    n = len(x_geo)
-
     x = _linear(weights, "g3.node_join",
                 np.concatenate([x_geo, node_feats], axis=1),
                 node_off).astype(np.float32)
     e = _linear(weights, "g3.edge_join",
                 np.concatenate([e_geo, edge_feats], axis=1),
                 edge_off).astype(np.float32)
-
-    for i, (_ni, _ei, _hid, _no, _eo, residual) in enumerate(
-        VISUAL_LAYER_SPECS, 1
-    ):
-        e_new = _mlp2(
-            weights, f"g3.l{i}.edge",
-            np.concatenate([x[row], x[col], e], axis=1), edge_off,
-        )
-        if residual:  # pragma: no cover - all False in G3
-            e_new += e
-        e = e_new
-        m = _mlp2(
-            weights, f"g3.l{i}.node1", np.concatenate([x[col], e], axis=1),
-            edge_off,
-        )
-        agg = _scatter_mean(m, row, n)
-        x_new = _mlp2(
-            weights, f"g3.l{i}.node2", np.concatenate([x, agg], axis=1),
-            node_off,
-        )
-        if residual:  # pragma: no cover
-            x_new += x
-        x = x_new
-
-    node_logits = _mlp2(weights, "g3.head.node", x, node_off)
-    edge_logits = _mlp2(weights, "g3.head.edge", e, edge_off)
-    return _log_softmax(node_logits), _log_softmax(edge_logits)
+    return _metalayers_heads(
+        x, edge_index, e, weights, node_off, edge_off, "g3.",
+        VISUAL_LAYER_SPECS,
+    )

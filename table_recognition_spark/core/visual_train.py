@@ -1,38 +1,28 @@
-"""Offline training for the G3 visual kernel — pure numpy backprop.
+"""G3 autodiff for :func:`train.train`: the crop CNNs and the joins.
 
 The reference's *configured default* is the visual model (config.ini:44
-model_name = NodeEdgeMLPEndingVisual) trained by train.py with
-torch/PyG; torch is absent here, so this module hand-rolls the exact
-backward pass of ``visual.forward`` — through both crop CNNs
-(depthwise/pointwise/3×3 conv, maxpool, global avg; NO inter-block
-nonlinearity, preserving the reference quirk), the geometry/visual join
-linears, the 4 non-residual MetaLayers, and the edge head — so the
-committed G3 artifact is trained the same way the reference trains it:
+model_name = NodeEdgeMLPEndingVisual). ``train.train`` trains it when
+handed G3 weights (``visual.init_weights``), with this module's
+:func:`forward_cached`/:func:`backward`: the exact backward pass of
+``visual.forward`` through both crop CNNs (depthwise/pointwise/3×3 conv,
+maxpool, global avg; NO inter-block nonlinearity, preserving the
+reference quirk) and the geometry/visual join linears, wrapped around
+the MetaLayer stack and edge head G2 shares (``train._stack_fwd``/
+``train._stack_bwd`` with the ``g3.`` weights and
+``visual.VISUAL_LAYER_SPECS``). Everything else — edges-only loss, Adam,
+best-valid checkpointing, the data — is ``train.py``'s.
 
-- loss = NLL on **edges only** (node loss commented out in the
-  reference, train.py:158), so the node head keeps its seeded init;
-- Adam, lr 3e-4 (config.ini:35), best-valid-accuracy checkpointing
-  (train.py:144-147);
-- training data = the same seeded synthetic grid corpus the G2 artifact
-  was trained on, with crops cut from the rendered table images by the
-  same ``visual.crop_regions`` the inference path uses.
-
-Like ``train.py`` (G2), dropout in the heads is not reproduced (the
-identity at eval; a training-only regularizer) and the
-gradient-accumulation quirk is deliberately skipped (SURVEY.md §2.8 G5).
-
-All ops are dtype-generic so the float64 central-difference gradient
-check (tests/test_visual_train.py) runs on the real model.
+All ops are dtype-generic (inputs are cast to the weights' dtype) so the
+float64 central-difference gradient check (tests/test_visual_train.py)
+runs on the real model.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from . import knn, labels, visual
-from .bbox import polygons_to_bboxes
-from .geometry import edge_features, node_features
-from .train import Adam, _mlp2_bwd, _mlp2_fwd, nll_grad
+from . import visual
+from .train import _stack_bwd, _stack_fwd
 
 # ----------------------------------------------------------- CNN autodiff
 
@@ -172,9 +162,6 @@ def forward_cached(x_geo, edge_index, edge_attr, node_crops, edge_crops, w):
     e_geo = np.asarray(edge_attr, dtype=dt)
     node_crops = np.asarray(node_crops, dtype=dt)
     edge_crops = np.asarray(edge_crops, dtype=dt)
-    row = edge_index[:, 0]
-    col = edge_index[:, 1]
-    n = len(x_geo)
 
     nv, cn_cnn = _cnn_fwd_cached(node_crops, w, "g3.node_cnn", visual.NODE_CNN)
     ev, ce_cnn = _cnn_fwd_cached(edge_crops, w, "g3.edge_cnn", visual.EDGE_CNN)
@@ -184,53 +171,24 @@ def forward_cached(x_geo, edge_index, edge_attr, node_crops, edge_crops, w):
     ej_in = np.concatenate([e_geo, ev], axis=1)
     e = ej_in @ w["g3.edge_join.w"] + w["g3.edge_join.b"]
 
-    caches = []
-    for i in range(1, len(visual.VISUAL_LAYER_SPECS) + 1):
-        e_in = np.concatenate([x[row], x[col], e], axis=1)
-        e_new, ce = _mlp2_fwd(w, f"g3.l{i}.edge", e_in)
-        m_in = np.concatenate([x[col], e_new], axis=1)
-        m, cm = _mlp2_fwd(w, f"g3.l{i}.node1", m_in)
-        counts = np.bincount(row, minlength=n).astype(m.dtype)
-        denom = np.maximum(counts, 1.0)
-        agg = np.zeros((n, m.shape[1]), dtype=m.dtype)
-        np.add.at(agg, row, m)
-        agg = agg / denom[:, None]
-        n_in = np.concatenate([x, agg], axis=1)
-        x_new, cnode = _mlp2_fwd(w, f"g3.l{i}.node2", n_in)
-        caches.append((x.shape[1], ce, cm, cnode, denom))
-        x, e = x_new, e_new
-    edge_logits, ch = _mlp2_fwd(w, "g3.head.edge", e)
-    state = (caches, row, col, n, ch, cn_cnn, ce_cnn, nj_in, ej_in)
-    return edge_logits, state
+    edge_logits, stack = _stack_fwd(
+        x, edge_index, e, w, "g3.", visual.VISUAL_LAYER_SPECS
+    )
+    return edge_logits, (stack, cn_cnn, ce_cnn, nj_in, ej_in)
 
 
 def backward(dlogits, w, state):
     """Gradients of the edge-NLL wrt every G3 weight (edge head,
     MetaLayers, joins, both CNNs; node head untouched — edges-only
     loss, like the reference)."""
-    caches, row, col, n, ch, cn_cnn, ce_cnn, nj_in, ej_in = state
-    g = {k: np.zeros_like(v) for k, v in w.items()}
-    de = _mlp2_bwd(w, g, "g3.head.edge", dlogits, ch)
-    dt = de.dtype
-    dx_out = np.zeros((n, visual.VISUAL_LAYER_SPECS[-1][3]), dtype=dt)
-    for i in range(len(visual.VISUAL_LAYER_SPECS), 0, -1):
-        d_x, ce, cm, cnode, denom = caches[i - 1]
-        dn_in = _mlp2_bwd(w, g, f"g3.l{i}.node2", dx_out, cnode)
-        dx_cur = dn_in[:, :d_x].copy()
-        dagg = dn_in[:, d_x:]
-        dm = (dagg / denom[:, None])[row]
-        dm_in = _mlp2_bwd(w, g, f"g3.l{i}.node1", dm.astype(dt), cm)
-        np.add.at(dx_cur, col, dm_in[:, :d_x])
-        de_total = de + dm_in[:, d_x:]
-        de_in = _mlp2_bwd(w, g, f"g3.l{i}.edge", de_total.astype(dt), ce)
-        np.add.at(dx_cur, row, de_in[:, :d_x])
-        np.add.at(dx_cur, col, de_in[:, d_x : 2 * d_x])
-        de = de_in[:, 2 * d_x :].astype(dt)
-        dx_out = dx_cur
+    stack, cn_cnn, ce_cnn, nj_in, ej_in = state
+    g, dx, de = _stack_bwd(
+        dlogits, w, stack, "g3.", visual.VISUAL_LAYER_SPECS
+    )
     # joins
-    g["g3.node_join.w"] += nj_in.T @ dx_out
-    g["g3.node_join.b"] += dx_out.sum(axis=0)
-    dnj = dx_out @ w["g3.node_join.w"].T
+    g["g3.node_join.w"] += nj_in.T @ dx
+    g["g3.node_join.b"] += dx.sum(axis=0)
+    dnj = dx @ w["g3.node_join.w"].T
     g["g3.edge_join.w"] += ej_in.T @ de
     g["g3.edge_join.b"] += de.sum(axis=0)
     dej = de @ w["g3.edge_join.w"].T
@@ -238,121 +196,3 @@ def backward(dlogits, w, state):
     _cnn_bwd(dnj[:, 4:], w, g, cn_cnn)
     _cnn_bwd(dej[:, 6:], w, g, ce_cnn)
     return g
-
-
-# ---------------------------------------------------------------- data
-
-
-def graph_from_media_visual(m, gt, strategy: str = "knn"):
-    """fixture media+gt row → (x, edges, edge_attr, node_crops,
-    edge_crops, edge_labels); crops cut by the same visual.crop_regions
-    the inference kernel uses."""
-    from ..fixtures.generate import png_decode_gray8
-
-    lines = sorted(m["ocr_lines"], key=lambda d: d["line_id"])
-    if not lines:
-        return None
-    polys = [[(p["x"], p["y"]) for p in ln["points"]] for ln in lines]
-    nb = polygons_to_bboxes(polys)
-    if strategy == "knn":
-        edges = knn.knn_edges(nb)
-    else:
-        from .visibility import visibility_edges
-
-        edges = visibility_edges(nb, m["width"], m["height"])
-    if len(edges) == 0:
-        return None
-    x = node_features(nb, m["width"], m["height"])
-    ea = edge_features(edges, nb, m["width"], m["height"])
-    gray = png_decode_gray8(m["image"])
-    ncrops, ecrops = visual.crop_regions(gray, nb, edges)
-    cells = gt["cells"]
-    if not cells:
-        return None
-    cb = polygons_to_bboxes(
-        [[(p["x"], p["y"]) for p in c["points"]] for c in cells]
-    )
-    grid = np.array(
-        [[c["start_row"], c["end_row"], c["start_col"], c["end_col"]]
-         for c in cells]
-    )
-    _, ey = labels.label_graph(nb, edges, cb, [c["type"] for c in cells], grid)
-    return x, edges, ea, ncrops, ecrops, ey
-
-
-def train_visual(
-    n_train_imgs: int = 120,
-    n_valid_imgs: int = 32,
-    epochs: int = 10,
-    batch_graphs: int = 8,
-    lr: float = 3e-4,
-    seed: int = 42,
-    strategy: str = "knn",
-    verbose: bool = False,
-):
-    """Train G3 on seeded synthetic grids; returns (best_weights,
-    history). Smaller corpus/epochs than G2's trainer — each G3 step
-    backprops two CNNs (~3× the forward's ~1.5 GMAC), and the edge-
-    classification task saturates on this synthetic corpus well before
-    G2's 30 epochs."""
-    from ..fixtures.generate import make_corpus
-
-    _, media_t, gt_t = make_corpus(0, n_train_imgs, seed=seed)
-    _, media_v, gt_v = make_corpus(0, n_valid_imgs, seed=seed + 1)
-    train_g = [
-        t
-        for t in (
-            graph_from_media_visual(m, g, strategy)
-            for m, g in zip(media_t, gt_t)
-        )
-        if t is not None
-    ]
-    valid_g = [
-        t
-        for t in (
-            graph_from_media_visual(m, g, strategy)
-            for m, g in zip(media_v, gt_v)
-        )
-        if t is not None
-    ]
-
-    w = visual.init_weights(seed)
-    opt = Adam(w, lr=lr)
-    rng = np.random.default_rng(seed)
-    best_acc, best_w, history = -1.0, dict(w), []
-
-    def valid_acc(weights):
-        hit = tot = 0
-        for x, e, ea, nc, ec, y in valid_g:
-            _, elp = visual.forward(x, e, ea, nc, ec, weights)
-            hit += int((elp.argmax(axis=1) == y).sum())
-            tot += len(y)
-        return hit / max(tot, 1)
-
-    for epoch in range(epochs):
-        order = rng.permutation(len(train_g))
-        losses = []
-        for start in range(0, len(order), batch_graphs):
-            g_acc = None
-            for j in order[start : start + batch_graphs]:
-                x, e, ea, nc, ec, y = train_g[j]
-                logits, state = forward_cached(x, e, ea, nc, ec, w)
-                loss, dlg = nll_grad(logits, y)
-                grads = backward(dlg, w, state)
-                losses.append(loss)
-                if g_acc is None:
-                    g_acc = grads
-                else:
-                    for k in g_acc:
-                        g_acc[k] += grads[k]
-            opt.step(w, g_acc)
-        acc = valid_acc(w)
-        history.append(
-            {"epoch": epoch, "loss": float(np.mean(losses)),
-             "valid_edge_acc": acc}
-        )
-        if verbose:
-            print(history[-1], flush=True)
-        if acc > best_acc:
-            best_acc, best_w = acc, {k: v.copy() for k, v in w.items()}
-    return best_w, history

@@ -19,8 +19,6 @@ assembly (§2.11; absent in the reference).
 
 from __future__ import annotations
 
-import itertools
-
 import numpy as np
 
 from ..core import (
@@ -28,6 +26,7 @@ from ..core import (
 )
 from ..core.bbox import polygons_to_bboxes
 from ..core.blas import limit_blas_threads
+
 
 def _visibility_edges_many(bboxes, node_off, widths, heights):
     """``visibility.visibility_edges`` per image, in batch rows."""
@@ -123,31 +122,6 @@ def run_kernel_batch(
     )
 
 
-def run_kernel_arrays_many(
-    images: list, weights: dict, strategy: str = "knn"
-) -> list:
-    """:func:`run_kernel_batch` over a list of (bboxes (n,4) int64,
-    texts, width, height, image-bytes-or-None) tuples, each row already
-    in line_id order. Returns one cell-text list per input image."""
-    node_off = np.cumsum([0] + [len(im[0]) for im in images])
-    bboxes = np.concatenate(
-        [np.empty((0, 4), dtype=np.int64)]
-        + [np.asarray(im[0], dtype=np.int64).reshape(-1, 4) for im in images]
-    )
-    cell_img, cells = run_kernel_batch(
-        bboxes,
-        list(itertools.chain.from_iterable(im[1] for im in images)),
-        node_off,
-        [im[2] for im in images],
-        [im[3] for im in images],
-        [im[4] for im in images],
-        weights,
-        strategy,
-    )
-    bounds = np.searchsorted(cell_img, np.arange(len(images) + 1)).tolist()
-    return [cells[a:b] for a, b in zip(bounds[:-1], bounds[1:])]
-
-
 def run_kernel(
     ocr_lines: list,
     width: int,
@@ -181,9 +155,10 @@ def run_kernel(
     polys = [[pt(p) for p in line["points"]] for line in lines]
     texts = [line["text"] for line in lines]
     bboxes = polygons_to_bboxes(polys)
-    return run_kernel_arrays_many(
-        [(bboxes, texts, width, height, image)], weights, strategy
-    )[0]
+    return run_kernel_batch(
+        bboxes, texts, np.array([0, len(bboxes)]), [width], [height],
+        [image], weights, strategy,
+    )[1]
 
 
 def extract_corpus(

@@ -5,6 +5,8 @@ comparison harness that mirrors the driver's correctness gate.
 
 from __future__ import annotations
 
+import itertools
+
 import duckdb
 import numpy as np
 import pandas as pd
@@ -29,6 +31,7 @@ from table_recognition_spark.core.visibility import (
 )
 from table_recognition_spark.operators.common import tokens
 from table_recognition_spark.operators.dedup import N_MINHASH, _shingles
+from table_recognition_spark.oracle.extract import run_kernel_batch
 
 
 # ------------------------------------------- Spark vs DuckDB comparison
@@ -429,6 +432,32 @@ def assemble_cells_per_image(edge_index, edge_cls, bboxes, texts) -> list:
         comps.append((int(b[ids, 1].min()), int(b[ids, 0].min()), min(ids), ids))
     comps.sort(key=lambda t: (t[0], t[1], t[2]))
     return ["\n".join(texts[i] for i in ids) for _, _, _, ids in comps]
+
+
+def run_kernel_arrays_many(
+    images: list, weights: dict, strategy: str = "knn"
+) -> list:
+    """``oracle.extract.run_kernel_batch`` over a list of (bboxes (n,4)
+    int64, texts, width, height, image-bytes-or-None) tuples, each row
+    already in line_id order. Returns one cell-text list per input
+    image: the batch side of the batch-vs-per-image kernel tests."""
+    node_off = np.cumsum([0] + [len(im[0]) for im in images])
+    bboxes = np.concatenate(
+        [np.empty((0, 4), dtype=np.int64)]
+        + [np.asarray(im[0], dtype=np.int64).reshape(-1, 4) for im in images]
+    )
+    cell_img, cells = run_kernel_batch(
+        bboxes,
+        list(itertools.chain.from_iterable(im[1] for im in images)),
+        node_off,
+        [im[2] for im in images],
+        [im[3] for im in images],
+        [im[4] for im in images],
+        weights,
+        strategy,
+    )
+    bounds = np.searchsorted(cell_img, np.arange(len(images) + 1)).tolist()
+    return [cells[a:b] for a, b in zip(bounds[:-1], bounds[1:])]
 
 
 def bilinear_resize_one(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:

@@ -93,3 +93,35 @@ def test_train_mode_runs(tmp_path):
         trainer.train = orig
     w = gnn.load_weights(str(out))
     assert all(isinstance(v, np.ndarray) for v in w.values())
+
+
+def test_train_mode_trains_the_configured_model(tmp_path):
+    """--train trains the model --infer would run: with
+    ``visual_features = True`` the written weights are G3's, trained on
+    the configured edge discovery."""
+    from table_recognition_spark.cli import _run_train
+    from table_recognition_spark.core import gnn, visual
+    from table_recognition_spark.core import train as trainer
+
+    ini = tmp_path / "c.ini"
+    out = tmp_path / "m.npz"
+    ini.write_text(
+        "[data_preparation]\nvisual_features = True\n"
+        "edge_discovery = k-nearest-neighbors\n"
+        f"[train]\nepochs = 1\nmodel_path = {out}\n"
+    )
+    seen = {}
+    orig = trainer.train
+
+    def small(**kw):
+        seen.update(kw)
+        kw.update(n_train_imgs=2, n_valid_imgs=1)
+        return orig(**kw)
+
+    trainer.train = small
+    try:
+        assert _run_train(ModeConfig(str(ini))) == 0
+    finally:
+        trainer.train = orig
+    assert visual.is_visual(gnn.load_weights(str(out)))
+    assert seen["strategy"] == "knn"

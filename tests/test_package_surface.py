@@ -31,7 +31,6 @@ ALLOW = {
     "coords_string_to_points": _REFERENCE + " (S-rows)",
     "edge_visibility_features": _REFERENCE + " (J6)",
     "polygons_see_each_other": _REFERENCE + " (J6)",
-    "train_visual": "regenerates weights/g3_trained_seed42.npz",
 }
 
 

@@ -144,7 +144,6 @@ def test_batch_kernel_bitwise_equals_per_image_reference(batches, cls_seed):
     bitwise — whatever the batch split and image order."""
     import oracles
     from table_recognition_spark.core import assemble, geometry
-    from table_recognition_spark.oracle.extract import run_kernel_arrays_many
 
     w = gnn.default_weights()
     rng = np.random.default_rng(cls_seed)
@@ -169,7 +168,7 @@ def test_batch_kernel_bitwise_equals_per_image_reference(batches, cls_seed):
         cell_img, cells = assemble.assemble_cells_many(
             edges, cls, bb, [t for _, ts, *_ in batch for t in ts], off
         )
-        kernel_cells = run_kernel_arrays_many(
+        kernel_cells = oracles.run_kernel_arrays_many(
             [im + (None,) for im in batch], w
         )
         p_off = np.cumsum([0] + [n * (n - 1) for n in sizes])

@@ -64,7 +64,8 @@ def test_gradient_check_float64():
 @pytest.mark.slow
 def test_training_improves_edge_accuracy():
     w, hist = train.train(
-        n_train_imgs=60, n_valid_imgs=20, epochs=8, lr=1e-3, seed=5
+        gnn.init_weights(5), n_train_imgs=60, n_valid_imgs=20, epochs=8,
+        lr=1e-3, seed=5,
     )
     first, best = hist[0]["valid_edge_acc"], max(
         h["valid_edge_acc"] for h in hist

@@ -212,7 +212,7 @@ def test_visual_path_ingests_color_jpeg_media(spark):
 
 
 def test_fused_cnn_bit_identical_to_per_image():
-    """Cross-image CNN fusion (run_kernel_arrays_many / forward's
+    """Cross-image CNN fusion (run_kernel_batch / forward_many's
     node_feats seam) must be BIT-identical to the per-image path:
     conv2d multiplies a 3-D (B, H'·W', C·k·k) stack, one fixed-shape GEMM
     per crop, and depthwise/pool/avg are elementwise per sample. Span parity between the fused
@@ -247,11 +247,10 @@ def test_run_kernel_arrays_many_matches_per_image():
     """The kernel over a batch of images returns exactly each image's
     cells when it runs alone, including empty-bbox rows, for G3 and G2
     weights alike."""
+    from oracles import run_kernel_arrays_many
+
+    from table_recognition_spark.core.bbox import polygons_to_bboxes
     from table_recognition_spark.fixtures.generate import _make_table_image
-    from table_recognition_spark.oracle.extract import (
-        polygons_to_bboxes,
-        run_kernel_arrays_many,
-    )
 
     vw = visual.default_weights()
     inputs = []
@@ -303,3 +302,43 @@ def test_crop_regions_bitwise_equals_per_crop_reference():
         for g, e in zip(got, exp):
             assert g.shape == e.shape and g.dtype == e.dtype
             assert np.array_equal(g.view(np.uint32), e.view(np.uint32))
+
+
+def test_default_weights_name_a_missing_artifact(tmp_path):
+    """Imported from a ``--py-files`` zip (scripts/build_pyfiles.sh) the
+    package has no ``weights/`` beside it: each default loader must raise
+    an error naming its trained artifact, never fall back to other
+    weights (for G3 that was the untrained init)."""
+    import os
+    import subprocess
+    import sys
+    import zipfile
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    zpath = tmp_path / "trs.zip"
+    with zipfile.ZipFile(zpath, "w") as z:
+        for root, _dirs, files in os.walk(
+            os.path.join(repo, "table_recognition_spark")
+        ):
+            for f in files:
+                if f.endswith(".py"):
+                    p = os.path.join(root, f)
+                    z.write(p, os.path.relpath(p, repo))
+    code = (
+        "from table_recognition_spark.core import gnn, visual\n"
+        "for mod in (visual, gnn):\n"
+        "    try:\n"
+        "        mod.default_weights()\n"
+        "    except OSError as exc:\n"
+        "        print(exc)\n"
+        "    else:\n"
+        "        print('loaded')\n"
+    )
+    env = dict(os.environ, PYTHONPATH=str(zpath))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=tmp_path, env=env,
+        capture_output=True, text=True, check=True,
+    ).stdout.splitlines()
+    assert len(out) == 2, out
+    assert "g3_trained_seed42.npz" in out[0], out
+    assert "g2_trained_seed42.npz" in out[1], out

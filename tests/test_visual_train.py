@@ -3,7 +3,7 @@
 import numpy as np
 import pytest
 
-from table_recognition_spark.core import visual, visual_train as vt
+from table_recognition_spark.core import train, visual, visual_train as vt
 from table_recognition_spark.core.gnn import _log_softmax
 from table_recognition_spark.core.train import nll_grad
 
@@ -88,7 +88,7 @@ def test_node_head_untouched_by_edge_loss():
 def test_one_adam_step_reduces_loss():
     x, ei, ea, nc, ec, y = _toy()
     w = visual.init_weights(7)
-    opt = vt.Adam(w, lr=1e-3)
+    opt = train.Adam(w, lr=1e-3)
     logits, state = vt.forward_cached(x, ei, ea, nc, ec, w)
     l0, dlg = nll_grad(logits, y)
     for _ in range(5):
@@ -104,8 +104,9 @@ def test_short_training_improves_validation_accuracy():
     """Two epochs on 12 synthetic grids must beat the seeded init on a
     held-out set (the committed artifact's 14-epoch run is the real
     training; this pins that the loop learns at all)."""
-    best_w, history = vt.train_visual(
-        n_train_imgs=12, n_valid_imgs=6, epochs=3, batch_graphs=4, lr=1e-3
+    best_w, history = train.train(
+        visual.init_weights(42), n_train_imgs=12, n_valid_imgs=6, epochs=3,
+        batch_graphs=4, lr=1e-3,
     )
     assert len(history) == 3
     # the loss must fall decisively (seeded-init loss starts ~15-20;
@@ -139,7 +140,7 @@ def test_trained_artifact_beats_seeded_init_if_present():
     hits = {"trained": 0, "init": 0}
     tot = 0
     for m, g in zip(media, gt):
-        t = vt.graph_from_media_visual(m, g)
+        t = train.graph_from_media(m, g, crops=True)
         if t is None:
             continue
         x, e, ea, nc, ec, y = t
