@@ -17,8 +17,7 @@ re-expresses that surface over the Spark engine:
 - :class:`ModeConfig` — configparser reader for the reference's
   config.ini dialect (sections ``data_preparation``/``train``/``infer``;
   the keys the Spark engine consumes: ``edge_discovery``,
-  ``input_graph_colorer``, ``visual_features``, ``model_name``,
-  ``epochs``, ``learning_rate``, paths).
+  ``visual_features``, ``epochs``, ``learning_rate``, paths).
 - :func:`run_mode` — dispatch: data-preparation → seeded fixture corpus
   written as parquet (+ optional graph visualizations, reference
   data_preparation.py); train → the numpy training loop (core/train.py)
@@ -84,10 +83,6 @@ class ModeConfig:
     @property
     def learning_rate(self) -> float:
         return float(self.get("train", "learning_rate", "3e-4"))
-
-    @property
-    def model_name(self) -> str:
-        return self.get("train", "model_name", "NodeEdgeMLPEnding")
 
     @property
     def model_path(self) -> str:
@@ -176,7 +171,11 @@ def _run_train(cfg: ModeConfig) -> int:
     )
     gnn.save_weights(best_w, cfg.model_path)
     acc = history[-1]["valid_edge_acc"] if history else None
-    print(f"trained {cfg.model_name}: final val acc {acc} -> {cfg.model_path}")
+    name = (
+        "VisualNodeEdgeMLPEnding" if visual.is_visual(best_w)
+        else "NodeEdgeMLPEnding"
+    )
+    print(f"trained {name}: final val acc {acc} -> {cfg.model_path}")
     return 0
 
 

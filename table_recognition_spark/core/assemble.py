@@ -87,7 +87,12 @@ def assemble_cells_many(
     ))
     comp = comp[order]
     starts = np.flatnonzero(np.r_[True, comp[1:] != comp[:-1]])
-    lines = np.asarray(texts, dtype=object)[order].tolist()
+    # a null line text is "", as the PAGE-XML readers read a missing
+    # TextEquiv
+    lines = [
+        "" if t is None else t
+        for t in np.asarray(texts, dtype=object)[order].tolist()
+    ]
     bounds = np.r_[starts, n].tolist()
     cells = [
         "\n".join(lines[s:e]) for s, e in zip(bounds[:-1], bounds[1:])

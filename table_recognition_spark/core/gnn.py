@@ -107,55 +107,6 @@ def default_weights() -> dict:
     return _committed_weights("g2_trained_seed42.npz")
 
 
-_RAW_MAGIC = b"TRW2"
-
-
-def weights_to_bytes(weights: dict) -> bytes:
-    """Serialize a weights dict for the wire (broadcasts) and for its
-    content digest (broadcast key, checkpoint fingerprint). Raw layout —
-    magic, little-endian u64 header length, JSON header [{n,d,s,o}...],
-    concatenated C-order array bytes — instead of npz: parsing 59 MB of
-    npz (zip members, CRCs, one alloc per array) cost ~0.6 s in EVERY
-    python worker's first visual task, while ``weights_from_bytes`` on this layout is
-    ~zero-copy (np.frombuffer views over the payload). Deterministic
-    (sorted keys) so checkpoint fingerprints stay stable."""
-    import json
-
-    header, blobs, off = [], [], 0
-    for k in sorted(weights):
-        a = np.ascontiguousarray(weights[k])
-        b = a.tobytes()
-        header.append(
-            {"n": k, "d": a.dtype.str, "s": list(a.shape), "o": off}
-        )
-        blobs.append(b)
-        off += len(b)
-    hj = json.dumps(header, sort_keys=True).encode()
-    return (
-        _RAW_MAGIC + len(hj).to_bytes(8, "little") + hj + b"".join(blobs)
-    )
-
-
-def weights_from_bytes(data: bytes) -> dict:
-    """Inverse of :func:`weights_to_bytes`, whose ``TRW2`` layout is the
-    only one it reads. Arrays are read-only zero-copy views over ``data``
-    (forward passes never mutate weights)."""
-    import json
-
-    hl = int.from_bytes(data[4:12], "little")
-    header = json.loads(bytes(data[12 : 12 + hl]))
-    base = 12 + hl
-    out = {}
-    for h in header:
-        n = 1
-        for dim in h["s"]:
-            n *= dim
-        out[h["n"]] = np.frombuffer(
-            data, dtype=np.dtype(h["d"]), count=n, offset=base + h["o"]
-        ).reshape(h["s"])
-    return out
-
-
 def _matmul_blocks(x, w, off):
     """``x @ w``, one GEMM per row block ``off[i]:off[i + 1]``: a block's
     rows are bit-identical to the product of that block alone, which one

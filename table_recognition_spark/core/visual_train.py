@@ -1,7 +1,7 @@
 """G3 autodiff for :func:`train.train`: the crop CNNs and the joins.
 
 The reference's *configured default* is the visual model (config.ini:44
-model_name = NodeEdgeMLPEndingVisual). ``train.train`` trains it when
+model_name = VisualNodeEdgeMLPEnding). ``train.train`` trains it when
 handed G3 weights (``visual.init_weights``), with this module's
 :func:`forward_cached`/:func:`backward`: the exact backward pass of
 ``visual.forward`` through both crop CNNs (depthwise/pointwise/3×3 conv,

@@ -41,7 +41,6 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..core import boilerplate
-from ..core.gnn import weights_from_bytes, weights_to_bytes
 from ..core.visual import is_visual
 
 CELLS_SCHEMA = T.StructType(
@@ -54,74 +53,48 @@ CELLS_SCHEMA = T.StructType(
 
 OUT_SPAN_STRUCT = "struct<kind:string,text:string,media_ref:string,offset:int>"
 
-# per-worker weights cache: an artifact is parsed from the broadcast bytes
-# once per Python worker process, keyed by the artifact's CONTENT digest
-# (computed driver-side, shipped in the task closure), so a reused worker
-# parses the 59 MB G3 npz once across tasks and query invocations that use
-# the same weights. Only module-level functions may touch it: cloudpickle
-# ships a nested function by value, with a private copy of this dict.
-_WEIGHTS_CACHE: dict = {}
-
 # driver-side memos: the content digest of each recent weights dict
-# (serializing and hashing the 64 MB G3 artifact takes ~0.3 s, so it must
-# not run on every query; an entry holds its dict so an id() key can't be
-# recycled), and one broadcast per digest on the caller's SparkContext —
-# repeated query invocations (and bench repeats) reuse the live broadcast
-# instead of re-shipping the artifact (59 MB for G3, 145 KB for G2 — the
-# latter used to ride the task closure, i.e. ~37 MB of per-task IPC at 256
-# kernel tasks). A broadcast holds its SparkContext, so entries of any
-# other context are dropped: a stopped context is not kept alive.
+# (hashing the 64 MB G3 artifact takes ~0.13 s, so it must not run on
+# every query; an entry holds its dict so an id() key can't be recycled),
+# and one broadcast per digest on the caller's SparkContext — repeated
+# query invocations (and bench repeats) reuse the live broadcast instead
+# of re-shipping the artifact, and each reused Python worker keeps the
+# value it loaded in PySpark's broadcast registry. A broadcast holds its
+# SparkContext, so entries of any other context are dropped: a stopped
+# context is not kept alive.
 _DIGESTS: dict = {}
 _BC_CACHE: dict = {}
 
 
-def _memo_digest(wdict: dict, data: bytes) -> str:
-    """Memoize and return the md5 hex of ``data``, the serialized
-    ``wdict``, keeping the last few dicts."""
-    if len(_DIGESTS) >= 8:
-        del _DIGESTS[next(iter(_DIGESTS))]
-    _DIGESTS[id(wdict)] = (wdict, hashlib.md5(data).hexdigest())
-    return _DIGESTS[id(wdict)][1]
-
-
 def weights_digest(wdict: dict) -> str:
-    """md5 hex of ``weights_to_bytes(wdict)``, memoized for the last few
-    dicts: the broadcast cache key and the checkpoint lineage's weights
-    fingerprint."""
+    """md5 hex over each array's name, dtype, shape and bytes, in name
+    order, memoized for the last 8 dicts: the broadcast cache key and the
+    checkpoint lineage's weights fingerprint."""
     hit = _DIGESTS.get(id(wdict))
-    return hit[1] if hit else _memo_digest(wdict, weights_to_bytes(wdict))
+    if hit is None:
+        h = hashlib.md5()
+        for k in sorted(wdict):
+            a = np.asarray(wdict[k])
+            h.update(repr((k, a.dtype.str, a.shape)).encode())
+            h.update(np.ascontiguousarray(a))
+        if len(_DIGESTS) >= 8:
+            del _DIGESTS[next(iter(_DIGESTS))]
+        hit = _DIGESTS[id(wdict)] = (wdict, h.hexdigest())
+    return hit[1]
 
 
 def _broadcast_weights(sc, wdict: dict):
-    """(broadcast, content digest) for a weights dict on ``sc``: one live
-    broadcast per content digest, created on the first call. A dict not
-    yet digested is serialized once, for its digest and its broadcast
-    both (~0.3 s for G3)."""
-    data = None
-    if id(wdict) not in _DIGESTS:
-        data = weights_to_bytes(wdict)
-        _memo_digest(wdict, data)
+    """The broadcast of a weights dict on ``sc``: one live broadcast per
+    content digest, created on the first call."""
     digest = weights_digest(wdict)
     for key in [k for k, (ctx, _) in _BC_CACHE.items() if ctx is not sc]:
         del _BC_CACHE[key]
     if digest not in _BC_CACHE:
-        _BC_CACHE[digest] = (sc, sc.broadcast(
-            weights_to_bytes(wdict) if data is None else data
-        ))
-    return _BC_CACHE[digest][1], digest
+        _BC_CACHE[digest] = (sc, sc.broadcast(wdict))
+    return _BC_CACHE[digest][1]
 
 
-def _cached_weights(weights_bc, w_digest: str) -> dict:
-    """The parsed weights for ``w_digest``, from this worker's cache or
-    parsed from the broadcast bytes on a miss."""
-    w = _WEIGHTS_CACHE.get(w_digest)
-    if w is None:
-        w = weights_from_bytes(weights_bc.value)
-        _WEIGHTS_CACHE[w_digest] = w
-    return w
-
-
-def _kernel_fn(weights_bc, w_digest: str, strategy: str = "knn"):
+def _kernel_fn(weights_bc, strategy: str = "knn"):
     """Build the Arrow-batched kernel (``mapInArrow``).
 
     Each record batch is decoded into flat arrays — every image's lines
@@ -137,10 +110,11 @@ def _kernel_fn(weights_bc, w_digest: str, strategy: str = "knn"):
     materialization contended so badly it ran 3.7× SLOWER than at 8
     workers — measured 6.7 s → 24.7 s for the same input.)
 
-    The model's weights arrive via ``sparkContext.broadcast`` (one copy
-    per executor, fetched once) — never the task closure, which is
-    re-shipped to the Python worker on EVERY task — and the parsed
-    arrays are memoized per worker by :func:`_cached_weights`.
+    The model's weights dict arrives via ``sparkContext.broadcast`` (one
+    copy per executor, fetched once) — never the task closure, which is
+    re-shipped to the Python worker on EVERY task. A reused worker
+    unpickles it once: PySpark's worker-side broadcast registry keeps the
+    loaded ``weights_bc.value`` for every later task.
 
     Lines with no points are dropped before graph construction (the
     oracle's ``run_kernel`` drops them too); a row left with no lines has
@@ -150,7 +124,7 @@ def _kernel_fn(weights_bc, w_digest: str, strategy: str = "knn"):
     def fn(batches):
         from ..oracle.extract import run_kernel_batch
 
-        w = _cached_weights(weights_bc, w_digest)
+        w = weights_bc.value
         g3 = is_visual(w)
 
         for rb in batches:
@@ -233,7 +207,8 @@ def recognize_tables(
 
     The weights pick the model: G3 weights (``visual.is_visual``) also
     read the ``image`` binary column — the only path that does; G2 prunes
-    it at the scan. The kernel's weights ship to executors as a broadcast.
+    it at the scan. The weights dict itself is the broadcast (one per
+    content digest and context, :func:`_broadcast_weights`).
 
     Fan-out: the rows are round-robined into
     ``max(1, min(defaultParallelism, n_rows_bound))`` kernel tasks, one
@@ -265,13 +240,11 @@ def recognize_tables(
     n_tasks = sc.defaultParallelism
     if n_rows_bound is not None:
         n_tasks = max(1, min(n_tasks, n_rows_bound))
-    w_bc, w_digest = _broadcast_weights(sc, weights)
+    w_bc = _broadcast_weights(sc, weights)
     return (
         media_df.select(*cols)
         .repartition(n_tasks)
-        .mapInArrow(
-            _kernel_fn(w_bc, w_digest, strategy), schema=CELLS_SCHEMA
-        )
+        .mapInArrow(_kernel_fn(w_bc, strategy), schema=CELLS_SCHEMA)
     )
 
 

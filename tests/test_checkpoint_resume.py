@@ -105,6 +105,37 @@ def test_resume_refuses_other_lineage(
     assert len(ck.committed()) == 1
 
 
+def test_weights_digest_is_the_arrays_content():
+    """The lineage's weights fingerprint depends on the arrays alone:
+    equal content gives one digest, whatever the dict, its key order or
+    its arrays' memory layout; one element, a dtype, a shape or a name
+    changes it, and the committed G2 and G3 artifacts differ."""
+    import numpy as np
+
+    from table_recognition_spark.core import visual
+    from table_recognition_spark.pipeline.extract import weights_digest
+
+    w = gnn.init_weights(42)
+    same = {k: np.asfortranarray(w[k]) for k in reversed(sorted(w))}
+    assert weights_digest(same) == weights_digest(w)
+
+    k = next(k for k in sorted(w) if w[k].ndim == 2)
+    element = w[k].copy()
+    element[0, 0] += 1
+    variants = {
+        "element": {**w, k: element},
+        "dtype": {**w, k: w[k].view(np.int32)},
+        "shape": {**w, k: w[k].reshape(-1)},
+        "name": {("x" + n if n == k else n): a for n, a in w.items()},
+    }
+    digests = {name: weights_digest(v) for name, v in variants.items()}
+    assert weights_digest(w) not in digests.values()
+    assert len(set(digests.values())) == len(digests), digests
+    assert weights_digest(gnn.default_weights()) != weights_digest(
+        visual.default_weights()
+    )
+
+
 @pytest.mark.spark
 def test_checkpoint_resume_query_leaves_no_chunk_store(spark):
     """The driver query removes its chunk store before returning, and

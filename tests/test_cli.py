@@ -58,16 +58,15 @@ def test_mode_config_reads_reference_dialect(tmp_path):
     assert cfg.prepared_data_dir == "./out"
     assert cfg.epochs == 500
     assert cfg.learning_rate == 3e-4
-    assert cfg.model_name == "VisualNodeEdgeMLPEnding"
     # missing file → defaults, runnable
     d = ModeConfig(None)
     assert d.edge_discovery == "visibility"
     assert d.visual_features is False
 
 
-def test_train_mode_runs(tmp_path):
-    """--train end-to-end (tiny budget via config): trains and writes
-    the weights artifact."""
+def test_train_mode_runs(tmp_path, capsys):
+    """--train end-to-end (tiny budget via config): trains G2, names it
+    and writes the weights artifact."""
     import numpy as np
 
     from table_recognition_spark.cli import _run_train
@@ -91,14 +90,15 @@ def test_train_mode_runs(tmp_path):
         assert _run_train(cfg) == 0
     finally:
         trainer.train = orig
+    assert "trained NodeEdgeMLPEnding:" in capsys.readouterr().out
     w = gnn.load_weights(str(out))
     assert all(isinstance(v, np.ndarray) for v in w.values())
 
 
-def test_train_mode_trains_the_configured_model(tmp_path):
+def test_train_mode_trains_the_configured_model(tmp_path, capsys):
     """--train trains the model --infer would run: with
     ``visual_features = True`` the written weights are G3's, trained on
-    the configured edge discovery."""
+    the configured edge discovery, and the printed name is G3's."""
     from table_recognition_spark.cli import _run_train
     from table_recognition_spark.core import gnn, visual
     from table_recognition_spark.core import train as trainer
@@ -125,3 +125,4 @@ def test_train_mode_trains_the_configured_model(tmp_path):
         trainer.train = orig
     assert visual.is_visual(gnn.load_weights(str(out)))
     assert seen["strategy"] == "knn"
+    assert "trained VisualNodeEdgeMLPEnding:" in capsys.readouterr().out

@@ -51,7 +51,7 @@ def test_parity_with_kernel_repartition(spark, tiny_corpus, weights):
     _run_parity(spark, tiny_corpus, weights, n_rows_bound=7)
 
 
-def _parity_in_one_batch(spark, weights, media):
+def _parity_in_one_batch(spark, weights, media, fn=extract):
     """Parity for ``media`` run as one kernel task (``n_rows_bound=1``),
     so all rows share one Arrow record batch. One doc references every
     image, and one doc per image references only it."""
@@ -71,7 +71,7 @@ def _parity_in_one_batch(spark, weights, media):
         {"doc_id": f"only_{ref}", "spans": [image(ref, 0), text(1)]}
         for ref in refs
     ]
-    _run_parity(spark, (docs, media, None), weights, n_rows_bound=1)
+    _run_parity(spark, (docs, media, None), weights, fn=fn, n_rows_bound=1)
 
 
 @pytest.mark.spark
@@ -121,6 +121,20 @@ def test_parity_zero_point_lines_in_batch(spark, weights, case):
             media[1], ocr_lines=[_without_points(x) for x in media[1]["ocr_lines"]]
         )
     _parity_in_one_batch(spark, weights, media)
+
+
+@pytest.mark.spark
+def test_parity_null_line_text(spark, weights):
+    """An OCR line whose text is null reads as "" in the kernel and in
+    the oracle alike, as the PAGE-XML readers read a missing TextEquiv;
+    it fails neither."""
+    from table_recognition_spark.fixtures.generate import make_corpus
+
+    _, media, _ = make_corpus(0, 2, seed=5)
+    lines = list(media[0]["ocr_lines"])
+    lines[0] = dict(lines[0], text=None)
+    media[0] = dict(media[0], ocr_lines=lines)
+    _parity_in_one_batch(spark, weights, media, fn=extract_flat)
 
 
 def _span(kind, offset, ref="", text=""):

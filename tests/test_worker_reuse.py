@@ -1,8 +1,7 @@
 """Reused Python workers keep their per-process state across tasks: zip
-archive directories (``zipdir.py``) and parsed kernel weights
-(``pipeline.extract._cached_weights``)."""
+archive directories (``zipdir.py``) and the loaded kernel weights
+(PySpark's broadcast registry)."""
 
-import hashlib
 import importlib
 import sys
 import zipfile
@@ -11,7 +10,6 @@ import zipimport
 import pytest
 
 from table_recognition_spark import zipdir
-from table_recognition_spark.core import gnn
 
 needs_lazy_zip_reread = pytest.mark.skipif(
     sys.version_info >= (3, 13),
@@ -113,104 +111,75 @@ def test_reused_worker_task_reads_no_unchanged_zip(spark):
 
 
 @pytest.mark.spark
-def test_weights_parsed_once_per_worker(spark, weights, tmp_path):
-    """Across 3 × cores kernel tasks, each Python worker parses the
-    broadcast weights at most once."""
-    import uuid
-
-    from table_recognition_spark.core.gnn import weights_to_bytes
+def test_weights_parsed_once_per_worker(spark, weights):
+    """Across 3 × cores kernel tasks, each Python worker unpickles the
+    broadcast weights once: every task on it sees one weights object,
+    the value PySpark's worker-side broadcast registry keeps."""
     from table_recognition_spark.fixtures.generate import (
         corpus_to_spark,
         make_corpus,
     )
-    from table_recognition_spark.pipeline.extract import (
-        CELLS_SCHEMA,
-        _kernel_fn,
-    )
 
-    class LoggingBroadcast:
-        """Broadcast stand-in that logs the reading worker's PID:
-        ``.value`` is read only to parse the weights."""
+    ex = importlib.import_module("table_recognition_spark.pipeline.extract")
+    bc = ex._broadcast_weights(spark.sparkContext, weights)
+    kernel = ex._kernel_fn(bc)
 
-        def __init__(self, data, log_dir):
-            self.data, self.log_dir = data, log_dir
+    def probe(batches):
+        import os
+        import sys
 
-        @property
-        def value(self):
-            import os
+        import pyarrow as pa
 
-            with open(os.path.join(self.log_dir, "reads"), "a") as f:
-                f.write(f"{os.getpid()}\n")
-            return self.data
+        seen = getattr(sys, "_weights_probe", None)
+        if seen is None:
+            seen = sys._weights_probe = []
+        w = bc.value
+        seen.append(w)  # held, so no id() is recycled
+        n_cells = sum(out.num_rows for out in kernel(batches))
+        yield pa.RecordBatch.from_pydict({
+            "pid": [os.getpid()], "wid": [id(w)], "cells": [n_cells],
+        })
 
     n_tasks = 3 * spark.sparkContext.defaultParallelism
     docs, media, _ = make_corpus(1, n_tasks, seed=3)
     _, media_df = corpus_to_spark(spark, docs, media)
-    bc = LoggingBroadcast(weights_to_bytes(weights), str(tmp_path))
-    kernel = _kernel_fn(bc, uuid.uuid4().hex)  # a digest no worker has seen
     rows = (
         media_df.select("media_ref", "ocr_lines", "width", "height")
         .repartition(n_tasks)
-        .mapInArrow(kernel, schema=CELLS_SCHEMA)
+        .mapInArrow(probe, schema="pid long, wid long, cells long")
         .collect()
     )
-    assert rows
-    pids = (tmp_path / "reads").read_text().split()
-    assert pids, "no worker parsed the weights"
-    assert len(pids) == len(set(pids)), f"parsed twice in a worker: {pids}"
-    assert len(pids) < n_tasks, "no task ran on a reused worker"
+    assert sum(r["cells"] for r in rows) > 0
+    by_pid = {}
+    for r in rows:
+        by_pid.setdefault(r["pid"], set()).add(r["wid"])
+    assert len(by_pid) < len(rows), "no task ran on a reused worker"
+    assert all(len(ids) == 1 for ids in by_pid.values()), by_pid
 
 
 def test_broadcast_cache_holds_only_the_callers_context(weights, monkeypatch):
-    """Driver side, one broadcast per weights content on the caller's
-    SparkContext: the same dict on the same context broadcasts once, and
-    a second context gets its own broadcast while the cache drops the
-    first's (a broadcast holds its context, so a stopped one would stay
-    alive)."""
+    """Driver side, one broadcast of the weights dict itself per weights
+    content on the caller's SparkContext: the same dict on the same
+    context broadcasts once, and a second context gets its own broadcast
+    while the cache drops the first's (a broadcast holds its context, so
+    a stopped one would stay alive)."""
     # the module, not the ``extract`` function the package re-exports
     ex = importlib.import_module("table_recognition_spark.pipeline.extract")
 
     class Context:
         def __init__(self):
-            self.sent = 0
+            self.sent = []
 
-        def broadcast(self, data):
-            self.sent += 1
+        def broadcast(self, value):
+            self.sent.append(value)
             return object()
 
     monkeypatch.setattr(ex, "_BC_CACHE", {})
     first, second = Context(), Context()
-    bc, digest = ex._broadcast_weights(first, weights)
-    assert ex._broadcast_weights(first, weights) == (bc, digest)
-    assert first.sent == 1
+    bc = ex._broadcast_weights(first, weights)
+    assert ex._broadcast_weights(first, weights) is bc
+    assert len(first.sent) == 1 and first.sent[0] is weights
 
-    bc2, digest2 = ex._broadcast_weights(second, weights)
-    assert (second.sent, digest2) == (1, digest) and bc2 is not bc
+    bc2 = ex._broadcast_weights(second, weights)
+    assert len(second.sent) == 1 and bc2 is not bc
     assert [ctx for ctx, _ in ex._BC_CACHE.values()] == [second]
-
-
-def test_first_broadcast_serializes_the_weights_once(weights, monkeypatch):
-    """A weights dict not yet digested is serialized once for both its
-    content digest and its broadcast, and the broadcast ships those very
-    bytes; the digest memo then answers ``weights_digest``."""
-    ex = importlib.import_module("table_recognition_spark.pipeline.extract")
-    calls = []
-
-    def to_bytes(w):
-        calls.append(w)
-        return gnn.weights_to_bytes(w)
-
-    class Context:
-        def broadcast(self, data):
-            self.data = data
-            return object()
-
-    monkeypatch.setattr(ex, "_BC_CACHE", {})
-    monkeypatch.setattr(ex, "_DIGESTS", {})
-    monkeypatch.setattr(ex, "weights_to_bytes", to_bytes)
-    ctx = Context()
-    _, digest = ex._broadcast_weights(ctx, weights)
-    assert len(calls) == 1
-    assert ctx.data == gnn.weights_to_bytes(weights)
-    assert digest == hashlib.md5(ctx.data).hexdigest()
-    assert ex.weights_digest(weights) == digest and len(calls) == 1
