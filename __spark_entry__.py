@@ -189,6 +189,7 @@ def _pipeline_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from table_recognition_spark.pipeline.checkpoint import (
         CheckpointedExtract,
+        SimulatedCrash,
     )
     from table_recognition_spark.pipeline.flagship import (
         fixture_media,
@@ -210,7 +211,7 @@ def _pipeline_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         try:
             ck.run(spark, docs, media, _weights(), fail_after=1)
-        except RuntimeError:
+        except SimulatedCrash:
             pass
         assert len(ck.committed()) == 1, "crash must leave a partial run"
         resumed = ck.run(spark, docs, media, _weights())

@@ -8,7 +8,8 @@ snapshot/commit contract is implemented on a plain directory layout
 without touching the pipeline):
 
     out_dir/
-      data/chunk=K/*.parquet     -- output spans for doc-hash chunk K
+      data/chunk=K/*.parquet     -- doc-hash chunk K's (doc_id, spans):
+                                    extract_flat's rows, nested per doc
       _progress/chunk_K.parquet  -- the commit record for chunk K
 
 Commit protocol: write data for chunk K (idempotent overwrite of the
@@ -32,7 +33,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from .extract import extract, weights_digest
+from .extract import extract_flat, weights_digest
 
 PROGRESS_SCHEMA = pa.schema(
     [
@@ -46,6 +47,10 @@ PROGRESS_SCHEMA = pa.schema(
         ("finished_at", pa.float64()),
     ]
 )
+
+
+class SimulatedCrash(RuntimeError):
+    """Raised by ``CheckpointedExtract.run(fail_after=N)``."""
 
 
 class CheckpointedExtract:
@@ -119,8 +124,8 @@ class CheckpointedExtract:
     ) -> int:
         """Process all uncommitted chunks; returns how many chunks ran.
         Raises ``ValueError`` before any work when a committed chunk's
-        lineage differs from this run's. ``fail_after=N`` simulates a
-        crash after N chunk commits (tests)."""
+        lineage differs from this run's. ``fail_after=N`` raises
+        :class:`SimulatedCrash` after N chunk commits (tests)."""
         lineage = self._lineage(docs_df, media_df, weights)
         self._check_lineage(lineage)
         done = 0
@@ -130,7 +135,13 @@ class CheckpointedExtract:
             t0 = time.time()
             part = docs_df.filter(self._chunk_predicate(chunk))
             counts = Observation()
-            out = extract(part, media_df, weights).observe(
+            # one row per doc, its spans sorted by their dense offsets
+            span = F.struct("kind", "text", "media_ref", "offset")
+            by_offset = F.sort_array(
+                F.collect_list(F.struct("offset", span.alias("s"))))
+            out = extract_flat(part, media_df, weights).groupBy("doc_id").agg(
+                by_offset.alias("t")
+            ).select("doc_id", F.col("t.s").alias("spans")).observe(
                 counts,
                 F.count(F.lit(1)).alias("n_docs"),
                 F.sum(F.size("spans")).alias("n_spans"),
@@ -146,7 +157,7 @@ class CheckpointedExtract:
             )
             done += 1
             if fail_after is not None and done >= fail_after:
-                raise RuntimeError(f"simulated crash after {done} chunks")
+                raise SimulatedCrash(f"simulated crash after {done} chunks")
         return done
 
     def read_output(self, spark: SparkSession) -> DataFrame:

@@ -9,8 +9,7 @@ Spark shape (SURVEY.md §3.1):
            ── repartition ── mapInArrow(GNN kernel, Arrow batches)          │
                                                                             ▼
         text rows → JVM regexp boilerplate strip; media rows → their cells
-            extract:      groupBy(doc_id) → collect_list → array_sort
-            extract_flat: row_number over a doc_id window
+            → row_number over a doc_id window → one row per output span
 
 Scale properties, deliberately:
 - **Kernel runs once per distinct media_ref**, not per occurrence — shared
@@ -25,11 +24,10 @@ Scale properties, deliberately:
 - **Only Python boundary** is the Arrow-batched ``mapInArrow`` kernel; the
   boilerplate strip is JVM-side ``regexp_replace`` inside whole-stage
   codegen.
-- **One doc_id shuffle** for reassembly, ordered by (offset, array
-  position, cell index): ``extract`` re-numbers offsets inside the
-  collected array with ``transform``; ``extract_flat`` numbers flat rows
-  with a window ``row_number``. The explode and a broadcast join keep
-  the input's partitioning, so docs bucketed by doc_id skip that shuffle.
+- **One doc_id shuffle** for reassembly: a window ``row_number`` numbers
+  each doc's spans by (offset, array position, cell index), the one rule
+  for every output offset. The explode and a broadcast join keep the
+  input's partitioning, so docs bucketed by doc_id skip that shuffle.
 """
 
 from __future__ import annotations
@@ -50,8 +48,6 @@ CELLS_SCHEMA = T.StructType(
         T.StructField("text", T.StringType()),
     ]
 )
-
-OUT_SPAN_STRUCT = "struct<kind:string,text:string,media_ref:string,offset:int>"
 
 # driver-side memos: the content digest of each recent weights dict
 # (hashing the 64 MB G3 artifact takes ~0.13 s, so it must not run on
@@ -319,56 +315,16 @@ def _all_spans(
     )
 
 
-def extract(
-    docs_df: DataFrame,
-    media_df: DataFrame,
-    weights: dict,
-    **kwargs,
-) -> DataFrame:
-    """docs + media → out(doc_id, spans) with re-numbered dense offsets.
-
-    Canonical semantics == ``oracle.extract_corpus``: text spans →
-    kind='main_text' (boilerplate-stripped), media spans → one kind='cell'
-    span per assembled table cell; media_refs absent from ``media_df`` emit
-    nothing, as do spans of any kind other than text and media.
-    """
-    all_spans = _all_spans(docs_df, media_df, weights, **kwargs)
-
-    return (
-        all_spans.groupBy("doc_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        "orig_offset", "pos", "sub_idx", "kind", "text",
-                        "media_ref",
-                    )
-                )
-            ).alias("tmp")
-        )
-        .select(
-            "doc_id",
-            F.transform(
-                "tmp",
-                lambda s, i: F.struct(
-                    s["kind"].alias("kind"),
-                    s["text"].alias("text"),
-                    s["media_ref"].alias("media_ref"),
-                    i.cast("int").alias("offset"),
-                ),
-            ).cast(f"array<{OUT_SPAN_STRUCT}>").alias("spans"),
-        )
-    )
-
-
 def extract_flat(
     docs_df: DataFrame, media_df: DataFrame, weights: dict, **kwargs
 ) -> DataFrame:
-    """Same result as exploding :func:`extract` — one row per output span —
-    but computed with a window ``row_number`` instead of
-    collect_list/array_sort: the flat consumer needs no arrays, and the
-    ObjectHashAggregate's per-doc array building was the GC-heavy phase of
-    the benchmark (~25 s at 72% CPU on the 80k-doc corpus)."""
+    """docs + media → one row per output span (doc_id, offset, kind, text,
+    media_ref), offsets dense from 0 per doc; the semantics of
+    ``oracle.extract_corpus`` (text → stripped 'main_text', media → one
+    'cell' per table cell, a missing media_ref or any other kind → nothing).
+    A window ``row_number`` numbers the offsets: a per-doc
+    collect_list/array_sort aggregate was the benchmark's GC-heavy phase
+    (~25 s at 72% CPU on the 80k-doc corpus)."""
     from pyspark.sql import Window
 
     all_spans = _all_spans(docs_df, media_df, weights, **kwargs)

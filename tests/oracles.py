@@ -105,6 +105,21 @@ def compare(spark_df, oracle_sql: str, sf_dir: str):
     return True, f"{len(got)} rows equal"
 
 
+# ---------------------------------------------- extraction output
+def span_tuples(spans) -> list:
+    """(kind, text, media_ref, offset) of each span, in the given order."""
+    return [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans]
+
+
+def spans_by_doc(flat_df) -> dict:
+    """``extract_flat`` rows → {doc_id: span tuples in offset order}: the
+    shape of ``oracle.extract_corpus``'s result under :func:`span_tuples`."""
+    by_doc = {}
+    for r in sorted(flat_df.collect(), key=lambda r: (r["doc_id"], r["offset"])):
+        by_doc.setdefault(r["doc_id"], []).append(r)
+    return {did: span_tuples(rows) for did, rows in by_doc.items()}
+
+
 # --------------------------------------------------- boilerplate
 def duckdb_strip_sql(expr: str) -> str:
     """The boilerplate strip as DuckDB SQL.

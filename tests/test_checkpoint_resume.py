@@ -49,6 +49,11 @@ def test_crash_resume_equals_single_run(spark, tiny_corpus, weights, tmp_path):
     assert ck.committed() == {0, 1, 2, 3}
 
     assert _collect(ck.read_output(spark)) == _collect(ref.read_output(spark))
+    # the chunk store's schema, which perfbench and the resume query read
+    assert ck.read_output(spark).schema.simpleString() == (
+        "struct<doc_id:string,spans:array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>>"
+    )
 
     # progress records carry lineage + throughput, and counts that
     # match the committed output
@@ -147,6 +152,20 @@ def test_checkpoint_resume_query_leaves_no_chunk_store(spark):
     df = E.queries()["pipeline_checkpoint_resume"](spark, SF)
     assert len(df.collect()) > 0
     assert set(glob.glob(os.path.join(parent, "trs_ckpt_*"))) <= before
+
+
+@pytest.mark.spark
+def test_checkpoint_resume_query_raises_real_errors(spark, monkeypatch):
+    """Only the simulated crash is expected by the driver query: any
+    other error of the checkpointed run reaches the caller as it is."""
+    import __spark_entry__ as E
+
+    def boom(self, *args, **kwargs):
+        raise RuntimeError("boom")
+
+    monkeypatch.setattr(CheckpointedExtract, "run", boom)
+    with pytest.raises(RuntimeError, match="boom"):
+        E.queries()["pipeline_checkpoint_resume"](spark, SF)
 
 
 @pytest.mark.spark

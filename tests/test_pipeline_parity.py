@@ -5,35 +5,19 @@ equality of the (kind, text, media_ref, order) sequence.
 """
 
 import pytest
+from oracles import span_tuples, spans_by_doc
 
 from table_recognition_spark.fixtures.generate import corpus_to_spark
 from table_recognition_spark.oracle.extract import extract_corpus
-from table_recognition_spark.pipeline.extract import extract, extract_flat
+from table_recognition_spark.pipeline.extract import extract_flat
 
 
-def _spans_tuples(spans):
-    return [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans]
-
-
-def _run_parity(spark, corpus, weights, fn=extract, **kwargs):
+def _run_parity(spark, corpus, weights, **kwargs):
     docs, media, _ = corpus
     docs_df, media_df = corpus_to_spark(spark, docs, media)
-    out = fn(docs_df, media_df, weights, **kwargs)
-    if fn is extract_flat:
-        by_doc = {}
-        for r in out.collect():
-            by_doc.setdefault(r["doc_id"], []).append(r.asDict())
-        got = {
-            did: _spans_tuples(sorted(rows, key=lambda s: s["offset"]))
-            for did, rows in by_doc.items()
-        }
-    else:
-        got = {
-            r["doc_id"]: _spans_tuples([s.asDict() for s in r["spans"]])
-            for r in out.collect()
-        }
+    got = spans_by_doc(extract_flat(docs_df, media_df, weights, **kwargs))
     expected = {
-        did: _spans_tuples(spans)
+        did: span_tuples(spans)
         for did, spans in extract_corpus(docs, media, weights).items()
     }
     assert set(got) == set(expected)
@@ -51,7 +35,7 @@ def test_parity_with_kernel_repartition(spark, tiny_corpus, weights):
     _run_parity(spark, tiny_corpus, weights, n_rows_bound=7)
 
 
-def _parity_in_one_batch(spark, weights, media, fn=extract):
+def _parity_in_one_batch(spark, weights, media):
     """Parity for ``media`` run as one kernel task (``n_rows_bound=1``),
     so all rows share one Arrow record batch. One doc references every
     image, and one doc per image references only it."""
@@ -71,7 +55,7 @@ def _parity_in_one_batch(spark, weights, media, fn=extract):
         {"doc_id": f"only_{ref}", "spans": [image(ref, 0), text(1)]}
         for ref in refs
     ]
-    _run_parity(spark, (docs, media, None), weights, fn=fn, n_rows_bound=1)
+    _run_parity(spark, (docs, media, None), weights, n_rows_bound=1)
 
 
 @pytest.mark.spark
@@ -134,7 +118,7 @@ def test_parity_null_line_text(spark, weights):
     lines = list(media[0]["ocr_lines"])
     lines[0] = dict(lines[0], text=None)
     media[0] = dict(media[0], ocr_lines=lines)
-    _parity_in_one_batch(spark, weights, media, fn=extract_flat)
+    _parity_in_one_batch(spark, weights, media)
 
 
 def _span(kind, offset, ref="", text=""):
@@ -142,13 +126,11 @@ def _span(kind, offset, ref="", text=""):
 
 
 @pytest.mark.spark
-@pytest.mark.parametrize("fn", [extract, extract_flat],
-                         ids=["extract", "extract_flat"])
 @pytest.mark.parametrize("media_first", [False, True],
                          ids=["text_first", "media_first"])
-def test_parity_duplicate_offsets(spark, weights, fn, media_first):
+def test_parity_duplicate_offsets(spark, weights, media_first):
     """A text span and a media span with the same ``offset`` keep their
-    array order, as the oracle's stable sort does, in both outputs."""
+    array order, as the oracle's stable sort does."""
     from table_recognition_spark.fixtures.generate import make_corpus
 
     _, media, _ = make_corpus(0, 2, seed=7)
@@ -161,13 +143,11 @@ def test_parity_duplicate_offsets(spark, weights, fn, media_first):
         *tied,
         _span("text", 1, text="<p>first</p>"),
     ]}]
-    _run_parity(spark, (docs, media, None), weights, fn=fn)
+    _run_parity(spark, (docs, media, None), weights)
 
 
 @pytest.mark.spark
-@pytest.mark.parametrize("fn", [extract, extract_flat],
-                         ids=["extract", "extract_flat"])
-def test_unknown_span_kind_emits_nothing(spark, weights, fn):
+def test_unknown_span_kind_emits_nothing(spark, weights):
     """A span of a kind other than text or media emits nothing, even
     when its media_ref names an existing image."""
     from table_recognition_spark.fixtures.generate import make_corpus
@@ -185,7 +165,7 @@ def test_unknown_span_kind_emits_nothing(spark, weights, fn):
     expected = extract_corpus(docs, media, weights)
     assert any(s["kind"] == "cell" for s in expected["d"])
     assert expected == extract_corpus(known, media, weights)
-    _run_parity(spark, (docs, media, None), weights, fn=fn)
+    _run_parity(spark, (docs, media, None), weights)
 
 
 @pytest.mark.spark
@@ -216,28 +196,7 @@ def test_missing_media_ref_emits_nothing(spark, weights):
 
     _, media, _ = make_corpus(1, 1, seed=1)
     docs_df, media_df = corpus_to_spark(spark, docs, media)
-    out = extract(docs_df, media_df, weights)
-    rows = out.collect()
-    assert len(rows) == 1
-    spans = [s.asDict() for s in rows[0]["spans"]]
-    assert _spans_tuples(spans) == [("main_text", "hi", "", 0)]
-
-
-@pytest.mark.spark
-def test_flat_equals_exploded_nested(spark, tiny_corpus, weights):
-    """extract_flat uses a window row_number; extract uses
-    collect_list/array_sort — the two paths must agree row-for-row."""
-    from pyspark.sql import functions as F
-
-    docs, media, _ = tiny_corpus
-    docs_df, media_df = corpus_to_spark(spark, docs, media)
-    flat = {
-        (r["doc_id"], r["offset"], r["kind"], r["text"], r["media_ref"])
-        for r in extract_flat(docs_df, media_df, weights).collect()
+    assert spans_by_doc(extract_flat(docs_df, media_df, weights)) == {
+        "d1": [("main_text", "hi", "", 0)]
     }
-    nested = {
-        (r["doc_id"], s["offset"], s["kind"], s["text"], s["media_ref"])
-        for r in extract(docs_df, media_df, weights).collect()
-        for s in r["spans"]
-    }
-    assert flat == nested
+

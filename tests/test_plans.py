@@ -7,7 +7,7 @@ import re
 import pytest
 
 from table_recognition_spark.fixtures.generate import corpus_to_spark
-from table_recognition_spark.pipeline.extract import extract, extract_flat
+from table_recognition_spark.pipeline.extract import extract_flat
 
 
 def _formatted_plan(df):
@@ -37,7 +37,7 @@ def parquet_corpus(spark, tiny_corpus, tmp_path_factory):
 @pytest.fixture(scope="module")
 def plan(parquet_corpus, weights):
     d, m = parquet_corpus
-    return _formatted_plan(extract(d, m, weights))
+    return _formatted_plan(extract_flat(d, m, weights))
 
 
 def _media_scans(plan):
@@ -54,17 +54,19 @@ def test_image_column_pruned_from_media_scan(plan, parquet_corpus):
     g2 = _media_scans(plan)
     assert g2 and all("image" not in b for b in g2), g2
     d, m = parquet_corpus
-    g3 = _media_scans(_formatted_plan(extract(d, m, visual.default_weights())))
+    g3 = _media_scans(
+        _formatted_plan(extract_flat(d, m, visual.default_weights())))
     assert g3 and all("image" in b for b in g3), g3
 
 
 def test_single_real_shuffle(plan):
     """Both joins broadcast: the only shuffles are the distinct-refs
-    aggregate, the kernel fan-out and the reassembly."""
+    aggregate, the kernel fan-out and the reassembly window."""
     exchanges = re.findall(r"\n\((\d+)\) (Exchange|BroadcastExchange)", plan)
     real = [e for e in exchanges if e[1] == "Exchange"]
     # distinct(media_ref) aggregate + the deliberate kernel repartition
-    # (straggler-tail levelling) + the final groupBy(doc_id)
+    # (straggler-tail levelling) + the reassembly window's
+    # hashpartitioning(doc_id)
     assert len(real) <= 3, exchanges
 
 

@@ -4,6 +4,7 @@ the *distinct media_ref*, and kernel input is hash-repartitioned by
 media_ref — so a doc referencing 100 images spreads across partitions."""
 
 import pytest
+from oracles import spans_by_doc
 from pyspark.sql import functions as F
 
 from table_recognition_spark.fixtures.generate import corpus_to_spark, make_corpus
@@ -40,13 +41,13 @@ def test_kernel_input_balanced_under_skew(spark, weights):
 def test_skew_doc_output_correct(spark, weights):
     """The 100-media-span doc still reassembles correctly (oracle parity
     covers it too; this pins span count and offset density)."""
-    from table_recognition_spark.pipeline.extract import extract
+    from table_recognition_spark.pipeline.extract import extract_flat
 
     docs, media, _ = make_corpus(5, 8, seed=11, skew_doc=True)
     docs_df, media_df = corpus_to_spark(spark, docs, media)
-    out = extract(docs_df, media_df, weights)
-    row = out.filter(F.col("doc_id") == "doc_000000").collect()[0]
-    offs = [s["offset"] for s in row["spans"]]
+    out = extract_flat(docs_df, media_df, weights)
+    spans = spans_by_doc(out.filter(F.col("doc_id") == "doc_000000"))
+    offs = [s[3] for s in spans["doc_000000"]]
     assert offs == list(range(len(offs)))
     assert len(offs) > 100  # 100 media spans, each ≥1 cell
 

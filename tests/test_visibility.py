@@ -1,7 +1,12 @@
 import numpy as np
 import pytest
 
-from oracles import render_label_image, visibility_edges_full_march
+from oracles import (
+    render_label_image,
+    span_tuples,
+    spans_by_doc,
+    visibility_edges_full_march,
+)
 from table_recognition_spark.core.visibility import visibility_edges
 
 
@@ -59,19 +64,15 @@ def test_deterministic_and_sorted():
 def test_pipeline_parity_visibility(spark, tiny_corpus, weights):
     from table_recognition_spark.fixtures.generate import corpus_to_spark
     from table_recognition_spark.oracle.extract import extract_corpus
-    from table_recognition_spark.pipeline.extract import extract
+    from table_recognition_spark.pipeline.extract import extract_flat
 
     docs, media, _ = tiny_corpus
     docs_df, media_df = corpus_to_spark(spark, docs, media)
-    got = {
-        r["doc_id"]: [
-            (s["kind"], s["text"], s["media_ref"], s["offset"])
-            for s in r["spans"]
-        ]
-        for r in extract(docs_df, media_df, weights, strategy="visibility").collect()
-    }
+    got = spans_by_doc(
+        extract_flat(docs_df, media_df, weights, strategy="visibility")
+    )
     exp = {
-        k: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in v]
+        k: span_tuples(v)
         for k, v in extract_corpus(docs, media, weights, strategy="visibility").items()
     }
     assert got == exp

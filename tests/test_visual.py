@@ -1,5 +1,6 @@
 import numpy as np
 import pytest
+from oracles import span_tuples, spans_by_doc
 
 from table_recognition_spark.core import gnn, visual
 
@@ -81,23 +82,16 @@ def test_pipeline_parity_visual(spark):
         make_corpus,
     )
     from table_recognition_spark.oracle.extract import extract_corpus
-    from table_recognition_spark.pipeline.extract import extract
+    from table_recognition_spark.pipeline.extract import extract_flat
 
     docs, media, _ = make_corpus(4, 2, seed=13)
     docs_df, media_df = corpus_to_spark(spark, docs, media)
     # whichever G3 weights the repo ships (trained artifact when present,
     # else seeded init): the weights pick the model
     vw = visual.default_weights()
-    got = {
-        r["doc_id"]: [
-            (s["kind"], s["text"], s["media_ref"], s["offset"])
-            for s in r["spans"]
-        ]
-        for r in extract(docs_df, media_df, vw).collect()
-    }
+    got = spans_by_doc(extract_flat(docs_df, media_df, vw))
     exp = {
-        k: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in v]
-        for k, v in extract_corpus(docs, media, vw).items()
+        k: span_tuples(v) for k, v in extract_corpus(docs, media, vw).items()
     }
     assert got == exp
 
@@ -153,7 +147,7 @@ def test_visual_path_ingests_color_jpeg_media(spark):
         png_decode_gray8,
     )
     from table_recognition_spark.oracle.extract import extract_corpus
-    from table_recognition_spark.pipeline.extract import extract
+    from table_recognition_spark.pipeline.extract import extract_flat
 
     docs, media, _ = make_corpus(4, 2, seed=21)
     # colorize: per-channel tints of the rendered table page
@@ -165,16 +159,9 @@ def test_visual_path_ingests_color_jpeg_media(spark):
         m["image"] = jpeg_encode_rgb(rgb)
     docs_df, media_df = corpus_to_spark(spark, docs, media)
     vw = visual.default_weights()
-    got = {
-        r["doc_id"]: [
-            (s["kind"], s["text"], s["media_ref"], s["offset"])
-            for s in r["spans"]
-        ]
-        for r in extract(docs_df, media_df, vw).collect()
-    }
+    got = spans_by_doc(extract_flat(docs_df, media_df, vw))
     exp = {
-        k: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in v]
-        for k, v in extract_corpus(docs, media, vw).items()
+        k: span_tuples(v) for k, v in extract_corpus(docs, media, vw).items()
     }
     assert got == exp
     assert any(

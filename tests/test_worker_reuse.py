@@ -120,7 +120,7 @@ def test_weights_parsed_once_per_worker(spark, weights):
         make_corpus,
     )
 
-    ex = importlib.import_module("table_recognition_spark.pipeline.extract")
+    from table_recognition_spark.pipeline import extract as ex
     bc = ex._broadcast_weights(spark.sparkContext, weights)
     kernel = ex._kernel_fn(bc)
 
@@ -163,8 +163,7 @@ def test_broadcast_cache_holds_only_the_callers_context(weights, monkeypatch):
     context broadcasts once, and a second context gets its own broadcast
     while the cache drops the first's (a broadcast holds its context, so
     a stopped one would stay alive)."""
-    # the module, not the ``extract`` function the package re-exports
-    ex = importlib.import_module("table_recognition_spark.pipeline.extract")
+    from table_recognition_spark.pipeline import extract as ex
 
     class Context:
         def __init__(self):
